@@ -39,9 +39,6 @@ def main() -> None:
                         "comma-separated ANY-of list (col:7,9,13)")
     p.add_argument("--eq-filter", default=None,
                    help="col:value bloom point lookup")
-    p.add_argument("--direct", action="store_true",
-                   help="shuffle-free per-bucket reader (see "
-                        "read_encoded_direct docstring for when it wins)")
     p.add_argument("--as-of-epoch", type=int, default=None,
                    help="time travel: read the table as of this "
                         "ingest epoch")
@@ -90,7 +87,7 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    from tokcodec.io_tables import read_encoded, read_encoded_direct
+    from tokcodec.io_tables import read_encoded
 
     spark = SparkSession.builder.appName("tokcodec-decode").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -237,14 +234,14 @@ def main() -> None:
                             as_of_tag=args.as_of_tag,
                             since_epoch=args.since_epoch)
     else:
-        reader = read_encoded_direct if args.direct else read_encoded
-        df = reader(spark, args.input, columns=columns,
-                    range_filter=rf, eq_filter=ef, contains_filter=cf,
-                    verify_checksums=args.verify_checksums,
-                    as_of_epoch=args.as_of_epoch,
-                    as_of_ts=args.as_of_ts,
-                    as_of_tag=args.as_of_tag,
-                    since_epoch=args.since_epoch)
+        df = read_encoded(spark, args.input, columns=columns,
+                          range_filter=rf, eq_filter=ef,
+                          contains_filter=cf,
+                          verify_checksums=args.verify_checksums,
+                          as_of_epoch=args.as_of_epoch,
+                          as_of_ts=args.as_of_ts,
+                          as_of_tag=args.as_of_tag,
+                          since_epoch=args.since_epoch)
     df.write.mode("overwrite").parquet(args.output)
     n = spark.read.parquet(args.output).count()
     print(json.dumps({"rows": n, "output": args.output}))

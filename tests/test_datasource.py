@@ -63,9 +63,9 @@ def test_pushdown_filters_correct(spark, table):
 def test_filter_specs_shapes(spark, table):
     from pyspark.sql.datasource import (
         EqualTo, GreaterThanOrEqual, In, IsNotNull, LessThan)
-    from tokcodec.datasource import _read_json
+    from tokcodec.io_tables import _read_json_fs
 
-    manifest = _read_json(table + "/_manifest.json")
+    manifest = _read_json_fs(table + "/_manifest.json")
     from tokcodec.schema import manifest_schema
 
     sch = manifest_schema(manifest)

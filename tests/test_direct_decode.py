@@ -1,5 +1,6 @@
-"""Shuffle-free direct decode must agree with the groupBy decode on
-projections, multi-epoch tables, and uuid expansion."""
+"""The one read path (the shuffle-free scan task behind read_encoded
+and its read_encoded_direct alias) returns exactly the source rows on
+projections, multi-epoch tables, filters and uuid expansion."""
 
 import os
 
@@ -28,20 +29,20 @@ def _sorted_rows(df):
     )
 
 
-def test_direct_equals_grouped(spark, tmp_path):
+def test_multi_epoch_read_matches_source(spark, tmp_path):
     path = os.path.join(str(tmp_path), "t")
     write_encoded(_mk(spark, 0, 200), path, n_buckets=4, run_id="r1",
                   epoch=0, chunk_max_rows=32)
     write_encoded(_mk(spark, 200, 300), path, n_buckets=4, run_id="r2",
                   epoch=1, chunk_max_rows=32)
-    a = _sorted_rows(read_encoded(spark, path))
-    b = _sorted_rows(read_encoded_direct(spark, path))
-    assert a == b and len(a) == 300
-    # no shuffle exchange in the direct plan (only the tiny bucket-id
-    # repartition feeds the readers)
-    plan = read_encoded_direct(spark, path)._jdf.queryExecution() \
+    got = _sorted_rows(read_encoded(spark, path))
+    assert got == _sorted_rows(_mk(spark, 0, 300)) and len(got) == 300
+    assert _sorted_rows(read_encoded_direct(spark, path)) == got
+    # payloads never enter a Spark scan: each task opens its buckets'
+    # files itself
+    plan = read_encoded(spark, path)._jdf.queryExecution() \
         .executedPlan().toString()
-    assert "Scan parquet" not in plan  # payloads never enter a Spark scan
+    assert "Scan parquet" not in plan
 
 
 def test_direct_projection(spark, tmp_path):
@@ -66,15 +67,10 @@ def test_direct_uuid_expansion(spark, tmp_path):
         assert out[i] == u
 
 
-def test_direct_filters_match_grouped(spark, tmp_path):
-    """The direct reader's executor-side chunk pruning (zone bounds +
-    blooms evaluated in the task) must return exactly what the grouped
-    reader's DataFrame-side pruning returns, for every filter kind and
-    their conjunction."""
-    from pyspark.sql import functions as F
-
-    from tokcodec.io_tables import read_encoded, read_encoded_direct
-
+def test_filters_match_source(spark, tmp_path):
+    """The scan task's chunk pruning (zone bounds + blooms evaluated
+    in the task) must return exactly the source rows the predicate
+    selects, for every filter kind and their conjunction."""
     path = str(tmp_path / "encf")
     df = spark.range(8_000).select(
         F.format_string("d%05d", F.col("id")).alias("doc_id"),
@@ -86,26 +82,29 @@ def test_direct_filters_match_grouped(spark, tmp_path):
                   chunk_max_rows=500, bloom_columns=["doc_id"])
 
     cases = [
-        {"range_filter": ("k", 1000, 1999)},
-        {"range_filter": ("d", "2024-03-01", "2024-03-31")},
-        {"in_filter": ("k", [17, 4242, 7999])},
-        {"eq_filter": ("doc_id", "d00777")},
-        {"range_filter": ("k", 500, 2500),
-         "eq_filter": ("doc_id", "d00777")},
-        {"range_filter": ("doc_id", "d00100", "d00199"),
-         "in_filter": ("k", list(range(150, 260)))},
+        ({"range_filter": ("k", 1000, 1999)}, "k BETWEEN 1000 AND 1999"),
+        ({"range_filter": ("d", "2024-03-01", "2024-03-31")},
+         "d BETWEEN DATE'2024-03-01' AND DATE'2024-03-31'"),
+        ({"in_filter": ("k", [17, 4242, 7999])}, "k IN (17, 4242, 7999)"),
+        ({"eq_filter": ("doc_id", "d00777")}, "doc_id = 'd00777'"),
+        ({"range_filter": ("k", 500, 2500),
+          "eq_filter": ("doc_id", "d00777")},
+         "k BETWEEN 500 AND 2500 AND doc_id = 'd00777'"),
+        ({"range_filter": ("doc_id", "d00100", "d00199"),
+          "in_filter": ("k", list(range(150, 260)))},
+         "doc_id BETWEEN 'd00100' AND 'd00199' AND k BETWEEN 150 AND 259"),
     ]
-    for case in cases:
-        a = sorted(read_encoded(spark, path, **case).collect())
-        b = sorted(read_encoded_direct(spark, path, **case).collect())
-        assert a == b, (case, len(a), len(b))
-        assert len(a) > 0, case
+    for case, where in cases:
+        got = sorted(read_encoded(spark, path, **case).collect())
+        want = sorted(df.filter(where).collect())
+        assert got == want, (case, len(got), len(want))
+        assert len(got) > 0, case
     # projection + filter on a non-projected column
-    a = sorted(read_encoded(spark, path, columns=["doc_id"],
-                            range_filter=("k", 10, 20)).collect())
-    b = sorted(read_encoded_direct(spark, path, columns=["doc_id"],
-                                   range_filter=("k", 10, 20)).collect())
-    assert a == b and len(a) == 11
+    got = sorted(read_encoded(spark, path, columns=["doc_id"],
+                              range_filter=("k", 10, 20)).collect())
+    assert got == sorted(df.filter("k BETWEEN 10 AND 20")
+                         .select("doc_id").collect())
+    assert len(got) == 11
 
 
 def test_shared_file_one_row_group_per_bucket(spark, tmp_path,

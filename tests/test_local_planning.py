@@ -113,3 +113,35 @@ def test_manifest_fast_path_interops_with_hadoop_branch(spark, tmp_path):
     finally:
         out.close()
     assert _read_text(spark, p) == '{"via": "hadoop"}'
+
+
+def test_reader_construction_launches_no_jobs(spark, tmp_path):
+    """Building read_encoded, read_encoded_as or a DataSource reader
+    over a table with many committed runs plans everything from
+    metadata read driver-side (run manifests overlapped on the
+    metadata thread pool): zero Spark jobs until an action runs."""
+    from pyspark.sql import types as T
+
+    from tokcodec.datasource import TokcodecDataSource
+    from tokcodec.io_tables import read_encoded_as
+
+    path = str(tmp_path / "many")
+    for e in range(11):
+        df = spark.createDataFrame([(f"e{e}d{i}", i) for i in range(4)],
+                                   "doc_id string, n int")
+        write_encoded(df, path, n_buckets=2, run_id=f"e{e}", epoch=e)
+    spark.dataSource.register(TokcodecDataSource)
+    before = _n_jobs(spark)
+    built = [
+        read_encoded(spark, path),
+        read_encoded(spark, path, columns=["doc_id"],
+                     range_filter=("n", 0, 1)),
+        read_encoded(spark, path, as_of_epoch=5, with_bucket_column=True),
+        read_encoded_as(spark, path, T.StructType(
+            [T.StructField("docId", T.StringType())])),
+        spark.read.format("tokcodec").load(path),
+    ]
+    for q in built:  # physical planning (the DataSource's partitions())
+        q._jdf.queryExecution().executedPlan()
+    assert _n_jobs(spark) == before
+    assert [q.count() for q in built] == [44, 22, 24, 44, 44]

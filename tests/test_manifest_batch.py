@@ -12,7 +12,7 @@ from pyspark.sql import Row
 from pyspark.sql import types as T
 
 from tokcodec.io_tables import (
-    _RUN_MANIFEST_BATCH_MIN,
+    _META_IO_FANOUT_MIN as _RUN_MANIFEST_BATCH_MIN,
     _run_files,
     read_encoded,
     write_encoded,

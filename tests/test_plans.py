@@ -20,6 +20,18 @@ def _optimized(df) -> str:
     return df._jdf.queryExecution().toString()
 
 
+def _assert_single_path(df) -> None:
+    """The one read path: a mapInArrow scan task per slice of buckets
+    — no grouped decode, no payload shuffle, no sort-merge join, and
+    no Spark scan of block files."""
+    plan = _plan(df)
+    assert "MapInArrow" in plan, plan
+    assert "FlatMapGroupsInArrow" not in plan, plan
+    assert "Exchange hashpartitioning" not in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+    assert "Scan parquet" not in plan, plan
+
+
 def test_filter_pushdown_reaches_scan(spark):
     li = spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet"))
     q = li.filter(F.col("l_shipdate") <= F.lit("2005-09-02")).select(
@@ -42,7 +54,15 @@ def test_small_dim_join_broadcasts(spark):
 
 
 def test_decode_projection_prunes_block_partitions(spark, tmp_path):
-    from tokcodec.io_tables import read_encoded, write_encoded
+    import glob
+
+    from tokcodec.io_tables import (
+        _direct_file_rows,
+        _paths,
+        _run_files,
+        read_encoded,
+        write_encoded,
+    )
 
     schema = T.StructType([
         T.StructField("doc_id", T.StringType(), False),
@@ -54,30 +74,27 @@ def test_decode_projection_prunes_block_partitions(spark, tmp_path):
     )
     path = os.path.join(str(tmp_path), "t")
     write_encoded(df, path, n_buckets=1, run_id="p")
-    # grouped plan (with_bucket_column keeps it off the shuffle-free
-    # route): explicit file list from the run manifests — unrequested
-    # column b's files must not even enter the scan
-    proj = read_encoded(spark, path, columns=["doc_id", "a"],
-                        with_bucket_column=True)
-    files = [f for f in proj.inputFiles() if "/blocks/" in f]
-    assert files and all("/col-doc_id/" in f or "/col-a/" in f
-                         for f in files), files
-    full = read_encoded(spark, path, with_bucket_column=True)
-    assert any("/col-b/" in f for f in full.inputFiles())
-    # and the committed-buckets semi join stays a broadcast
-    assert "BroadcastHashJoin" in _plan(proj)
-    # direct-routed plan (read_encoded's default since r6): the
-    # executor-side file plan must carry only the requested columns'
-    # files — same pruning, enforced in the broadcast payload
-    from tokcodec.io_tables import _direct_file_rows, _paths, _run_files
-
-    frows = _direct_file_rows(_run_files(spark, path, ["p"]),
-                              {"doc_id", "a"}, _paths(path)[0])
+    # the scan task's file plan carries only the requested columns'
+    # files — unrequested column b's files never enter it
+    files = _run_files(None, path, ["p"])
+    frows = _direct_file_rows(files, {"doc_id", "a"}, _paths(path)[0])
     assert frows and all("/col-doc_id/" in fp or "/col-a/" in fp
                          for _, _, fp, _, _ in frows), frows
-    # the routed read itself returns exactly the projection
-    assert read_encoded(spark, path, columns=["doc_id", "a"]).columns \
-        == ["doc_id", "a"]
+    assert any("/col-b/" in fp for _, _, fp, _, _ in _direct_file_rows(
+        files, {"doc_id", "a", "b"}, _paths(path)[0]))
+    # and the read really never opens them: with b's files gone, the
+    # projected read (plain and with the bucket column) still decodes
+    for f in glob.glob(os.path.join(path, "blocks", "col-b", "*")):
+        os.remove(f)
+    proj = read_encoded(spark, path, columns=["doc_id", "a"])
+    assert proj.columns == ["doc_id", "a"]
+    assert proj.count() == 100
+    _assert_single_path(proj)
+    bproj = read_encoded(spark, path, columns=["doc_id", "a"],
+                         with_bucket_column=True)
+    assert bproj.columns == ["doc_id", "a", "__bucket"]
+    assert {r["__bucket"] for r in bproj.collect()} == {0}
+    _assert_single_path(bproj)
 
 
 def test_zone_filter_prunes_before_decode(spark, tmp_path):
@@ -93,25 +110,21 @@ def test_zone_filter_prunes_before_decode(spark, tmp_path):
     path = os.path.join(str(tmp_path), "z")
     write_encoded(df, path, n_buckets=1, run_id="z", chunk_max_rows=100,
                   cluster_by="n")
-    # direct-routed plan (the default): zone pruning runs executor-side
-    # from the bucket's own metas — no join, no payload exchange at all
-    narrow = read_encoded(spark, path, range_filter=("n", 0, 99))
-    assert narrow.count() == 100
-    assert "Exchange hashpartitioning" not in _plan(narrow)
-    # the grouped plan (kept for chunk-subset/sample/bucket reads):
-    # its zone semi-join must broadcast (tiny surviving-chunk list)
-    grouped = read_encoded(spark, path, range_filter=("n", 0, 99),
-                           with_bucket_column=True)
-    assert grouped.count() == 100
-    assert _plan(grouped).count("BroadcastHashJoin") >= 2
+    # zone pruning runs in the scan task from the bucket's own metas —
+    # no join, no payload exchange at all, with or without the
+    # provenance bucket column
+    for kw in ({}, {"with_bucket_column": True}):
+        narrow = read_encoded(spark, path, range_filter=("n", 0, 99),
+                              **kw)
+        assert narrow.count() == 100
+        _assert_single_path(narrow)
 
 
 def test_zorder_multirange_plan_broadcasts(spark, tmp_path):
-    """Multi-range conjunction over a Z-ordered table: every zone
-    pass's surviving-chunk semi-join must broadcast — at 100 TB the
-    surviving list is tiny relative to the blocks scan and a
-    sort-merge join there would shuffle the whole blocks table per
-    filter."""
+    """Multi-range conjunction over a Z-ordered table: every conjunct
+    prunes inside the scan task, so no surviving-chunk join exists
+    that could plan as a sort-merge join shuffling the whole blocks
+    table per filter at 100 TB."""
     from tokcodec.io_tables import read_encoded, write_encoded
 
     df = spark.createDataFrame(
@@ -121,23 +134,83 @@ def test_zorder_multirange_plan_broadcasts(spark, tmp_path):
     path = os.path.join(str(tmp_path), "zo")
     write_encoded(df, path, n_buckets=1, run_id="z",
                   cluster_by=["x", "y"], chunk_max_rows=128)
-    # direct-routed plan: both range conjuncts prune executor-side,
-    # nothing shuffles and nothing sort-merges
-    q = read_encoded(spark, path,
-                     range_filter=[("x", 0, 7), ("y", 0, 7)])
-    plan = _plan(q)
-    assert "SortMergeJoin" not in plan
-    assert "Exchange hashpartitioning" not in plan
-    assert q.count() == 8 * 8
-    # grouped plan: committed-lineage semi-join + one zone semi-join
-    # per range filter, all broadcast
-    g = read_encoded(spark, path,
-                     range_filter=[("x", 0, 7), ("y", 0, 7)],
-                     with_bucket_column=True)
-    gplan = _plan(g)
-    assert "SortMergeJoin" not in gplan
-    assert gplan.count("BroadcastHashJoin") >= 3
-    assert g.count() == 8 * 8
+    # both range conjuncts prune in the scan task: nothing shuffles
+    # and nothing sort-merges, with or without the bucket column
+    for kw in ({}, {"with_bucket_column": True}):
+        q = read_encoded(spark, path,
+                         range_filter=[("x", 0, 7), ("y", 0, 7)], **kw)
+        _assert_single_path(q)
+        assert q.count() == 8 * 8
+
+
+def test_read_entry_points_single_path(spark, tmp_path, monkeypatch):
+    """Every read entry point plans the one scan task: read_encoded
+    plain / with buckets= / with the bucket column / with range and eq
+    filters, sample_encoded, read_encoded_as, an aggregate_encoded
+    boundary decode (chunk allow-list) and upsert_encoded's two
+    reads."""
+    from tokcodec import agg, io_tables
+    from tokcodec.agg import aggregate_encoded
+    from tokcodec.io_tables import (
+        read_encoded,
+        read_encoded_as,
+        sample_encoded,
+        upsert_encoded,
+        write_encoded,
+    )
+
+    df = spark.createDataFrame(
+        [Row(doc_id=f"d{i:04d}", k=i * 2, v=i) for i in range(600)],
+        "doc_id string, k int, v int")
+    path = os.path.join(str(tmp_path), "ep")
+    write_encoded(df.repartition(1), path, n_buckets=3, run_id="r",
+                  chunk_max_rows=50, cluster_by="k",
+                  bloom_columns=["doc_id"])
+    reads = {
+        "plain": read_encoded(spark, path),
+        "buckets": read_encoded(spark, path, buckets=[1]),
+        "bucket_col": read_encoded(spark, path, with_bucket_column=True),
+        "filters": read_encoded(spark, path, range_filter=("k", 0, 400),
+                                eq_filter=("doc_id", "d0042")),
+        "sample": sample_encoded(spark, path, 0.5, seed=3),
+        "read_as": read_encoded_as(spark, path, T.StructType([
+            T.StructField("docId", T.StringType()),
+            T.StructField("v", T.LongType())])),
+    }
+    for name, q in reads.items():
+        _assert_single_path(q)
+    assert reads["filters"].count() == 1
+    assert reads["read_as"].count() == 600
+
+    def recording(target, sink):
+        def wrapped(*a, **kw):
+            out = target(*a, **kw)
+            sink.append((kw, out))
+            return out
+        return wrapped
+
+    seen: list = []
+    monkeypatch.setattr(agg, "read_encoded", recording(read_encoded, seen))
+    # an in_filter over gapped keys leaves partial boundary chunks the
+    # driver-side shortcut does not take: they decode through
+    # read_encoded with a chunk allow-list
+    res = aggregate_encoded(spark, path, "v",
+                            in_filter=("k", list(range(0, 1200, 6))))
+    assert res["rows"] == 200 and res["chunks_decoded"]
+    subset = [q for kw, q in seen if "_chunk_subset" in kw]
+    assert subset
+    for q in subset:
+        _assert_single_path(q)
+
+    seen.clear()
+    monkeypatch.setattr(io_tables, "read_encoded",
+                        recording(read_encoded, seen))
+    upd = spark.createDataFrame([Row(doc_id="d0001", k=-1, v=-1)],
+                                "doc_id string, k int, v int")
+    upsert_encoded(spark, path, upd, key_column="doc_id")
+    assert len(seen) == 2  # the key locate read + the touched buckets
+    for _kw, q in seen:
+        _assert_single_path(q)
 
 
 def test_media_decode_plan_no_extra_shuffle(spark):
@@ -154,10 +227,9 @@ def test_media_decode_plan_no_extra_shuffle(spark):
         cached.unpersist()
     q = em.q_media_feature_stats(spark, SF_DIR)
     plan = _plan(q)
-    # mapInArrow feature extraction is shuffle-free: the only SHUFFLE
-    # exchanges are the decode groupBy(bucket) (inside the cached
-    # decoded table's child plan) and the final aggregate; broadcast
-    # exchanges (lineage semi-join) don't move payload data
+    # mapInArrow feature extraction is shuffle-free, and so is the
+    # decode under it (the cached decoded table's child plan): the
+    # only SHUFFLE exchange left is the final aggregate's
     shuffles = plan.count("Exchange hashpartitioning")
     assert shuffles <= 2, (shuffles, plan)
 

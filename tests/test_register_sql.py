@@ -1,5 +1,5 @@
 """register_encoded (round-3 verdict #9): SQL-surface an encoded
-table as a temp view — and the direct reader's broadcast payload stays
+table as a temp view — and the scan task's broadcast file plan stays
 O(file ranges), not O(buckets x files) (#6)."""
 
 from pyspark.sql import Row
@@ -7,7 +7,6 @@ from pyspark.sql import types as T
 
 from tokcodec.io_tables import (
     _direct_file_rows,
-    read_encoded_direct,
     register_encoded,
     write_encoded,
 )
@@ -44,7 +43,9 @@ def test_register_direct_reader(spark, tmp_path):
         [Row(doc_id=f"d{i}", n_tok=i, source="s") for i in range(50)],
         SCHEMA)
     write_encoded(df, path, n_buckets=2, run_id="r1")
-    register_encoded(spark, path, "enc_d", direct=True)
+    # read keywords pass through to the one reader
+    view = register_encoded(spark, path, "enc_d", columns=["doc_id"])
+    assert view.columns == ["doc_id"]
     assert spark.sql("SELECT COUNT(*) AS n FROM enc_d").collect()[0].n == 50
 
 

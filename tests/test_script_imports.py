@@ -1,0 +1,43 @@
+"""Guard for deletions: every `from tokcodec... import name` in the
+scripts, the benchmark harnesses and the driver entry point must still
+resolve, so removing a helper cannot leave a broken script or
+benchmark behind. Reads the files only."""
+
+import ast
+import glob
+import importlib
+import os
+
+import pytest
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SOURCES = sorted(
+    glob.glob(os.path.join(ROOT, "scripts", "*.py"))
+    + glob.glob(os.path.join(ROOT, "perfbench", "*.py"))
+    + [os.path.join(ROOT, "bench.py"),
+       os.path.join(ROOT, "__spark_entry__.py")])
+
+
+def _tokcodec_imports(path):
+    with open(path, encoding="utf-8") as f:
+        tree = ast.parse(f.read(), filename=path)
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.module and (
+                node.module == "tokcodec"
+                or node.module.startswith("tokcodec.")):
+            for alias in node.names:
+                yield node.module, alias.name, node.lineno
+
+
+@pytest.mark.parametrize(
+    "src", SOURCES, ids=[os.path.relpath(p, ROOT) for p in SOURCES])
+def test_tokcodec_imports_resolve(src):
+    missing = []
+    for module, name, line in _tokcodec_imports(src):
+        mod = importlib.import_module(module)
+        if name != "*" and not hasattr(mod, name):
+            try:  # a submodule imported by name
+                importlib.import_module(f"{module}.{name}")
+            except ImportError:
+                missing.append(f"{module}.{name} (line {line})")
+    assert not missing, f"{os.path.relpath(src, ROOT)}: {missing}"

@@ -68,3 +68,20 @@ def test_current_read_unchanged(spark, evolved):
     cur = read_encoded(spark, evolved)
     assert cur.columns == ["doc_id", "n", "extra"]
     assert cur.count() == 30
+
+
+def test_datasource_as_of_projects_snapshot_schema(spark, evolved):
+    """The DataSource declares the planner's snapshot schema: an
+    as_of_epoch read before the evolution epoch has read_encoded's
+    columns and rows, not the current schema null-filled."""
+    from tokcodec.datasource import TokcodecDataSource
+
+    spark.dataSource.register(TokcodecDataSource)
+    ds = (spark.read.format("tokcodec").option("as_of_epoch", 0)
+          .load(evolved))
+    ref = read_encoded(spark, evolved, as_of_epoch=0)
+    assert ds.columns == ref.columns == ["doc_id", "n"]
+    assert sorted(ds.collect()) == sorted(ref.collect())
+    assert len(ref.collect()) == 20
+    cur = spark.read.format("tokcodec").load(evolved)
+    assert cur.columns == ["doc_id", "n", "extra"]

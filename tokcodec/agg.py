@@ -17,8 +17,9 @@ surviving chunks:
     min/max fold lo/hi. No payload is read, nothing is decoded.
   * PARTIAL chunks (filter boundary, missing stats, all-null with
     unknown counts) are decoded through read_encoded restricted to
-    exactly that chunk set (broadcast semi-join) with the exact
-    residual applied — correctness never depends on the stats.
+    exactly that chunk set (a chunk allow-list in the scan task) with
+    the exact residual applied — correctness never depends on the
+    stats.
 
 At 100 TB the fast path turns "SUM(x) WHERE day BETWEEN a AND b" into
 a metadata-only job plus a decode of the two boundary chunks per
@@ -51,18 +52,16 @@ from pyspark.sql import types as T
 
 from tokcodec.io_tables import (
     METRICS_COLUMN,
-    _active_deletes,
-    _as_filter_list,
-    _blocks_df,
     _evolution_fill_columns,
+    _fan_out,
+    _filter_list,
     _filter_survivors,
-    _load_table,
     _normalize_filter,
     _paths,
     _resolve_as_of,
-    _run_files,
     read_encoded,
 )
+from tokcodec.scan import plan_snapshot
 from tokcodec.schema import BLOCK_DDL, manifest_schema
 
 _INT_LANES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
@@ -143,11 +142,14 @@ def _values_meta_cached(spark, path, lin_rows, files):
 
 # Driver-side decode cap for the partial-chunk fallback: past this
 # many stored values the boundary decode is real data work and belongs
-# in a Spark job; under it, the job's fixed scheduling latency (~0.3 s
-# for a 2-stage broadcast-join plan) dwarfs the decode itself, so the
-# driver reads the handful of block payloads with pyarrow and runs the
-# SAME codec decoders the executors would (the _commit_lineage_local
-# argument applied to reads).
+# in a Spark job; under it, the job's fixed scheduling latency (~0.3 s)
+# dwarfs the decode itself, so the driver reads the handful of block
+# payloads with pyarrow and runs the SAME codec decoders the executors
+# would (the _commit_lineage_local argument applied to reads). The cap
+# is sized against the metadata fan-out that reads those files
+# (io_tables._fan_out): 2M int64 values are 16 MB decoded, which the
+# _META_IO_THREADS reader threads fetch and decode in well under one
+# job's latency; raise the cap only together with the thread count.
 _DRIVER_DECODE_MAX_VALUES = 1 << 21
 
 
@@ -191,15 +193,8 @@ def _driver_chunk_values(path, files, columns, keys):
         }
         if buckets:
             plan.append((f["path"], buckets))
-    if len(plan) > 8:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=16) as ex:
-            tables = list(ex.map(_read_one, plan))
-    else:
-        tables = [_read_one(p) for p in plan]
     keyset = set(keys)
-    for t in tables:
+    for t in _fan_out(_read_one, plan):
         for r in t.to_pylist():
             k = (r["run_id"], int(r["bucket"]), int(r["chunk"]))
             if k not in keyset or r["column"] not in columns:
@@ -425,8 +420,11 @@ def aggregate_encoded(
     """
     as_of_epoch = _resolve_as_of(spark, path, as_of_epoch, as_of_ts,
                                  as_of_tag)
-    manifest, lin = _load_table(spark, path, as_of_epoch=as_of_epoch,
-                                since_epoch=since_epoch)
+    filts = _filter_list(range_filter, in_filter, eq_filter,
+                         contains_filter, or_filter)
+    snap = plan_snapshot(path, as_of_epoch=as_of_epoch,
+                         since_epoch=since_epoch, filters=filts)
+    manifest, fcols = snap.manifest, snap.filter_columns
     schema = manifest_schema(manifest)
     by_name = {f.name: f for f in schema.fields}
     if column not in by_name:
@@ -453,26 +451,6 @@ def aggregate_encoded(
             f"columns; {column!r} is {dt.simpleString()} — read + "
             "aggregate instead")
 
-    filts: list[tuple[str, tuple]] = []
-    for rf in _as_filter_list(range_filter):
-        filts.append(("range", rf))
-    if in_filter is not None:
-        filts.append(("in", tuple(in_filter)))
-    if eq_filter is not None:
-        filts.append(("eq", tuple(eq_filter)))
-    if contains_filter is not None:
-        filts.append(("contains", tuple(contains_filter)))
-    if or_filter is not None:
-        filts.append(("or", tuple(tuple(rf) for rf in or_filter)))
-    fcols = []
-    for kind, spec in filts:
-        for c in ([rf[0] for rf in spec] if kind == "or"
-                  else [spec[0]]):
-            if c not in by_name:
-                raise ValueError(
-                    f"filter column {c!r} not in encoded table")
-            if c not in fcols:
-                fcols.append(c)
     filts_kw = dict(range_filter=range_filter, in_filter=in_filter,
                     eq_filter=eq_filter, contains_filter=contains_filter,
                     or_filter=or_filter,
@@ -486,13 +464,10 @@ def aggregate_encoded(
                 else int(x)) if isinstance(dt, T.DecimalType) \
             else int(x)
 
-    lin_rows = [(int(r.bucket), r.run_id) for r in lin.collect()]
-    run_ids = sorted({rid for _, rid in lin_rows})
-    files = _run_files(spark, path, run_ids)
+    lin_rows, files = snap.lin_rows(), snap.files
     involved = set([column] + fcols)
     enc_cols = set(manifest.get("encrypted_columns", []))
-    dels = _active_deletes(spark, path, as_of_epoch=as_of_epoch)
-    if dels or (involved & enc_cols) \
+    if snap.deletes or (involved & enc_cols) \
             or _evolution_fill_columns(files, involved):
         out = _decode_path(spark, path, column, filts_kw, scale,
                            elements=elements)
@@ -550,10 +525,7 @@ def aggregate_encoded(
             n_partial, partial if n_partial else None, n_total,
             n_scanned, _to_logical)
 
-    lin_local = spark.createDataFrame(lin_rows,
-                                      "bucket int, run_id string")
-    blocks = _blocks_df(spark, path, lin_local,
-                        columns_needed=involved, files=files).persist()
+    blocks = snap.blocks_df(spark, columns_needed=involved).persist()
     try:
         keys = ["run_id", "bucket", "chunk"]
         # ---- survivor intersection (the readers' own pruning)
@@ -638,12 +610,10 @@ def aggregate_encoded(
         m = sides.get(True, zero)
         n_partial = int(sides.get(False, zero)["c"] or 0)
         if n_partial:
-            # materialize the partial set while blocks is cached: the
-            # decode job re-plans from it without re-deriving the
-            # pivot (localCheckpoint severs the lineage so the
-            # broadcast semi-join below is a plain small scan)
-            partial = (per_chunk.filter(~F.col("meta_ok"))
-                       .select(*keys).localCheckpoint(eager=True))
+            # collect the partial keys while blocks is cached: the
+            # boundary decode takes them as a chunk allow-list
+            partial = [tuple(r) for r in per_chunk.filter(
+                ~F.col("meta_ok")).select(*keys).collect()]
         n_scanned = int(m["c"] or 0) + n_partial
         n_total = n_scanned if not filts else int(blocks.filter(
             (F.col("component") == "values")
@@ -740,8 +710,11 @@ def aggregate_encoded_grouped(
     """
     as_of_epoch = _resolve_as_of(spark, path, as_of_epoch, as_of_ts,
                                  as_of_tag)
-    manifest, lin = _load_table(spark, path, as_of_epoch=as_of_epoch,
-                                since_epoch=since_epoch)
+    filts = _filter_list(range_filter, in_filter, eq_filter,
+                         contains_filter, or_filter)
+    snap = plan_snapshot(path, as_of_epoch=as_of_epoch,
+                         since_epoch=since_epoch, filters=filts)
+    manifest, fcols = snap.manifest, snap.filter_columns
     schema = manifest_schema(manifest)
     by_name = {f.name: f for f in schema.fields}
     for c in (group_col, column):
@@ -759,26 +732,6 @@ def aggregate_encoded_grouped(
             f"{column!r} is {adt.simpleString()} — read_encoded + "
             "groupBy instead")
 
-    filts: list[tuple[str, tuple]] = []
-    for rf in _as_filter_list(range_filter):
-        filts.append(("range", rf))
-    if in_filter is not None:
-        filts.append(("in", tuple(in_filter)))
-    if eq_filter is not None:
-        filts.append(("eq", tuple(eq_filter)))
-    if contains_filter is not None:
-        filts.append(("contains", tuple(contains_filter)))
-    if or_filter is not None:
-        filts.append(("or", tuple(tuple(rf) for rf in or_filter)))
-    fcols = []
-    for kind, spec in filts:
-        for c in ([rf[0] for rf in spec] if kind == "or"
-                  else [spec[0]]):
-            if c not in by_name:
-                raise ValueError(
-                    f"filter column {c!r} not in encoded table")
-            if c not in fcols:
-                fcols.append(c)
     filts_kw = dict(range_filter=range_filter, in_filter=in_filter,
                     eq_filter=eq_filter,
                     contains_filter=contains_filter,
@@ -800,13 +753,10 @@ def aggregate_encoded_grouped(
             group_col, "n_rows", "nonnull",
             F.col("sum").cast("long").alias("sum"), "min", "max")
 
-    lin_rows = [(int(r.bucket), r.run_id) for r in lin.collect()]
-    run_ids = sorted({rid for _, rid in lin_rows})
-    files = _run_files(spark, path, run_ids)
+    lin_rows, files = snap.lin_rows(), snap.files
     involved = set([group_col, column] + fcols)
     enc_cols = set(manifest.get("encrypted_columns", []))
-    dels = _active_deletes(spark, path, as_of_epoch=as_of_epoch)
-    if dels or (involved & enc_cols) \
+    if snap.deletes or (involved & enc_cols) \
             or _evolution_fill_columns(files, involved):
         if stats_out is not None:
             stats_out.update(path="decode")
@@ -921,10 +871,7 @@ def aggregate_encoded_grouped(
         )
         return _finish(merged)
 
-    lin_local = spark.createDataFrame(lin_rows,
-                                      "bucket int, run_id string")
-    blocks = _blocks_df(spark, path, lin_local,
-                        columns_needed=involved, files=files).persist()
+    blocks = snap.blocks_df(spark, columns_needed=involved).persist()
     try:
         keys = ["run_id", "bucket", "chunk"]
         surv = None
@@ -1002,9 +949,9 @@ def aggregate_encoded_grouped(
             _storage_to_logical(F.col("g_lo"), gdt).alias(group_col),
             "n_rows", "nonnull", "sum", "min", "max",
         ).localCheckpoint(eager=True)
-        partial = (per_chunk.filter(~F.col("meta_ok")).select(*keys)
-                   .localCheckpoint(eager=True))
-        n_partial = partial.count()
+        partial = [tuple(r) for r in per_chunk.filter(
+            ~F.col("meta_ok")).select(*keys).collect()]
+        n_partial = len(partial)
         if stats_out is not None:
             stats_out.update(
                 chunks_total=int(blocks.filter(
@@ -1077,8 +1024,9 @@ def quantile_encoded(
             raise ValueError(f"quantile out of [0, 1]: {x}")
     as_of_epoch = _resolve_as_of(spark, path, as_of_epoch, as_of_ts,
                                  as_of_tag)
-    manifest, lin = _load_table(spark, path, as_of_epoch=as_of_epoch,
-                                since_epoch=since_epoch)
+    snap = plan_snapshot(path, as_of_epoch=as_of_epoch,
+                         since_epoch=since_epoch)
+    manifest = snap.manifest
     schema = manifest_schema(manifest)
     by_name = {f.name: f for f in schema.fields}
     if column not in by_name:
@@ -1115,11 +1063,8 @@ def quantile_encoded(
         finally:
             df.unpersist()
 
-    lin_rows = [(int(r.bucket), r.run_id) for r in lin.collect()]
-    run_ids = sorted({rid for _, rid in lin_rows})
-    files = _run_files(spark, path, run_ids)
-    dels = _active_deletes(spark, path, as_of_epoch=as_of_epoch)
-    if dels or column in manifest.get("encrypted_columns", []) \
+    lin_rows, files = snap.lin_rows(), snap.files
+    if snap.deletes or column in manifest.get("encrypted_columns", []) \
             or _evolution_fill_columns(files, {column}):
         return _fallback()
 
@@ -1136,10 +1081,7 @@ def quantile_encoded(
             in by_col.get(column, {}).items()
         ]
     else:
-        lin_local = spark.createDataFrame(lin_rows,
-                                          "bucket int, run_id string")
-        blocks = _blocks_df(spark, path, lin_local,
-                            columns_needed={column}, files=files)
+        blocks = snap.blocks_df(spark, columns_needed={column})
         stats = blocks.filter((F.col("component") == "values")
                               & (F.col("column") == column)).select(
             "run_id", "bucket", "chunk",

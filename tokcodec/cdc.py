@@ -47,27 +47,19 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from tokcodec.io_tables import (
     _active_deletes,
-    _as_of_schema,
     _delete_keys_df,
-    _load_table,
     _resolve_as_of,
-    _run_files,
     read_encoded,
 )
-from tokcodec.schema import manifest_schema
+from tokcodec.scan import plan_snapshot
 
 CHANGE_COL = "_change_type"
 
 
 def _snapshot_names(spark, path, epoch) -> set[str]:
     """Column names visible in the ``as_of_epoch=epoch`` snapshot
-    (the same snapshot-schema projection read_encoded applies)."""
-    manifest, lin = _load_table(spark, path, as_of_epoch=epoch)
-    run_ids = sorted({r.run_id for r in lin.collect()})
-    _files, run_schemas = _run_files(spark, path, run_ids,
-                                     with_schemas=True)
-    snap = _as_of_schema(manifest_schema(manifest), run_schemas)
-    return {f.name for f in snap.fields}
+    (the planner's snapshot schema, as read_encoded projects it)."""
+    return set(plan_snapshot(path, as_of_epoch=epoch).schema.fieldNames())
 
 
 def changes_encoded(

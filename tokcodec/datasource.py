@@ -12,27 +12,30 @@
 
 This is the reference's "reads like any table" promise
 (CarpetReader / parquet's DataSource integration) delivered through
-Spark's own source API instead of a bespoke reader call:
+Spark's own source API instead of a bespoke reader call. The read
+side is read_encoded's pipeline, not a copy of it:
 
-- batch reads plan one InputPartition per committed bucket and decode
-  executor-side with pyarrow — the shuffle-free direct-reader shape;
-- WHERE predicates arrive via pushFilters and drive zone-map/bloom
-  CHUNK PRUNING before any payload is decoded; every filter is also
-  returned to Spark unhandled, so Spark re-applies the exact
-  predicate (pruning is best-effort, correctness is Spark's — chunks
-  with no stats always survive, so no false negatives are possible);
+- planning is tokcodec.scan.plan_snapshot — Spark-free (pyarrow fs),
+  which is what DataSource methods need, since they run without a
+  SparkSession — and the declared schema is the planner's read
+  schema (the snapshot schema under ``as_of_epoch``);
+- batch reads plan one InputPartition per accepted bucket, and read()
+  runs the one scan task, tokcodec.scan._scan_bucket; every partition
+  is self-contained (bucket, files, prune specs, removal lists), so
+  nothing depends on reader pickling order;
+- WHERE predicates arrive via pushFilters and become zone-map/bloom
+  prune specs for the task; every filter is also returned to Spark
+  unhandled, so Spark re-applies the exact predicate (pruning is
+  best-effort, correctness is Spark's — chunks with no stats always
+  survive, so no false negatives are possible);
 - the STREAM reader turns the epoch lineage into a Structured
   Streaming source: each micro-batch covers the (start, end] epoch
   window (exactly ``read_encoded(since_epoch=...)``'s incremental
   semantics), so `readStream` tails a table that streaming ingest or
   upserts keep appending to;
 - pending equality deletes are applied per task (each task loads the
-  small removal-list parquet once; for a huge list prefer
-  read_encoded's broadcast anti-join);
-- planning is Spark-free (pyarrow fs + pandas over the tiny lineage
-  table) because DataSource methods run without a SparkSession, and
-  every partition is self-contained (bucket, files, prune specs,
-  removal lists), so nothing depends on reader pickling order.
+  small removal-list parquet; for a huge list prefer read_encoded's
+  broadcast anti-join).
 
 - the WRITE path reuses write_encoded's exact task body (encode ->
   block files -> O(run) metadata commit), so DataSource-written and
@@ -73,134 +76,53 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from tokcodec.io_tables import _read_json_fs, _task_fs
 from tokcodec.schema import LAYOUT_VERSION, manifest_schema
 
 
-# ------------------------------------------------ Spark-free planning
-
-def _fs(path: str):
-    from tokcodec.io_tables import _task_fs
-
-    return _task_fs(path)
-
-
-def _read_json(path: str) -> dict:
-    fs, root = _fs(path)
-    with fs.open_input_stream(root) as f:
-        return json.loads(f.read().decode("utf-8"))
-
-
-def _lineage_pandas(path: str):
-    import pyarrow.dataset as pads
-
-    fs, root = _fs(posixpath.join(path, "lineage"))
-    return pads.dataset(root, format="parquet",
-                        filesystem=fs).to_table().to_pandas()
-
-
-def _committed_local(lin, as_of_epoch=None, since_epoch=None):
-    """pandas mirror of lineage.committed(): winner per (bucket,
-    epoch) by (ts, status, run_id) desc, kept iff committed."""
-    lin = lin[lin.status.isin(["committed", "tombstone"])]
-    if as_of_epoch is not None:
-        lin = lin[lin.epoch <= int(as_of_epoch)]
-    if since_epoch is not None:
-        lin = lin[lin.epoch > int(since_epoch)]
-    win = (lin.sort_values(["ts", "status", "run_id"], ascending=False)
-           .drop_duplicates(["bucket", "epoch"]))
-    return win[win.status == "committed"]
-
-
-def _deletes_local(path: str, lin, manifest: dict,
-                   as_of_epoch=None) -> list[dict]:
-    """pandas mirror of io_tables._active_deletes; uuid key columns
-    get their keys pre-converted to the stored 16-byte form so the
-    executor-side mask compares like with like."""
-    from tokcodec.io_tables import DELETE_BUCKET
-
-    d = lin[(lin.bucket == DELETE_BUCKET)
-            & lin.status.isin(["delete", "tombstone"])]
-    if as_of_epoch is not None:
-        d = d[d.epoch <= int(as_of_epoch)]
-    win = (d.sort_values(["ts", "status", "run_id"], ascending=False)
-           .drop_duplicates(["epoch"]))
-    out = []
-    for _, r in win[win.status == "delete"].iterrows():
-        meta = json.loads(r.codecs or "{}")
-        out.append({"delete_id": r.run_id, "epoch": int(r.epoch),
-                    "key_column": meta["key_column"],
-                    "file": meta["file"],
-                    "uuid": meta["key_column"]
-                    in manifest.get("uuid_columns", [])})
-    return sorted(out, key=lambda x: x["epoch"])
-
-
-def _run_files_local(path: str, run_ids) -> list[dict]:
-    files: list[dict] = []
-    for rid in sorted(set(run_ids)):
-        man = _read_json(posixpath.join(path, "_runs", f"{rid}.json"))
-        for f in man["files"]:
-            f = dict(f)
-            f["run_id"] = rid
-            files.append(f)
-    return files
-
-
-def _plan(path: str, as_of_epoch=None, since_epoch=None):
-    """(manifest, accepted {bucket: [run_id]}, files, deletes)."""
-    manifest = _read_json(posixpath.join(path, "_manifest.json"))
-    if manifest.get("layout", 1) != LAYOUT_VERSION:
-        raise ValueError(
-            f"table at {path!r} has layout {manifest.get('layout', 1)}; "
-            f"this build reads layout {LAYOUT_VERSION}")
-    lin = _lineage_pandas(path)
-    win = _committed_local(lin, as_of_epoch, since_epoch)
-    accepted: dict[int, list[str]] = {}
-    for _, r in win.iterrows():
-        accepted.setdefault(int(r.bucket), []).append(r.run_id)
-    files = _run_files_local(path, {r for rs in accepted.values()
-                                    for r in rs})
-    dels = _deletes_local(path, lin, manifest, as_of_epoch)
-    return manifest, accepted, files, dels
-
+# ------------------------------------------------------------ read path
 
 class _BucketPartition(InputPartition):
-    """Self-contained task spec: everything read() needs."""
+    """Self-contained task spec — everything read() needs, so nothing
+    depends on which copy of the reader an executor unpickles (the
+    stream reader plans its removal lists per micro-batch)."""
 
-    def __init__(self, bucket: int, runs: list[str],
-                 files: list[tuple[str, str]], specs: list[dict],
-                 dels: list[dict], fill: str | None):
+    def __init__(self, bucket: int, paths: list[str], specs: list[dict],
+                 removals: list[dict], extra: list[T.StructField],
+                 fill: str | None):
         self.bucket = bucket
-        self.runs = runs
-        self.files = files  # [(relative path, column), ...]
+        self.paths = paths  # the bucket's accepted block files
         self.specs = specs
-        self.dels = dels
+        self.removals = removals
+        self.extra = extra  # delete key columns outside the projection
         self.fill = fill
 
 
-def _make_partitions(path, accepted, files, schema, specs, dels,
-                     extra_fields):
-    from tokcodec.encode import METRICS_COLUMN
-    from tokcodec.io_tables import (
-        _direct_file_rows,
-        _evolution_fill_columns,
-    )
+def _make_partitions(snap, schema: T.StructType, specs: list[dict]):
+    """One partition per accepted bucket of the snapshot plan, with its
+    exact file list (a file holds exactly one run, so accept/reject is
+    decided here and read() never run-filters rows)."""
+    from tokcodec.io_tables import _direct_file_rows, _paths
+    from tokcodec.scan import fill_anchor
 
-    wanted = ({f.name for f in schema.fields}
-              | {f.name for f in extra_fields})
-    fill = METRICS_COLUMN if _evolution_fill_columns(files, wanted) \
-        else None
-    scan_cols = set(wanted) | ({fill} if fill else set())
-    rows = _direct_file_rows(files, scan_cols, "")
+    extra = _extra_delete_fields(schema, snap.manifest, snap.deletes)
+    wanted = [f.name for f in schema.fields] + [f.name for f in extra]
+    # pruned reads anchor evolution fill on a pruned column (rows of
+    # runs predating it cannot pass that filter anyway)
+    fill = fill_anchor(snap.files, wanted, [s["col"] for s in specs])
+    rows = _direct_file_rows(snap.files, {*wanted, fill} - {None},
+                             _paths(snap.path)[0])
+    uuids = set(snap.manifest.get("uuid_columns", []))
+    removals = [{"key_column": d["key_column"],
+                 "file": posixpath.join(snap.path, d["file"]),
+                 "uuid": d["key_column"] in uuids} for d in snap.deletes]
     parts = []
-    for bucket, runs in sorted(accepted.items()):
-        # a file holds exactly one run: accept/reject per
-        # (file, bucket) here, so read() never run-filters rows
-        flist = [(fp, col) for lo, hi, fp, col, rid in rows
+    for bucket, runs in sorted(snap.accepted.items()):
+        paths = [fp for lo, hi, fp, _col, rid in rows
                  if lo <= bucket <= hi and rid in runs]
-        if flist:
-            parts.append(_BucketPartition(bucket, runs, flist, specs,
-                                          dels, fill))
+        if paths:
+            parts.append(_BucketPartition(bucket, paths, specs, removals,
+                                          extra, fill))
     return parts
 
 
@@ -219,60 +141,22 @@ def _extra_delete_fields(schema: T.StructType, manifest: dict,
     return out
 
 
-def _decode_bucket(path: str, part: _BucketPartition,
-                   schema: T.StructType,
-                   extra_fields: list[T.StructField], key_hex):
-    """Executor-side: open the bucket's block files, prune chunks,
-    decode, apply removal lists — the direct reader's task body."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+def _read_partition(part: _BucketPartition, schema: T.StructType,
+                    key_hex):
+    """Executor side: read_encoded's scan task on one bucket, with the
+    removal lists applied in the task."""
     from tokcodec.decode import make_decode_fn
-    from tokcodec.io_tables import _prune_block_table
+    from tokcodec.scan import _scan_bucket
 
     key = bytes.fromhex(key_hex) if key_hex else None
-    fs, blocks_root = _fs(posixpath.join(path, "blocks"))
-    parts = []
-    for rel, _col in part.files:
-        # run acceptance was decided at planning (one run per file);
-        # the bucket filter prunes row groups of multi-bucket files
-        with fs.open_input_file(posixpath.join(blocks_root, rel)) as f:
-            t = pq.read_table(f, filters=[
-                ("bucket", "=", part.bucket),
-            ])
-        if t.num_rows:
-            parts.append(t)
-    if not parts:
-        return
-    tbl = pa.concat_tables(parts)
-    if part.specs:
-        tbl = _prune_block_table(tbl, part.specs, encryption_key=key)
-        if tbl.num_rows == 0:
-            return
-    decode_schema = T.StructType(list(schema.fields)
-                                 + list(extra_fields))
-    inner = make_decode_fn(decode_schema, encryption_key=key,
-                           fill_from=part.fill)
-    out = inner((part.bucket,), tbl)
-    if part.dels:
-        import pyarrow.compute as pc
-        import pyarrow.dataset as pads
-
-        for d in part.dels:
-            dfs, droot = _fs(posixpath.join(path, d["file"]))
-            keys = pads.dataset(droot, format="parquet",
-                                filesystem=dfs).to_table()
-            kcol = keys.column(d["key_column"])
-            if d["uuid"]:
-                kcol = pa.array(
-                    [bytes.fromhex(s.replace("-", ""))
-                     for s in kcol.to_pylist()], pa.binary())
-            mask = pc.invert(pc.is_in(out.column(d["key_column"]),
-                                      value_set=kcol))
-            out = out.filter(mask)
-    if extra_fields:
-        out = out.select([f.name for f in schema.fields])
-    yield from out.to_batches()
+    names = [f.name for f in schema.fields]
+    decode = make_decode_fn(
+        T.StructType(list(schema.fields) + list(part.extra)),
+        encryption_key=key, fill_from=part.fill)
+    yield from _scan_bucket(
+        part.bucket, part.paths, part.specs, decode, encryption_key=key,
+        removals=part.removals,
+        project=(lambda t: t.select(names)) if part.extra else None)
 
 
 def _filter_specs(schema: T.StructType, manifest: dict, filters):
@@ -387,32 +271,36 @@ def _lane_min(fld):
     return -(1 << 62)
 
 
+def _opt_int(options: dict, key: str) -> int | None:
+    v = options.get(key)
+    return int(v) if v is not None else None
+
+
+def _source_path(options: dict) -> str:
+    path = options.get("path") or options.get("paths")
+    if not path:
+        raise ValueError("tokcodec source needs a path: "
+                         ".load('/table/path')")
+    return path
+
+
 class TokcodecBatchReader(DataSourceReader):
     def __init__(self, options: dict, schema: T.StructType):
-        self.path = options.get("path") or options.get("paths")
-        if not self.path:
-            raise ValueError("tokcodec source needs a path: "
-                             ".load('/table/path')")
+        from tokcodec.scan import plan_snapshot
+
+        self.path = _source_path(options)
         self.key_hex = options.get("encryption_key_hex")
-        aoe = options.get("as_of_epoch")
-        soe = options.get("since_epoch")
-        self.manifest, self.accepted, self.files, self.dels = _plan(
-            self.path,
-            as_of_epoch=int(aoe) if aoe is not None else None,
-            since_epoch=int(soe) if soe is not None else None)
+        self.snap = plan_snapshot(
+            self.path, as_of_epoch=_opt_int(options, "as_of_epoch"),
+            since_epoch=_opt_int(options, "since_epoch"))
         self.schema = schema
-        self.extra = _extra_delete_fields(schema, self.manifest,
-                                          self.dels)
         self.specs: list[dict] = []
 
     def partitions(self):
-        return _make_partitions(self.path, self.accepted, self.files,
-                                self.schema, self.specs, self.dels,
-                                self.extra)
+        return _make_partitions(self.snap, self.schema, self.specs)
 
     def read(self, partition: _BucketPartition):
-        yield from _decode_bucket(self.path, partition, self.schema,
-                                  self.extra, self.key_hex)
+        yield from _read_partition(partition, self.schema, self.key_hex)
 
 
 class TokcodecPushdownBatchReader(TokcodecBatchReader):
@@ -424,8 +312,9 @@ class TokcodecPushdownBatchReader(TokcodecBatchReader):
     enables the conf."""
 
     def pushFilters(self, filters):
-        full = manifest_schema(self.manifest)
-        self.specs = _filter_specs(full, self.manifest, filters)
+        manifest = self.snap.manifest
+        self.specs = _filter_specs(manifest_schema(manifest), manifest,
+                                   filters)
         # hand every filter back: pruning is ours, exactness is Spark's
         return filters
 
@@ -435,43 +324,35 @@ class TokcodecStreamReader(DataSourceStreamReader):
     micro-batch decodes the runs committed in (start, end]."""
 
     def __init__(self, options: dict, schema: T.StructType):
-        self.path = options.get("path") or options.get("paths")
-        if not self.path:
-            raise ValueError("tokcodec source needs a path")
+        self.path = _source_path(options)
         self.key_hex = options.get("encryption_key_hex")
         self.start_epoch = int(options.get("since_epoch", -1))
         self.schema = schema
-        manifest = _read_json(posixpath.join(self.path,
-                                             "_manifest.json"))
-        self.manifest = manifest
 
     def initialOffset(self) -> dict:
         return {"epoch": self.start_epoch}
 
     def latestOffset(self) -> dict:
-        lin = _lineage_pandas(self.path)
-        win = _committed_local(lin)
+        from tokcodec.io_tables import _committed_pandas, _lineage_local
+
+        win = _committed_pandas(_lineage_local(None, self.path))
         top = int(win.epoch.max()) if len(win) else self.start_epoch
         return {"epoch": max(top, self.start_epoch)}
 
     def partitions(self, start: dict, end: dict):
+        from tokcodec.scan import plan_snapshot
+
         lo, hi = int(start["epoch"]), int(end["epoch"])
         if hi <= lo:
             return []
-        _m, accepted, files, dels = _plan(self.path, as_of_epoch=hi,
-                                          since_epoch=lo)
-        extra = _extra_delete_fields(self.schema, self.manifest, dels)
-        self._extra = extra
-        return _make_partitions(self.path, accepted, files,
-                                self.schema, [], dels, extra)
+        # decoded under the stream's schema: columns the window's runs
+        # predate null-fill
+        return _make_partitions(
+            plan_snapshot(self.path, as_of_epoch=hi, since_epoch=lo),
+            self.schema, [])
 
     def read(self, partition: _BucketPartition):
-        # recompute the extra fields from the partition itself (the
-        # executor copy of this reader may predate partitions())
-        extra = _extra_delete_fields(self.schema, self.manifest,
-                                     partition.dels)
-        yield from _decode_bucket(self.path, partition, self.schema,
-                                  extra, self.key_hex)
+        yield from _read_partition(partition, self.schema, self.key_hex)
 
     def commit(self, end: dict) -> None:
         pass  # offsets are derived from the durable lineage
@@ -485,7 +366,7 @@ def _write_json_fs(path: str, content: str) -> None:
     without a JVM gateway."""
     import uuid as _uuid
 
-    fs, root = _fs(path)
+    fs, root = _task_fs(path)
     fs.create_dir(posixpath.dirname(root), recursive=True)
     tmp = posixpath.join(posixpath.dirname(root),
                          f".{_uuid.uuid4().hex}.tmp")
@@ -497,7 +378,7 @@ def _write_json_fs(path: str, content: str) -> None:
 def _exists(path: str) -> bool:
     from pyarrow import fs as pafs
 
-    fs, root = _fs(path)
+    fs, root = _task_fs(path)
     return fs.get_file_info(root).type != pafs.FileType.NotFound
 
 
@@ -679,7 +560,7 @@ class _WriterCore:
                            manifest_extra=manifest_extra)
 
     def _abort_run(self, messages) -> None:
-        fs, blocks_root = _fs(posixpath.join(self.path, "blocks"))
+        fs, blocks_root = _task_fs(posixpath.join(self.path, "blocks"))
         for m in messages or ():
             for f in getattr(m, "files", None) or ():
                 try:
@@ -690,9 +571,9 @@ class _WriterCore:
 
 
 def _decoded_ranges(files: list[dict]) -> list[dict]:
-    """Run-manifest rows keep bucket_ranges as a JSON string on disk
-    exactly like write_encoded's (the batched spark.read.json scan
-    types them); parse here so both writers emit identical shapes."""
+    """Writer tasks report bucket_ranges as a JSON string; parse it so
+    the run manifest stores the list-of-pairs shape write_encoded
+    writes (both writers emit identical manifests)."""
     out = []
     for f in files:
         g = dict(f)
@@ -712,11 +593,16 @@ def _plan_epoch_and_tombstones(path: str, run_id: str,
     the new run plus tombstones for every prior (bucket, epoch) and
     active delete in ONE lineage append (compact_encoded's atomic
     supersede, Spark-free)."""
-    from tokcodec.io_tables import DELETE_BUCKET
+    from tokcodec.io_tables import (
+        DELETE_BUCKET,
+        _committed_pandas,
+        _deletes_in_force,
+        _lineage_local,
+    )
 
     if not _exists(posixpath.join(path, "_manifest.json")):
         return 0, [], 0, {}
-    manifest = _read_json(posixpath.join(path, "_manifest.json"))
+    manifest = _read_json_fs(posixpath.join(path, "_manifest.json"))
     if manifest.get("layout", 1) != LAYOUT_VERSION:
         raise ValueError(
             f"table at {path!r} has layout {manifest.get('layout', 1)}")
@@ -724,7 +610,7 @@ def _plan_epoch_and_tombstones(path: str, run_id: str,
         raise ValueError(
             "the DataSource writer does not handle uuid/enum column "
             "conversion — append to this table with write_encoded")
-    lin = _lineage_pandas(path)
+    lin = _lineage_local(None, path)
     live = lin[lin.status.isin(["committed", "delete"])]
     top = int(live.epoch.max()) if len(live) else -1
     epoch = top + 1
@@ -737,11 +623,10 @@ def _plan_epoch_and_tombstones(path: str, run_id: str,
         return epoch, [], int(manifest.get("n_buckets", 0)), {
             "uuid_columns": manifest.get("uuid_columns"),
             "enum_columns": manifest.get("enum_columns")}
-    win = _committed_local(lin)
-    tombs = [(run_id, int(r.bucket), int(r.epoch))
-             for _, r in win.iterrows()]
-    dels = _deletes_local(path, lin, manifest)
-    tombs += [(run_id, DELETE_BUCKET, d["epoch"]) for d in dels]
+    win = _committed_pandas(lin)
+    tombs = [(run_id, int(b), int(e)) for b, e in zip(win.bucket, win.epoch)]
+    tombs += [(run_id, DELETE_BUCKET, d["epoch"])
+              for d in _deletes_in_force(lin)]
     return epoch, tombs, 0, {}
 
 
@@ -766,7 +651,7 @@ class TokcodecBatchWriter(DataSourceArrowWriter):
             path, run_id, schema, overwrite)
         if self.core.encryption_key is None and not overwrite:
             enc = [] if not _exists(
-                posixpath.join(path, "_manifest.json")) else _read_json(
+                posixpath.join(path, "_manifest.json")) else _read_json_fs(
                 posixpath.join(path, "_manifest.json")).get(
                 "encrypted_columns", [])
             if enc:
@@ -818,7 +703,7 @@ class TokcodecStreamWriter(DataSourceStreamArrowWriter):
         self.schema = schema
         self.path = path
         if _exists(posixpath.join(path, "_manifest.json")):
-            manifest = _read_json(posixpath.join(path,
+            manifest = _read_json_fs(posixpath.join(path,
                                                  "_manifest.json"))
             if manifest["ddl"] != schema.simpleString():
                 raise ValueError(
@@ -858,7 +743,7 @@ class TokcodecStreamWriter(DataSourceStreamArrowWriter):
                      for f in fl]
         floor = 0
         if _exists(posixpath.join(self.path, "_manifest.json")):
-            floor = int(_read_json(posixpath.join(
+            floor = int(_read_json_fs(posixpath.join(
                 self.path, "_manifest.json")).get("n_buckets", 0))
         core._commit_files(all_files, int(batchId),
                            n_buckets_floor=floor)
@@ -878,15 +763,16 @@ class TokcodecDataSource(DataSource):
         return "tokcodec"
 
     def schema(self):
-        path = self.options.get("path") or self.options.get("paths")
-        if not path:
-            raise ValueError("tokcodec source needs a path: "
-                             ".load('/table/path')")
-        manifest = _read_json(posixpath.join(path, "_manifest.json"))
-        # uuid columns surface as 16-byte binary through this source
-        # (the stored representation); use read_encoded for canonical
-        # string expansion
-        return manifest_schema(manifest)
+        from tokcodec.scan import plan_snapshot
+
+        # the planner's read schema: the snapshot schema under
+        # as_of_epoch, so a time-travel read projects the columns that
+        # existed then (read_encoded's semantics). uuid columns surface
+        # as 16-byte binary through this source (the stored
+        # representation); use read_encoded for canonical strings
+        as_of = _opt_int(self.options, "as_of_epoch")
+        return plan_snapshot(_source_path(self.options), as_of_epoch=as_of,
+                             with_files=as_of is not None).schema
 
     def reader(self, schema: T.StructType) -> TokcodecBatchReader:
         if str(self.options.get("pushdown", "")).lower() == "true":

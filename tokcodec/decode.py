@@ -1,10 +1,13 @@
-"""Distributed decode stage (≙ reference read path, SURVEY.md §3.2).
+"""Block decode (≙ reference read path, SURVEY.md §3.2): one bucket's
+block rows -> Arrow columns. The table readers run it inside the scan
+task (tokcodec.scan); decode_blocks runs it over an in-memory blocks
+DataFrame (encode_table output).
 
 Projection pushdown works like the reference's ``SchemaFilter.project``
 (impl/read/SchemaFilter.java:56-156): only the requested columns'
-blocks are scanned — a plain Catalyst filter on the blocks table's
-``column`` field, which Parquet turns into row-group skipping; the
-payload bytes of unrequested columns are never read or decoded.
+blocks are read — the readers open only those columns' block files,
+and decode_blocks filters the blocks table's ``column`` field; the
+payload bytes of unrequested columns are never decoded.
 
 Decode itself is dictionary-aware in the reference's sense
 (StringConverter.java:39-55): dict codecs materialize the dictionary
@@ -286,7 +289,9 @@ def make_decode_fn(schema: T.StructType, verify_checksums: bool = False,
                    fill_from: str | None = None,
                    encryption_key: bytes | None = None,
                    bucket_column: str | None = None):
-    """applyInArrow function: (key, blocks pa.Table) -> decoded pa.Table.
+    """Decode step of the scan task (tokcodec.scan._scan_bucket) and of
+    decode_blocks' grouped stage: (key, blocks pa.Table) -> decoded
+    pa.Table for one bucket.
 
     ``fill_from`` activates schema-evolution decode (runs written
     before a column was added are null-filled at their run position):
@@ -305,9 +310,9 @@ def make_decode_fn(schema: T.StructType, verify_checksums: bool = False,
     fields = [(f.name, f.dataType) for f in schema.fields]
     out_schema = pa.schema(
         [(n, spark_type_to_arrow(dt)) for n, dt in fields]
-        # provenance: the grouping key IS the bucket — emitting it is
-        # a constant column, no storage read (upsert uses it to
-        # rewrite rows into their original buckets)
+        # provenance: the key IS the bucket — emitting it is a
+        # constant column, no storage read (upsert uses it to rewrite
+        # rows into their original buckets)
         + ([(bucket_column, pa.int32())] if bucket_column else [])
     )
 
@@ -409,81 +414,28 @@ def _default_array(dt: T.DataType, n: int, nullable: bool) -> pa.Array:
     return pa.array(np.zeros(n, dtype=np.int64)).cast(target)
 
 
-def decode_blocks_as(blocks: DataFrame, file_schema: T.StructType,
-                     read_schema: T.StructType,
-                     aliases: dict[str, str] | None = None,
-                     fail_on_missing_column: bool = True,
-                     fail_on_narrowing: bool = False,
-                     fill_from: str | None = None,
-                     encryption_key: bytes | None = None) -> DataFrame:
-    """Schema-on-read decode with the reference's mismatch policy
-    (SchemaValidation.java:63-124 + ColumnToFieldMapper):
-
-    - each read field resolves to a file column by alias > exact >
-      snake_case (reference P4);
-    - a missing column raises unless ``fail_on_missing_column=False``,
-      in which case the type default / null is materialized;
-    - numeric narrowing (stored int64 -> requested int32) truncates by
-      default; with ``fail_on_narrowing=True`` an overflowing value
-      raises (reference validatePrimitiveCompatibility semantics).
-    """
-    from tokcodec.naming import map_fields
-
-    file_by_name = {f.name: f for f in file_schema.fields}
-    mapping = map_fields(
-        list(file_by_name), [f.name for f in read_schema.fields],
-        aliases=aliases, fail_on_missing=fail_on_missing_column,
-    )
-    plan = []  # (out_field, file_field_or_None)
-    for rf in read_schema.fields:
-        col = mapping[rf.name]
-        plan.append((rf, file_by_name[col] if col is not None else None))
-
-    present = [ff.name for _, ff in plan if ff is not None]
-    if fill_from == METRICS_COLUMN:
-        # schema-evolved table: the metrics rows carry per-run fill
-        # counts (see make_decode_fn)
-        keep = F.col("column").isin(present + [METRICS_COLUMN])
-    else:
-        keep = ((F.col("column") != METRICS_COLUMN)
-                & F.col("column").isin(present))
-    b = blocks.filter(keep)
+def make_read_as_fn(plan, fail_on_narrowing: bool = False):
+    """Schema-on-read projection of one decoded bucket table (the scan
+    task's ``project`` step for read_encoded_as). ``plan``: one
+    (read field, stored field or None) pair per output column, in
+    output order. Stored columns are renamed and cast to the read type
+    (``safe=fail_on_narrowing``: an overflowing narrowing raises
+    instead of truncating); missing ones get the reference default
+    (see _default_array)."""
     out_schema = pa.schema(
-        [(rf.name, spark_type_to_arrow(rf.dataType)) for rf, _ in plan]
-    )
+        [(rf.name, spark_type_to_arrow(rf.dataType)) for rf, _ in plan])
 
-    def fn(key: tuple, table: pa.Table) -> pa.Table:
-        from tokcodec.crypto import decrypt_block_row, is_encrypted
-
-        recs = table.to_pylist()
-        by_col: dict[str, list[dict]] = {}
-        for r in recs:
-            if is_encrypted(r):
-                decrypt_block_row(encryption_key, r)
-            by_col.setdefault(r["column"], []).append(r)
-        fills = None
-        if fill_from == METRICS_COLUMN:
-            per_run: dict[str, int] = {}
-            for r in by_col.get(METRICS_COLUMN, []):
-                per_run[r["run_id"]] = (
-                    per_run.get(r["run_id"], 0) + r["n_rows"]
-                )
-            fills = sorted(per_run.items())
-            n = sum(nr for _, nr in fills)
-        else:
-            n = _column_row_count(next(iter(by_col.values())))
+    def project(table: pa.Table) -> pa.Table:
         arrays = []
         for (rf, ff), target in zip(plan, out_schema.types):
             if ff is None:
-                arrays.append(_default_array(rf.dataType, n, rf.nullable))
+                arrays.append(_default_array(rf.dataType, table.num_rows,
+                                             rf.nullable))
                 continue
-            ftarget = spark_type_to_arrow(ff.dataType)
-            rows = (by_col[ff.name] if fills is None
-                    else by_col.get(ff.name, []))
-            arr = _decode_field(rows, ff.dataType, ftarget, fills)
+            arr = table.column(ff.name)
             if arr.type != target:
                 arr = arr.cast(target, safe=bool(fail_on_narrowing))
             arrays.append(arr)
         return pa.Table.from_arrays(arrays, schema=out_schema)
 
-    return b.groupBy("bucket").applyInArrow(fn, schema=read_schema)
+    return project

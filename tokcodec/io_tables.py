@@ -32,7 +32,6 @@ on a real cluster):
 
 from __future__ import annotations
 
-import bisect
 import json
 import os
 import posixpath
@@ -42,7 +41,6 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from tokcodec.decode import decode_blocks
 from tokcodec.encode import (
     BUCKET_COL,
     CHUNK_MAX_ROWS,
@@ -51,7 +49,7 @@ from tokcodec.encode import (
     effective_salt_cols,
     with_bucket,
 )
-from tokcodec.lineage import committed, lineage_from_blocks
+from tokcodec.lineage import lineage_from_blocks
 from tokcodec.schema import (
     BLOCK_DDL,
     LAYOUT_VERSION,
@@ -193,6 +191,38 @@ def _task_fs(root: str):
         f, p = pafs.FileSystem.from_uri(root)
         return f, p
     return pafs.LocalFileSystem(), root
+
+
+def _read_json_fs(path: str) -> dict:
+    """Spark-free JSON metadata read over _task_fs (manifests are read
+    by the snapshot planner, which may run without a SparkSession)."""
+    fs, p = _task_fs(path)
+    with fs.open_input_stream(p) as f:
+        return json.loads(f.read().decode("utf-8"))
+
+
+# Metadata IO fan-out, shared by every driver-side step that reads many
+# small files: run manifests at planning, a commit's metrics files,
+# the aggregate boundary decode's block files. From
+# _META_IO_FANOUT_MIN files on, the reads overlap on _META_IO_THREADS
+# threads — they are KB-sized and IO-bound, so 16 threads keep
+# thousands of them under one Spark job's scheduling latency; below
+# the threshold a pool costs more than it saves.
+_META_IO_FANOUT_MIN = 9
+_META_IO_THREADS = 16
+
+
+def _fan_out(fn, items) -> list:
+    """[fn(x) for x in items], on the metadata thread pool when there
+    are at least _META_IO_FANOUT_MIN items (order preserved; the first
+    exception propagates)."""
+    items = list(items)
+    if len(items) < _META_IO_FANOUT_MIN:
+        return [fn(x) for x in items]
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=_META_IO_THREADS) as ex:
+        return list(ex.map(fn, items))
 
 
 # a writer task flushes its buffered block rows to files once they
@@ -528,18 +558,9 @@ def _commit_lineage_local(spark: SparkSession, path: str,
         with mfs.open_input_file(mroot) as f:
             return pq.read_table(f)
 
-    if len(metric_paths) > 8:
-        # many metric files (one per encode task — thousands at 100 TB
-        # bucket counts): overlap the reads; they are KB-sized metadata
-        # so 16 threads keep the commit well under one Spark job's
-        # scheduling latency even at cluster scale
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=16) as ex:
-            tables = list(ex.map(_read_one, metric_paths))
-    else:
-        tables = [_read_one(mp) for mp in metric_paths]
-    for t in tables:
+    # one metric file per encode task — thousands at 100 TB bucket
+    # counts: overlapped on the metadata pool
+    for t in _fan_out(_read_one, metric_paths):
         for r in t.to_pylist():
             if r["column"] != METRICS_COLUMN:
                 continue
@@ -638,11 +659,10 @@ def write_encoded(
     spark = df.sparkSession
     blocks_p, lineage_p, manifest_p = _paths(path)
     run_id = run_id or uuid.uuid4().hex[:12]
-    # run_id becomes part of file names AND of paths handed to
-    # spark.read.json (which applies Hadoop glob semantics): glob
+    # run_id becomes part of file names and manifest paths: glob
     # metacharacters ([]{}*?), path separators or whitespace would
-    # make the batched manifest scan resolve differently from the
-    # serial reader — or read the wrong manifests (ADVICE r4).
+    # make glob-aware path APIs (Hadoop's, Spark's file sources)
+    # resolve them to the wrong files (ADVICE r4).
     if not re.fullmatch(r"[A-Za-z0-9._=-]+", run_id):
         raise ValueError(
             f"run_id {run_id!r} may only contain [A-Za-z0-9._=-] "
@@ -888,8 +908,8 @@ def _write_run(b: DataFrame, schema: T.StructType, path: str,
         # is fixed at write, like a parquet file's footer schema —
         # reference CarpetReader reads what the footer says); as-of
         # reads project the union of participating runs' schemas.
-        # Double-encoded so the batched spark.read.json scan can type
-        # it as a plain string.
+        # Stored double-encoded, as a JSON string (the run-manifest
+        # format every reader expects).
         json.dumps({"run_id": run_id, "epoch": int(epoch),
                     "schema_json": json.dumps(schema.jsonValue()),
                     "files": files},
@@ -928,32 +948,22 @@ def _load_table(spark: SparkSession, path: str,
 
     Schema note: readers project the SNAPSHOT schema for as-of reads
     (Iceberg snapshot semantics; r4 verdict #5) — every run manifest
-    records its stored schema at write, and read_encoded(_direct)
-    read under the union of the participating runs' schemas, so a
+    records its stored schema at write, and read_encoded reads
+    under the union of the participating runs' schemas, so a
     column added by evolution after the target epoch does not appear.
     Legacy run manifests without the recorded schema fall back to the
     current manifest schema, null-filled (the pre-r5 behavior)."""
-    _, lineage_p, manifest_p = _paths(path)
-    manifest = json.loads(_read_text(spark, manifest_p))
-    if manifest.get("layout", 1) != LAYOUT_VERSION:
-        raise ValueError(
-            f"table at {path!r} has layout {manifest.get('layout', 1)}; "
-            f"this build reads layout {LAYOUT_VERSION} — re-encode"
-        )
-    # lineage is O(buckets x epochs) rows of metadata: read it
-    # driver-side (pyarrow) and hand consumers a LOCAL relation —
-    # Catalyst folds projections/filters over LocalRelation and
-    # .collect() on it is job-free, so planning a read costs zero
-    # Spark jobs instead of one parquet-scan job per call (the same
-    # fixed-latency argument as the driver-side commit above)
-    lin_pd = _lineage_local(spark, path)
-    if as_of_epoch is not None:
-        lin_pd = lin_pd[lin_pd.epoch <= int(as_of_epoch)]
-    if since_epoch is not None:
-        # incremental (CDC-append) read: only epochs AFTER the
-        # consumer's checkpoint participate — see read_encoded
-        lin_pd = lin_pd[lin_pd.epoch > int(since_epoch)]
-    win = _committed_pandas(lin_pd)
+    from tokcodec.scan import plan_snapshot
+
+    # lineage is O(buckets x epochs) rows of metadata: the planner
+    # reads it driver-side (pyarrow) and consumers get a LOCAL
+    # relation — Catalyst folds projections/filters over
+    # LocalRelation and .collect() on it is job-free, so planning
+    # costs zero Spark jobs (the same fixed-latency argument as the
+    # driver-side commit above)
+    snap = plan_snapshot(path, as_of_epoch=as_of_epoch,
+                         since_epoch=since_epoch, with_files=False)
+    manifest, win = snap.manifest, snap.winners
     if full_lineage:
         cols = ["run_id", "bucket", "epoch", "status", "n_rows",
                 "orig_bytes", "enc_bytes", "ratio", "codecs",
@@ -1071,72 +1081,29 @@ def untag_encoded(spark: SparkSession, path: str, name: str) -> None:
                 json.dumps(tags, sort_keys=True, separators=(",", ":")))
 
 
-_RUN_MANIFEST_DDL = (
-    "run_id string, epoch long, schema_json string, files array<struct<"
-    "path:string,column:string,bucket_ranges:array<array<long>>,"
-    "n_rows:long,bytes:long>>"
-)
-
-# beyond this many committed runs, manifest reads go through ONE
-# distributed spark.read.json job instead of serial driver-side
-# open/parse per run — a streaming table with thousands of epochs
-# must not pay thousands of sequential small-file RPCs per planning
-# call (round-3 verdict "What's wrong" #2). Below it, Spark job
-# latency (~100ms) exceeds a handful of direct reads.
-_RUN_MANIFEST_BATCH_MIN = 9
-
-
-def _run_files(spark: SparkSession, path: str, run_ids,
+def _run_files(spark: SparkSession | None, path: str, run_ids,
                with_schemas: bool = False):
     """Union of the committed runs' file manifests — the ONLY way any
     reader learns which block files exist (no listing; files from
-    uncommitted/failed/orphaned attempts are invisible).
-
-    Few runs: direct reads. Many runs (streaming epochs): one
-    distributed JSON scan over the exact manifest paths, so planning
-    cost is one Spark job regardless of history length.
+    uncommitted/failed/orphaned attempts are invisible). Spark-free
+    reads over _task_fs; a table with many runs (streaming epochs)
+    overlaps them on the metadata pool (_fan_out), so planning never
+    pays one serial small-file read per run. A missing manifest of a
+    committed run raises. ``spark`` is unused (Spark-free callers pass
+    None).
 
     ``with_schemas``: also return {run_id: schema_json | None} (the
     run's stored schema, recorded at write — the snapshot-schema
     source for as-of reads; None for pre-r5 run manifests)."""
     rids = sorted(set(run_ids))
-    if len(rids) < _RUN_MANIFEST_BATCH_MIN:
-        files: list[dict] = []
-        schemas: dict[str, str | None] = {}
-        for rid in rids:
-            m = json.loads(
-                _read_text(spark, _run_manifest_path(path, rid)))
-            schemas[rid] = m.get("schema_json")
-            for f in m["files"]:
-                f = dict(f)
-                f["run_id"] = rid
-                files.append(f)
-        return (files, schemas) if with_schemas else files
-    paths = [_run_manifest_path(path, rid) for rid in rids]
-    rows = (
-        spark.read.schema(_RUN_MANIFEST_DDL).json(paths)
-        # explode_outer: an empty run (resume with nothing pending)
-        # has files=[] and must still count as present below
-        .select("run_id", "schema_json",
-                F.explode_outer("files").alias("f"))
-        .select("run_id", "schema_json", "f.*")
-        .collect()  # O(files) rows of path metadata, not payloads
-    )
-    if {r.run_id for r in rows} != set(rids):
-        missing = set(rids) - {r.run_id for r in rows}
-        raise FileNotFoundError(
-            f"committed run manifests missing or unparseable: "
-            f"{sorted(missing)}")
-    files = [
-        {"path": r.path, "column": r.column,
-         "bucket_ranges": [[int(lo), int(hi)] for lo, hi in r.bucket_ranges],
-         "n_rows": r.n_rows, "bytes": r.bytes, "run_id": r.run_id}
-        for r in sorted((r for r in rows if r.path is not None),
-                        key=lambda r: (r.run_id, r.path))
-    ]
-    if not with_schemas:
-        return files
-    return files, {r.run_id: r.schema_json for r in rows}
+    mans = _fan_out(
+        lambda rid: _read_json_fs(_run_manifest_path(path, rid)), rids)
+    files: list[dict] = []
+    schemas: dict[str, str | None] = {}
+    for rid, m in zip(rids, mans):
+        schemas[rid] = m.get("schema_json")
+        files.extend(dict(f, run_id=rid) for f in m["files"])
+    return (files, schemas) if with_schemas else files
 
 
 def _as_of_schema(current: T.StructType,
@@ -1425,26 +1392,35 @@ def read_encoded(
     since_epoch: int | None = None,
     as_of_tag: str | None = None,
     or_filter: list[tuple] | None = None,
-    _chunk_subset: DataFrame | None = None,
+    _chunk_subset=None,
     _sample: tuple[float, int] | None = None,
 ) -> DataFrame:
-    """Decode an encoded table; ``columns`` is projection pushdown —
-    only those columns' block FILES enter the scan (reference P3).
+    """Decode an encoded table. Every option shape takes the same
+    path: the snapshot planner (tokcodec.scan.plan_snapshot) picks
+    each bucket's winning runs and their block files from metadata
+    alone — lineage -> run manifests -> explicit paths, no listing, no
+    Spark job — and one shuffle-free task per slice of buckets opens
+    each bucket's files with pyarrow, prunes chunks from the bucket's
+    own metas and blooms, and decodes (tokcodec.scan._scan_bucket).
+    No payload byte is shuffled and no block file enters a Spark scan.
 
-    ``_chunk_subset`` (internal): a small (run_id, bucket, chunk)
-    DataFrame or plain key list; when given, ONLY those chunks are
-    decoded (broadcast semi-join, same shape as filter pruning) —
-    and the LIST form additionally prunes the file plan to the
-    touched (run, bucket)s before the scan opens anything.
-    aggregate_encoded uses it to decode exactly the filter-boundary
-    chunks its metadata fast path could not answer.
+    ``columns`` is projection pushdown — only those columns' block
+    FILES are opened (reference P3). A filter or delete-key column
+    missing from ``columns`` is decoded anyway and dropped from the
+    output.
 
-    ``buckets``: restrict the read to those storage buckets (planning-
-    time pruning — other buckets' lineage rows never enter the file
-    plan). ``with_bucket_column=True`` appends each row's storage
-    bucket as an int ``__bucket`` column (free: it is the decode
-    group's key, not a stored column). Both exist for bucket-granular
-    copy-on-write (``upsert_encoded``) and for observability.
+    ``buckets``: restrict the read to those storage buckets (other
+    buckets never enter the plan). ``with_bucket_column=True`` appends
+    each row's storage bucket as an int ``__bucket`` column (free: the
+    task knows its bucket). Both serve bucket-granular copy-on-write
+    (``upsert_encoded``) and observability.
+
+    ``_chunk_subset`` (internal): a list of (run_id, bucket, chunk)
+    keys; ONLY those chunks are decoded, and the plan is pruned to the
+    touched (run, bucket)s before any file is opened. aggregate_encoded
+    and quantile_encoded use it to decode exactly the boundary chunks
+    their metadata fast path could not answer. ``_sample``
+    (internal): (fraction, seed) — see sample_encoded.
 
     ``since_epoch``: incremental (CDC-append) read — only rows
     committed at epochs AFTER the given one, i.e. "changes since my
@@ -1457,16 +1433,16 @@ def read_encoded(
     rewrite re-emits them — checkpoint before compacting. Pending
     equality deletes still apply (deleted rows never surface).
 
-    ``range_filter=(int_column, lo, hi)`` enables zone-map chunk
-    skipping (the encoded-block analogue of parquet row-group pruning):
-    whole (bucket, chunk)s whose stored [lo, hi] range misses the
-    predicate are never decoded; an exact residual filter is applied
-    to the survivors. Filter semantics: lo <= col <= hi. A LIST of
-    triples is a conjunction over several columns — the natural read
-    for Z-order-clustered tables (``cluster_by=[a, b]``), where every
+    ``range_filter=(column, lo, hi)`` enables zone-map chunk skipping
+    (the encoded-block analogue of parquet row-group pruning): whole
+    chunks whose stored [lo, hi] range misses the predicate are never
+    decoded; the exact residual filter runs JVM-side on the
+    survivors. Filter semantics: lo <= col <= hi. A LIST of triples
+    is a conjunction over several columns — the natural read for
+    Z-order-clustered tables (``cluster_by=[a, b]``), where every
     clustered dimension prunes.
 
-    ``in_filter=(int_column, values)`` is the set-membership variant:
+    ``in_filter=(column, values)`` is the set-membership variant:
     chunks whose [lo, hi] zone contains none of the values are skipped
     (the IVF ANN probe path — encode with ``cluster_by='cell'`` so
     chunk zones are tight).
@@ -1490,56 +1466,142 @@ def read_encoded(
     ``array_contains`` / ``arrays_overlap`` residual runs JVM-side on
     the survivors.
 
-    The filters COMPOSE (logical AND): e.g. a date
-    ``range_filter`` plus an ``eq_filter`` point lookup prunes to the
-    intersection of each filter's surviving chunks, then applies both
-    residuals. range/in accept integer, float/double, date, timestamp,
-    string and binary columns (ints/dates/timestamps/floats via
-    [lo, hi] zone maps — float zones are the curation pipeline's
+    The filters COMPOSE (logical AND): each prunes independently and
+    a chunk is decoded only if it survives all of them; then every
+    residual applies. range/in accept integer, float/double, date,
+    timestamp, string and binary columns (ints/dates/timestamps/floats
+    via [lo, hi] zone maps — float zones are the curation pipeline's
     quality-score gates; strings/binary via truncated min/max
-    bounds).
+    bounds). Encrypted columns prune too, with the key (their stats
+    and blooms are decrypted in the task).
 
     ``or_filter=[(col, lo, hi), ...]`` is a DISJUNCTION of range
-    slabs (branches may name different columns) — survivors are the
-    union of the branches' zone survivors and the exact OR residual
-    applies after decode; the whole disjunction composes as one
-    conjunct next to the other filters (the multi-slab Z-order read).
+    slabs (branches may name different columns) — a chunk survives
+    when any branch's zone hits and the exact OR residual applies
+    after decode; the whole disjunction composes as one conjunct next
+    to the other filters (the multi-slab Z-order read).
 
-    A filter column missing from ``columns`` is decoded anyway and
-    dropped from the output (round-2 ADVICE: the residual predicate
-    used to fail with an opaque AnalysisException).
-
-    ``as_of_epoch``: time travel — read the table as of that ingest
-    epoch (see _load_table). Schema-evolved tables (columns added by
+    ``as_of_epoch`` / ``as_of_ts`` / ``as_of_tag``: time travel — read
+    the table as of that ingest epoch under its snapshot schema (see
+    _load_table). Schema-evolved tables (columns added by
     ``write_encoded(schema_evolution=True)``) decode transparently:
-    rows from runs written before a column existed come back NULL."""
-    # Shuffle-free routing: the groupBy(bucket) plan ships every block
-    # payload byte through an exchange and caps decode parallelism at
-    # the bucket count of one shuffle round; the direct plan opens each
-    # bucket's files in its own task and moves no block data at all
-    # (guide §2.4: remove shuffles outright). Route every read the
-    # direct planner supports through it — the grouped plan remains for
-    # the shapes that need the blocks DataFrame itself (chunk-subset
-    # decodes, chunk sampling, bucket-restricted copy-on-write reads,
-    # and the provenance bucket column).
-    if (_chunk_subset is None and _sample is None and buckets is None
-            and not with_bucket_column):
-        return read_encoded_direct(
-            spark, path, columns=columns, range_filter=range_filter,
-            in_filter=in_filter, eq_filter=eq_filter,
-            contains_filter=contains_filter, or_filter=or_filter,
-            verify_checksums=verify_checksums, as_of_epoch=as_of_epoch,
-            as_of_ts=as_of_ts, as_of_tag=as_of_tag,
-            since_epoch=since_epoch, encryption_key=encryption_key)
+    rows from runs written before a column existed come back NULL.
+    Pending equality deletes apply as an anti-join on the decoded rows
+    (broadcast while the removal lists are small)."""
+    from tokcodec.decode import make_decode_fn
+    from tokcodec.scan import fill_anchor, plan_snapshot, scan_frame
+
     as_of_epoch = _resolve_as_of(spark, path, as_of_epoch, as_of_ts,
                                  as_of_tag)
-    manifest, lin = _load_table(spark, path, as_of_epoch=as_of_epoch,
-                                since_epoch=since_epoch)
-    schema = manifest_schema(manifest)
+    chunks = None
+    if _chunk_subset is not None:
+        chunks = {}
+        for r, b, c in _chunk_subset:
+            chunks.setdefault(int(b), set()).add((str(r), int(c)))
+        buckets = sorted(set(chunks) if buckets is None
+                         else set(chunks) & {int(b) for b in buckets})
+    snap = plan_snapshot(
+        path, as_of_epoch=as_of_epoch, since_epoch=since_epoch,
+        buckets=buckets,
+        filters=_filter_list(range_filter, in_filter, eq_filter,
+                             contains_filter, or_filter))
+    if chunks is not None:
+        # the boundary decode of an aggregate touches a few (run,
+        # bucket)s, not the table: the others' files are never opened
+        runs = {b: {r for r, _c in ks} for b, ks in chunks.items()}
+        snap.accepted = {b: kept for b, rs in snap.accepted.items()
+                         if (kept := [r for r in rs if r in runs[b]])}
+    fcols = snap.filter_columns
+    extra = list(fcols)
+    for d in snap.deletes:
+        if d["key_column"] not in extra:
+            extra.append(d["key_column"])
+    by_name = {f.name: f for f in snap.schema.fields}
+    names = list(by_name)
+    if columns is not None:
+        missing = set(columns) - set(
+            manifest_schema(snap.manifest).fieldNames())
+        if missing:
+            raise ValueError(
+                f"columns not in encoded table: {sorted(missing)}")
+        names = list(columns) + [c for c in extra if c not in columns]
+    for c in names + fcols:
+        if c not in by_name:
+            raise ValueError(
+                f"column {c!r} does not exist as of epoch {as_of_epoch}")
+    schema = T.StructType([by_name[c] for c in names])
+    fill_from = fill_anchor(snap.files, names, fcols)
+    if fill_from == METRICS_COLUMN and (chunks is not None
+                                        or _sample is not None):
+        raise ValueError(
+            "chunk subsets and sampling are not supported on tables "
+            "with pending evolution null-fill (fill counts would "
+            "desync from the chosen chunk set) — compact_encoded first")
+    if fill_from is not None and or_filter is not None:
+        # an OR branch can match rows of a run that predates the OTHER
+        # branch's column, but the fill anchor (the first filter
+        # column) would drop that run's rows — refuse rather than
+        # silently lose rows
+        raise ValueError(
+            "or_filter over a table with pending evolution null-fill "
+            "is unsupported — compact_encoded first")
+    _check_encryption_key(snap.manifest, names, encryption_key)
+    bcol = BUCKET_COL if with_bucket_column else None
+    out_schema = schema if bcol is None else T.StructType(
+        list(schema.fields) + [T.StructField(bcol, T.IntegerType(), False)])
+    decode = make_decode_fn(schema, verify_checksums=verify_checksums,
+                            fill_from=fill_from,
+                            encryption_key=encryption_key,
+                            bucket_column=bcol)
+    out = scan_frame(
+        spark, snap, decode, out_schema, {*names, fill_from} - {None},
+        chunks=chunks, sample=_sample, encryption_key=encryption_key)
+    for nf in snap.filters:
+        out = out.filter(nf["residual"])
+    out = _expand_uuid_cols(out, snap.manifest.get("uuid_columns", []))
+    if snap.deletes:  # anti-join AFTER uuid expansion: keys are canonical
+        out = _apply_deletes(spark, path, out, snap.deletes)
+    if columns is not None:
+        out = out.drop(*[c for c in extra if c not in columns])
+    return out
 
-    filts: list[tuple[str, tuple]] = []
-    for rf in _as_filter_list(range_filter):
-        filts.append(("range", rf))
+
+def sample_encoded(spark: SparkSession, path: str, fraction: float,
+                   seed: int = 0, **read_kw) -> DataFrame:
+    """Deterministic CHUNK-granular Bernoulli sample of an encoded
+    table (≙ TABLESAMPLE SYSTEM): every (run, bucket, chunk) is kept
+    with probability ≈ ``fraction``, decided in the scan task by a
+    process-stable hash of its identity + ``seed`` before anything is
+    decoded — no extra planning job, no decode of dropped chunks, and
+    the same (table, fraction, seed) always yields the same rows. The
+    unit is a chunk, not a row (rows within a chunk are correlated —
+    corpus inspection / eyeballing / profiling at 100 TB, not i.i.d.
+    row sampling; chunk geometry at write sets the granularity).
+    ``fraction=1`` is the full table, and for one seed a larger
+    fraction's sample contains a smaller one's (one hash, one
+    threshold per chunk). Accepts every read_encoded keyword
+    (projection, filters, time travel; deletes still apply). An
+    unfiltered sample of a table with pending evolution null-fill
+    must compact first."""
+    if not 0.0 <= fraction <= 1.0:
+        raise ValueError(f"fraction must be in [0, 1]: {fraction}")
+    return read_encoded(spark, path, _sample=(float(fraction),
+                                              int(seed)), **read_kw)
+
+
+def _filter_list(range_filter=None, in_filter=None, eq_filter=None,
+                 contains_filter=None, or_filter=None
+                 ) -> list[tuple[str, tuple]]:
+    """The readers' filter keywords -> one conjunctive list of
+    (kind, spec) pairs (``or`` specs are tuples of range triples).
+    ``range_filter`` is ONE (col, lo, hi) triple or a LIST of them (a
+    conjunction over several columns — the natural read shape for
+    Z-order-clustered tables, where every clustered dimension
+    prunes)."""
+    if range_filter is not None and not isinstance(range_filter[0],
+                                                   (tuple, list)):
+        range_filter = [range_filter]
+    filts = [("range", tuple(rf)) for rf in range_filter or ()]
     if in_filter is not None:
         filts.append(("in", tuple(in_filter)))
     if eq_filter is not None:
@@ -1553,190 +1615,7 @@ def read_encoded(
                 "(disjunction); a single range belongs in "
                 "range_filter")
         filts.append(("or", tuple(tuple(rf) for rf in or_filter)))
-    names = {f.name for f in schema.fields}
-    fcols: list[str] = []
-    for kind, spec in filts:
-        cols = ([rf[0] for rf in spec] if kind == "or"
-                else [spec[0]])
-        for c in cols:
-            if c not in names:
-                raise ValueError(
-                    f"filter column {c!r} not in encoded table")
-            if c not in fcols:
-                fcols.append(c)
-    # pending equality deletes apply on EVERY read (merge-on-read):
-    # their key columns join the decode set like filter columns do,
-    # and are dropped from the output unless requested
-    dels = _active_deletes(spark, path, as_of_epoch=as_of_epoch)
-    extra = list(fcols)
-    for d in dels:
-        if d["key_column"] not in extra:
-            extra.append(d["key_column"])
-    decode_cols = columns
-    if columns is not None and extra:
-        decode_cols = list(columns) + [c for c in extra
-                                       if c not in columns]
-    _check_encryption_key(manifest, decode_cols, encryption_key)
-
-    # ONE small driver job collects the committed (bucket, run_id)
-    # pairs; run ids, the file plan, and the reader-side semi-join all
-    # derive from it locally (collecting lineage is O(buckets x epochs)
-    # — the same driver-side footprint the direct reader has)
-    lin_rows = [(int(r.bucket), r.run_id) for r in lin.collect()]
-    if buckets is not None:
-        bset = {int(b) for b in buckets}
-        lin_rows = [(b, rid) for b, rid in lin_rows if b in bset]
-    run_ids = sorted({rid for _, rid in lin_rows})
-    if as_of_epoch is not None:
-        # snapshot-schema time travel: project the union of the
-        # participating runs' stored schemas (see _as_of_schema)
-        files, run_schemas = _run_files(spark, path, run_ids,
-                                        with_schemas=True)
-        schema = _as_of_schema(schema, run_schemas)
-        asof_names = {f.name for f in schema.fields}
-        for c in fcols + (list(columns) if columns else []):
-            if c not in asof_names:
-                raise ValueError(
-                    f"column {c!r} does not exist as of epoch "
-                    f"{as_of_epoch}")
-        # a delete keyed on a column absent from the snapshot schema
-        # cannot match any snapshot row — drop it (and its key column)
-        if any(d["key_column"] not in asof_names for d in dels):
-            dels = [d for d in dels if d["key_column"] in asof_names]
-            extra = list(fcols)
-            for d in dels:
-                if d["key_column"] not in extra:
-                    extra.append(d["key_column"])
-            decode_cols = columns
-            if columns is not None and extra:
-                decode_cols = list(columns) + [c for c in extra
-                                               if c not in columns]
-    else:
-        files = _run_files(spark, path, run_ids)
-    lin_local = spark.createDataFrame(lin_rows, "bucket int, run_id string")
-    needed_names = ([f.name for f in schema.fields] if decode_cols is None
-                    else list(decode_cols))
-    evolved = _evolution_fill_columns(files, needed_names)
-    # fill-count source for evolution decode: unpruned reads use the
-    # per-(run, bucket) metrics rows (added to the scan — they keep
-    # buckets visible even when every scanned data column is fill);
-    # pruned reads anchor on the filter column's surviving rows
-    fill_from = None
-    if evolved:
-        fill_from = fcols[0] if fcols else METRICS_COLUMN
-    if evolved and or_filter is not None:
-        # an OR branch can match rows of a run that predates the
-        # OTHER branch's column, but the fill anchor (fcols[0]) would
-        # drop that run's rows — refuse rather than silently lose rows
-        raise ValueError(
-            "or_filter over a table with pending evolution null-fill "
-            "is unsupported — compact_encoded first")
-    needed = None if decode_cols is None else set(decode_cols)
-    if fill_from == METRICS_COLUMN:
-        needed = set(needed_names) | {METRICS_COLUMN}
-    blocks = _blocks_df(spark, path, lin_local, columns_needed=needed,
-                        files=files)
-
-    def _finish(out: DataFrame) -> DataFrame:
-        out = _expand_uuid_cols(out, manifest.get("uuid_columns", []))
-        if dels:  # anti-join AFTER uuid expansion: keys are canonical
-            out = _apply_deletes(spark, path, out, dels)
-        if columns is not None:
-            for c in extra:
-                if c not in columns:
-                    out = out.drop(c)
-        return out
-
-    if _chunk_subset is not None:
-        if isinstance(_chunk_subset, (list, tuple, set, frozenset)):
-            keys = sorted({(str(r), int(b), int(c))
-                           for r, b, c in _chunk_subset})
-            if not evolved:
-                # prune the FILE plan to the touched (run, bucket)s
-                # before the scan even opens anything — the boundary
-                # decode of an aggregate touches ~2 buckets, not the
-                # whole table (file-level pruning is unsafe under
-                # evolution fill: a run with no surviving files would
-                # be misread as predating the column)
-                by_run: dict = {}
-                for r, b, _c in keys:
-                    by_run.setdefault(r, set()).add(b)
-                sub_files = [
-                    f for f in files
-                    if any(lo <= b <= hi
-                           for lo, hi in f["bucket_ranges"]
-                           for b in by_run.get(f["run_id"], ()))
-                ]
-                blocks = _blocks_df(spark, path, lin_local,
-                                    columns_needed=needed,
-                                    files=sub_files)
-            _chunk_subset = spark.createDataFrame(
-                keys, "run_id string, bucket int, chunk int")
-        blocks = blocks.join(F.broadcast(_chunk_subset),
-                             ["run_id", "bucket", "chunk"], "left_semi")
-    if _sample is not None:
-        # chunk-granular Bernoulli sample, decided inside the scan's
-        # own filter (no extra job): the keep-hash is identical for
-        # every component row of a chunk, so whole chunks survive
-        if evolved:
-            raise ValueError(
-                "sampling is not supported on tables with pending "
-                "evolution null-fill (fill anchors would desync from "
-                "the sampled chunk set) — compact_encoded first")
-        frac, seed = _sample
-        blocks = blocks.filter(
-            F.pmod(F.xxhash64("run_id", "bucket", "chunk",
-                              F.lit(int(seed))),
-                   F.lit(1_000_000)) < int(frac * 1_000_000))
-    bcol = BUCKET_COL if with_bucket_column else None
-    if not filts:
-        return _finish(decode_blocks(blocks, schema, decode_cols,
-                                     verify_checksums=verify_checksums,
-                                     fill_from=fill_from,
-                                     encryption_key=encryption_key,
-                                     bucket_column=bcol))
-    blocks, residual = _prune_all(blocks, schema, manifest, filts,
-                                  encryption_key=encryption_key)
-    out = decode_blocks(blocks, schema, decode_cols,
-                        verify_checksums=verify_checksums,
-                        fill_from=fill_from,
-                        encryption_key=encryption_key,
-                        bucket_column=bcol)
-    return _finish(out.filter(residual))
-
-
-def sample_encoded(spark: SparkSession, path: str, fraction: float,
-                   seed: int = 0, **read_kw) -> DataFrame:
-    """Deterministic CHUNK-granular Bernoulli sample of an encoded
-    table (≙ TABLESAMPLE SYSTEM): every (run, bucket, chunk) is kept
-    with probability ≈ ``fraction``, decided by a hash of its identity
-    + ``seed`` inside the scan's own block filter — no extra planning
-    job, no decode of dropped chunks, and the same (table, fraction,
-    seed) always yields the same rows. The unit is a chunk, not a row
-    (rows within a chunk are correlated — corpus inspection /
-    eyeballing / profiling at 100 TB, not i.i.d. row sampling; chunk
-    geometry at write sets the granularity). Fractions compose:
-    ``fraction=1`` is the full table, and a larger fraction's sample
-    is NOT necessarily a superset of a smaller one's (independent
-    threshold per chunk, single hash). Accepts every read_encoded
-    keyword (projection, filters, time travel, deletes still apply).
-    Tables with pending evolution null-fill must compact first."""
-    if not 0.0 <= fraction <= 1.0:
-        raise ValueError(f"fraction must be in [0, 1]: {fraction}")
-    return read_encoded(spark, path, _sample=(float(fraction),
-                                              int(seed)), **read_kw)
-
-
-def _as_filter_list(range_filter) -> list[tuple]:
-    """``range_filter`` accepts ONE (col, lo, hi) triple or a LIST of
-    them (conjunction over several columns — the natural read shape
-    for Z-order-clustered tables, where every clustered dimension
-    prunes)."""
-    if range_filter is None:
-        return []
-    if isinstance(range_filter[0], (tuple, list)):
-        return [tuple(rf) for rf in range_filter]
-    return [tuple(range_filter)]
+    return filts
 
 
 def _manifest_salt(manifest: dict) -> list[str]:
@@ -1942,35 +1821,6 @@ def _normalize_filter(schema: T.StructType, manifest: dict,
             "bounds": bounds, "residual": residual}
 
 
-def _prune_all(blocks: DataFrame, schema: T.StructType, manifest: dict,
-               filts: list[tuple[str, tuple]],
-               encryption_key: bytes | None = None
-               ) -> tuple[DataFrame, object]:
-    """Conjunction pruning in ONE semi-join: each filter's surviving
-    (run_id, bucket, chunk) set is computed INDEPENDENTLY from the
-    original blocks (zone scan of that column's values rows / bloom
-    probe), the tiny sets are intersected, and the blocks table is
-    semi-joined once against the broadcast intersection. Sequential
-    per-filter semi-joins compute the same set (zone predicates are
-    per-column-row, so S over blocks∩S1 equals S∩S1) but nest N
-    scans of the progressively-joined blocks — measurably slower per
-    added filter and a deeper plan at 100 TB."""
-    keys = ["run_id", "bucket", "chunk"]
-    surv = None
-    residual = F.lit(True)
-    for kind, spec in filts:
-        s, res = _filter_survivors(blocks, schema, manifest, kind, spec,
-                                   encryption_key=encryption_key)
-        residual = residual & res
-        # broadcast each set: the intersection of tiny chunk lists
-        # must never plan as a shuffle join
-        surv = s if surv is None else surv.join(F.broadcast(s), keys,
-                                                "inner")
-    if surv is None:
-        return blocks, residual
-    return blocks.join(F.broadcast(surv), keys, "left_semi"), residual
-
-
 def _filter_survivors(blocks: DataFrame, schema: T.StructType,
                       manifest: dict, kind: str, spec: tuple,
                       encryption_key: bytes | None = None
@@ -2038,266 +1888,21 @@ def _filter_survivors(blocks: DataFrame, schema: T.StructType,
     return zones, nf["residual"]
 
 
-def read_encoded_direct(
-    spark: SparkSession, path: str, columns: list[str] | None = None,
-    verify_checksums: bool = False,
-    as_of_epoch: int | None = None,
-    as_of_ts: float | str | None = None,
-    range_filter: tuple | None = None,
-    in_filter: tuple | None = None,
-    eq_filter: tuple | None = None,
-    contains_filter: tuple | None = None,
-    encryption_key: bytes | None = None,
-    since_epoch: int | None = None,
-    as_of_tag: str | None = None,
-    or_filter: list[tuple] | None = None,
-) -> DataFrame:
-    """Shuffle-free decode: one task per committed bucket opens that
-    bucket's block files directly with pyarrow.
-
-    `read_encoded` colocates a bucket's components with
-    groupBy(bucket), which shuffles every payload byte once; this path
-    moves no block data at all — only the decoded output. It wins when
-    the shuffle is the bottleneck (network-bound clusters) and files
-    are bucket-grained, which they are at production bucket sizes
-    (one encode task per bucket). At sandbox scale several tiny
-    buckets can share a writer task's file, so the per-bucket reads
-    re-decode shared files and the grouped path measures faster
-    locally — pick per deployment.
-
-    The bucket->files map is planned from the committed runs' file
-    manifests (exact per-file bucket ranges recorded at write time):
-    no directory listing, no footer walk, O(committed files) driver
-    work — the round-2 footer-statistics walk is gone.
-
-    ``range_filter``/``in_filter``/``eq_filter`` match read_encoded's
-    semantics and compose as a conjunction; chunk pruning happens
-    executor-side from the bucket's own block metas (zone bounds /
-    blooms evaluated in the task), so non-surviving chunks are never
-    decoded, and the exact residual runs JVM-side afterwards.
-    ``since_epoch`` is the incremental (CDC-append) window bound —
-    see read_encoded."""
-    from tokcodec.decode import make_decode_fn
-
-    blocks_p, _, _ = _paths(path)
-    as_of_epoch = _resolve_as_of(spark, path, as_of_epoch, as_of_ts,
-                                 as_of_tag)
-    manifest, lin = _load_table(spark, path, as_of_epoch=as_of_epoch,
-                                since_epoch=since_epoch)
-    full_schema = manifest_schema(manifest)
-    filts: list[tuple[str, tuple]] = []
-    for rf in _as_filter_list(range_filter):
-        filts.append(("range", rf))
-    if in_filter is not None:
-        filts.append(("in", tuple(in_filter)))
-    if eq_filter is not None:
-        filts.append(("eq", tuple(eq_filter)))
-    if contains_filter is not None:
-        filts.append(("contains", tuple(contains_filter)))
-    nfs = [_normalize_filter(full_schema, manifest, k, s)
-           for k, s in filts]
-    if or_filter is not None:
-        if not or_filter or not isinstance(or_filter[0],
-                                           (tuple, list)):
-            raise ValueError(
-                "or_filter takes a LIST of (col, lo, hi) triples")
-        subs = [_normalize_filter(full_schema, manifest, "range",
-                                  tuple(rf)) for rf in or_filter]
-        res = F.lit(False)
-        for s in subs:
-            res = res | s["residual"]
-        nfs.append({"kind": "or", "col": subs[0]["col"], "lane": "or",
-                    "residual": res, "subs": subs})
-    fcols: list[str] = []
-    for nf in nfs:
-        for c in ([s["col"] for s in nf["subs"]]
-                  if nf["kind"] == "or" else [nf["col"]]):
-            if c not in fcols:
-                fcols.append(c)
-    # pending equality deletes: their key columns join the decode set
-    # like filter columns, and the merge-on-read anti-join runs after
-    # the residual filters (same semantics as the grouped reader)
-    dels = _active_deletes(spark, path, as_of_epoch=as_of_epoch)
-    extra = list(fcols)
-    for d in dels:
-        if d["key_column"] not in extra:
-            extra.append(d["key_column"])
-    schema = full_schema
-    if columns is not None:
-        by_name = {f.name: f for f in schema.fields}
-        missing = set(columns) - set(by_name)
-        if missing:
-            raise ValueError(f"columns not in encoded table: {sorted(missing)}")
-        decode_names = list(columns) + [c for c in extra
-                                        if c not in columns]
-        schema = T.StructType([by_name[c] for c in decode_names])
-    wanted = {f.name for f in schema.fields}
-    accepted: dict[int, list[str]] = {}
-    for r in lin.collect():  # one row per (bucket, epoch) — tiny
-        accepted.setdefault(int(r.bucket), []).append(r.run_id)
-
-    rids = {rid for rs in accepted.values() for rid in rs}
-    if as_of_epoch is not None:
-        # snapshot-schema time travel: project the union of the
-        # participating runs' stored schemas (see _as_of_schema)
-        files, run_schemas = _run_files(spark, path, rids,
-                                        with_schemas=True)
-        asof = _as_of_schema(full_schema, run_schemas)
-        asof_names = {f.name for f in asof.fields}
-        if any(d["key_column"] not in asof_names for d in dels):
-            # a delete keyed on a column absent from the snapshot
-            # schema cannot match any snapshot row — drop it
-            dels = [d for d in dels if d["key_column"] in asof_names]
-            extra = list(fcols)
-            for d in dels:
-                if d["key_column"] not in extra:
-                    extra.append(d["key_column"])
-            if columns is not None:
-                decode_names = list(columns) + [c for c in extra
-                                                if c not in columns]
-                schema = T.StructType(
-                    [by_name[c] for c in decode_names])
-                wanted = {f.name for f in schema.fields}
-        if columns is None:
-            # requested columns/filters must exist at the snapshot
-            for c in sorted(set(fcols) - asof_names):
-                raise ValueError(
-                    f"column {c!r} does not exist as of epoch "
-                    f"{as_of_epoch}")
-            schema = asof
-            wanted = asof_names
-        else:
-            for c in sorted(wanted - asof_names):
-                raise ValueError(
-                    f"column {c!r} does not exist as of epoch "
-                    f"{as_of_epoch}")
-    else:
-        files = _run_files(spark, path, rids)
-    scan_cols = set(wanted)
-    fill_from = None
-    if _evolution_fill_columns(files, wanted):
-        if or_filter is not None:
-            raise ValueError(
-                "or_filter over a table with pending evolution "
-                "null-fill is unsupported — compact_encoded first")
-        if fcols:
-            # pruned read: anchor fill counts on a filter column's
-            # surviving rows (metrics counts would be stale after
-            # chunk pruning — same rule as the grouped reader)
-            fill_from = fcols[0]
-        else:
-            # schema-evolved table: scan the per-(run, bucket) metrics
-            # rows too — they carry the fill counts for runs that
-            # predate a projected column (see make_decode_fn)
-            fill_from = METRICS_COLUMN
-            scan_cols.add(METRICS_COLUMN)
-    _check_encryption_key(manifest, [f.name for f in schema.fields],
-                          encryption_key)
-    inner = make_decode_fn(schema, verify_checksums=verify_checksums,
-                           fill_from=fill_from,
-                           encryption_key=encryption_key)
-    # executor-side pruning spec: picklable parts only (no Columns)
-    def _strip(nf):
-        d = {k: v for k, v in nf.items()
-             if k not in ("residual", "subs")}
-        if "subs" in nf:
-            d["subs"] = [_strip(s) for s in nf["subs"]]
-        return d
-
-    prune_specs = [_strip(nf) for nf in nfs]
-    acc_b = spark.sparkContext.broadcast(accepted)
-
-    # broadcast the per-file bucket RANGES, O(files) — materializing a
-    # bucket->files dict driver-side would be O(buckets x files) and at
-    # production scale (~400k buckets) a multi-hundred-MB broadcast
-    # (round-3 verdict #6). Each task expands only ITS buckets' file
-    # lists from the ranges (one bisect pass per batch).
-    file_rows = _direct_file_rows(files, scan_cols, blocks_p)
-    files_b = spark.sparkContext.broadcast(file_rows)
-
-    def fn(batches):
-        import bisect as _bisect
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        for batch in batches:
-            bks = sorted(set(batch.column("bucket").to_pylist()))
-            # Per-bucket file lists. A file belongs to exactly ONE
-            # run, so run accept/reject is decided here per
-            # (file, bucket) from the plan — the losing side of a
-            # re-encoded bucket is never opened, and no row-level
-            # run_id filter runs. (A once-per-file read + zero-copy
-            # per-bucket slice was prototyped for the shared-file
-            # case: pure-pyarrow it is 3.7x cheaper, but Spark-level
-            # A/B at sf0.1 measured it NEUTRAL-to-worse — 1.27-1.60 s
-            # vs 1.13-1.17 s — because repartitionByRange adds a
-            # ~0.3 s sampling job, group-hashing adds collision skew,
-            # and the OS page cache already makes the re-read cheap;
-            # the per-bucket open stays, measured not guessed. At
-            # production bucket sizes files are bucket-grained and
-            # the question vanishes.)
-            local: dict[int, list[str]] = {}
-            for lo, hi, fp, colname, rid in files_b.value:
-                i = _bisect.bisect_left(bks, lo)
-                j = _bisect.bisect_right(bks, hi)
-                for bkt in bks[i:j]:
-                    if rid in acc_b.value.get(bkt, ()):
-                        local.setdefault(bkt, []).append(fp)
-            for bucket in batch.column("bucket").to_pylist():
-                flist = local.get(bucket, ())
-                if not flist:
-                    continue
-                parts = []
-                for fp in flist:  # bounded: files per bucket
-                    # the bucket filter prunes row groups of
-                    # multi-bucket files
-                    t = pq.read_table(fp, filters=[
-                        ("bucket", "=", bucket),
-                    ])
-                    if t.num_rows:
-                        parts.append(t)
-                if not parts:
-                    continue
-                tbl = pa.concat_tables(parts)
-                if prune_specs:
-                    tbl = _prune_block_table(
-                        tbl, prune_specs, encryption_key=encryption_key)
-                    if tbl.num_rows == 0:
-                        continue
-                out = inner((bucket,), tbl)
-                yield from out.to_batches()
-
-    buckets_df = spark.createDataFrame(
-        [(b,) for b in sorted(accepted)], "bucket int"
-    )
-    n_tasks = max(1, min(len(accepted) or 1,
-                         spark.sparkContext.defaultParallelism * 2))
-    out = buckets_df.repartition(n_tasks, F.col("bucket")).mapInArrow(
-        fn, schema=schema
-    )
-    for nf in nfs:
-        out = out.filter(nf["residual"])
-    out = _expand_uuid_cols(out, manifest.get("uuid_columns", []))
-    if dels:  # anti-join AFTER uuid expansion: keys are canonical
-        out = _apply_deletes(spark, path, out, dels)
-    if columns is not None:
-        for c in extra:
-            if c not in columns:
-                out = out.drop(c)
-    return out
+def read_encoded_direct(*args, **kwargs) -> DataFrame:
+    """Alias of read_encoded, the one reader (kept for callers of the
+    former separate shuffle-free reader)."""
+    return read_encoded(*args, **kwargs)
 
 
 def register_encoded(spark: SparkSession, path: str, name: str,
-                     direct: bool = False, **read_kwargs) -> DataFrame:
-    """Expose an encoded table to SQL: plans the decode (read_encoded,
-    or read_encoded_direct with ``direct=True``; filters/projection/
-    as_of_epoch pass through via ``read_kwargs``) and registers it as
-    temp view ``name``, so ``spark.sql("SELECT ... FROM name")`` works
-    like any table format. The view re-decodes per query — persist the
-    returned DataFrame for repeated interactive use."""
-    reader = read_encoded_direct if direct else read_encoded
-    df = reader(spark, path, **read_kwargs)
+                     **read_kwargs) -> DataFrame:
+    """Expose an encoded table to SQL: plans the decode with
+    read_encoded (filters/projection/time travel pass through via
+    ``read_kwargs``) and registers it as temp view ``name``, so
+    ``spark.sql("SELECT ... FROM name")`` works like any table format.
+    The view re-decodes per query — persist the returned DataFrame for
+    repeated interactive use."""
+    df = read_encoded(spark, path, **read_kwargs)
     df.createOrReplaceTempView(name)
     return df
 
@@ -2305,7 +1910,7 @@ def register_encoded(spark: SparkSession, path: str, name: str,
 def _direct_file_rows(
         files: list[dict], scan_cols,
         blocks_p: str) -> list[tuple[int, int, str, str, str]]:
-    """Direct-reader broadcast payload: one (lo, hi, path, column,
+    """The scan's broadcast file plan: one (lo, hi, path, column,
     run_id) row per file bucket-range — size is O(file ranges),
     independent of the table's bucket count (wide-range files do NOT
     fan out here). Carrying the file's run_id lets readers decide
@@ -2326,8 +1931,8 @@ def _direct_file_rows(
 def _meta_zone_hit(meta: dict, nf: dict) -> bool:
     """Does one chunk's (already-decrypted) meta overlap the filter's
     bounds? Chunks with no stats always survive — never a false
-    negative. Shared by the direct reader's executor-side pruning and
-    the grouped reader's encrypted-column path."""
+    negative. Shared by the scan task's pruning (_prune_block_table)
+    and the DataFrame-side encrypted-column path."""
     import base64 as _b64
 
     if nf["lane"] in ("int", "float"):
@@ -2348,7 +1953,8 @@ def _meta_zone_hit(meta: dict, nf: dict) -> bool:
 
 def _zone_survivors_encrypted(blocks: DataFrame, col: str, nf: dict,
                               encryption_key: bytes | None) -> DataFrame:
-    """Zone pruning for an ENCRYPTED column (grouped reader): the
+    """Zone pruning for an ENCRYPTED column (DataFrame side —
+    explain_scan and the aggregate pivot): the
     bounds live in the encrypted ``emeta`` envelope, so the overlap
     test runs executor-side in Python after a meta-only decrypt —
     the analogue of parquet's encrypted column index. Pruning is
@@ -2385,7 +1991,8 @@ def _zone_survivors_encrypted(blocks: DataFrame, col: str, nf: dict,
 
 def _prune_block_table(tbl, specs: list[dict],
                        encryption_key: bytes | None = None):
-    """Executor-side chunk pruning for the direct reader: evaluate
+    """The scan task's chunk pruning (tokcodec.scan._scan_bucket):
+    evaluate
     each filter's surviving (run_id, chunk) set from ONE bucket's
     block rows (zone bounds in the values metas; blooms for eq), then
     keep only rows of the intersection. Mirrors _filter_survivors'
@@ -2480,68 +2087,64 @@ def read_encoded_as(
     encryption_key: bytes | None = None,
 ) -> DataFrame:
     """Schema-on-read decode with the reference's name-mapping and
-    mismatch policy (reference P4/P5; see decode.decode_blocks_as)."""
-    from tokcodec.decode import decode_blocks_as
+    mismatch policy (reference P4/P5, SchemaValidation.java:63-124 +
+    ColumnToFieldMapper), on read_encoded's planner and scan task:
 
-    manifest, lin = _load_table(spark, path)
-    file_schema = manifest_schema(manifest)
-    run_ids = [r.run_id for r in lin.select("run_id").distinct().collect()]
-    files = _run_files(spark, path, run_ids)
-    fill_from = None
-    needed = None
-    if _evolution_fill_columns(files, {f.name for f in file_schema.fields}):
-        # schema-evolved table: decode with per-run null fill, counts
-        # from the metrics rows (same mechanism as read_encoded)
-        fill_from = METRICS_COLUMN
-        needed = {f.name for f in file_schema.fields} | {METRICS_COLUMN}
-    blocks = _blocks_df(spark, path, lin, columns_needed=needed,
-                        files=files)
-    # key required only for the stored columns this read actually
-    # resolves to (alias > exact > snake_case) — a plaintext-only
-    # projection over a partially-encrypted table needs no key
-    # (ADVICE r4: was an unconditional whole-table check)
+    - each read field resolves to a stored column by alias > exact >
+      snake_case (reference P4); only the resolved columns' files are
+      opened;
+    - a missing column raises unless ``fail_on_missing_column=False``,
+      in which case the type default / null is materialized;
+    - numeric narrowing (stored int64 -> requested int32) truncates by
+      default; with ``fail_on_narrowing=True`` an overflowing value
+      raises (reference validatePrimitiveCompatibility semantics).
+
+    Renames, casts and defaults run Arrow-side inside the scan task."""
+    from tokcodec.decode import make_decode_fn, make_read_as_fn
     from tokcodec.naming import map_fields
+    from tokcodec.scan import fill_anchor, plan_snapshot, scan_frame
 
+    snap = plan_snapshot(path)
+    by_name = {f.name: f for f in snap.schema.fields}
     mapping = map_fields(
-        [f.name for f in file_schema.fields],
-        [f.name for f in read_schema.fields],
+        list(by_name), [f.name for f in read_schema.fields],
         aliases=aliases, fail_on_missing=fail_on_missing_column,
     )
-    touched = [c for c in mapping.values() if c is not None]
-    _check_encryption_key(manifest, touched, encryption_key)
-    out = decode_blocks_as(
-        blocks, file_schema, read_schema, aliases=aliases,
-        fail_on_missing_column=fail_on_missing_column,
-        fail_on_narrowing=fail_on_narrowing,
-        fill_from=fill_from,
+    plan = [(rf, by_name.get(mapping[rf.name]))
+            for rf in read_schema.fields]
+    present = list(dict.fromkeys(ff.name for _, ff in plan if ff))
+    # key required only for the stored columns this read resolves to —
+    # a plaintext-only projection over a partially-encrypted table
+    # needs no key (ADVICE r4: was an unconditional whole-table check)
+    _check_encryption_key(snap.manifest, present, encryption_key)
+    fill_from = fill_anchor(snap.files, present, [])
+    out = scan_frame(
+        spark, snap,
+        make_decode_fn(T.StructType([by_name[c] for c in present]),
+                       fill_from=fill_from,
+                       encryption_key=encryption_key),
+        read_schema,
+        {*present, fill_from} - {None},
         encryption_key=encryption_key,
-    )
+        project=make_read_as_fn(plan, fail_on_narrowing))
     # pending equality deletes apply through the name mapping: the
     # anti-join runs on the READ name the stored key column resolves
     # to. A read schema that drops the key column cannot honor the
     # removal list — fail loudly rather than resurrect deleted rows.
-    dels = _active_deletes(spark, path)
-    if dels:
-        stored_to_read = {v: k for k, v in mapping.items()
-                          if v is not None}
-        read_types = {f.name: f.dataType for f in read_schema.fields}
-        mapped = []
-        for d in dels:
-            rn = stored_to_read.get(d["key_column"])
-            if rn is None:
-                raise ValueError(
-                    f"table has a pending delete on {d['key_column']!r} "
-                    "but the read schema does not map that column — "
-                    "include it or compact_encoded first")
-            mapped.append(dict(d, read_name=rn))
-        for d in mapped:
-            keys = (spark.read.parquet(posixpath.join(path, d["file"]))
-                    .select(F.col(d["key_column"])
-                            .cast(read_types[d["read_name"]])
-                            .alias(d["read_name"])))
-            if d["n_keys"] <= DELETE_BROADCAST_MAX_KEYS:
-                keys = F.broadcast(keys)
-            out = out.join(keys, on=d["read_name"], how="left_anti")
+    stored_to_read = {ff.name: rf for rf, ff in plan if ff}
+    for d in snap.deletes:
+        rf = stored_to_read.get(d["key_column"])
+        if rf is None:
+            raise ValueError(
+                f"table has a pending delete on {d['key_column']!r} "
+                "but the read schema does not map that column — "
+                "include it or compact_encoded first")
+        keys = (spark.read.parquet(posixpath.join(path, d["file"]))
+                .select(F.col(d["key_column"]).cast(rf.dataType)
+                        .alias(rf.name)))
+        if d["n_keys"] <= DELETE_BROADCAST_MAX_KEYS:
+            keys = F.broadcast(keys)
+        out = out.join(keys, on=rf.name, how="left_anti")
     return out
 
 
@@ -2644,12 +2247,16 @@ def delete_encoded(spark: SparkSession, path: str, key_column: str,
 
 def _active_deletes(spark: SparkSession, path: str,
                     as_of_epoch: int | None = None) -> list[dict]:
-    """Delete-log entries currently in force: per (DELETE_BUCKET,
-    epoch) the latest row wins — a compaction 'tombstone' at the same
-    position retires the entry. O(epochs) metadata, no key file is
-    opened here — driver-side pandas over the lineage table (no Spark
-    job on the read-planning path; same rationale as _load_table)."""
-    lin = _lineage_local(spark, path)
+    """Delete-log entries currently in force — see _deletes_in_force.
+    Driver-side pandas over the lineage table, no Spark job."""
+    return _deletes_in_force(_lineage_local(spark, path), as_of_epoch)
+
+
+def _deletes_in_force(lin, as_of_epoch: int | None = None) -> list[dict]:
+    """Delete-log entries in force in a lineage frame: per
+    (DELETE_BUCKET, epoch) the latest row wins — a compaction
+    'tombstone' at the same position retires the entry. O(epochs)
+    metadata; no key file is opened here."""
     lin = lin[(lin.bucket == DELETE_BUCKET)
               & lin.status.isin(["delete", "tombstone"])]
     if as_of_epoch is not None:
@@ -2739,8 +2346,11 @@ def upsert_encoded(spark: SparkSession, path: str, df: DataFrame,
     commit here."""
     import time
 
+    from tokcodec.scan import plan_snapshot
+
     _, lineage_p, manifest_p = _paths(path)
-    manifest, _lin = _load_table(spark, path)
+    snap = plan_snapshot(path, with_files=False)
+    manifest = snap.manifest
     schema = manifest_schema(manifest)
     nb = int(manifest["n_buckets"])
     uuid_cols = manifest.get("uuid_columns", [])
@@ -2789,14 +2399,14 @@ def upsert_encoded(spark: SparkSession, path: str, df: DataFrame,
         old_keep.select(*want_cols, BUCKET_COL), uuid_cols)
     merged = old_b.unionByName(b_in.select(*want_cols, BUCKET_COL))
 
-    full_lin = spark.read.schema(LINEAGE_DDL).parquet(lineage_p)
-    olds = [r for r in committed(full_lin)
-            .select("bucket", "epoch").collect()
-            if int(r.bucket) in set(touched)]
-    dels = _active_deletes(spark, path)
-    top = (full_lin.filter(F.col("status").isin("committed", "delete"))
-           .agg(F.max("epoch")).collect()[0][0])
-    new_epoch = int(top if top is not None else -1) + 1
+    # superseded generations and the next epoch, from the same
+    # driver-side lineage read the planner made
+    olds = [(int(b), int(e)) for b, e in zip(snap.winners.bucket,
+                                             snap.winners.epoch)
+            if int(b) in set(touched)]
+    lin = _lineage_local(spark, path)
+    live = lin[lin.status.isin(["committed", "delete"])]
+    new_epoch = (int(live.epoch.max()) if len(live) else -1) + 1
 
     files, new_metrics = _write_run(
         merged, schema, path, nb, run_id, new_epoch,
@@ -2815,8 +2425,8 @@ def upsert_encoded(spark: SparkSession, path: str, df: DataFrame,
     ts = float(time.time())
     commits = lineage_from_blocks(new_metrics, epoch=new_epoch)
     tombs = spark.createDataFrame(
-        [(run_id, int(r.bucket), int(r.epoch), "tombstone", 0, 0, 0,
-          0.0, "{}", 0, 0, 0.0, ts) for r in olds],
+        [(run_id, b, e, "tombstone", 0, 0, 0, 0.0, "{}", 0, 0, 0.0, ts)
+         for b, e in olds],
         LINEAGE_DDL,
     )
     commits.unionByName(tombs).coalesce(1).write.mode("append") \
@@ -2834,7 +2444,7 @@ def upsert_encoded(spark: SparkSession, path: str, df: DataFrame,
     return {"run_id": run_id, "epoch": new_epoch,
             "buckets_rewritten": len(touched),
             "superseded": len(olds),
-            "pending_deletes_materialized_for_touched": len(dels),
+            "pending_deletes_materialized_for_touched": len(snap.deletes),
             "files": len(files)}
 
 
@@ -2878,18 +2488,21 @@ def compact_encoded(
     string form and must stay valid."""
     import time
 
-    blocks_p, lineage_p, manifest_p = _paths(path)
-    manifest, _lin = _load_table(spark, path)
-    full_lin = spark.read.schema(LINEAGE_DDL).parquet(lineage_p)
-    old = committed(full_lin).select("bucket", "epoch", "run_id").collect()
+    from tokcodec.scan import plan_snapshot
+
+    _, lineage_p, manifest_p = _paths(path)
+    snap = plan_snapshot(path, with_files=False)
+    manifest = snap.manifest
+    old = [(int(b), int(e)) for b, e in zip(snap.winners.bucket,
+                                            snap.winners.epoch)]
     if not old:
         return {"run_id": None, "superseded": 0, "rows": 0}
     # pending equality deletes: read_encoded below applies them, so
     # the rewrite MATERIALIZES the removals; the commit then retires
     # the log entries (tombstones at their (DELETE_BUCKET, epoch)
     # positions) and vacuum reclaims the key files
-    dels = _active_deletes(spark, path)
-    new_epoch = max([int(r.epoch) for r in old]
+    dels = snap.deletes
+    new_epoch = max([e for _b, e in old]
                     + [d["epoch"] for d in dels]) + 1
     run_id = run_id or f"compact-{uuid.uuid4().hex[:8]}"
     nb = int(n_buckets or manifest["n_buckets"])
@@ -2928,8 +2541,8 @@ def compact_encoded(
     commits = lineage_from_blocks(new_metrics, epoch=new_epoch)
     ts = float(time.time())
     tombs = spark.createDataFrame(
-        [(run_id, int(r.bucket), int(r.epoch), "tombstone", 0, 0, 0, 0.0,
-          "{}", 0, 0, 0.0, ts) for r in old]
+        [(run_id, b, e, "tombstone", 0, 0, 0, 0.0, "{}", 0, 0, 0.0, ts)
+         for b, e in old]
         + [(run_id, DELETE_BUCKET, int(d["epoch"]), "tombstone", 0, 0, 0,
             0.0, "{}", 0, 0, 0.0, ts) for d in dels],
         LINEAGE_DDL,
@@ -2948,11 +2561,9 @@ def compact_encoded(
     # buckets it covers; data rows come from the committed lineage
     buckets = sum(f["n_rows"] for f in files
                   if f["column"] == METRICS_COLUMN)
-    agg = committed(
-        spark.read.schema(LINEAGE_DDL).parquet(lineage_p)
-    ).agg(F.sum("n_rows")).collect()[0]
+    rows = _committed_pandas(_lineage_local(spark, path)).n_rows.sum()
     return {"run_id": run_id, "epoch": new_epoch, "superseded": len(old),
-            "buckets": int(buckets), "rows": int(agg[0] or 0),
+            "buckets": int(buckets), "rows": int(rows),
             "files": len(files), "deletes_materialized": len(dels)}
 
 
@@ -2966,12 +2577,12 @@ def vacuum_encoded(spark: SparkSession, path: str) -> dict:
     referenced)."""
     from pyarrow import fs as pafs
 
-    blocks_p, lineage_p, _ = _paths(path)
-    manifest, lin = _load_table(spark, path)
-    live_runs = {r.run_id for r in lin.select("run_id").distinct().collect()}
-    referenced = {
-        f["path"] for f in _run_files(spark, path, live_runs)
-    }
+    from tokcodec.scan import plan_snapshot
+
+    blocks_p = _paths(path)[0]
+    snap = plan_snapshot(path)
+    live_runs = {r for rs in snap.accepted.values() for r in rs}
+    referenced = {f["path"] for f in snap.files}
     fs, root = _task_fs(blocks_p)
     deleted = 0
     infos = fs.get_file_info(pafs.FileSelector(root, recursive=True,
@@ -2996,7 +2607,7 @@ def vacuum_encoded(spark: SparkSession, path: str) -> dict:
             stale += 1
     # removal-list key files whose delete-log entry was retired by
     # compaction (or never committed — a crashed delete_encoded)
-    active_dels = {d["delete_id"] for d in _active_deletes(spark, path)}
+    active_dels = {d["delete_id"] for d in snap.deletes}
     del_fs, del_root = _task_fs(posixpath.join(path, "_deletes"))
     stale_dels = 0
     for info in del_fs.get_file_info(
@@ -3025,21 +2636,14 @@ def count_encoded(spark: SparkSession, path: str,
     just the delete key column — projection-pruned to that column's
     block files, nowhere near a full-table scan. The metadata fast
     path resumes once ``compact_encoded`` materializes the deletes."""
-    dels = _active_deletes(spark, path, as_of_epoch=as_of_epoch)
-    if dels:
-        kc = dels[0]["key_column"]
+    from tokcodec.scan import plan_snapshot
+
+    snap = plan_snapshot(path, as_of_epoch=as_of_epoch, with_files=False)
+    if snap.deletes:
+        kc = snap.deletes[0]["key_column"]
         return read_encoded(spark, path, columns=[kc],
                             as_of_epoch=as_of_epoch).count()
-    manifest = json.loads(_read_text(spark, _paths(path)[2]))
-    if manifest.get("layout", 1) != LAYOUT_VERSION:
-        raise ValueError(
-            f"table at {path!r} has layout {manifest.get('layout', 1)}; "
-            f"this build reads layout {LAYOUT_VERSION} — re-encode")
-    lin = _lineage_local(spark, path)
-    if as_of_epoch is not None:
-        lin = lin[lin.epoch <= int(as_of_epoch)]
-    win = _committed_pandas(lin)
-    return int(win.n_rows.sum()) if len(win) else 0
+    return int(snap.winners.n_rows.sum()) if len(snap.winners) else 0
 
 
 def explain_scan(
@@ -3057,10 +2661,11 @@ def explain_scan(
     "does my predicate actually skip data, or am I about to decode
     the whole table?").
 
-    Runs the reader's own planning (same _normalize_filter /
-    _filter_survivors machinery as read_encoded, so the numbers are
-    the real scan's numbers) over block METADATA + bloom payloads
-    only. Returns::
+    Plans with the readers' snapshot planner, then evaluates the
+    same normalized filters DataFrame-side (_filter_survivors) over
+    block METADATA + bloom payloads only — the prune decision the
+    scan task's _prune_block_table makes per bucket (a parity test
+    pins the two). Returns::
 
         {chunks_total, chunks_scanned, rows_total, rows_scanned,
          bytes_total, bytes_scanned,         # enc_bytes of the decode
@@ -3071,34 +2676,19 @@ def explain_scan(
     rows_scanned is an UPPER BOUND (chunk granularity — the exact
     residual still drops rows inside surviving chunks; pending
     equality deletes drop more). The per-filter rows show each
-    predicate's individual pruning power; the combined numbers use the
-    same intersected-survivor semi-join the real read plans.
+    predicate's individual pruning power; the combined numbers are
+    their intersection, as in the real read.
     """
+    from tokcodec.scan import plan_snapshot
+
     as_of_epoch = _resolve_as_of(spark, path, as_of_epoch, as_of_ts,
                                  as_of_tag)
-    manifest, lin = _load_table(spark, path, as_of_epoch=as_of_epoch,
-                                since_epoch=since_epoch)
+    filts = _filter_list(range_filter, in_filter, eq_filter,
+                         contains_filter, or_filter)
+    snap = plan_snapshot(path, as_of_epoch=as_of_epoch,
+                         since_epoch=since_epoch, filters=filts)
+    manifest, fcols = snap.manifest, snap.filter_columns
     schema = manifest_schema(manifest)
-    filts: list[tuple[str, tuple]] = []
-    for rf in _as_filter_list(range_filter):
-        filts.append(("range", rf))
-    if in_filter is not None:
-        filts.append(("in", tuple(in_filter)))
-    if eq_filter is not None:
-        filts.append(("eq", tuple(eq_filter)))
-    if contains_filter is not None:
-        filts.append(("contains", tuple(contains_filter)))
-    if or_filter is not None:
-        filts.append(("or", tuple(tuple(rf) for rf in or_filter)))
-    fcols: list[str] = []
-    for kind, spec in filts:
-        for c in ([rf[0] for rf in spec] if kind == "or"
-                  else [spec[0]]):
-            if c not in schema.fieldNames():
-                raise ValueError(
-                    f"filter column {c!r} not in encoded table")
-            if c not in fcols:
-                fcols.append(c)
     if columns is not None:
         missing = set(columns) - set(schema.fieldNames())
         if missing:
@@ -3108,14 +2698,10 @@ def explain_scan(
                    else list(dict.fromkeys(list(columns) + fcols)))
     _check_encryption_key(manifest, decode_cols or fcols or None,
                           encryption_key)
-    lin_rows = [(int(r.bucket), r.run_id) for r in lin.collect()]
-    lin_local = spark.createDataFrame(lin_rows,
-                                      "bucket int, run_id string")
-    files = _run_files(spark, path, sorted({rid for _, rid in lin_rows}))
-    blocks = _blocks_df(
-        spark, path, lin_local,
+    blocks = snap.blocks_df(
+        spark,
         columns_needed=None if decode_cols is None else set(decode_cols),
-        files=files).persist()
+    ).persist()
     try:
         # anchor chunk/row counts on one column's values rows (chunk
         # geometry is shared across a bucket's columns)
@@ -3203,25 +2789,20 @@ def approx_count_distinct_encoded(
 
     from tokcodec.hll import M as _HLL_M, hll_estimate, hll_merge
 
+    from tokcodec.scan import plan_snapshot
+
     as_of_epoch = _resolve_as_of(spark, path, as_of_epoch, as_of_ts,
                                  as_of_tag)
-    manifest, lin = _load_table(spark, path, as_of_epoch=as_of_epoch,
-                                since_epoch=since_epoch)
-    schema = manifest_schema(manifest)
+    snap = plan_snapshot(path, as_of_epoch=as_of_epoch,
+                         since_epoch=since_epoch)
+    schema = manifest_schema(snap.manifest)
     if column not in schema.fieldNames():
         raise ValueError(
             f"column {column!r} not in encoded table "
             f"{schema.fieldNames()}")
-    _check_encryption_key(manifest, [column], encryption_key)
-    lin_rows = [(int(r.bucket), r.run_id) for r in lin.collect()]
-    lin_local = spark.createDataFrame(lin_rows,
-                                      "bucket int, run_id string")
-    files = _run_files(spark, path,
-                       sorted({rid for _, rid in lin_rows}))
-    blocks = _blocks_df(spark, path, lin_local,
-                        columns_needed={column}, files=files)
-    target = blocks.filter((F.col("column") == column)
-                           & (F.col("component") == "hll"))
+    _check_encryption_key(snap.manifest, [column], encryption_key)
+    target = snap.blocks_df(spark, columns_needed={column}).filter(
+        (F.col("column") == column) & (F.col("component") == "hll"))
 
     def fold(batches):
         import pyarrow as pa
@@ -3334,9 +2915,12 @@ def profile_encoded(spark: SparkSession, path: str,
     column is the corpus token checksum)."""
     import base64 as _b64
 
+    from tokcodec.scan import plan_snapshot
+
     as_of_epoch = _resolve_as_of(spark, path, as_of_epoch, as_of_ts,
                                  as_of_tag)
-    manifest, lin = _load_table(spark, path, as_of_epoch=as_of_epoch)
+    snap = plan_snapshot(path, as_of_epoch=as_of_epoch)
+    manifest = snap.manifest
     schema = manifest_schema(manifest)
     by_name = {f.name: f for f in schema.fields}
     if columns is None:
@@ -3349,13 +2933,7 @@ def profile_encoded(spark: SparkSession, path: str,
     if encryption_key is not None:
         _check_encryption_key(manifest, list(enc_cols), encryption_key)
     sketched = set(manifest.get("sketch_columns", [])) & set(columns)
-    lin_rows = [(int(r.bucket), r.run_id) for r in lin.collect()]
-    lin_local = spark.createDataFrame(lin_rows,
-                                      "bucket int, run_id string")
-    files = _run_files(spark, path,
-                       sorted({rid for _, rid in lin_rows}))
-    blocks = _blocks_df(spark, path, lin_local,
-                        columns_needed=set(columns), files=files)
+    blocks = snap.blocks_df(spark, columns_needed=set(columns))
     meta_cols = ["run_id", "bucket", "chunk", "column", "component",
                  "codec", "n_rows", "meta", "orig_bytes", "enc_bytes"]
     if sketched:
@@ -3465,9 +3043,7 @@ def profile_encoded(spark: SparkSession, path: str,
 
     from tokcodec.hll import hll_estimate, hll_merge
 
-    win = _committed_pandas(_lineage_local(spark, path))
-    if as_of_epoch is not None:
-        win = win[win.epoch <= int(as_of_epoch)]
+    win = snap.winners
     table_rows = int(win.n_rows.sum()) if len(win) else 0
     out: dict = {"rows": table_rows, "columns": {}}
     merged: dict[str, dict] = {}
@@ -3564,9 +3140,7 @@ def describe_encoded(spark: SparkSession, path: str) -> dict:
     ratio — the reference's footer/stats introspection
     (ParquetMetadata / CarpetReader schema dump) for an encoded table.
     Reads the manifest + lineage, never a block payload."""
-    manifest = json.loads(_read_text(spark, os.path.join(
-        path, "_manifest.json")))
-    _, lin = _load_table(spark, path, full_lineage=True)
+    manifest, lin = _load_table(spark, path, full_lineage=True)
     rows = lin.collect()
     codec_freq: dict[str, dict[str, int]] = {}
     orig = enc = n_rows = 0

@@ -32,20 +32,16 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from tokcodec.decode import make_decode_fn
-from tokcodec.encode import METRICS_COLUMN
 from tokcodec.io_tables import (
-    _active_deletes,
     _apply_deletes,
-    _as_of_schema,
     _check_encryption_key,
     _direct_file_rows,
-    _evolution_fill_columns,
     _expand_uuid_cols,
     _load_table,
     _paths,
     _resolve_as_of,
-    _run_files,
 )
+from tokcodec.scan import _scan_bucket, fill_anchor, plan_snapshot
 from tokcodec.schema import manifest_schema
 
 _ACERO_HOW = {
@@ -67,57 +63,37 @@ def _plan_side(spark: SparkSession, path: str, on: list[str],
     "labels as of tag v2" for reproducible pipelines; bucketing is
     immutable across epochs (appends keep the recorded salt), so
     co-partitioning holds at ANY snapshot pair. No filters in the
-    join reader — read through read_encoded(_direct) for those."""
-    blocks_p, _, _ = _paths(path)
+    join reader — read through read_encoded for those."""
     as_of_epoch = _resolve_as_of(spark, path, as_of_epoch, as_of_ts,
                                  as_of_tag)
-    manifest, lin = _load_table(spark, path, as_of_epoch=as_of_epoch)
-    full_schema = manifest_schema(manifest)
-    accepted: dict[int, list[str]] = {}
-    for r in lin.collect():  # one row per (bucket, epoch) — tiny
-        accepted.setdefault(int(r.bucket), []).append(r.run_id)
-    run_ids = {rid for rs in accepted.values() for rid in rs}
-    if as_of_epoch is not None:
-        # snapshot-schema time travel: project the union of the
-        # participating runs' stored schemas (read_encoded parity)
-        files, run_schemas = _run_files(spark, path, run_ids,
-                                        with_schemas=True)
-        full_schema = _as_of_schema(full_schema, run_schemas)
-    else:
-        files = _run_files(spark, path, run_ids)
-    by_name = {f.name: f for f in full_schema.fields}
+    snap = plan_snapshot(path, as_of_epoch=as_of_epoch)
+    by_name = {f.name: f for f in snap.schema.fields}
     missing = [c for c in on if c not in by_name]
     if missing:
         raise ValueError(f"join keys {missing} not in table {path!r}")
-    dels = _active_deletes(spark, path, as_of_epoch=as_of_epoch)
-    dels = [d for d in dels if d["key_column"] in by_name]
-    want = list(columns) if columns is not None \
-        else [f.name for f in full_schema.fields]
+    want = list(columns) if columns is not None else list(by_name)
     unknown = set(want) - set(by_name)
     if unknown:
         raise ValueError(
             f"columns not in encoded table: {sorted(unknown)}")
     extra = [c for c in on if c not in want]
-    extra += [d["key_column"] for d in dels
+    extra += [d["key_column"] for d in snap.deletes
               if d["key_column"] not in want + extra]
     decode_names = want + extra
     schema = T.StructType([by_name[c] for c in decode_names])
-    scan_cols = {f.name for f in schema.fields}
-    fill_from = None
-    if _evolution_fill_columns(files, scan_cols):
-        fill_from = METRICS_COLUMN
-        scan_cols.add(METRICS_COLUMN)
-    _check_encryption_key(manifest, decode_names, encryption_key)
-    inner = make_decode_fn(schema, fill_from=fill_from,
-                           encryption_key=encryption_key)
+    fill_from = fill_anchor(snap.files, decode_names, [])
+    _check_encryption_key(snap.manifest, decode_names, encryption_key)
     return {
-        "manifest": manifest,
+        "manifest": snap.manifest,
         "schema": schema,
         "want": want,
-        "deletes": dels,
-        "accepted": accepted,
-        "file_rows": _direct_file_rows(files, scan_cols, blocks_p),
-        "decode": inner,
+        "deletes": snap.deletes,
+        "accepted": snap.accepted,
+        "file_rows": _direct_file_rows(
+            snap.files, {*decode_names, fill_from} - {None},
+            _paths(path)[0]),
+        "decode": make_decode_fn(schema, fill_from=fill_from,
+                                 encryption_key=encryption_key),
     }
 
 
@@ -133,24 +109,17 @@ def _salt_of(manifest: dict, path: str) -> list[str]:
 
 
 def _decode_bucket_arrow(bucket: int, accepted, decode, fr_b):
-    """Executor-side: decode one side's bucket from its file plan.
-    Returns a pa.Table in the side's decode schema, or None when the
-    bucket has no files on this side."""
+    """Executor-side: decode one side's bucket with the readers' scan
+    task (tokcodec.scan._scan_bucket). Returns a pa.Table in the
+    side's decode schema, or None when the bucket decodes no rows on
+    this side."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    runs = accepted.get(bucket)
-    if not runs:
-        return None
-    parts = []
-    for lo, hi, fp, _col, rid in fr_b:
-        if lo <= bucket <= hi and rid in runs:
-            t = pq.read_table(fp, filters=[("bucket", "=", bucket)])
-            if t.num_rows:
-                parts.append(t)
-    if not parts:
-        return None
-    return decode((bucket,), pa.concat_tables(parts))
+    runs = accepted.get(bucket, ())
+    batches = list(_scan_bucket(
+        bucket, [fp for lo, hi, fp, _col, rid in fr_b
+                 if lo <= bucket <= hi and rid in runs], (), decode))
+    return pa.Table.from_batches(batches) if batches else None
 
 
 def join_encoded(
