@@ -73,3 +73,48 @@ def test_lineage_matches_block_contents(spark, tmp_path):
         assert r["enc_bytes"] == r["eb"]
         assert r["checksum"] == r["ck"]
         assert abs(r["ratio"] - r["eb"] / r["ob"]) < 1e-12
+
+
+def test_maintenance_commits_append_one_local_lineage_file(spark, tmp_path):
+    # upsert, delete and compact commit through the same driver-side
+    # routine as write_encoded: each adds exactly one
+    # part-<uuid>-local.parquet to lineage/ (no Spark job output, so no
+    # _SUCCESS marker and no leftover temp file) and the table stays
+    # correct after each
+    import re
+
+    from tokcodec.io_tables import (
+        compact_encoded,
+        delete_encoded,
+        upsert_encoded,
+    )
+
+    path = os.path.join(str(tmp_path), "t")
+    write_encoded(_mk(spark, 0, 30), path, n_buckets=3, run_id="r0")
+    write_encoded(_mk(spark, 30, 60), path, n_buckets=3, run_id="r1",
+                  epoch=1)
+    lineage = os.path.join(path, "lineage")
+    up = _mk(spark, 5, 7).withColumn("source", F.lit("updated"))
+    ops = [
+        ("upsert", lambda: upsert_encoded(spark, path, up, "doc_id")),
+        ("delete", lambda: delete_encoded(spark, path, "doc_id",
+                                          ["d1", "d40"])),
+        ("compact", lambda: compact_encoded(spark, path)),
+    ]
+    for name, op in ops:
+        before = set(os.listdir(lineage))
+        op()
+        after = set(os.listdir(lineage))
+        new = after - before
+        assert len(new) == 1 and before <= after, (name, new)
+        assert re.fullmatch(r"part-[0-9a-f]{32}-local\.parquet",
+                            new.pop()), name
+        assert not [f for f in after if not f.endswith("-local.parquet")], \
+            (name, sorted(after))
+        got = {r.doc_id: r.source for r in read_encoded(spark, path)
+               .select("doc_id", "source").collect()}
+        want = {f"d{i}": f"s{i % 3}" for i in range(60)}
+        want.update({"d5": "updated", "d6": "updated"})
+        if name != "upsert":
+            del want["d1"], want["d40"]
+        assert got == want, name

@@ -5,6 +5,8 @@ scaling probe bounded every efficiency measurement at ~2-2.5 s of such
 fixed cost). _load_table hands consumers a LocalRelation, so Catalyst
 folds filters/projections over it and .collect() is job-free."""
 
+import json
+
 import pytest
 
 from tokcodec.io_tables import (
@@ -78,41 +80,87 @@ def test_write_commit_jobs_are_encode_only(spark, tmp_path):
 
 
 def test_manifest_io_local_fast_path(spark, tmp_path):
-    # local paths route manifest text IO through plain open() (no
-    # py4j round trips — ~30 ms of fixed planning latency per call
-    # through the Hadoop FileSystem API); remote schemes keep the
-    # Hadoop branch
-    from tokcodec.io_tables import _local_fs_path, _read_text, _write_text
+    # local paths route manifest IO through pyarrow's LocalFileSystem
+    # (no py4j round trips); _write_json_fs / _read_json_fs are the
+    # only metadata IO: they overwrite and read back, accept file://
+    # URIs and raise FileNotFoundError on a missing file
+    from tokcodec.io_tables import _read_json_fs, _write_json_fs
 
     p = str(tmp_path / "m" / "manifest.json")
-    assert _local_fs_path(spark, p) == p
-    assert _local_fs_path(spark, "file://" + p) == p
-    assert _local_fs_path(spark, "s3://bucket/k.json") is None
-    assert _local_fs_path(spark, "hdfs://nn:9000/k.json") is None
-
-    _write_text(spark, p, '{"a": 1}')
-    assert _read_text(spark, p) == '{"a": 1}'
-    _write_text(spark, p, '{"a": 2}')  # overwrite, like fs.create(p, True)
-    assert _read_text(spark, p) == '{"a": 2}'
+    _write_json_fs(p, '{"a": 1}')
+    assert _read_json_fs(p) == {"a": 1}
+    _write_json_fs(p, '{"a": 2}')  # overwrite, like fs.create(p, True)
+    assert _read_json_fs(p) == {"a": 2}
+    assert _read_json_fs("file://" + p) == {"a": 2}
     with pytest.raises(FileNotFoundError):
-        _read_text(spark, str(tmp_path / "absent.json"))
+        _read_json_fs(str(tmp_path / "absent.json"))
 
 
 def test_manifest_fast_path_interops_with_hadoop_branch(spark, tmp_path):
-    # a manifest written through the Hadoop FileSystem API (pre-change
-    # tables) reads back identically through the fast path, and vice
-    # versa — the two branches share bytes-on-disk semantics
-    from tokcodec.io_tables import _hadoop_fs, _read_text
+    # a manifest written through the Hadoop FileSystem API (tables from
+    # before the pyarrow metadata layer) reads back identically
+    from tokcodec.io_tables import _read_json_fs
 
-    p = str(tmp_path / "hadoop_written.json")
-    fs, jp = _hadoop_fs(spark, p)
-    assert fs is not None
-    out = fs.create(jp, True)
+    h = str(tmp_path / "hadoop_written.json")
+    text = '{"via": "hadoop", "s": "\u00e9\u4e2d"}'
+    jvm = spark.sparkContext._jvm
+    jp = jvm.org.apache.hadoop.fs.Path(h)
+    hfs = jp.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    out = hfs.create(jp, True)
     try:
-        out.write(bytearray('{"via": "hadoop"}'.encode("utf-8")))
+        out.write(bytearray(text.encode("utf-8")))
     finally:
         out.close()
-    assert _read_text(spark, p) == '{"via": "hadoop"}'
+    assert _read_json_fs(h) == json.loads(text)
+
+
+def test_metadata_write_failure_keeps_previous_file(tmp_path, monkeypatch):
+    """A failure while the new bytes stream out leaves the previous
+    metadata file byte-identical (temp file + move)."""
+    from tokcodec import io_tables
+    from tokcodec.io_tables import _read_json_fs, _write_json_fs
+
+    mp = tmp_path / "m" / "_manifest.json"
+    p = str(mp)
+    _write_json_fs(p, '{"a": 2}')
+    before = mp.read_bytes()
+    real_task_fs = io_tables._task_fs
+
+    class _FailingStream:
+        def __init__(self, real):
+            self.real = real
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self.real.close()
+            return False
+
+        def write(self, data):
+            self.real.write(data[: len(data) // 2])
+            raise OSError("injected write failure")
+
+    class _FailingFs:
+        def __init__(self, fs):
+            self.fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self.fs, name)
+
+        def open_output_stream(self, path):
+            return _FailingStream(self.fs.open_output_stream(path))
+
+    def failing_task_fs(path):
+        fs, root = real_task_fs(path)
+        return _FailingFs(fs), root
+
+    monkeypatch.setattr(io_tables, "_task_fs", failing_task_fs)
+    with pytest.raises(OSError, match="injected"):
+        _write_json_fs(p, '{"a": 3, "padding": "' + "x" * 64 + '"}')
+    monkeypatch.undo()
+    assert mp.read_bytes() == before
+    assert _read_json_fs(p) == {"a": 2}
 
 
 def test_reader_construction_launches_no_jobs(spark, tmp_path):

@@ -76,7 +76,7 @@ def test_decode_projection_prunes_block_partitions(spark, tmp_path):
     write_encoded(df, path, n_buckets=1, run_id="p")
     # the scan task's file plan carries only the requested columns'
     # files — unrequested column b's files never enter it
-    files = _run_files(None, path, ["p"])
+    files = _run_files(path, ["p"])
     frows = _direct_file_rows(files, {"doc_id", "a"}, _paths(path)[0])
     assert frows and all("/col-doc_id/" in fp or "/col-a/" in fp
                          for _, _, fp, _, _ in frows), frows

@@ -10,9 +10,6 @@ table's manifest.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import types as T
 
 _PY_TYPES = {
@@ -89,7 +86,8 @@ def generate_ddl(schema: T.StructType) -> str:
 def generate_from_encoded(path: str, name: str = "Record") -> str:
     """Encoded-table manifest -> dataclass source (the reference's
     footer->code flow, over our manifest instead of a Parquet footer)."""
-    with open(os.path.join(path, "_manifest.json")) as f:
-        manifest = json.load(f)
+    from tokcodec.io_tables import _paths, _read_json_fs
+
+    manifest = _read_json_fs(_paths(path)[2])
     schema = T.StructType.fromJson(manifest["json"])
     return generate_dataclass(schema, name)

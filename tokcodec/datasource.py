@@ -76,7 +76,11 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from tokcodec.io_tables import _read_json_fs, _task_fs
+from tokcodec.io_tables import (
+    _read_json_if_exists,
+    _task_fs,
+    _write_json_fs,
+)
 from tokcodec.schema import LAYOUT_VERSION, manifest_schema
 
 
@@ -335,7 +339,7 @@ class TokcodecStreamReader(DataSourceStreamReader):
     def latestOffset(self) -> dict:
         from tokcodec.io_tables import _committed_pandas, _lineage_local
 
-        win = _committed_pandas(_lineage_local(None, self.path))
+        win = _committed_pandas(_lineage_local(self.path))
         top = int(win.epoch.max()) if len(win) else self.start_epoch
         return {"epoch": max(top, self.start_epoch)}
 
@@ -359,28 +363,6 @@ class TokcodecStreamReader(DataSourceStreamReader):
 
 
 # --------------------------------------------------------- write path
-
-def _write_json_fs(path: str, content: str) -> None:
-    """Spark-free manifest write via pyarrow fs (temp + atomic move),
-    so the writer's driver-side commit works on local/HDFS/S3 paths
-    without a JVM gateway."""
-    import uuid as _uuid
-
-    fs, root = _task_fs(path)
-    fs.create_dir(posixpath.dirname(root), recursive=True)
-    tmp = posixpath.join(posixpath.dirname(root),
-                         f".{_uuid.uuid4().hex}.tmp")
-    with fs.open_output_stream(tmp) as out:
-        out.write(content.encode("utf-8"))
-    fs.move(tmp, root)
-
-
-def _exists(path: str) -> bool:
-    from pyarrow import fs as pafs
-
-    fs, root = _task_fs(path)
-    return fs.get_file_info(root).type != pafs.FileType.NotFound
-
 
 def _csv_opt(options: dict, key: str) -> list[str]:
     v = options.get(key)
@@ -501,7 +483,7 @@ class _WriterCore:
         from tokcodec.io_tables import _run_manifest_path
 
         rman = _run_manifest_path(self.path, run_id)
-        if _exists(rman):
+        if _read_json_if_exists(rman) is not None:
             raise ValueError(
                 f"run_id {run_id!r} already has a manifest at "
                 f"{self.path!r} — duplicate commit refused")
@@ -521,17 +503,11 @@ class _WriterCore:
         superseding tombstones in the same file — lineage rows carry
         their run_id from the metrics blocks, so files from several
         runs commit together) -> table manifest refresh."""
-        from tokcodec.io_tables import (
-            METRICS_COLUMN,
-            _commit_lineage_local,
-        )
+        from tokcodec.io_tables import _commit_lineage_local
         from tokcodec.schema import schema_manifest
 
-        blocks_p = posixpath.join(self.path, "blocks")
-        metric_paths = [posixpath.join(blocks_p, f["path"])
-                        for f in files if f["column"] == METRICS_COLUMN]
-        _commit_lineage_local(None, self.path, metric_paths, epoch,
-                              tombstones=tombstones)
+        _commit_lineage_local(self.path, files, epoch,
+                              extra=tombstones or ())
         n_buckets = max(
             [n_buckets_floor, 1] + [hi + 1 for f in files
                                     for _lo, hi in
@@ -598,11 +574,12 @@ def _plan_epoch_and_tombstones(path: str, run_id: str,
         _committed_pandas,
         _deletes_in_force,
         _lineage_local,
+        _tombstones,
     )
 
-    if not _exists(posixpath.join(path, "_manifest.json")):
+    manifest = _read_json_if_exists(posixpath.join(path, "_manifest.json"))
+    if manifest is None:
         return 0, [], 0, {}
-    manifest = _read_json_fs(posixpath.join(path, "_manifest.json"))
     if manifest.get("layout", 1) != LAYOUT_VERSION:
         raise ValueError(
             f"table at {path!r} has layout {manifest.get('layout', 1)}")
@@ -610,7 +587,7 @@ def _plan_epoch_and_tombstones(path: str, run_id: str,
         raise ValueError(
             "the DataSource writer does not handle uuid/enum column "
             "conversion — append to this table with write_encoded")
-    lin = _lineage_local(None, path)
+    lin = _lineage_local(path)
     live = lin[lin.status.isin(["committed", "delete"])]
     top = int(live.epoch.max()) if len(live) else -1
     epoch = top + 1
@@ -624,10 +601,10 @@ def _plan_epoch_and_tombstones(path: str, run_id: str,
             "uuid_columns": manifest.get("uuid_columns"),
             "enum_columns": manifest.get("enum_columns")}
     win = _committed_pandas(lin)
-    tombs = [(run_id, int(b), int(e)) for b, e in zip(win.bucket, win.epoch)]
-    tombs += [(run_id, DELETE_BUCKET, d["epoch"])
-              for d in _deletes_in_force(lin)]
-    return epoch, tombs, 0, {}
+    return epoch, _tombstones(
+        run_id, list(zip(win.bucket, win.epoch))
+        + [(DELETE_BUCKET, d["epoch"]) for d in _deletes_in_force(lin)]
+    ), 0, {}
 
 
 class TokcodecBatchWriter(DataSourceArrowWriter):
@@ -650,9 +627,8 @@ class TokcodecBatchWriter(DataSourceArrowWriter):
          self.manifest_extra) = _plan_epoch_and_tombstones(
             path, run_id, schema, overwrite)
         if self.core.encryption_key is None and not overwrite:
-            enc = [] if not _exists(
-                posixpath.join(path, "_manifest.json")) else _read_json_fs(
-                posixpath.join(path, "_manifest.json")).get(
+            enc = (_read_json_if_exists(
+                posixpath.join(path, "_manifest.json")) or {}).get(
                 "encrypted_columns", [])
             if enc:
                 raise ValueError(
@@ -702,9 +678,9 @@ class TokcodecStreamWriter(DataSourceStreamArrowWriter):
         self.options = dict(options)
         self.schema = schema
         self.path = path
-        if _exists(posixpath.join(path, "_manifest.json")):
-            manifest = _read_json_fs(posixpath.join(path,
-                                                 "_manifest.json"))
+        manifest = _read_json_if_exists(
+            posixpath.join(path, "_manifest.json"))
+        if manifest is not None:
             if manifest["ddl"] != schema.simpleString():
                 raise ValueError(
                     "schema mismatch on streaming append: table has "
@@ -741,10 +717,8 @@ class TokcodecStreamWriter(DataSourceStreamArrowWriter):
         core.run_id = sorted(by_run)[0]
         all_files = [f for _rid, fl in sorted(by_run.items())
                      for f in fl]
-        floor = 0
-        if _exists(posixpath.join(self.path, "_manifest.json")):
-            floor = int(_read_json_fs(posixpath.join(
-                self.path, "_manifest.json")).get("n_buckets", 0))
+        floor = int((_read_json_if_exists(posixpath.join(
+            self.path, "_manifest.json")) or {}).get("n_buckets", 0))
         core._commit_files(all_files, int(batchId),
                            n_buckets_floor=floor)
 

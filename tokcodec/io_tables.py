@@ -28,6 +28,14 @@ on a real cluster):
     <path>/_manifest.json
                       schema + bucket count + column annotations
                       (schema-on-read, ≙ reference footer schema).
+    <path>/_tags.json named snapshots {tag: epoch}.
+
+One filesystem layer: every file above is read and written through
+_task_fs (pyarrow), never through Spark or the Hadoop API. Metadata
+files go through _read_json_fs / _write_json_fs (temp file, then a
+move into place) and every lineage append through
+_commit_lineage_local, so no metadata file is ever seen half
+written.
 """
 
 from __future__ import annotations
@@ -49,7 +57,6 @@ from tokcodec.encode import (
     effective_salt_cols,
     with_bucket,
 )
-from tokcodec.lineage import lineage_from_blocks
 from tokcodec.schema import (
     BLOCK_DDL,
     LAYOUT_VERSION,
@@ -73,99 +80,8 @@ def _run_manifest_path(path: str, run_id: str) -> str:
     return posixpath.join(path, "_runs", f"{run_id}.json")
 
 
-# id(SparkContext) -> whether fs.defaultFS is the local filesystem
-# (one cached JVM config read per context; see _local_fs_path)
-_DEFAULT_FS_LOCAL: dict[int, bool] = {}
-
-
-def _local_fs_path(spark: SparkSession, path: str) -> str | None:
-    """Plain-filesystem path when ``path`` resolves to the driver's
-    LOCAL fs — an explicit file: URI, or a scheme-less path while
-    ``fs.defaultFS`` is file: (the Spark default outside real
-    clusters) — else None. Manifest reads/writes through the Hadoop
-    FileSystem API cost ~30 ms of py4j round trips EACH on the driver
-    (Path + getFileSystem + exists/open/create + stream close), pure
-    fixed planning latency at any table size; the local fast path
-    replaces them with one plain open(). HDFS/S3/abfs paths (and
-    scheme-less paths on a cluster whose defaultFS is remote) keep
-    the Hadoop API unchanged."""
-    if re.match(r"^[A-Za-z][A-Za-z0-9+.\-]*:", path):
-        if path.startswith("file:"):
-            from urllib.parse import urlparse
-
-            return urlparse(path).path or None
-        return None
-    sc = spark.sparkContext
-    key = id(sc)
-    loc = _DEFAULT_FS_LOCAL.get(key)
-    if loc is None:
-        try:
-            loc = str(
-                sc._jsc.hadoopConfiguration().get("fs.defaultFS")
-                or "file:///"
-            ).startswith("file:")
-        except Exception:
-            loc = False
-        _DEFAULT_FS_LOCAL[key] = loc
-    return path if loc else None
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(fs, jvm_path) via Hadoop's FileSystem API, or (None, None) when
-    the JVM gateway isn't reachable (the only case where the local-FS
-    fallback is legitimate — a REAL write/read failure on HDFS/S3 must
-    propagate, not silently land on the driver's local disk)."""
-    try:
-        jvm = spark.sparkContext._jvm
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        return p.getFileSystem(conf), p
-    except Exception:
-        return None, None
-
-
-def _write_text(spark: SparkSession, path: str, content: str) -> None:
-    """Write a manifest through Hadoop's FileSystem API so the table
-    layout works on HDFS/S3 paths, not just the local FS (plain open()
-    was a real-cluster gap flagged in round 1). Local paths take the
-    plain-open() fast path (same bytes, same overwrite semantics as
-    RawLocalFileSystem.create; neither fsyncs) — see _local_fs_path."""
-    lp = _local_fs_path(spark, path)
-    if lp is not None:
-        os.makedirs(os.path.dirname(lp), exist_ok=True)
-        with open(lp, "w") as f:
-            f.write(content)
-        return
-    fs, p = _hadoop_fs(spark, path)
-    if fs is None:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        with open(path, "w") as f:  # no JVM gateway: local-FS fallback
-            f.write(content)
-        return
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(content.encode("utf-8")))
-    finally:
-        out.close()
-
-
-def _read_text(spark: SparkSession, path: str) -> str:
-    lp = _local_fs_path(spark, path)
-    if lp is not None:
-        with open(lp) as f:  # raises FileNotFoundError like the FS API
-            return f.read()
-    fs, p = _hadoop_fs(spark, path)
-    if fs is None:
-        with open(path) as f:
-            return f.read()
-    if not fs.exists(p):
-        raise FileNotFoundError(path)
-    stream = fs.open(p)
-    try:
-        jvm = spark.sparkContext._jvm
-        return jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
+# a leading URI scheme ("file:", "s3:", "hdfs:", ...)
+_SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.\-]*:")
 
 
 def _bucket_ranges(buckets: list[int]) -> list[list[int]]:
@@ -182,23 +98,49 @@ def _bucket_ranges(buckets: list[int]) -> list[list[int]]:
 
 
 def _task_fs(root: str):
-    """pyarrow filesystem for the blocks root — executor-side (the
-    Hadoop JVM gateway isn't reachable from Python workers); local
-    paths and fsspec-able URIs (s3://, hdfs://) both resolve."""
+    """(pyarrow filesystem, path inside it) for a table path — the one
+    filesystem layer for block files, lineage and every metadata file,
+    on the driver and in executor tasks alike. A path with a URI
+    scheme (file:, s3://, hdfs://, ...) resolves through
+    pafs.FileSystem.from_uri, which percent-decodes it; a scheme-less
+    path means the process-local filesystem (on a cluster, pass
+    URIs)."""
     from pyarrow import fs as pafs
 
-    if "://" in root:
-        f, p = pafs.FileSystem.from_uri(root)
-        return f, p
+    if _SCHEME.match(root):
+        return pafs.FileSystem.from_uri(root)
     return pafs.LocalFileSystem(), root
 
 
 def _read_json_fs(path: str) -> dict:
     """Spark-free JSON metadata read over _task_fs (manifests are read
-    by the snapshot planner, which may run without a SparkSession)."""
+    by the snapshot planner, which may run without a SparkSession).
+    A missing file raises FileNotFoundError."""
     fs, p = _task_fs(path)
     with fs.open_input_stream(p) as f:
         return json.loads(f.read().decode("utf-8"))
+
+
+def _read_json_if_exists(path: str) -> dict | None:
+    """_read_json_fs, or None when the file does not exist."""
+    try:
+        return _read_json_fs(path)
+    except FileNotFoundError:
+        return None
+
+
+def _write_json_fs(path: str, content: str) -> None:
+    """Every metadata write (table and run manifests, tags): Spark-free
+    via pyarrow fs, temp file + atomic move, so a reader sees the old
+    file or the new one, never a torn one, on local/HDFS/S3 paths
+    alike."""
+    fs, root = _task_fs(path)
+    fs.create_dir(posixpath.dirname(root), recursive=True)
+    tmp = posixpath.join(posixpath.dirname(root),
+                         f".{uuid.uuid4().hex}.tmp")
+    with fs.open_output_stream(tmp) as out:
+        out.write(content.encode("utf-8"))
+    fs.move(tmp, root)
 
 
 # Metadata IO fan-out, shared by every driver-side step that reads many
@@ -493,7 +435,7 @@ def _inherit_encrypted(existing: dict,
     return encrypted_columns
 
 
-def _lineage_local(spark: SparkSession, path: str):
+def _lineage_local(path: str):
     """Driver-side pandas view of the lineage table (pyarrow read, no
     Spark job): the lineage is O(buckets x epochs) rows of metadata —
     a few MB at 100 TB table scale — so planning/commit bookkeeping
@@ -526,31 +468,28 @@ def _committed_pandas(lin, epoch: int | None = None):
     return win[win.status == "committed"]
 
 
-def _commit_lineage_local(spark: SparkSession, path: str,
-                          metric_paths: list[str], epoch: int,
-                          tombstones=None) -> int:
-    """THE commit, without a Spark job: read this run's metrics block
-    files (known by exact path from the writer tasks), derive one
-    lineage row per bucket (the same derivation as
-    lineage.lineage_from_blocks), and append ONE parquet file to the
-    lineage dir via write-temp + atomic rename — the file lands whole
-    or not at all, exactly like the Spark job-commit rename it
-    replaces. Returns the number of committed rows.
+def _commit_lineage_local(path: str, files: list[dict], epoch: int,
+                          extra=()) -> int:
+    """THE commit, without a Spark job — every lineage append goes
+    through here. Reads this run's metrics block files (picked out of
+    ``files``, the run's file rows, by column; known by exact path from
+    the writer tasks, never by listing), derives one committed lineage
+    row per bucket from its metrics row (bytes, rows, codecs and
+    checksum are already aggregated there), and appends ONE parquet
+    file to the lineage dir via write-temp + atomic rename — the file
+    lands whole or not at all. Returns the number of rows appended;
+    with nothing to append, no file is written.
 
-    ``tombstones``: optional (run_id, bucket, epoch) triples appended
-    as tombstone rows in the SAME parquet file, so a commit that
-    supersedes prior generations (the DataSource writer's overwrite
-    mode — compact_encoded's atomic tombstones+commits append, minus
-    the Spark job) lands atomically with them. ``spark`` is unused
-    (pyarrow fs I/O throughout); Spark-free callers pass None."""
+    ``extra``: further lineage rows (dicts; unset columns default to
+    zero / "{}") appended in the SAME file — tombstones for the
+    generations a commit supersedes, or a delete-log row — so they
+    land atomically with the run's commits."""
     import time
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    _, lineage_p, _ = _paths(path)
-    fs, root = _task_fs(lineage_p)
-    rows = []
+    blocks_p, lineage_p, _ = _paths(path)
     ts = float(time.time())
 
     def _read_one(mp: str):
@@ -558,6 +497,9 @@ def _commit_lineage_local(spark: SparkSession, path: str,
         with mfs.open_input_file(mroot) as f:
             return pq.read_table(f)
 
+    metric_paths = [posixpath.join(blocks_p, f["path"]) for f in files
+                    if f["column"] == METRICS_COLUMN]
+    rows = []
     # one metric file per encode task — thousands at 100 TB bucket
     # counts: overlapped on the metadata pool
     for t in _fan_out(_read_one, metric_paths):
@@ -577,6 +519,12 @@ def _commit_lineage_local(spark: SparkSession, path: str,
                 "wall_ms": float(meta.get("wall_ms") or 0.0),
                 "ts": ts,
             })
+    for x in extra:
+        rows.append({"n_rows": 0, "orig_bytes": 0, "enc_bytes": 0,
+                     "ratio": 0.0, "codecs": "{}", "checksum": 0,
+                     "offset": 0, "wall_ms": 0.0, "ts": ts, **x})
+    if not rows:
+        return 0
     schema = pa.schema([
         ("run_id", pa.string()), ("bucket", pa.int32()),
         ("epoch", pa.int64()), ("status", pa.string()),
@@ -586,14 +534,8 @@ def _commit_lineage_local(spark: SparkSession, path: str,
         ("offset", pa.int64()), ("wall_ms", pa.float64()),
         ("ts", pa.float64()),
     ])
-    for rid, bkt, ep in tombstones or ():
-        rows.append({
-            "run_id": rid, "bucket": int(bkt), "epoch": int(ep),
-            "status": "tombstone", "n_rows": 0, "orig_bytes": 0,
-            "enc_bytes": 0, "ratio": 0.0, "codecs": "{}",
-            "checksum": 0, "offset": 0, "wall_ms": 0.0, "ts": ts,
-        })
     table = pa.Table.from_pylist(rows, schema=schema)
+    fs, root = _task_fs(lineage_p)
     fs.create_dir(root, recursive=True)
     name = f"part-{uuid.uuid4().hex}-local.parquet"
     tmp = posixpath.join(root, f".{name}.tmp")
@@ -601,6 +543,12 @@ def _commit_lineage_local(spark: SparkSession, path: str,
         pq.write_table(table, out)
     fs.move(tmp, posixpath.join(root, name))
     return len(rows)
+
+
+def _tombstones(run_id: str, pairs) -> list[dict]:
+    """Lineage rows retiring each superseded (bucket, epoch)."""
+    return [{"run_id": run_id, "bucket": int(b), "epoch": int(e),
+             "status": "tombstone"} for b, e in pairs]
 
 
 def write_encoded(
@@ -632,11 +580,13 @@ def write_encoded(
     Commit protocol (all metadata O(this run), independent of table
     size): encode tasks write their own block files and report them;
     the driver writes ``_runs/<run_id>.json`` (the file manifest), then
-    appends lineage (THE commit point — a crash before it leaves
-    orphan files no reader ever opens), then refreshes
-    ``_manifest.json``. The only pre-existing state a commit reads is
-    the table manifest (one small JSON) and, with ``resume``, the
-    lineage table (one row per committed bucket).
+    appends one lineage file (THE commit point — a crash before it
+    leaves orphan files no reader ever opens), then refreshes
+    ``_manifest.json``. All three are written Spark-free to a temp
+    file and moved into place (_write_json_fs, _commit_lineage_local).
+    The only pre-existing state a commit reads is the table manifest
+    (one small JSON) and, with ``resume``, the lineage table (one row
+    per committed bucket).
 
     ``codec_override``: {column: codec} — pin a column's leaf codec
     instead of the auto-selector (reference C1 per-column encoding
@@ -656,8 +606,7 @@ def write_encoded(
     logical type, UuidWrite.java:25-32 / LogicalTypeConverters.java:
     140-151 — 2.25x smaller than the 36-char text before compression)
     and converted back to canonical lowercase strings on read."""
-    spark = df.sparkSession
-    blocks_p, lineage_p, manifest_p = _paths(path)
+    manifest_p = _paths(path)[2]
     run_id = run_id or uuid.uuid4().hex[:12]
     # run_id becomes part of file names and manifest paths: glob
     # metacharacters ([]{}*?), path separators or whitespace would
@@ -672,20 +621,13 @@ def write_encoded(
     # point at files the manifest no longer lists (silent row loss).
     # Resume of a partial run must pass a FRESH run_id (the skip set
     # comes from lineage, not from the id).
-    try:
-        _read_text(spark, _run_manifest_path(path, run_id))
-    except FileNotFoundError:
-        pass
-    else:
+    if _read_json_if_exists(_run_manifest_path(path, run_id)) is not None:
         raise ValueError(
             f"run_id {run_id!r} already has a manifest at {path!r}; "
             "every write (including resume) needs a fresh run_id — "
             "resume skips committed buckets via lineage, not run_id"
         )
-    try:
-        existing = json.loads(_read_text(spark, manifest_p))
-    except FileNotFoundError:
-        existing = None
+    existing = _read_json_if_exists(manifest_p)
     if encryption_key is not None:
         from tokcodec.crypto import validate_key
 
@@ -772,7 +714,7 @@ def write_encoded(
         # driver-side lineage read: resume bookkeeping is O(buckets)
         # metadata and must not pay a Spark job's fixed latency
         done = [int(x) for x in
-                _committed_pandas(_lineage_local(spark, path),
+                _committed_pandas(_lineage_local(path),
                                   epoch=epoch).bucket]
         if done:
             b = b.filter(~F.col(BUCKET_COL).isin(done))
@@ -784,7 +726,7 @@ def write_encoded(
         )[:fail_after_buckets]
         b = b.filter(F.col(BUCKET_COL).isin(pending))
 
-    files, new_metrics = _write_run(
+    files = _write_run(
         b, stored_schema, path, n_buckets, run_id, epoch,
         cluster_by=cluster_by, chunk_max_rows=chunk_max_rows,
         chunk_max_values=chunk_max_values, bloom_columns=bloom_columns,
@@ -800,21 +742,17 @@ def write_encoded(
     # Spark job's fixed scheduling latency per append (the 250k-row
     # scaling probe showed ~2-2.5 s of such fixed cost bounding every
     # efficiency measurement).
-    blocks_p, _, _ = _paths(path)
-    metric_paths = [posixpath.join(blocks_p, f["path"]) for f in files
-                    if f["column"] == METRICS_COLUMN]
-    if metric_paths:
-        _commit_lineage_local(spark, path, metric_paths, epoch)
-    _write_text(spark, manifest_p,
-                schema_manifest(stored_schema, n_buckets, run_id,
-                                uuid_columns=uuid_columns,
-                                enum_columns=enum_columns,
-                                encrypted_columns=encrypted_columns,
-                                bloom_columns=bloom_columns,
-                                sketch_columns=sketch_columns,
-                                salt_cols=record_salt))
+    _commit_lineage_local(path, files, epoch)
+    _write_json_fs(manifest_p,
+                   schema_manifest(stored_schema, n_buckets, run_id,
+                                   uuid_columns=uuid_columns,
+                                   enum_columns=enum_columns,
+                                   encrypted_columns=encrypted_columns,
+                                   bloom_columns=bloom_columns,
+                                   sketch_columns=sketch_columns,
+                                   salt_cols=record_salt))
 
-    win = _committed_pandas(_lineage_local(spark, path))
+    win = _committed_pandas(_lineage_local(path))
     orig_bytes = int(win.orig_bytes.sum()) if len(win) else None
     enc_bytes = int(win.enc_bytes.sum()) if len(win) else None
     return {
@@ -840,10 +778,10 @@ def _write_run(b: DataFrame, schema: T.StructType, path: str,
                encrypted_columns: tuple[str, ...] = (),
                encryption_key: bytes | None = None):
     """Encode an already-bucketed DataFrame and persist its blocks +
-    run manifest (everything of a write EXCEPT the lineage commit —
-    write_encoded appends lineage directly; compact_encoded bundles its
-    commit with tombstones in one atomic append). Returns (file rows,
-    metrics-blocks DataFrame)."""
+    run manifest (everything of a write EXCEPT the lineage commit,
+    which the caller makes with _commit_lineage_local from the
+    returned file rows — upsert and compact bundle their tombstones
+    into that same append). Returns the run's file rows."""
     from tokcodec.encode import validate_annotations, validate_codec_override
 
     spark = b.sparkSession
@@ -902,8 +840,8 @@ def _write_run(b: DataFrame, schema: T.StructType, path: str,
          "n_rows": r.n_rows, "bytes": r.bytes}
         for r in filerows
     ]
-    _write_text(
-        spark, _run_manifest_path(path, run_id),
+    _write_json_fs(
+        _run_manifest_path(path, run_id),
         # schema_json: the stored schema AS OF this run (a run's schema
         # is fixed at write, like a parquet file's footer schema —
         # reference CarpetReader reads what the footer says); as-of
@@ -915,13 +853,7 @@ def _write_run(b: DataFrame, schema: T.StructType, path: str,
                     "files": files},
                    separators=(",", ":")),
     )
-    metric_paths = [posixpath.join(blocks_p, f["path"]) for f in files
-                    if f["column"] == METRICS_COLUMN]
-    if metric_paths:
-        new_metrics = spark.read.schema(BLOCK_DDL).parquet(*metric_paths)
-    else:  # empty run (resume with nothing pending)
-        new_metrics = spark.createDataFrame([], BLOCK_DDL)
-    return files, new_metrics
+    return files
 
 
 def suggest_buckets(total_bytes: int,
@@ -1001,7 +933,7 @@ def resolve_as_of_ts(spark: SparkSession, path: str,
         bound = float(as_of_ts)
     import pandas as pd
 
-    lin = _lineage_local(spark, path)
+    lin = _lineage_local(path)
     # delete commits are snapshots too: a bound just after a delete
     # must resolve to the delete's epoch so the removal applies
     dele = lin[(lin.bucket == DELETE_BUCKET) & (lin.status == "delete")]
@@ -1042,10 +974,7 @@ def _tags_path(path: str) -> str:
 
 def tags_encoded(spark: SparkSession, path: str) -> dict[str, int]:
     """{tag name: epoch} — named snapshots (Iceberg tag refs)."""
-    try:
-        return json.loads(_read_text(spark, _tags_path(path)))
-    except FileNotFoundError:
-        return {}
+    return _read_json_if_exists(_tags_path(path)) or {}
 
 
 def tag_encoded(spark: SparkSession, path: str, name: str,
@@ -1060,15 +989,15 @@ def tag_encoded(spark: SparkSession, path: str, name: str,
         raise ValueError(
             f"tag {name!r} may only contain [A-Za-z0-9._=-]")
     if epoch is None:
-        lin = _lineage_local(spark, path)
+        lin = _lineage_local(path)
         lin = lin[lin.status.isin(["committed", "delete"])]
         if not len(lin):
             raise ValueError(f"nothing committed at {path!r} to tag")
         epoch = int(lin.epoch.max())
     tags = tags_encoded(spark, path)
     tags[name] = int(epoch)
-    _write_text(spark, _tags_path(path),
-                json.dumps(tags, sort_keys=True, separators=(",", ":")))
+    _write_json_fs(_tags_path(path),
+                   json.dumps(tags, sort_keys=True, separators=(",", ":")))
     return {"tag": name, "epoch": int(epoch)}
 
 
@@ -1077,11 +1006,11 @@ def untag_encoded(spark: SparkSession, path: str, name: str) -> None:
     if name not in tags:
         raise ValueError(f"unknown tag {name!r}; have {sorted(tags)}")
     del tags[name]
-    _write_text(spark, _tags_path(path),
-                json.dumps(tags, sort_keys=True, separators=(",", ":")))
+    _write_json_fs(_tags_path(path),
+                   json.dumps(tags, sort_keys=True, separators=(",", ":")))
 
 
-def _run_files(spark: SparkSession | None, path: str, run_ids,
+def _run_files(path: str, run_ids,
                with_schemas: bool = False):
     """Union of the committed runs' file manifests — the ONLY way any
     reader learns which block files exist (no listing; files from
@@ -1089,8 +1018,7 @@ def _run_files(spark: SparkSession | None, path: str, run_ids,
     reads over _task_fs; a table with many runs (streaming epochs)
     overlaps them on the metadata pool (_fan_out), so planning never
     pays one serial small-file read per run. A missing manifest of a
-    committed run raises. ``spark`` is unused (Spark-free callers pass
-    None).
+    committed run raises.
 
     ``with_schemas``: also return {run_id: schema_json | None} (the
     run's stored schema, recorded at write — the snapshot-schema
@@ -1151,7 +1079,7 @@ def _blocks_df(spark: SparkSession, path: str, lin: DataFrame,
     if files is None:
         run_ids = [r.run_id
                    for r in lin.select("run_id").distinct().collect()]
-        files = _run_files(spark, path, run_ids)
+        files = _run_files(path, run_ids)
     if columns_needed is not None:
         files = [f for f in files if f["column"] in columns_needed]
     else:
@@ -2195,9 +2123,6 @@ def delete_encoded(spark: SparkSession, path: str, key_column: str,
     must not be encrypted — the removal list itself is plaintext, so a
     delete keyed on an encrypted column would leak exactly the values
     encryption hides."""
-    import time
-
-    _, lineage_p, _ = _paths(path)
     manifest, _lin = _load_table(spark, path)  # validates layout
     schema = manifest_schema(manifest)
     by_name = {f.name: f for f in schema.fields}
@@ -2231,16 +2156,14 @@ def delete_encoded(spark: SparkSession, path: str, key_column: str,
     rel = posixpath.join("_deletes", delete_id)
     kdf.write.mode("error").parquet(posixpath.join(path, rel))
     n_keys = spark.read.parquet(posixpath.join(path, rel)).count()
-    full = _lineage_local(spark, path)
+    full = _lineage_local(path)
     full = full[full.status.isin(["committed", "delete"])]
     epoch = (int(full.epoch.max()) if len(full) else -1) + 1
     meta = json.dumps({"key_column": key_column, "file": rel})
-    ts = float(time.time())
-    row = [(delete_id, DELETE_BUCKET, epoch, "delete", int(n_keys),
-            0, 0, 0.0, meta, 0, 0, 0.0, ts)]
     # THE commit point, same as data runs
-    spark.createDataFrame(row, LINEAGE_DDL).coalesce(1) \
-        .write.mode("append").parquet(lineage_p)
+    _commit_lineage_local(path, [], epoch, extra=[{
+        "run_id": delete_id, "bucket": DELETE_BUCKET, "epoch": epoch,
+        "status": "delete", "n_rows": int(n_keys), "codecs": meta}])
     return {"delete_id": delete_id, "epoch": epoch,
             "key_column": key_column, "n_keys": int(n_keys)}
 
@@ -2249,7 +2172,7 @@ def _active_deletes(spark: SparkSession, path: str,
                     as_of_epoch: int | None = None) -> list[dict]:
     """Delete-log entries currently in force — see _deletes_in_force.
     Driver-side pandas over the lineage table, no Spark job."""
-    return _deletes_in_force(_lineage_local(spark, path), as_of_epoch)
+    return _deletes_in_force(_lineage_local(path), as_of_epoch)
 
 
 def _deletes_in_force(lin, as_of_epoch: int | None = None) -> list[dict]:
@@ -2344,11 +2267,9 @@ def upsert_encoded(spark: SparkSession, path: str, df: DataFrame,
     schema exactly (run ``write_encoded(schema_evolution=True)``
     first to change shape). Single writer assumed, like every other
     commit here."""
-    import time
-
     from tokcodec.scan import plan_snapshot
 
-    _, lineage_p, manifest_p = _paths(path)
+    manifest_p = _paths(path)[2]
     snap = plan_snapshot(path, with_files=False)
     manifest = snap.manifest
     schema = manifest_schema(manifest)
@@ -2404,11 +2325,11 @@ def upsert_encoded(spark: SparkSession, path: str, df: DataFrame,
     olds = [(int(b), int(e)) for b, e in zip(snap.winners.bucket,
                                              snap.winners.epoch)
             if int(b) in set(touched)]
-    lin = _lineage_local(spark, path)
+    lin = _lineage_local(path)
     live = lin[lin.status.isin(["committed", "delete"])]
     new_epoch = (int(live.epoch.max()) if len(live) else -1) + 1
 
-    files, new_metrics = _write_run(
+    files = _write_run(
         merged, schema, path, nb, run_id, new_epoch,
         enum_columns=enum_cols or None,
         # rewritten buckets keep the table's declared indexes — an
@@ -2422,25 +2343,18 @@ def upsert_encoded(spark: SparkSession, path: str, df: DataFrame,
     # 4) THE commit: tombstones + commits in one atomic append.
     # Touched buckets swap whole generations; delete-log entries stay
     # (they were applied to these buckets but still cover the rest).
-    ts = float(time.time())
-    commits = lineage_from_blocks(new_metrics, epoch=new_epoch)
-    tombs = spark.createDataFrame(
-        [(run_id, b, e, "tombstone", 0, 0, 0, 0.0, "{}", 0, 0, 0.0, ts)
-         for b, e in olds],
-        LINEAGE_DDL,
-    )
-    commits.unionByName(tombs).coalesce(1).write.mode("append") \
-        .parquet(lineage_p)
-    _write_text(spark, manifest_p,
-                schema_manifest(schema, nb, run_id,
-                                uuid_columns=uuid_cols,
-                                enum_columns=enum_cols,
-                                encrypted_columns=enc_cols,
-                                bloom_columns=manifest.get(
-                                    "bloom_columns", []),
-                                sketch_columns=manifest.get(
-                                    "sketch_columns", []),
-                                salt_cols=_manifest_salt_claim(manifest)))
+    _commit_lineage_local(path, files, new_epoch,
+                          extra=_tombstones(run_id, olds))
+    _write_json_fs(manifest_p,
+                   schema_manifest(schema, nb, run_id,
+                                   uuid_columns=uuid_cols,
+                                   enum_columns=enum_cols,
+                                   encrypted_columns=enc_cols,
+                                   bloom_columns=manifest.get(
+                                       "bloom_columns", []),
+                                   sketch_columns=manifest.get(
+                                       "sketch_columns", []),
+                                   salt_cols=_manifest_salt_claim(manifest)))
     return {"run_id": run_id, "epoch": new_epoch,
             "buckets_rewritten": len(touched),
             "superseded": len(olds),
@@ -2464,9 +2378,10 @@ def compact_encoded(
     compaction decodes the committed table, re-encodes it as a single
     run at a fresh epoch, and commits with ONE coalesced lineage append
     that carries {tombstones for every superseded (bucket, epoch)} +
-    {commits for the new run}: the file lands atomically (rename at
-    job commit) or not at all, so readers see either the old state or
-    the new state, never a mix. Old block files become unreferenced —
+    {commits for the new run}: _commit_lineage_local writes it to a
+    temp file and moves it into place, so it lands whole or not at
+    all and readers see either the old state or the new state, never
+    a mix. Old block files become unreferenced —
     reclaim with ``vacuum_encoded``. Single writer assumed (as in the
     reference's file-at-a-time model).
 
@@ -2486,11 +2401,9 @@ def compact_encoded(
     Dropping/adding rows is allowed (counts re-derive from the new
     metrics), but uuid columns reach the hook in their canonical
     string form and must stay valid."""
-    import time
-
     from tokcodec.scan import plan_snapshot
 
-    _, lineage_p, manifest_p = _paths(path)
+    manifest_p = _paths(path)[2]
     snap = plan_snapshot(path, with_files=False)
     manifest = snap.manifest
     old = [(int(b), int(e)) for b, e in zip(snap.winners.bucket,
@@ -2527,7 +2440,7 @@ def compact_encoded(
     # re-bucket with the table's recorded salt: compaction is the
     # migration path that stamps salt_cols onto pre-field tables
     b = with_bucket(df, nb, salt_cols=tuple(_manifest_salt(manifest)))
-    files, new_metrics = _write_run(
+    files = _write_run(
         b, df.schema, path, nb, run_id, new_epoch,
         cluster_by=cluster_by, chunk_max_rows=chunk_max_rows,
         chunk_max_values=chunk_max_values, enum_columns=enum_cols or None,
@@ -2538,30 +2451,22 @@ def compact_encoded(
         bloom_columns=bloom_columns, sketch_columns=sketch_columns,
         encrypted_columns=tuple(enc_cols), encryption_key=encryption_key,
     )
-    commits = lineage_from_blocks(new_metrics, epoch=new_epoch)
-    ts = float(time.time())
-    tombs = spark.createDataFrame(
-        [(run_id, b, e, "tombstone", 0, 0, 0, 0.0, "{}", 0, 0, 0.0, ts)
-         for b, e in old]
-        + [(run_id, DELETE_BUCKET, int(d["epoch"]), "tombstone", 0, 0, 0,
-            0.0, "{}", 0, 0, 0.0, ts) for d in dels],
-        LINEAGE_DDL,
-    )
-    # THE commit: one file, renamed into place at job commit
-    commits.unionByName(tombs).coalesce(1).write.mode("append").parquet(lineage_p)
-    _write_text(spark, manifest_p,
-                schema_manifest(df.schema, nb, run_id,
-                                uuid_columns=uuid_cols,
-                                enum_columns=enum_cols,
-                                encrypted_columns=enc_cols,
-                                bloom_columns=bloom_columns,
-                                sketch_columns=sketch_columns,
-                                salt_cols=_manifest_salt(manifest)))
+    # THE commit: one lineage file, moved into place whole
+    _commit_lineage_local(path, files, new_epoch, extra=_tombstones(
+        run_id, old + [(DELETE_BUCKET, d["epoch"]) for d in dels]))
+    _write_json_fs(manifest_p,
+                   schema_manifest(df.schema, nb, run_id,
+                                   uuid_columns=uuid_cols,
+                                   enum_columns=enum_cols,
+                                   encrypted_columns=enc_cols,
+                                   bloom_columns=bloom_columns,
+                                   sketch_columns=sketch_columns,
+                                   salt_cols=_manifest_salt(manifest)))
     # a metrics FILE row's n_rows counts its metrics block rows = the
     # buckets it covers; data rows come from the committed lineage
     buckets = sum(f["n_rows"] for f in files
                   if f["column"] == METRICS_COLUMN)
-    rows = _committed_pandas(_lineage_local(spark, path)).n_rows.sum()
+    rows = _committed_pandas(_lineage_local(path)).n_rows.sum()
     return {"run_id": run_id, "epoch": new_epoch, "superseded": len(old),
             "buckets": int(buckets), "rows": int(rows),
             "files": len(files), "deletes_materialized": len(dels)}

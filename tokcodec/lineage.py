@@ -23,35 +23,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from tokcodec.encode import METRICS_COLUMN
-
-
-def lineage_from_blocks(blocks: DataFrame, epoch: int = 0) -> DataFrame:
-    """One committed lineage row per bucket, derived from the
-    per-bucket METRICS row alone (the encode pass already aggregates
-    bytes/rows/codecs/checksum into it). The caller only needs to feed
-    the metrics rows — at 100 TB the commit must never re-scan payload
-    blocks (round-1 verdict: the old groupBy over ALL block rows made
-    every append O(table size))."""
-    m = blocks.filter(F.col("column") == METRICS_COLUMN)
-    return m.select(
-        "run_id",
-        "bucket",
-        F.lit(int(epoch)).cast("bigint").alias("epoch"),
-        F.lit("committed").alias("status"),
-        "n_rows",
-        "orig_bytes",
-        "enc_bytes",
-        F.when(F.col("orig_bytes") > 0,
-               F.col("enc_bytes") / F.col("orig_bytes"))
-        .otherwise(1.0).alias("ratio"),
-        F.col("codec").alias("codecs"),
-        "checksum",
-        F.col("bucket").cast("bigint").alias("offset"),
-        F.get_json_object("meta", "$.wall_ms").cast("double").alias("wall_ms"),
-        F.unix_timestamp(F.current_timestamp()).cast("double").alias("ts"),
-    )
-
 
 def committed(lineage: DataFrame, epoch: int | None = None) -> DataFrame:
     """Winning (bucket, run_id) rows: per (bucket, epoch), the LATEST

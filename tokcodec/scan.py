@@ -148,7 +148,7 @@ def plan_snapshot(path: str, as_of_epoch: int | None = None,
                 fcols.append(c)
     nfs = _normalize_filters(full, manifest, list(filters))
 
-    lin = _lineage_local(None, path)
+    lin = _lineage_local(path)
     win = lin
     if as_of_epoch is not None:
         win = win[win.epoch <= int(as_of_epoch)]
@@ -167,7 +167,7 @@ def plan_snapshot(path: str, as_of_epoch: int | None = None,
     dels = _deletes_in_force(lin, as_of_epoch=as_of_epoch)
     if with_files:
         files, run_schemas = _run_files(
-            None, path, {r for rs in accepted.values() for r in rs},
+            path, {r for rs in accepted.values() for r in rs},
             with_schemas=True)
         if as_of_epoch is not None:
             # snapshot-schema time travel: the union of the
