@@ -131,7 +131,7 @@ def test_shared_file_one_row_group_per_bucket(spark, tmp_path,
         "doc_id string, k int",
     )
     path = os.path.join(str(tmp_path), "shared")
-    # n_buckets far above 2x parallelism forces multi-bucket tasks
+    # n_buckets far above the core count forces multi-bucket tasks
     write_encoded(df, path, n_buckets=64, run_id="s")
     shared = 0
     for f in glob.glob(os.path.join(path, "blocks", "col-k",

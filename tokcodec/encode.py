@@ -613,11 +613,11 @@ def make_encode_map_fn(schema: T.StructType, run_id: str,
                        sketch_columns: tuple[str, ...] = (),
                        enum_columns: dict[str, list[str]] | None = None,
                        codec_override: dict[str, str] | None = None):
-    """mapInArrow variant: one partition may hold several whole buckets
-    (repartition(n, bucket) colocates each bucket in exactly one
-    partition); group by bucket here instead of paying applyInArrow's
-    JVM-side per-partition row sort — measurably the 4N-level
-    bottleneck on wide token rows."""
+    """mapInArrow variant: group by bucket here instead of paying
+    applyInArrow's JVM-side per-partition row sort — measurably the
+    4N-level bottleneck on wide token rows. Buffers its whole
+    partition, so it expects one bucket per partition
+    (encode_bucketed places bucket b in partition b)."""
     inner = make_encode_fn(schema, run_id, cluster_by=cluster_by,
                            chunk_max_rows=chunk_max_rows,
                            chunk_max_values=chunk_max_values,
@@ -631,7 +631,7 @@ def make_encode_map_fn(schema: T.StructType, run_id: str,
 
         batches = list(batches)
         if not batches:
-            return  # empty partition (bucket-hash collision elsewhere)
+            return  # a bucket with no rows
         tbl = pa.Table.from_batches(batches)
         if tbl.num_rows == 0:
             return
@@ -659,11 +659,12 @@ def make_encode_sorted_fn(schema: T.StructType, run_id: str,
                           encryption_key: bytes | None = None,
                           encryption_salt: bytes | None = None):
     """mapInArrow variant for input SORTED by bucket within each
-    partition (repartition + sortWithinPartitions): buckets are
+    partition (repartitionById + sortWithinPartitions): buckets are
     processed one at a time as their rows stream in, so task memory is
     bounded by ONE bucket even when a task owns many (the write path
-    caps task count at ~2x parallelism; make_encode_map_fn buffers the
-    whole partition, which is only safe at one-bucket-per-task)."""
+    runs one task per core over a contiguous slice of buckets;
+    make_encode_map_fn buffers the whole partition, which is only safe
+    at one bucket per task)."""
     inner = make_encode_fn(schema, run_id, cluster_by=cluster_by,
                            chunk_max_rows=chunk_max_rows,
                            chunk_max_values=chunk_max_values,
@@ -718,9 +719,10 @@ def encode_table(df: DataFrame, n_buckets: int, run_id: str = "run0",
     is a few hundred MB (e.g. 100 TB -> ~400k buckets).
 
     mode 'group' (default): groupBy(bucket).applyInArrow. mode 'map':
-    repartition(n_buckets, bucket) + mapInArrow — identical bucket->task
-    placement and resume semantics, no JVM-side group sort; kept as an
-    alternative (A/B showed parity within sandbox noise).
+    repartitionById(n_buckets, bucket) + mapInArrow — bucket b in
+    partition b, so each task buffers exactly one bucket; same resume
+    semantics, no JVM-side group sort; kept as an alternative (an A/B
+    showed parity within run-to-run noise).
     """
     b = with_bucket(df, n_buckets)
     return encode_bucketed(b, df.schema, n_buckets, run_id, mode, cluster_by,
@@ -853,6 +855,8 @@ def encode_bucketed(b: DataFrame, schema: T.StructType, n_buckets: int,
                             bloom_columns=bloom_columns,
                             enum_columns=enum_columns,
                             codec_override=codec_override)
-    return b.repartition(n_buckets, F.col(BUCKET_COL)).mapInArrow(
+    # exact placement: make_encode_map_fn buffers its whole partition,
+    # so each partition must hold exactly one bucket
+    return b.repartitionById(n_buckets, F.col(BUCKET_COL)).mapInArrow(
         fn, schema=BLOCK_DDL
     )

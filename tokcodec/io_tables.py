@@ -154,6 +154,18 @@ _META_IO_FANOUT_MIN = 9
 _META_IO_THREADS = 16
 
 
+def _task_slots(spark: SparkSession, n_units: int) -> int:
+    """Python tasks for a stage over ``n_units`` buckets: one per core,
+    never more than there are buckets. The one sizing rule of every
+    stage that runs Python over buckets (write encode, scan, join). A
+    Python task costs a fixed ~200 ms on top of its work (measured on
+    a 4-core host: a no-op mapInArrow of 1, 2 or 4 tasks takes
+    ~280 ms, of 8 tasks ~540 ms), so one wave of tasks beats two waves
+    of half-size tasks; balance comes from giving each task an equal,
+    contiguous slice of buckets, not from spare tasks."""
+    return max(1, min(n_units, spark.sparkContext.defaultParallelism))
+
+
 def _fan_out(fn, items) -> list:
     """[fn(x) for x in items], on the metadata thread pool when there
     are at least _META_IO_FANOUT_MIN items (order preserved; the first
@@ -169,8 +181,8 @@ def _fan_out(fn, items) -> list:
 
 # a writer task flushes its buffered block rows to files once they
 # exceed this many payload bytes — bounds task memory when one task
-# encodes many buckets (task count is capped at ~2x the cluster's
-# parallelism; buckets per task = n_buckets / tasks)
+# encodes many buckets (one task per core, so buckets per task =
+# n_buckets / cores; see _task_slots)
 FLUSH_BYTES = 256 << 20
 
 # Minimum per-(task, column) buffer size before a multi-bucket block
@@ -818,15 +830,19 @@ def _write_run(b: DataFrame, schema: T.StructType, path: str,
         # re-cross the JVM boundary; only tiny file-manifest rows do
         yield from writer(enc(batches))
 
-    # task count capped at ~2x parallelism: one-task-per-bucket made
-    # one FILE per bucket per column, whose parquet footers cost ~5%
-    # of the table at sandbox bucket sizes; several buckets share a
-    # task (and its files) instead, with exact per-file bucket ranges
-    # in the run manifest and a byte-bounded flush for memory safety
-    n_tasks = max(1, min(n_buckets,
-                         spark.sparkContext.defaultParallelism * 2))
+    # one task per core, each owning the bucket slice that
+    # spark.range(n_buckets, numPartitions=k) gives scan task i,
+    # [i*n/k, (i+1)*n/k): bucket b goes to task ((b+1)*k - 1) div n.
+    # Exact, equal placement (hash placement left some tasks empty and
+    # others with double), one bucket range per file, and one file per
+    # task per column rather than per bucket — parquet footers cost
+    # ~5% of the table at one file per bucket.
+    n_tasks = _task_slots(spark, n_buckets)
+    task_of_bucket = F.expr(
+        f"((cast(`{BUCKET_COL}` as bigint) + 1) * {n_tasks} - 1) "
+        f"div {n_buckets}").cast("int")
     filerows = (
-        b.repartition(n_tasks, F.col(BUCKET_COL))
+        b.repartitionById(n_tasks, task_of_bucket)
         # bucket-contiguous rows -> the encode fn streams one bucket
         # at a time (JVM-side sort, spills if needed; task memory is
         # bounded by one bucket, not the whole task's bucket set)

@@ -7,12 +7,13 @@ SAME bucket count are therefore co-partitioned on the salt: every
 pair of rows that can satisfy an equi-join whose keys cover the salt
 lives in the same bucket id. ``join_encoded`` exploits that the way
 Spark/Hive bucketed joins and Iceberg's bucket-partition joins do —
-one task per bucket, both sides' blocks decoded executor-side from
-the driver's explicit file plan, joined locally with Arrow's hash
-join — with NO shuffle of table data. The only thing that moves is
-the bucket-id list; at 10^12 rows the exchange a shuffled join would
-need (the whole table, twice) simply never happens, and task memory
-is bounded by bucket size (``n_buckets`` at write controls it).
+bucket by bucket, both sides' blocks decoded executor-side from the
+driver's explicit file plan, joined locally with Arrow's hash join —
+with NO shuffle at all. Tasks are fed bucket indexes by spark.range,
+one contiguous slice of buckets per core (scan_frame's feed); at
+10^12 rows the exchange a shuffled join would need (the whole table,
+twice) simply never happens, and task memory is bounded by bucket
+size (``n_buckets`` at write controls it).
 
 The reference's Carpet has no join machinery at all — joins happen in
 whatever engine consumes the parquet (SURVEY §2.2 relational
@@ -41,7 +42,12 @@ from tokcodec.io_tables import (
     _paths,
     _resolve_as_of,
 )
-from tokcodec.scan import _scan_bucket, fill_anchor, plan_snapshot
+from tokcodec.scan import (
+    _bucket_feed,
+    _scan_bucket,
+    fill_anchor,
+    plan_snapshot,
+)
 from tokcodec.schema import manifest_schema
 
 _ACERO_HOW = {
@@ -244,8 +250,9 @@ def join_encoded(
         from pyspark.sql.types import StructType as _St
 
         r_spark_schema = _St.fromJson(_json.loads(r_schema_json))
+        buckets = bk_b.value
         for batch in batches:
-            for bucket in batch.column("bucket").to_pylist():
+            for bucket in (buckets[i] for i in batch.column(0).to_pylist()):
                 lt = _decode_bucket_arrow(bucket, lacc_b.value,
                                           l_decode, lfr_b.value)
                 if lt is None or lt.num_rows == 0:
@@ -290,11 +297,8 @@ def join_encoded(
         buckets = sorted(set(lp["accepted"]) & set(rp["accepted"]))
     else:
         buckets = sorted(lp["accepted"])
-    buckets_df = spark.createDataFrame([(b,) for b in buckets],
-                                       "bucket int")
-    n_tasks = max(1, min(len(buckets) or 1,
-                         spark.sparkContext.defaultParallelism * 2))
-    out = buckets_df.repartition(n_tasks, F.col("bucket")).mapInArrow(
+    bk_b = spark.sparkContext.broadcast(buckets)
+    out = _bucket_feed(spark, len(buckets)).mapInArrow(
         fn, schema=out_schema)
 
     uuid_cols = sorted(

@@ -44,6 +44,7 @@ from tokcodec.io_tables import (
     _prune_block_table,
     _read_json_fs,
     _run_files,
+    _task_slots,
 )
 from tokcodec.schema import manifest_schema
 
@@ -271,9 +272,10 @@ def scan_frame(spark, snap: Snapshot, decode, out_schema, scan_cols,
     """DataFrame of _scan_bucket over every accepted bucket of ``snap``.
 
     The task input is spark.range over bucket indexes, sliced into
-    ~2x parallelism partitions: no rows are shuffled and no block
-    file enters a Spark scan. The plan travels as one broadcast — the
-    sorted bucket list, the accepted runs and one (lo, hi, path,
+    one contiguous range per core (_bucket_feed; the same slices the
+    write path gives its encode tasks): no rows are shuffled and no
+    block file enters a Spark scan. The plan travels as one broadcast
+    — the sorted bucket list, the accepted runs and one (lo, hi, path,
     column, run_id) row per file bucket-range (O(file ranges), never
     O(buckets x files)); each task expands only its own buckets' file
     lists with one bisect pass. A file holds exactly one run, so run
@@ -307,7 +309,11 @@ def scan_frame(spark, snap: Snapshot, decode, out_schema, scan_cols,
                     sample=sample, encryption_key=encryption_key,
                     project=project)
 
-    n_tasks = max(1, min(len(buckets),
-                         spark.sparkContext.defaultParallelism * 2))
-    return spark.range(0, len(buckets), numPartitions=n_tasks) \
-        .mapInArrow(fn, out_schema)
+    return _bucket_feed(spark, len(buckets)).mapInArrow(fn, out_schema)
+
+
+def _bucket_feed(spark, n: int):
+    """spark.range over indexes 0..n-1 of a planned bucket list, one
+    contiguous slice per Python task (_task_slots): the task input of
+    every per-bucket stage on the read side — no Exchange."""
+    return spark.range(0, n, numPartitions=_task_slots(spark, n))
