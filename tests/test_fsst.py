@@ -4,7 +4,9 @@ import pytest
 from hypothesis import given, settings, strategies as st
 
 from tokcodec.codecs.fsst import (
+    SEG_CAP,
     SymbolTable,
+    _segment_ends,
     fsst_compress,
     fsst_decode,
     fsst_decompress,
@@ -61,6 +63,52 @@ def test_long_string_segments():
     # > SEG_CAP forces segment splitting
     strings = ["abcdefgh" * 2000, "x" * 5000, "short"]
     _roundtrip(strings)
+
+
+def _segment_ends_loop(lengths):
+    """The original per-string loop, kept as the reference."""
+    if not (lengths > SEG_CAP).any():
+        return np.cumsum(lengths)
+    segs = []
+    pos = 0
+    for ln in lengths:
+        ln = int(ln)
+        while ln > SEG_CAP:
+            pos += SEG_CAP
+            segs.append(pos)
+            ln -= SEG_CAP
+        pos += ln
+        segs.append(pos)
+    return np.array(segs, dtype=np.int64)
+
+
+@pytest.mark.parametrize("lengths", [
+    [],
+    [0],
+    [4096],
+    [4097],
+    [3 * 4096 + 5],
+    [0, 4096, 4097, 3 * 4096 + 5, 0, 1, 8192, 8193, 0],
+    [4097, 0, 0, 4096, 12],
+])
+def test_segment_ends_matches_loop(lengths):
+    lengths = np.array(lengths, dtype=np.int64)
+    got = _segment_ends(lengths)
+    want = _segment_ends_loop(lengths)
+    assert got.dtype == want.dtype
+    np.testing.assert_array_equal(got, want)
+
+
+def test_segment_ends_matches_loop_random():
+    rng = np.random.default_rng(11)
+    specials = np.array([0, 1, 4095, 4096, 4097, 3 * 4096 + 5, 8192, 8193])
+    for trial in range(50):
+        n = int(rng.integers(1, 400))
+        lengths = np.where(rng.random(n) < 0.3,
+                           rng.choice(specials, n),
+                           rng.integers(0, 5 * SEG_CAP, n)).astype(np.int64)
+        np.testing.assert_array_equal(_segment_ends(lengths),
+                                      _segment_ends_loop(lengths))
 
 
 def test_symbol_table_serialization():

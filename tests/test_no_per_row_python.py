@@ -1,15 +1,18 @@
 """Lint: the engine's invariant is NO per-row Python in any hot path
 (BASELINE.json north_star: 'All encode/decode paths run as vectorized
-pandas/Arrow UDFs ... no per-row Python'). A `for ... in range(len(`
-loop is the usual regression shape; bounded non-row loops must carry a
-'bounded' comment on the line above or the line itself."""
+pandas/Arrow UDFs ... no per-row Python'). The usual regression shapes
+are a `for ... in range(len(` loop and direct iteration over a chunk's
+per-row arrays (`for x in lengths:`, likewise offsets/offs/seg_ends);
+bounded non-row loops must carry a 'bounded' comment on the line above
+or the line itself."""
 
 import os
 import re
 
 ROOT = "/root/repo"
 SOURCES = ["tokcodec", "__spark_entry__.py", "bench.py"]
-PAT = re.compile(r"for\s+\w+\s+in\s+range\(len\(")
+PAT = re.compile(
+    r"for\s+\w+\s+in\s+(range\(len\(|(lengths|offsets|offs|seg_ends)\s*:)")
 
 
 def _py_files():

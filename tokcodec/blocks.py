@@ -184,12 +184,27 @@ def _string_zone_bounds(arr: pa.Array) -> tuple[bytes | None, bytes | None,
 
 
 def encode_str_component(bucket, column, component, arr: pa.Array,
-                         codec: str | None = None) -> dict:
+                         codec: str | None = None,
+                         trial_lost: set | None = None) -> dict:
+    """``trial_lost``: the set of (column, component) leaves whose FSST
+    trial already lost on this chunk index in an earlier bucket of the
+    encode task (see encode.make_encode_sorted_fn); a trial that FSST
+    loses outright adds its leaf, and a leaf in the set skips the
+    trial."""
     data, lengths = arrow_to_strchunk(arr)
     table = None
     if codec is None:
-        codec, st = select_str_codec(data, lengths, arr)
+        leaf = (column, component)
+        codec, st = select_str_codec(data, lengths, arr,
+                                     skip_trial=leaf in (trial_lost or ()))
         table = st.pop("_fsst_table", None)
+        # only a clear loss is shared: FSST did not shrink the sample
+        # at all. A near miss sits at the decision boundary, where the
+        # same chunk index of another bucket may win.
+        if trial_lost is not None and codec == "plain_str" \
+                and st.get("fsst_sample_bytes", -1) \
+                >= st.get("plain_zstd_sample_bytes", 0):
+            trial_lost.add(leaf)
     if codec == "fsst":
         payload, meta = fsst_encode(data, lengths, table=table)
     else:

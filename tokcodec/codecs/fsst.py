@@ -80,22 +80,18 @@ class SymbolTable:
 
 
 def _segment_ends(lengths: np.ndarray) -> np.ndarray:
-    """String byte-lengths -> segment end offsets (strings split at SEG_CAP)."""
-    segs = []
-    pos = 0
-    # vectorized: most strings are 1 segment; handle long ones separately
-    long_mask = lengths > SEG_CAP
-    if not long_mask.any():
+    """String byte-lengths -> segment end offsets (strings split at SEG_CAP).
+
+    A string of length L is max(1, ceil(L / SEG_CAP)) segments: full
+    SEG_CAP segments then the remainder (an empty string is one empty
+    segment)."""
+    lengths = np.asarray(lengths, dtype=np.int64)
+    if not (lengths > SEG_CAP).any():
         return np.cumsum(lengths)
-    for ln in lengths:
-        ln = int(ln)
-        while ln > SEG_CAP:
-            pos += SEG_CAP
-            segs.append(pos)
-            ln -= SEG_CAP
-        pos += ln
-        segs.append(pos)
-    return np.array(segs, dtype=np.int64)
+    nseg = np.maximum(1, -(-lengths // SEG_CAP))
+    seg_len = np.full(int(nseg.sum()), SEG_CAP, dtype=np.int64)
+    seg_len[np.cumsum(nseg) - 1] = lengths - (nseg - 1) * SEG_CAP
+    return np.cumsum(seg_len)
 
 
 def _lut1(table: SymbolTable) -> np.ndarray:

@@ -132,7 +132,8 @@ def _surrogate_struct(dt: T.DataType) -> T.StructType | None:
 
 
 def _encode_node(bucket: int, name: str, prefix: str, arr: pa.Array,
-                 dt: T.DataType, leaf_codec: str | None = None) -> list[dict]:
+                 dt: T.DataType, leaf_codec: str | None = None,
+                 trial_lost: set | None = None) -> list[dict]:
     """Recursive component-path encoder. Component paths:
     scalar -> '<p>values'; list -> '<p>lengths' + element under
     '<p>values[/...]' (flat lists keep the legacy '<p>values' leaf);
@@ -147,11 +148,11 @@ def _encode_node(bucket: int, name: str, prefix: str, arr: pa.Array,
         # type is a re-validating view that rejects legitimate nulls in
         # non-nullable struct fields under null map values.)
         return _encode_node(bucket, name, prefix, arr, _map_as_list(dt),
-                            leaf_codec=leaf_codec)
+                            leaf_codec=leaf_codec, trial_lost=trial_lost)
     sur = _surrogate_struct(dt)
     if sur is not None:
         return _encode_node(bucket, name, prefix, arr, sur,
-                            leaf_codec=leaf_codec)
+                            leaf_codec=leaf_codec, trial_lost=trial_lost)
     rows: list[dict] = []
     if arr.null_count:
         valid = arr.is_valid().to_numpy(zero_copy_only=False).astype(np.int8)
@@ -181,7 +182,7 @@ def _encode_node(bucket: int, name: str, prefix: str, arr: pa.Array,
         if (isinstance(et, (T.StructType, T.ArrayType, T.MapType))
                 or _surrogate_struct(et) is not None):
             rows += _encode_node(bucket, name, prefix + "values/", values, et,
-                                 leaf_codec=leaf_codec)
+                                 leaf_codec=leaf_codec, trial_lost=trial_lost)
         else:
             # null elements INSIDE the list need their own validity —
             # _encode_leaf fills nulls with type defaults, so without
@@ -196,16 +197,17 @@ def _encode_node(bucket: int, name: str, prefix: str, arr: pa.Array,
                                          evalid, 1, codec="bitpack")
                 )
             rows += _encode_leaf(bucket, name, prefix + "values", values, et,
-                                 codec=leaf_codec)
+                                 codec=leaf_codec, trial_lost=trial_lost)
         return rows
     if isinstance(dt, T.StructType):
         children = arr.flatten()  # offset-correct on sliced arrays
         for f, child in zip(dt.fields, children):
             rows += _encode_node(bucket, name, f"{prefix}f:{f.name}/", child,
-                                 f.dataType, leaf_codec=leaf_codec)
+                                 f.dataType, leaf_codec=leaf_codec,
+                                 trial_lost=trial_lost)
         return rows
     return rows + _encode_leaf(bucket, name, prefix + "values", arr, dt,
-                               codec=leaf_codec)
+                               codec=leaf_codec, trial_lost=trial_lost)
 
 
 def _decimal_unscaled(arr: pa.Array) -> np.ndarray:
@@ -287,12 +289,14 @@ def _sma_patch(rows: list[dict], component: str, arr: pa.Array,
 
 
 def _encode_leaf(bucket: int, name: str, component: str, arr: pa.Array,
-                 dt: T.DataType, codec: str | None = None) -> list[dict]:
+                 dt: T.DataType, codec: str | None = None,
+                 trial_lost: set | None = None) -> list[dict]:
     if isinstance(dt, T.DecimalType):
         if dt.precision > 18:
             return _sma_patch(
                 [encode_str_component(bucket, name, component,
-                                      _decimal_bytes(arr), codec=codec)],
+                                      _decimal_bytes(arr), codec=codec,
+                                      trial_lost=trial_lost)],
                 component, arr)
         v = _decimal_unscaled(arr)
         rows = [encode_int_component(bucket, name, component, v, 8,
@@ -306,7 +310,8 @@ def _encode_leaf(bucket: int, name: str, component: str, arr: pa.Array,
         # binary (opaque multimodal blobs) shares the string layout
         return _sma_patch(
             [encode_str_component(bucket, name, component, arr,
-                                  codec=codec)], component, arr)
+                                  codec=codec, trial_lost=trial_lost)],
+            component, arr)
     if isinstance(dt, (T.FloatType, T.DoubleType)):
         had_nulls = bool(arr.null_count)
         nn_src = arr
@@ -338,9 +343,11 @@ def _encode_leaf(bucket: int, name: str, component: str, arr: pa.Array,
 
 
 def _encode_column(bucket: int, name: str, arr: pa.Array, dt: T.DataType,
-                   leaf_codec: str | None = None) -> list[dict]:
+                   leaf_codec: str | None = None,
+                   trial_lost: set | None = None) -> list[dict]:
     """One Arrow column chunk -> block rows (component tree)."""
-    return _encode_node(bucket, name, "", arr, dt, leaf_codec=leaf_codec)
+    return _encode_node(bucket, name, "", arr, dt, leaf_codec=leaf_codec,
+                        trial_lost=trial_lost)
 
 
 def _chunk_bounds(n_rows: int, list_lengths: np.ndarray | None,
@@ -434,7 +441,11 @@ def make_encode_fn(schema: T.StructType, run_id: str,
                    encryption_key: bytes | None = None,
                    encryption_salt: bytes | None = None):
     """Returns the applyInArrow function: (key, pa.Table) -> pa.Table
-    of BLOCK_DDL rows for one bucket.
+    of BLOCK_DDL rows for one bucket. Its keyword ``trial_memo`` maps a
+    chunk index to the set of (column, component) string leaves whose
+    FSST trial lost outright on that chunk index in an earlier bucket of
+    the same task (see make_encode_sorted_fn); without it every chunk
+    trials.
 
     ``encrypted_columns``/``encryption_key``: AES-GCM these columns'
     block payloads AND metadata (zone bounds, value-bearing codec
@@ -470,7 +481,8 @@ def make_encode_fn(schema: T.StructType, run_id: str,
         ]
     )
 
-    def fn(key: tuple, table: pa.Table) -> pa.Table:
+    def fn(key: tuple, table: pa.Table, *,
+           trial_memo: dict[int, set] | None = None) -> pa.Table:
         import pyarrow.compute as pc
 
         t0 = time.monotonic()
@@ -506,11 +518,14 @@ def make_encode_fn(schema: T.StructType, run_id: str,
         for ci, (lo, hi) in enumerate(
                 _chunk_bounds(n, lens, chunk_max_rows, chunk_max_values)):
             sl = table.slice(lo, hi - lo)
+            trial_lost = (None if trial_memo is None
+                          else trial_memo.setdefault(ci, set()))
             for name, dt in fields:
                 arr = sl.column(name).combine_chunks()
                 for r in _encode_column(
                         bucket, name, arr, dt,
-                        leaf_codec=(codec_override or {}).get(name)):
+                        leaf_codec=(codec_override or {}).get(name),
+                        trial_lost=trial_lost):
                     r["run_id"] = run_id
                     r["chunk"] = ci
                     if name in encrypted_columns:
@@ -664,7 +679,20 @@ def make_encode_sorted_fn(schema: T.StructType, run_id: str,
     bounded by ONE bucket even when a task owns many (the write path
     runs one task per core over a contiguous slice of buckets;
     make_encode_map_fn buffers the whole partition, which is only safe
-    at one bucket per task)."""
+    at one bucket per task).
+
+    Each call (one task) keeps one FSST trial memo across its buckets,
+    keyed by chunk index: once FSST fails to shrink a string leaf's
+    sample at all on chunk i of one bucket, chunk i of the task's later
+    buckets goes straight to plain_str. This rests on the write path's
+    hash bucketing: the task's buckets are xxhash64 salts of one row
+    stream, kept in its arrival order, so chunk i of each covers about
+    the same stretch of the input, whatever that input's order (near
+    misses are not shared: bucket sizes differ a little, and a chunk
+    at a boundary may flip). ``cluster_by`` re-sorts each bucket
+    before chunking, so clustered writes keep no memo and trial every
+    chunk; a task with a single bucket (the DataSource writer's) has
+    nothing to share. Winning chunks always train their own table."""
     inner = make_encode_fn(schema, run_id, cluster_by=cluster_by,
                            chunk_max_rows=chunk_max_rows,
                            chunk_max_values=chunk_max_values,
@@ -682,12 +710,14 @@ def make_encode_sorted_fn(schema: T.StructType, run_id: str,
 
         cur = None
         buf: list = []
+        trial_memo = {} if cluster_by is None else None
 
         def emit():
             tbl = pa.Table.from_batches(buf).combine_chunks()
             if tbl.num_rows == 0:
                 return []
-            out = inner((cur,), tbl.drop_columns([BUCKET_COL]))
+            out = inner((cur,), tbl.drop_columns([BUCKET_COL]),
+                        trial_memo=trial_memo)
             return out.to_batches()
 
         for batch in batches:

@@ -15,7 +15,7 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 
-from tokcodec.codecs.fsst import SAMPLE_BYTES, fsst_encode
+from tokcodec.codecs import fsst
 from tokcodec.kernels import bits_needed, snap_width
 from tokcodec.stats import int_chunk_stats
 
@@ -69,12 +69,21 @@ def select_int_codec(v: np.ndarray, itemsize: int) -> tuple[str, dict]:
     return codec, st
 
 
-def select_str_codec(data: bytes, lengths: np.ndarray, arr: pa.Array) -> tuple[str, dict]:
+def select_str_codec(data: bytes, lengths: np.ndarray, arr: pa.Array,
+                     skip_trial: bool = False) -> tuple[str, dict]:
     """-> (codec name, stats dict) for a string chunk.
 
     dict wins at low cardinality; FSST is trialed on a sample when
     cardinality is high (its ratio is not predictable from stats alone,
-    so we measure — cheap: sample is capped at SAMPLE_BYTES).
+    so we measure — cheap: sample is capped at SAMPLE_BYTES). On a win
+    the trained table rides in ``st["_fsst_table"]`` for the encoder.
+
+    ``skip_trial``: this leaf already lost a trial outright on the same
+    chunk index of an earlier bucket in the encode task (see
+    encode.make_encode_sorted_fn), so a high-cardinality chunk goes to
+    plain_str without training. The cardinality branch still runs per
+    chunk, and wins are never reused: every FSST chunk trains its own
+    table.
     """
     n = len(lengths)
     if n == 0 or len(data) == 0:
@@ -91,22 +100,19 @@ def select_str_codec(data: bytes, lengths: np.ndarray, arr: pa.Array) -> tuple[s
     if card_s <= max(64, 0.02 * k):
         # low cardinality: dict ≈ uniq bytes + n*log2(card)/8 — wins
         return "dict_str", st
+    if skip_trial:
+        return "plain_str", st
     # trial FSST vs plain on a bounded sample, both measured AFTER the
     # zstd outer layer (what actually hits disk); FSST must win by a
-    # clear margin to justify its encode CPU. On a win, the trained
-    # table is handed to the encoder — training happens once per chunk.
-    import pyarrow as pa
-
-    from tokcodec.codecs.fsst import _segment_ends, train_table
-
+    # clear margin to justify its encode CPU
     zstd = pa.Codec("zstd", compression_level=1)
-    samp_rows = int(np.searchsorted(np.cumsum(lengths), SAMPLE_BYTES)) + 1
+    samp_rows = int(np.searchsorted(np.cumsum(lengths), fsst.SAMPLE_BYTES)) + 1
     samp_rows = min(n, max(samp_rows, 256))
     s_lengths = lengths[:samp_rows]
     s_data = data[: int(s_lengths.sum())]
     buf = np.frombuffer(s_data, dtype=np.uint8)
-    table = train_table(buf, _segment_ends(s_lengths))
-    payload, _ = fsst_encode(s_data, s_lengths, table=table)
+    table = fsst.train_table(buf, fsst._segment_ends(s_lengths))
+    payload, _ = fsst.fsst_encode(s_data, s_lengths, table=table)
     fsst_final = len(zstd.compress(payload).to_pybytes())
     plain_final = len(zstd.compress(s_data).to_pybytes())
     st["fsst_sample_bytes"] = int(fsst_final)
