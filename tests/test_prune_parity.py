@@ -2,7 +2,13 @@
 (explain_scan, the distributed aggregate pivot) and the scan task's
 _prune_block_table (every read). Until one replaces the other they
 must keep the same chunks for every filter kind — explain_scan's
-chunks_scanned is checked against the task's own prune step."""
+chunks_scanned is checked against the task's own prune step.
+
+The scan task runs here as ONE slice over all of a table's buckets,
+the way a read task prunes: the plain table has 2 buckets and 2 runs,
+so chunk numbers repeat across both, and a survivor keyed on anything
+less than (run_id, bucket, chunk) would merge chunks and show up as a
+count mismatch."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,7 +20,7 @@ from tokcodec.io_tables import (
     explain_scan,
     write_encoded,
 )
-from tokcodec.scan import _scan_bucket, plan_snapshot
+from tokcodec.scan import _scan_slice, _slice_files, plan_snapshot
 
 KEY = bytes(range(32))
 
@@ -48,22 +54,20 @@ def tables(spark, tmp_path_factory):
 
 def _task_kept(path, filts, key=None) -> set:
     """Distinct (run_id, bucket, chunk)s the scan task's prune step
-    keeps over each bucket's block rows."""
+    keeps over the table's block rows, all buckets in one slice."""
     snap = plan_snapshot(path, filters=filts)
     rows = _direct_file_rows(snap.files, set(snap.schema.fieldNames()),
                              _paths(path)[0])
-    kept: set = set()
+    buckets = sorted(snap.accepted)
 
     def keys(_bucket, tbl):  # stands in for decode: the pruned rows
         return tbl.select(["run_id", "bucket", "chunk"])
 
-    for b, runs in snap.accepted.items():
-        paths = [fp for lo, hi, fp, _c, rid in rows
-                 if lo <= b <= hi and rid in runs]
-        for batch in _scan_bucket(b, paths, snap.specs, keys,
-                                  encryption_key=key):
-            kept |= set(zip(*(batch.column(i).to_pylist()
-                              for i in range(3))))
+    kept: set = set()
+    for _b, out in _scan_slice(
+            buckets, _slice_files(rows, snap.accepted, buckets),
+            snap.specs, keys, encryption_key=key):
+        kept |= set(zip(*(out.column(i).to_pylist() for i in range(3))))
     return kept
 
 

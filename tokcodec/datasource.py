@@ -19,10 +19,13 @@ side is read_encoded's pipeline, not a copy of it:
   which is what DataSource methods need, since they run without a
   SparkSession — and the declared schema is the planner's read
   schema (the snapshot schema under ``as_of_epoch``);
-- batch reads plan one InputPartition per accepted bucket, and read()
-  runs the one scan task, tokcodec.scan._scan_bucket; every partition
-  is self-contained (bucket, files, prune specs, removal lists), so
-  nothing depends on reader pickling order;
+- batch and stream reads plan one InputPartition per slice of
+  buckets (_slices: a connected component of the accepted files'
+  bucket ranges, cut at the newest run's ranges), and read() runs
+  the one scan task, tokcodec.scan._scan_slice, so each block file
+  is opened once per slice; every partition is self-contained
+  (buckets, files, prune specs, removal lists), so nothing depends
+  on reader pickling order;
 - WHERE predicates arrive via pushFilters and become zone-map/bloom
   prune specs for the task; every filter is also returned to Spark
   unhandled, so Spark re-applies the exact predicate (pruning is
@@ -33,9 +36,9 @@ side is read_encoded's pipeline, not a copy of it:
   window (exactly ``read_encoded(since_epoch=...)``'s incremental
   semantics), so `readStream` tails a table that streaming ingest or
   upserts keep appending to;
-- pending equality deletes are applied per task (each task loads the
-  small removal-list parquet; for a huge list prefer read_encoded's
-  broadcast anti-join).
+- pending equality deletes are applied in the scan task (each task
+  reads each removal-list parquet once; for a huge list prefer
+  read_encoded's broadcast anti-join).
 
 - the WRITE path reuses write_encoded's exact task body (encode ->
   block files -> O(run) metadata commit), so DataSource-written and
@@ -86,28 +89,64 @@ from tokcodec.schema import LAYOUT_VERSION, manifest_schema
 
 # ------------------------------------------------------------ read path
 
-class _BucketPartition(InputPartition):
+class _SlicePartition(InputPartition):
     """Self-contained task spec — everything read() needs, so nothing
     depends on which copy of the reader an executor unpickles (the
     stream reader plans its removal lists per micro-batch)."""
 
-    def __init__(self, bucket: int, paths: list[str], specs: list[dict],
-                 removals: list[dict], extra: list[T.StructField],
-                 fill: str | None):
-        self.bucket = bucket
-        self.paths = paths  # the bucket's accepted block files
+    def __init__(self, buckets: list[int], files: list[tuple],
+                 specs: list[dict], removals: list[dict],
+                 extra: list[T.StructField], fill: str | None):
+        self.buckets = buckets  # one contiguous slice, sorted
+        self.files = files  # _slice_files: (path, column, buckets)
         self.specs = specs
         self.removals = removals
         self.extra = extra  # delete key columns outside the projection
         self.fill = fill
 
 
+def _slices(snap, rows) -> list[list[int]]:
+    """The snapshot's accepted buckets cut into partition slices. A
+    slice is a connected component of the accepted files' bucket
+    ranges, so a file belongs to exactly one slice; a component that
+    spans more than one of the newest run's bucket ranges is cut at
+    those ranges' boundaries (the newest run's writer tasks set the
+    table's current task slices). An older file that crosses a cut is
+    read by each slice it overlaps."""
+    import bisect
+
+    from tokcodec.scan import _slice_files
+
+    buckets = sorted(snap.accepted)
+    spans = sorted((bs[0], bs[-1]) for _fp, _c, bs
+                   in _slice_files(rows, snap.accepted, buckets))
+    comps: list[list[int]] = []
+    for lo, hi in spans:
+        if comps and lo <= comps[-1][1]:
+            comps[-1][1] = max(comps[-1][1], hi)
+        else:
+            comps.append([lo, hi])
+    w = snap.winners
+    newest = w.run_id[w.epoch == w.epoch.max()].max() if len(w) else None
+    cuts = sorted({c for lo, hi, _fp, _c, rid in rows if rid == newest
+                   for c in (lo, hi + 1)})
+    out = []
+    for lo, hi in comps:
+        edges = [lo] + [c for c in cuts if lo < c <= hi] + [hi + 1]
+        for a, z in zip(edges, edges[1:]):
+            piece = buckets[bisect.bisect_left(buckets, a):
+                            bisect.bisect_left(buckets, z)]
+            if piece:
+                out.append(piece)
+    return out
+
+
 def _make_partitions(snap, schema: T.StructType, specs: list[dict]):
-    """One partition per accepted bucket of the snapshot plan, with its
-    exact file list (a file holds exactly one run, so accept/reject is
-    decided here and read() never run-filters rows)."""
+    """One partition per slice of the snapshot plan (_slices), with
+    its exact file list (a file holds exactly one run, so accept/reject
+    is decided here and read() never run-filters rows)."""
     from tokcodec.io_tables import _direct_file_rows, _paths
-    from tokcodec.scan import fill_anchor
+    from tokcodec.scan import _slice_files, fill_anchor
 
     extra = _extra_delete_fields(schema, snap.manifest, snap.deletes)
     wanted = [f.name for f in schema.fields] + [f.name for f in extra]
@@ -121,12 +160,11 @@ def _make_partitions(snap, schema: T.StructType, specs: list[dict]):
                  "file": posixpath.join(snap.path, d["file"]),
                  "uuid": d["key_column"] in uuids} for d in snap.deletes]
     parts = []
-    for bucket, runs in sorted(snap.accepted.items()):
-        paths = [fp for lo, hi, fp, _col, rid in rows
-                 if lo <= bucket <= hi and rid in runs]
-        if paths:
-            parts.append(_BucketPartition(bucket, paths, specs, removals,
-                                          extra, fill))
+    for bks in _slices(snap, rows):
+        files = _slice_files(rows, snap.accepted, bks)
+        if files:
+            parts.append(_SlicePartition(bks, files, specs, removals,
+                                         extra, fill))
     return parts
 
 
@@ -145,22 +183,23 @@ def _extra_delete_fields(schema: T.StructType, manifest: dict,
     return out
 
 
-def _read_partition(part: _BucketPartition, schema: T.StructType,
+def _read_partition(part: _SlicePartition, schema: T.StructType,
                     key_hex):
-    """Executor side: read_encoded's scan task on one bucket, with the
+    """Executor side: read_encoded's scan task on one slice, with the
     removal lists applied in the task."""
     from tokcodec.decode import make_decode_fn
-    from tokcodec.scan import _scan_bucket
+    from tokcodec.scan import _scan_slice
 
     key = bytes.fromhex(key_hex) if key_hex else None
     names = [f.name for f in schema.fields]
     decode = make_decode_fn(
         T.StructType(list(schema.fields) + list(part.extra)),
         encryption_key=key, fill_from=part.fill)
-    yield from _scan_bucket(
-        part.bucket, part.paths, part.specs, decode, encryption_key=key,
-        removals=part.removals,
-        project=(lambda t: t.select(names)) if part.extra else None)
+    for _b, out in _scan_slice(
+            part.buckets, part.files, part.specs, decode,
+            encryption_key=key, removals=part.removals,
+            project=(lambda t: t.select(names)) if part.extra else None):
+        yield from out.to_batches()
 
 
 def _filter_specs(schema: T.StructType, manifest: dict, filters):
@@ -303,7 +342,7 @@ class TokcodecBatchReader(DataSourceReader):
     def partitions(self):
         return _make_partitions(self.snap, self.schema, self.specs)
 
-    def read(self, partition: _BucketPartition):
+    def read(self, partition: _SlicePartition):
         yield from _read_partition(partition, self.schema, self.key_hex)
 
 
@@ -355,7 +394,7 @@ class TokcodecStreamReader(DataSourceStreamReader):
             plan_snapshot(self.path, as_of_epoch=hi, since_epoch=lo),
             self.schema, [])
 
-    def read(self, partition: _BucketPartition):
+    def read(self, partition: _SlicePartition):
         yield from _read_partition(partition, self.schema, self.key_hex)
 
     def commit(self, end: dict) -> None:

@@ -289,9 +289,12 @@ def make_decode_fn(schema: T.StructType, verify_checksums: bool = False,
                    fill_from: str | None = None,
                    encryption_key: bytes | None = None,
                    bucket_column: str | None = None):
-    """Decode step of the scan task (tokcodec.scan._scan_bucket) and of
-    decode_blocks' grouped stage: (key, blocks pa.Table) -> decoded
-    pa.Table for one bucket.
+    """Decode step of the slice scan task (tokcodec.scan._scan_slice),
+    which calls it once per bucket of its slice, and of decode_blocks'
+    grouped stage: (key, blocks pa.Table) -> decoded pa.Table for one
+    bucket. It stays per bucket because the evolution fill counts and
+    the ``bucket_column`` value are per bucket; decoded memory is one
+    bucket's rows.
 
     ``fill_from`` activates schema-evolution decode (runs written
     before a column was added are null-filled at their run position):

@@ -188,7 +188,7 @@ FLUSH_BYTES = 256 << 20
 # Minimum per-(task, column) buffer size before a multi-bucket block
 # file is split into one row group per bucket (see _make_block_writer):
 # below this, per-group footer metadata costs more stored bytes than
-# the whole-file re-read costs time.
+# reading the whole file once in the slice scan task costs time.
 _SPLIT_GROUP_MIN_BYTES = 8 << 20
 
 
@@ -202,8 +202,8 @@ def _make_block_writer(blocks_p: str, run_id: str,
     (O(files of this run)) into the run manifest. Composed directly
     after the encode generator in the same Python stage, so payload
     bytes cross the Arrow boundary exactly once. Parquet statistics
-    are written only for bucket/run_id (what the direct reader's
-    row-group filter uses) — full stats on payload columns were pure
+    are written only for bucket/run_id (the scan task picks row
+    groups by their bucket range) — full stats on payload columns were pure
     footer overhead that showed up at small-file sizes."""
     # resolved at call time (driver) so tests can lower the module
     # constants — the closure ships the VALUES to executors
@@ -252,16 +252,17 @@ def _make_block_writer(blocks_p: str, run_id: str,
                                    write_statistics=["bucket", "run_id"])
                 else:
                     # several buckets share this writer task's LARGE
-                    # file: one ROW GROUP per bucket, so the direct
-                    # reader's ("bucket", "=", b) row-group filter
-                    # reads only that bucket's payload bytes instead
-                    # of the whole file once per bucket it covers.
-                    # Small files skip the split — the extra per-group
-                    # footer metadata would cost more bytes than the
-                    # re-read costs time (measured: splitting KB-sized
-                    # fixture files moved the recorded compression
-                    # ratio 0.679 -> 0.688) — and bucket-grained files
-                    # (production sizing) take the single-group path.
+                    # file: one ROW GROUP per bucket, so the slice scan
+                    # task (which opens the file once) reads one
+                    # bucket's row group at a time, and a
+                    # surviving-bucket read skips the other buckets'
+                    # row groups. Small files skip the split — the
+                    # extra per-group footer metadata would cost more
+                    # bytes than reading them whole saves (measured:
+                    # splitting KB-sized fixture files moved the
+                    # recorded compression ratio 0.679 -> 0.688) — and
+                    # bucket-grained files (production sizing) take
+                    # the single-group path.
                     with pq.ParquetWriter(
                             full, sub.schema, filesystem=fs,
                             compression="none",
@@ -1343,10 +1344,13 @@ def read_encoded(
     path: the snapshot planner (tokcodec.scan.plan_snapshot) picks
     each bucket's winning runs and their block files from metadata
     alone — lineage -> run manifests -> explicit paths, no listing, no
-    Spark job — and one shuffle-free task per slice of buckets opens
-    each bucket's files with pyarrow, prunes chunks from the bucket's
-    own metas and blooms, and decodes (tokcodec.scan._scan_bucket).
-    No payload byte is shuffled and no block file enters a Spark scan.
+    Spark job — and one shuffle-free task per slice of buckets runs
+    tokcodec.scan._scan_slice: it opens each of the slice's files at
+    most once with pyarrow, reads the filter columns' files first and
+    prunes chunks from their metas and blooms, opens the other
+    columns' files only for buckets where a chunk survives, and
+    decodes one bucket at a time. No payload byte is shuffled and no
+    block file enters a Spark scan.
 
     ``columns`` is projection pushdown — only those columns' block
     FILES are opened (reference P3). A filter or delete-key column
@@ -1437,22 +1441,22 @@ def read_encoded(
 
     as_of_epoch = _resolve_as_of(spark, path, as_of_epoch, as_of_ts,
                                  as_of_tag)
-    chunks = None
+    chunks = runs = None
     if _chunk_subset is not None:
-        chunks = {}
+        chunks, runs = set(), {}
         for r, b, c in _chunk_subset:
-            chunks.setdefault(int(b), set()).add((str(r), int(c)))
-        buckets = sorted(set(chunks) if buckets is None
-                         else set(chunks) & {int(b) for b in buckets})
+            chunks.add(_chunk_key(str(r), int(b), int(c)))
+            runs.setdefault(int(b), set()).add(str(r))
+        buckets = sorted(set(runs) if buckets is None
+                         else set(runs) & {int(b) for b in buckets})
     snap = plan_snapshot(
         path, as_of_epoch=as_of_epoch, since_epoch=since_epoch,
         buckets=buckets,
         filters=_filter_list(range_filter, in_filter, eq_filter,
                              contains_filter, or_filter))
-    if chunks is not None:
+    if runs is not None:
         # the boundary decode of an aggregate touches a few (run,
         # bucket)s, not the table: the others' files are never opened
-        runs = {b: {r for r, _c in ks} for b, ks in chunks.items()}
         snap.accepted = {b: kept for b, rs in snap.accepted.items()
                          if (kept := [r for r in rs if r in runs[b]])}
     fcols = snap.filter_columns
@@ -1933,94 +1937,100 @@ def _zone_survivors_encrypted(blocks: DataFrame, col: str, nf: dict,
     return out.filter("hit").select(*keys)
 
 
+def _chunk_key(run_id: str, bucket: int, chunk: int) -> str:
+    """A chunk's identity as one string: ``run_id/bucket/chunk``. Chunk
+    numbers repeat across buckets and runs, so all three are needed."""
+    return f"{run_id}/{bucket}/{chunk}"
+
+
+def _chunk_keys(tbl):
+    """_chunk_key of every block row of ``tbl``, as one Arrow string
+    column (the key the scan task's masks are built over)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    return pc.binary_join_element_wise(
+        tbl.column("run_id"), pc.cast(tbl.column("bucket"), pa.string()),
+        pc.cast(tbl.column("chunk"), pa.string()), "/")
+
+
+def _component_rows(tbl, keys, col: str, component: str,
+                    with_payload: bool = False):
+    """(chunk key, row dict) for ``tbl``'s block rows of one (column,
+    component) — the rows a prune test reads, selected in Arrow."""
+    import pyarrow.compute as pc
+
+    mask = pc.and_(pc.equal(tbl.column("column"), col),
+                   pc.equal(tbl.column("component"), component))
+    fields = ["run_id", "bucket", "chunk", "column", "component", "meta"]
+    rows = tbl.filter(mask).select(
+        fields + (["payload"] if with_payload else [])).to_pylist()
+    return zip(keys.filter(mask).to_pylist(), rows)
+
+
+def _zone_hits(tbl, keys, nf: dict, encryption_key) -> set:
+    """Chunk keys whose values-meta zone overlaps the spec's bounds."""
+    from tokcodec.crypto import decrypt_block_meta
+
+    return {k for k, r in _component_rows(tbl, keys, nf["col"], "values")
+            if _meta_zone_hit(decrypt_block_meta(encryption_key, r), nf)}
+
+
+def _bloom_hits(tbl, keys, nf: dict, encryption_key) -> set:
+    """Chunk keys whose bloom may hold one of the spec's values; a
+    chunk with no bloom always survives."""
+    from tokcodec.bloom import bloom_might_contain, bloom_params
+    from tokcodec.crypto import decrypt_block_row, is_encrypted
+
+    vals = nf["value"] if isinstance(nf["value"], list) else [nf["value"]]
+    params = [bloom_params(v.encode("utf-8") if isinstance(v, str)
+                           else bytes(v)) for v in vals]
+    blooms: dict = {}
+    for k, r in _component_rows(tbl, keys, nf["col"], "bloom",
+                                with_payload=True):
+        if is_encrypted(r):
+            decrypt_block_row(encryption_key, r)
+        blooms[k] = any(bloom_might_contain(r["payload"], g1, g2)
+                        for g1, g2 in params)
+    return {k for k, _r in _component_rows(tbl, keys, nf["col"], "values")
+            if blooms.get(k, True)}
+
+
 def _prune_block_table(tbl, specs: list[dict],
                        encryption_key: bytes | None = None):
-    """The scan task's chunk pruning (tokcodec.scan._scan_bucket):
-    evaluate
-    each filter's surviving (run_id, chunk) set from ONE bucket's
-    block rows (zone bounds in the values metas; blooms for eq), then
-    keep only rows of the intersection. Mirrors _filter_survivors'
+    """The scan task's chunk pruning (tokcodec.scan._scan_slice):
+    evaluate each filter's surviving chunks from a slice's block rows
+    (zone bounds in the values metas; blooms for eq and contains),
+    then keep only the rows of chunks that survive every filter. A
+    chunk is keyed (run_id, bucket, chunk) (_chunk_key), so the rows
+    may span several buckets and runs. Mirrors _filter_survivors'
     DataFrame-side semantics: chunks with no stats survive; a run
     lacking the filter column entirely contributes nothing (NULL never
     matches a filter). Encrypted columns' stats/blooms are decrypted
-    per row before the test. All loops are bounded by
-    chunks-per-bucket."""
-    import numpy as np
+    per row before the test. Python loops run over the filter
+    columns' values and bloom rows only; the final mask is one Arrow
+    is_in over the chunk keys."""
     import pyarrow as pa
+    import pyarrow.compute as pc
 
-    from tokcodec.bloom import bloom_might_contain, bloom_params
-    from tokcodec.crypto import (
-        decrypt_block_meta,
-        decrypt_block_row,
-        is_encrypted,
-    )
-
-    runs = tbl.column("run_id").to_pylist()
-    chunks = tbl.column("chunk").to_pylist()
-    colnames = tbl.column("column").to_pylist()
-    comps = tbl.column("component").to_pylist()
-
-    def _row(i: int, with_payload: bool = False) -> dict:
-        r = {"run_id": runs[i], "bucket": tbl.column("bucket")[i].as_py(),
-             "chunk": chunks[i], "column": colnames[i],
-             "component": comps[i],
-             "meta": tbl.column("meta")[i].as_py()}
-        if with_payload:
-            r["payload"] = tbl.column("payload")[i].as_py()
-        return r
-
+    keys = _chunk_keys(tbl)
     allowed: set | None = None
     for nf in specs:
-        col = nf["col"]
-        surv: set = set()
         if nf["kind"] == "or":
             # disjunction: a chunk survives when ANY branch's zone
             # hits (branches are range specs, possibly on different
             # columns); the exact OR residual runs after decode
-            for sub in nf["subs"]:
-                scol = sub["col"]
-                for i, (c, cp) in enumerate(zip(colnames, comps)):
-                    if c != scol or cp != "values":
-                        continue
-                    meta = decrypt_block_meta(encryption_key, _row(i))
-                    if _meta_zone_hit(meta, sub):
-                        surv.add((runs[i], chunks[i]))
-            allowed = surv if allowed is None else (allowed & surv)
-            continue
-        if nf["kind"] in ("eq", "contains"):
-            vals = (nf["value"] if isinstance(nf["value"], list)
-                    else [nf["value"]])
-            params = [bloom_params(v.encode("utf-8")
-                                   if isinstance(v, str) else bytes(v))
-                      for v in vals]
-            blooms: dict = {}
-            for i, (c, cp) in enumerate(zip(colnames, comps)):
-                if c == col and cp == "bloom":
-                    r = _row(i, with_payload=True)
-                    if is_encrypted(r):
-                        decrypt_block_row(encryption_key, r)
-                    blooms[(runs[i], chunks[i])] = any(
-                        bloom_might_contain(r["payload"], g1, g2)
-                        for g1, g2 in params)
-            for i, (c, cp) in enumerate(zip(colnames, comps)):
-                if c == col and cp == "values":
-                    key = (runs[i], chunks[i])
-                    if blooms.get(key, True):  # no bloom -> survive
-                        surv.add(key)
+            surv = set().union(*(_zone_hits(tbl, keys, sub, encryption_key)
+                                 for sub in nf["subs"]))
+        elif nf["kind"] in ("eq", "contains"):
+            surv = _bloom_hits(tbl, keys, nf, encryption_key)
         else:
-            for i, (c, cp) in enumerate(zip(colnames, comps)):
-                if c != col or cp != "values":
-                    continue
-                meta = decrypt_block_meta(encryption_key, _row(i))
-                if _meta_zone_hit(meta, nf):
-                    surv.add((runs[i], chunks[i]))
+            surv = _zone_hits(tbl, keys, nf, encryption_key)
         allowed = surv if allowed is None else (allowed & surv)
     if allowed is None:
         return tbl
-    mask = np.array(
-        [(r, ck) in allowed for r, ck in zip(runs, chunks)], dtype=bool
-    )
-    return tbl.filter(pa.array(mask))
+    return tbl.filter(pc.is_in(
+        keys, value_set=pa.array(sorted(allowed), pa.string())))
 
 
 def read_encoded_as(
@@ -2585,8 +2595,8 @@ def explain_scan(
     Plans with the readers' snapshot planner, then evaluates the
     same normalized filters DataFrame-side (_filter_survivors) over
     block METADATA + bloom payloads only — the prune decision the
-    scan task's _prune_block_table makes per bucket (a parity test
-    pins the two). Returns::
+    scan task's _prune_block_table makes per slice of buckets (a
+    parity test pins the two). Returns::
 
         {chunks_total, chunks_scanned, rows_total, rows_scanned,
          bytes_total, bytes_scanned,         # enc_bytes of the decode

@@ -10,10 +10,13 @@ Spark/Hive bucketed joins and Iceberg's bucket-partition joins do —
 bucket by bucket, both sides' blocks decoded executor-side from the
 driver's explicit file plan, joined locally with Arrow's hash join —
 with NO shuffle at all. Tasks are fed bucket indexes by spark.range,
-one contiguous slice of buckets per core (scan_frame's feed); at
-10^12 rows the exchange a shuffled join would need (the whole table,
-twice) simply never happens, and task memory is bounded by bucket
-size (``n_buckets`` at write controls it).
+one contiguous slice of buckets per core (scan_frame's feed); each
+task runs the readers' slice scan (tokcodec.scan._scan_slice) once
+per side, so every block file is opened at most once, and joins the
+two sides' decoded buckets in step. At 10^12 rows the exchange a
+shuffled join would need (the whole table, twice) simply never
+happens, and decoded task memory is bounded by bucket size
+(``n_buckets`` at write controls it).
 
 The reference's Carpet has no join machinery at all — joins happen in
 whatever engine consumes the parquet (SURVEY §2.2 relational
@@ -44,7 +47,8 @@ from tokcodec.io_tables import (
 )
 from tokcodec.scan import (
     _bucket_feed,
-    _scan_bucket,
+    _scan_slice,
+    _slice_files,
     fill_anchor,
     plan_snapshot,
 )
@@ -62,9 +66,10 @@ def _plan_side(spark: SparkSession, path: str, on: list[str],
                columns: list[str] | None, encryption_key: bytes | None,
                as_of_epoch: int | None = None, as_of_ts=None,
                as_of_tag: str | None = None):
-    """Direct-scan plan for one join side: which buckets/files exist,
-    how to decode them, and which extra columns ride along (delete
-    keys). Returns a dict. Time travel (``as_of_*``) snapshots the
+    """Slice-scan plan for one join side: the accepted runs per
+    bucket, the file rows each task's _slice_files lists its slice's
+    files from, how to decode them, and which extra columns ride along
+    (delete keys). Returns a dict. Time travel (``as_of_*``) snapshots the
     side independently — join "training set as of epoch 7" against
     "labels as of tag v2" for reproducible pipelines; bucketing is
     immutable across epochs (appends keep the recorded salt), so
@@ -114,20 +119,6 @@ def _salt_of(manifest: dict, path: str) -> list[str]:
     return salt
 
 
-def _decode_bucket_arrow(bucket: int, accepted, decode, fr_b):
-    """Executor-side: decode one side's bucket with the readers' scan
-    task (tokcodec.scan._scan_bucket). Returns a pa.Table in the
-    side's decode schema, or None when the bucket decodes no rows on
-    this side."""
-    import pyarrow as pa
-
-    runs = accepted.get(bucket, ())
-    batches = list(_scan_bucket(
-        bucket, [fp for lo, hi, fp, _col, rid in fr_b
-                 if lo <= bucket <= hi and rid in runs], (), decode))
-    return pa.Table.from_batches(batches) if batches else None
-
-
 def join_encoded(
     spark: SparkSession,
     left_path: str,
@@ -151,6 +142,10 @@ def join_encoded(
       * the salt columns are a subset of the join keys ``on`` (then
         equal keys => equal bucket, so a per-bucket local join is the
         whole join), with identical Spark types on both sides
+
+    Each task scans its slice of buckets once per side
+    (tokcodec.scan._scan_slice: every block file opened at most once)
+    and joins bucket by bucket as the two scans yield them.
 
     ``how``: inner | left | left_semi | left_anti. Output columns =
     left side's (projected) columns, then the right side's non-key
@@ -250,15 +245,23 @@ def join_encoded(
         from pyspark.sql.types import StructType as _St
 
         r_spark_schema = _St.fromJson(_json.loads(r_schema_json))
-        buckets = bk_b.value
-        for batch in batches:
-            for bucket in (buckets[i] for i in batch.column(0).to_pylist()):
-                lt = _decode_bucket_arrow(bucket, lacc_b.value,
-                                          l_decode, lfr_b.value)
-                if lt is None or lt.num_rows == 0:
-                    continue
-                rt = _decode_bucket_arrow(bucket, racc_b.value,
-                                          r_decode, rfr_b.value)
+        all_b = bk_b.value
+        bks = sorted(all_b[i] for batch in batches
+                     for i in batch.column(0).to_pylist())
+        # one slice scan per side; both yield buckets in ascending
+        # order, so the right side advances in step with the left
+        lacc, racc = lacc_b.value, racc_b.value
+        rbks = [b for b in bks if b in racc]
+        right = _scan_slice(rbks, _slice_files(rfr_b.value, racc, rbks),
+                            (), r_decode)
+        try:
+            rnext = next(right, None)
+            for bucket, lt in _scan_slice(
+                    bks, _slice_files(lfr_b.value, lacc, bks), (), l_decode):
+                while rnext is not None and rnext[0] < bucket:
+                    rnext = next(right, None)
+                rt = rnext[1] if rnext is not None and rnext[0] == bucket \
+                    else None
                 if rt is None:
                     if how == "inner" or how == "left_semi":
                         continue
@@ -271,11 +274,9 @@ def join_encoded(
                 # hash-join on (keys, row index); payloads gathered by
                 # take afterwards (Acero can't carry nested payloads)
                 lk = lt.select(on).append_column(
-                    "__lidx", pa.array(np.arange(lt.num_rows),
-                                       pa.int64()))
+                    "__lidx", pa.array(np.arange(lt.num_rows), pa.int64()))
                 rk = rt.select(on).append_column(
-                    "__ridx", pa.array(np.arange(rt.num_rows),
-                                       pa.int64()))
+                    "__ridx", pa.array(np.arange(rt.num_rows), pa.int64()))
                 j = lk.join(rk, keys=on, join_type=acero_how)
                 if j.num_rows == 0:
                     continue
@@ -289,9 +290,10 @@ def join_encoded(
                     for name in r_payload:
                         cols.append(rtaken.column(name))
                 out = pa.table(
-                    dict(zip(l_names + ([] if semi else r_payload),
-                             cols)))
+                    dict(zip(l_names + ([] if semi else r_payload), cols)))
                 yield from out.to_batches()
+        finally:
+            right.close()  # its block files
 
     if how == "inner" or how == "left_semi":
         buckets = sorted(set(lp["accepted"]) & set(rp["accepted"]))

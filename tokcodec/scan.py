@@ -1,5 +1,5 @@
 """The read pipeline, written once: a Spark-free snapshot planner and
-the per-bucket scan task every reader runs.
+the slice scan task every reader runs.
 
     plan_snapshot  table manifest + lineage -> accepted {bucket:
                    [run_id]} -> run-manifest file rows -> read schema,
@@ -7,20 +7,27 @@ the per-bucket scan task every reader runs.
                    metadata IO: no Spark job, no JVM gateway, so the
                    same planner serves read_encoded on the driver and
                    the Python DataSource in its planner worker.
-    _scan_bucket   one bucket's block files -> optional chunk
-                   allow-list / sample -> chunk pruning
-                   (_prune_block_table) -> decode -> removal lists ->
-                   optional Arrow-side projection.
-    scan_frame     the Spark wrapper read_encoded and read_encoded_as
+    _scan_slice    one contiguous slice of buckets: each planned block
+                   file opened at most once -> the filter columns'
+                   files read first -> optional chunk allow-list /
+                   sample -> chunk pruning over the whole slice
+                   (_prune_block_table) -> the other columns' files
+                   read only for surviving buckets -> decode one
+                   bucket at a time -> removal lists -> optional
+                   Arrow-side projection.
+    scan_frame     the Spark wrapper read_encoded, read_encoded_as,
+                   sample_encoded and the aggregate boundary decode
                    build on: one mapInArrow task per slice of the
                    accepted buckets, fed by spark.range — no payload
                    shuffle, no Spark scan of block files.
 
-The DataSource's read() calls _scan_bucket directly; explain_scan,
+The DataSource's batch and stream readers (one partition per slice)
+and join_encoded call _scan_slice directly; explain_scan,
 count_encoded and the aggregate entry points start from
 plan_snapshot. Chunk pruning is decided from the same planned specs
-on every path (Global Range Encoding, EDBT 2018: elimination decided
-once, from one metadata structure).
+on every path, and from metadata before any other column's data is
+read (Global Range Encoding, EDBT 2018: elimination decided once,
+from one metadata structure, before touching data).
 """
 
 from __future__ import annotations
@@ -34,6 +41,7 @@ from tokcodec.io_tables import (
     LAYOUT_VERSION,
     _as_of_schema,
     _blocks_df,
+    _chunk_keys,
     _committed_pandas,
     _deletes_in_force,
     _direct_file_rows,
@@ -193,96 +201,271 @@ def fill_anchor(files: list[dict], wanted, filter_columns) -> str | None:
     return filter_columns[0] if filter_columns else METRICS_COLUMN
 
 
-def _sample_keep(run_id: str, bucket: int, chunk: int, frac: float,
-                 seed: int) -> bool:
+def _sample_keep(key: str, frac: float, seed: int) -> bool:
     """Chunk-granular Bernoulli draw: a process-stable hash of the
-    chunk's identity and the seed (never Python's salted hash()), so
-    the same (table, fraction, seed) keeps the same chunks in every
-    task and every session."""
+    chunk's identity (its _chunk_key) and the seed (never Python's
+    salted hash()), so the same (table, fraction, seed) keeps the same
+    chunks in every task and every session."""
     import hashlib
 
-    h = hashlib.blake2b(f"{run_id}/{bucket}/{chunk}/{seed}".encode(),
-                        digest_size=8).digest()
+    h = hashlib.blake2b(f"{key}/{seed}".encode(), digest_size=8).digest()
     return int.from_bytes(h, "little") % 1_000_000 < int(frac * 1_000_000)
 
 
-def _keep_chunks(tbl, bucket: int, chunks, sample):
-    """Rows of the (run_id, chunk)s in the allow-list ``chunks`` (None:
-    all) that also pass the ``sample`` draw (None: all)."""
-    import pyarrow as pa
-
-    keep: dict = {}
-    mask = []
-    for r, c in zip(tbl.column("run_id").to_pylist(),
-                    tbl.column("chunk").to_pylist()):
-        k = (r, c)
-        if k not in keep:
-            keep[k] = ((chunks is None or k in chunks)
-                       and (sample is None
-                            or _sample_keep(r, bucket, c, *sample)))
-        mask.append(keep[k])
-    return tbl.filter(pa.array(mask, pa.bool_()))
-
-
-def _scan_bucket(bucket: int, paths, specs, decode, chunks=None,
-                 sample=None, encryption_key: bytes | None = None,
-                 removals=(), project=None):
-    """THE scan task body, for one bucket: read its accepted block
-    files (the bucket filter prunes row groups of multi-bucket files),
-    keep only the allow-listed / sampled chunks, prune chunks by the
-    filter specs from the bucket's own metas and blooms, decode, drop
-    rows on the removal lists (``removals``: dicts with key_column,
-    file, uuid — the DataSource's executor-side deletes) and apply the
-    optional ``project`` (pa.Table -> pa.Table). Yields RecordBatches."""
+def _keep_chunks(tbl, chunks, sample):
+    """Rows of the chunks in the allow-list ``chunks`` (a set of
+    _chunk_keys; None: all) that also pass the ``sample`` draw (None:
+    all). The draw runs once per distinct chunk; the mask is one Arrow
+    is_in."""
     import pyarrow as pa
     import pyarrow.compute as pc
+
+    keys = _chunk_keys(tbl)
+    keep = pc.unique(keys).to_pylist()
+    if chunks is not None:
+        keep = [k for k in keep if k in chunks]
+    if sample is not None:
+        keep = [k for k in keep if _sample_keep(k, *sample)]
+    return tbl.filter(pc.is_in(keys, value_set=pa.array(keep, pa.string())))
+
+
+def _spec_columns(specs) -> set:
+    """The columns a list of prune specs reads (an ``or`` spec's
+    branches may name several)."""
+    return {s["col"] for nf in specs
+            for s in (nf["subs"] if nf["kind"] == "or" else [nf])}
+
+
+def _slice_files(rows, accepted, buckets) -> list[tuple[str, str, list]]:
+    """The block files one slice task reads: (path, column, buckets it
+    takes from the file) for every file of the plan's ``rows``
+    (_direct_file_rows) that overlaps the sorted ``buckets``. A bucket
+    is taken from a file only when the file's run is accepted for it
+    (a file holds exactly one run), so the losing side of a re-encoded
+    bucket is never read. One bisect per file range."""
+    import bisect
+
+    by_path: dict[str, tuple[str, list]] = {}
+    for lo, hi, fp, col, rid in rows:
+        for b in buckets[bisect.bisect_left(buckets, lo):
+                         bisect.bisect_right(buckets, hi)]:
+            if rid in accepted.get(b, ()):
+                by_path.setdefault(fp, (col, []))[1].append(b)
+    return [(fp, col, sorted(bs)) for fp, (col, bs) in by_path.items()]
+
+
+def _open_block_file(path: str):
+    """Open one block file (reads its footer): the scan task's only
+    parquet open of table data."""
     import pyarrow.parquet as pq
 
-    parts = []
-    for fp in paths:  # bounded: files per bucket
-        t = pq.read_table(fp, filters=[("bucket", "=", bucket)])
-        if t.num_rows:
-            parts.append(t)
-    if not parts:
-        return
-    tbl = pa.concat_tables(parts)
-    if chunks is not None or sample is not None:
-        tbl = _keep_chunks(tbl, bucket, chunks, sample)
-    if specs:
-        tbl = _prune_block_table(tbl, specs, encryption_key=encryption_key)
-    if tbl.num_rows == 0:
-        return
-    out = decode((bucket,), tbl)
+    return pq.ParquetFile(path)
+
+
+class _BlockFile:
+    """One planned block file of a slice task. It is opened on the
+    first take() and at most once; its row groups are read in bucket
+    order, only when a taken bucket lies in their footer's bucket
+    range, and split by bucket. Rows of buckets the slice does not
+    take from the file are dropped."""
+
+    def __init__(self, path: str, buckets: list[int]):
+        self.path = path
+        self.buckets = buckets
+        self.has = set(buckets)
+        self._pf = None
+        self._groups: list[tuple[int, int, int]] = []  # (lo, hi, index)
+        self._held: dict = {}  # bucket -> rows read, not yet taken
+
+    def _open(self):
+        import math
+
+        self._pf = _open_block_file(self.path)
+        md = self._pf.metadata
+        col = md.schema.to_arrow_schema().get_field_index("bucket")
+        for i in range(md.num_row_groups):
+            st = md.row_group(i).column(col).statistics
+            if st is not None and st.has_min_max:
+                self._groups.append((st.min, st.max, i))
+            else:
+                self._groups.append((-math.inf, math.inf, i))
+        self._groups.sort()
+
+    def take(self, bucket: int):
+        """This file's rows of ``bucket`` (None: none). Buckets are
+        taken in ascending order; rows held for a lower bucket that was
+        never taken are released."""
+        import numpy as np
+
+        if self._pf is None:
+            self._open()
+        self._held = {b: t for b, t in self._held.items() if b >= bucket}
+        while self._groups and self._groups[0][0] <= bucket:
+            lo, hi, i = self._groups.pop(0)
+            if hi < bucket:
+                continue  # only buckets this slice skipped
+            t = self._pf.read_row_group(i)
+            if lo == hi:  # lo == bucket
+                self._held[lo] = t
+                continue
+            # the writer stores rows in bucket order, so each bucket is
+            # one zero-copy slice
+            bs = t.column("bucket").to_numpy()
+            if (np.diff(bs) < 0).any():
+                order = np.argsort(bs, kind="stable")
+                t, bs = t.take(order), bs[order]
+            want = [b for b in self.buckets if bucket <= b <= hi]
+            starts = np.searchsorted(bs, want, "left")
+            ends = np.searchsorted(bs, want, "right")
+            for b, a, z in zip(want, starts, ends):
+                if z > a:
+                    self._held[b] = t.slice(a, z - a)
+        return self._held.pop(bucket, None)
+
+    def close(self):
+        if self._pf is not None:
+            self._pf.close()
+
+
+def _removal_sets(removals) -> list:
+    """(key column, keys) per removal list, each list read once. UUID
+    keys are stored as 16-byte binary, so their canonical text is
+    hex-decoded (vectorized) before matching."""
+    import pyarrow.parquet as pq
+
+    out = []
     for d in removals:
         kcol = pq.read_table(d["file"], columns=[d["key_column"]]) \
-            .column(d["key_column"])
-        if d["uuid"]:  # stored as 16-byte binary
-            kcol = pa.array([bytes.fromhex(s.replace("-", ""))
-                             for s in kcol.to_pylist()], pa.binary())
-        out = out.filter(pc.invert(pc.is_in(out.column(d["key_column"]),
-                                            value_set=kcol)))
-    if project is not None:
-        out = project(out)
-    yield from out.to_batches()
+            .column(d["key_column"]).combine_chunks()
+        out.append((d["key_column"],
+                    _uuid_bytes(kcol) if d["uuid"] else kcol))
+    return out
+
+
+def _uuid_bytes(text):
+    """Canonical UUID strings (dashes optional, either hex case) ->
+    16-byte binary values; nulls are dropped. A malformed value
+    raises."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    hexed = pc.replace_substring(text.drop_null(), "-", "").cast(pa.string())
+    n = len(hexed)
+    if n and not pc.all(pc.equal(pc.binary_length(hexed), 32)).as_py():
+        raise ValueError("removal list holds a value that is not a UUID")
+    offs = np.frombuffer(hexed.buffers()[1], np.int32,
+                         count=n + 1, offset=4 * hexed.offset)
+    chars = np.frombuffer(hexed.buffers()[2], np.uint8)[offs[0]:offs[-1]] \
+        if n else np.zeros(0, np.uint8)
+    lut = np.full(256, 255, np.uint8)  # hex digit -> nibble
+    lut[np.frombuffer(b"0123456789abcdef", np.uint8)] = np.arange(16)
+    lut[np.frombuffer(b"ABCDEF", np.uint8)] = np.arange(10, 16)
+    nib = lut[chars]
+    if (nib > 15).any():
+        raise ValueError("removal list holds a value that is not a UUID")
+    raw = (nib[0::2] << 4) | nib[1::2]
+    return pa.Array.from_buffers(
+        pa.binary(), n,
+        [None, pa.py_buffer(np.arange(0, 16 * n + 1, 16, dtype=np.int32)),
+         pa.py_buffer(raw.astype(np.uint8))])
+
+
+def _scan_slice(buckets, files, specs, decode, chunks=None, sample=None,
+                encryption_key: bytes | None = None, removals=(),
+                project=None):
+    """THE scan task body, for one slice of buckets (sorted): yields
+    (bucket, decoded pa.Table) for each bucket with rows, in order.
+
+    ``files``: the slice's planned block files (_slice_files); each is
+    opened at most once. The filter columns' files (``specs``) are
+    read first, restricted to the allow-listed / sampled chunks
+    (``chunks``: a set of _chunk_keys; ``sample``: (fraction, seed)),
+    and pruned in one pass (_prune_block_table). The other columns'
+    files are then opened only if some chunk survives, and read only
+    for the surviving buckets. Decode runs one bucket at a time (its
+    evolution fill and ``__bucket`` column are per bucket), then drops
+    rows on the removal lists (``removals``: dicts with key_column,
+    file, uuid; each list is read once per task) and applies the
+    optional ``project`` (pa.Table -> pa.Table)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    fcols = _spec_columns(specs)
+    opened: list[_BlockFile] = []  # closed on exit
+    pruned: dict = {}  # bucket -> surviving filter-column rows
+    surviving = None  # pa.Array of surviving chunk keys
+    drops = None
+    try:
+        if specs:
+            opened = [_BlockFile(fp, bs) for fp, col, bs in files
+                      if col in fcols]
+            parts = [t for f in opened for b in f.buckets
+                     if (t := f.take(b)) is not None]
+            if not parts:
+                return  # no filter-column rows: no chunk can match
+            tbl = pa.concat_tables(parts)
+            if chunks is not None or sample is not None:
+                tbl = _keep_chunks(tbl, chunks, sample)
+            tbl = _prune_block_table(tbl, specs,
+                                     encryption_key=encryption_key)
+            if tbl.num_rows == 0:
+                return  # no other column's file is ever opened
+            surviving = pc.unique(_chunk_keys(tbl))
+            bcol = tbl.column("bucket")
+            for b in pc.unique(bcol).to_pylist():
+                pruned[b] = tbl.filter(pc.equal(bcol, b))
+        # the other columns' files, read for surviving buckets only
+        rest = [_BlockFile(fp, [b for b in bs if not specs or b in pruned])
+                for fp, col, bs in files if col not in fcols]
+        opened += rest
+        for b in buckets:
+            if specs and b not in pruned:
+                continue
+            parts = [pruned.pop(b)] if specs else []
+            for f in rest:
+                if b not in f.has or (t := f.take(b)) is None:
+                    continue
+                if surviving is not None:
+                    t = t.filter(pc.is_in(_chunk_keys(t),
+                                          value_set=surviving))
+                elif chunks is not None or sample is not None:
+                    t = _keep_chunks(t, chunks, sample)
+                parts.append(t)
+            tbl = pa.concat_tables(parts) if parts else None
+            if tbl is None or tbl.num_rows == 0:
+                continue
+            out = decode((b,), tbl)
+            if removals and drops is None:
+                drops = _removal_sets(removals)
+            for kc, keys in drops or ():
+                out = out.filter(pc.invert(pc.is_in(out.column(kc),
+                                                    value_set=keys)))
+            if project is not None:
+                out = project(out)
+            yield b, out
+    finally:
+        for f in opened:
+            f.close()
 
 
 def scan_frame(spark, snap: Snapshot, decode, out_schema, scan_cols,
                chunks=None, sample=None,
                encryption_key: bytes | None = None, project=None):
-    """DataFrame of _scan_bucket over every accepted bucket of ``snap``.
+    """DataFrame of _scan_slice over every accepted bucket of ``snap``.
 
     The task input is spark.range over bucket indexes, sliced into
     one contiguous range per core (_bucket_feed; the same slices the
-    write path gives its encode tasks): no rows are shuffled and no
-    block file enters a Spark scan. The plan travels as one broadcast
-    — the sorted bucket list, the accepted runs and one (lo, hi, path,
-    column, run_id) row per file bucket-range (O(file ranges), never
-    O(buckets x files)); each task expands only its own buckets' file
-    lists with one bisect pass. A file holds exactly one run, so run
-    accept/reject is decided per (file, bucket) from the plan and the
-    losing side of a re-encoded bucket is never opened. ``chunks``:
-    optional {bucket: {(run_id, chunk)}} allow-list; chunks are pruned
-    by the snapshot's filter specs."""
+    write path gives its encode tasks, so a task's files hold just
+    its own buckets): no rows are shuffled and no block file enters a
+    Spark scan. The plan travels as one broadcast — the sorted bucket
+    list, the accepted runs and one (lo, hi, path, column, run_id) row
+    per file bucket-range (O(file ranges), never O(buckets x files));
+    each task lists its slice's files with one bisect pass
+    (_slice_files) and runs one _scan_slice over them, so each file is
+    opened at most once per read. ``chunks``: optional allow-list, a
+    set of _chunk_keys; chunks are pruned by the snapshot's filter
+    specs."""
     blocks_p = _paths(snap.path)[0]
     buckets = sorted(snap.accepted)
     plan = spark.sparkContext.broadcast((
@@ -291,23 +474,14 @@ def scan_frame(spark, snap: Snapshot, decode, out_schema, scan_cols,
     specs = snap.specs
 
     def fn(batches):
-        import bisect
-
         all_b, accepted, rows, allow = plan.value
-        for batch in batches:
-            bks = sorted(all_b[i] for i in batch.column(0).to_pylist())
-            local: dict[int, list[str]] = {}
-            for lo, hi, fp, _col, rid in rows:
-                for b in bks[bisect.bisect_left(bks, lo):
-                             bisect.bisect_right(bks, hi)]:
-                    if rid in accepted[b]:
-                        local.setdefault(b, []).append(fp)
-            for b in bks:
-                yield from _scan_bucket(
-                    b, local.get(b, ()), specs, decode,
-                    chunks=None if allow is None else allow.get(b, set()),
-                    sample=sample, encryption_key=encryption_key,
-                    project=project)
+        bks = sorted(all_b[i] for batch in batches
+                     for i in batch.column(0).to_pylist())
+        for _b, out in _scan_slice(
+                bks, _slice_files(rows, accepted, bks), specs, decode,
+                chunks=allow, sample=sample,
+                encryption_key=encryption_key, project=project):
+            yield from out.to_batches()
 
     return _bucket_feed(spark, len(buckets)).mapInArrow(fn, out_schema)
 
