@@ -23,6 +23,10 @@ from tokcodec.io_tables import (
     write_encoded,
 )
 
+# every test also runs as "<test>[tasks]" with the scan's task
+# placement forced (tests/conftest.py)
+pytestmark = pytest.mark.both_placements
+
 SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
     T.StructField("tokens", T.ArrayType(T.IntegerType(), False), False),

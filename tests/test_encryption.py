@@ -21,6 +21,10 @@ from tokcodec.io_tables import (
     write_encoded,
 )
 
+# every test also runs as "<test>[tasks]" with the scan's task
+# placement forced (tests/conftest.py)
+pytestmark = pytest.mark.both_placements
+
 KEY = bytes(range(32))
 SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),

@@ -6,6 +6,7 @@ decode reads only requested columns."""
 import os
 import shutil
 
+import pytest
 from pyspark.sql import Row, functions as F
 from pyspark.sql import types as T
 
@@ -21,9 +22,10 @@ def _optimized(df) -> str:
 
 
 def _assert_single_path(df) -> None:
-    """The one read path: a mapInArrow scan task per slice of buckets
-    — no grouped decode, no payload shuffle, no sort-merge join, and
-    no Spark scan of block files."""
+    """The one read path's task placement (forced by the
+    task_placement marker at these sizes): a mapInArrow scan task per
+    slice of buckets — no grouped decode, no payload shuffle, no
+    sort-merge join, and no Spark scan of block files."""
     plan = _plan(df)
     assert "MapInArrow" in plan, plan
     assert "FlatMapGroupsInArrow" not in plan, plan
@@ -53,6 +55,7 @@ def test_small_dim_join_broadcasts(spark):
     assert "SortMergeJoin" not in plan
 
 
+@pytest.mark.task_placement
 def test_decode_projection_prunes_block_partitions(spark, tmp_path):
     import glob
 
@@ -97,6 +100,7 @@ def test_decode_projection_prunes_block_partitions(spark, tmp_path):
     _assert_single_path(bproj)
 
 
+@pytest.mark.task_placement
 def test_zone_filter_prunes_before_decode(spark, tmp_path):
     from tokcodec.io_tables import read_encoded, write_encoded
 
@@ -120,6 +124,7 @@ def test_zone_filter_prunes_before_decode(spark, tmp_path):
         _assert_single_path(narrow)
 
 
+@pytest.mark.task_placement
 def test_zorder_multirange_plan_broadcasts(spark, tmp_path):
     """Multi-range conjunction over a Z-ordered table: every conjunct
     prunes inside the scan task, so no surviving-chunk join exists
@@ -143,6 +148,7 @@ def test_zorder_multirange_plan_broadcasts(spark, tmp_path):
         assert q.count() == 8 * 8
 
 
+@pytest.mark.task_placement
 def test_read_entry_points_single_path(spark, tmp_path, monkeypatch):
     """Every read entry point plans the one scan task: read_encoded
     plain / with buckets= / with the bucket column / with range and eq
@@ -211,6 +217,56 @@ def test_read_entry_points_single_path(spark, tmp_path, monkeypatch):
     assert len(seen) == 2  # the key locate read + the touched buckets
     for _kw, q in seen:
         _assert_single_path(q)
+
+
+def test_small_reads_skip_the_python_task_wave(spark, tmp_path,
+                                              monkeypatch):
+    """Below the driver cap (tokcodec.scan._DRIVER_SCAN_MAX_BYTES) a
+    bloom lookup and a token probe are scanned on the driver: their
+    executed plans hold no MapInArrow and no other Python node. Over
+    the cap a read keeps its mapInArrow task; when the filter
+    column's files alone are over the cap the driver opens no block
+    file, and when only the survivors are, it opens filter-column
+    files only."""
+    from tokcodec import scan
+    from tokcodec.io_tables import _run_files, read_encoded, write_encoded
+
+    df = spark.createDataFrame(
+        [Row(doc_id=f"d{i:04d}", tokens=[i, i + 1], text="x" * 300)
+         for i in range(800)], "doc_id string, tokens array<int>, text string")
+    path = os.path.join(str(tmp_path), "small")
+    write_encoded(df, path, n_buckets=4, run_id="r", chunk_max_rows=100,
+                  bloom_columns=["doc_id", "tokens"])
+    python = ("MapInArrow", "MapInPandas", "ArrowEvalPython",
+              "BatchEvalPython", "FlatMapGroupsIn", "PythonUDF")
+    look = read_encoded(spark, path, eq_filter=("doc_id", "d0042"))
+    probe = read_encoded(spark, path, columns=["doc_id"],
+                         contains_filter=("tokens", 77))
+    miss = read_encoded(spark, path, eq_filter=("doc_id", "absent"))
+    for q in (look, probe, miss):
+        plan = _plan(q)
+        assert "LocalTableScan" in plan, plan
+        assert not any(n in plan for n in python), plan
+    assert (look.count(), probe.count(), miss.count()) == (1, 2, 0)
+
+    opened: list = []
+    real_open = scan._open_block_file
+    monkeypatch.setattr(scan, "_open_block_file",
+                        lambda p: opened.append(p) or real_open(p))
+    doc_bytes = sum(f["bytes"] for f in _run_files(path, ["r"])
+                    if f["column"] == "doc_id")
+    # the filter column's files are over the cap: straight to the tasks
+    monkeypatch.setattr(scan, "_DRIVER_SCAN_MAX_BYTES", doc_bytes - 1)
+    for q in (read_encoded(spark, path, eq_filter=("doc_id", "d0042")),
+              read_encoded(spark, path)):
+        assert "MapInArrow" in _plan(q)
+    assert opened == []
+    # they fit, but the surviving bucket's ~60 KB of text does not
+    monkeypatch.setattr(scan, "_DRIVER_SCAN_MAX_BYTES", doc_bytes)
+    q = read_encoded(spark, path, eq_filter=("doc_id", "d0042"))
+    assert "MapInArrow" in _plan(q)
+    assert opened and all("/col-doc_id/" in p for p in opened), opened
+    assert q.count() == 1
 
 
 def test_media_decode_plan_no_extra_shuffle(spark):

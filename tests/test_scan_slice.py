@@ -194,6 +194,7 @@ def test_slicing_invariance(tables, case):
             == 1000
 
 
+@pytest.mark.both_placements
 def test_sample_encoded_matches_slice_sample(spark, tables):
     plan = _plan(tables["plain"])
     n = sum(len(rows) for bks in _slices(plan[0])

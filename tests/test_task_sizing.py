@@ -9,6 +9,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import Row, functions as F
 
 from tokcodec.encode import METRICS_COLUMN, encode_table
@@ -50,6 +51,7 @@ def test_write_places_equal_contiguous_bucket_slices(spark, tmp_path):
         assert covered == list(range(16))
 
 
+@pytest.mark.task_placement  # the scan's tasks, not its driver placement
 def test_scan_and_join_run_one_task_per_core(spark, tmp_path):
     cores = spark.sparkContext.defaultParallelism
     for n_buckets in (16, 3):

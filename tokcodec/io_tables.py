@@ -160,22 +160,27 @@ def _task_slots(spark: SparkSession, n_units: int) -> int:
     stage that runs Python over buckets (write encode, scan, join). A
     Python task costs a fixed ~200 ms on top of its work (measured on
     a 4-core host: a no-op mapInArrow of 1, 2 or 4 tasks takes
-    ~280 ms, of 8 tasks ~540 ms), so one wave of tasks beats two waves
-    of half-size tasks; balance comes from giving each task an equal,
-    contiguous slice of buckets, not from spare tasks."""
+    ~280 ms, of 8 tasks ~540 ms; later, on another 4-core host, a
+    no-op wave of 4 tasks took 326-394 ms), so one wave of tasks beats
+    two waves of half-size tasks; balance comes from giving each task
+    an equal, contiguous slice of buckets, not from spare tasks. A
+    read small enough skips the wave altogether: scan_frame runs the
+    same slices on the driver (tokcodec.scan._DRIVER_SCAN_MAX_BYTES)."""
     return max(1, min(n_units, spark.sparkContext.defaultParallelism))
 
 
-def _fan_out(fn, items) -> list:
+def _fan_out(fn, items, min_items: int = _META_IO_FANOUT_MIN) -> list:
     """[fn(x) for x in items], on the metadata thread pool when there
-    are at least _META_IO_FANOUT_MIN items (order preserved; the first
-    exception propagates)."""
+    are at least ``min_items`` items (order preserved; the first
+    exception propagates). The driver placement of a scan passes 2:
+    its items are whole bucket slices, at most one per core."""
     items = list(items)
-    if len(items) < _META_IO_FANOUT_MIN:
+    if len(items) < min_items:
         return [fn(x) for x in items]
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=_META_IO_THREADS) as ex:
+    with ThreadPoolExecutor(
+            max_workers=min(len(items), _META_IO_THREADS)) as ex:
         return list(ex.map(fn, items))
 
 
@@ -1344,13 +1349,22 @@ def read_encoded(
     path: the snapshot planner (tokcodec.scan.plan_snapshot) picks
     each bucket's winning runs and their block files from metadata
     alone — lineage -> run manifests -> explicit paths, no listing, no
-    Spark job — and one shuffle-free task per slice of buckets runs
-    tokcodec.scan._scan_slice: it opens each of the slice's files at
-    most once with pyarrow, reads the filter columns' files first and
-    prunes chunks from their metas and blooms, opens the other
-    columns' files only for buckets where a chunk survives, and
-    decodes one bucket at a time. No payload byte is shuffled and no
-    block file enters a Spark scan.
+    Spark job — and tokcodec.scan._scan_slice scans each slice of
+    buckets: it opens each of the slice's files at most once with
+    pyarrow, reads the filter columns' files first and prunes chunks
+    from their metas and blooms, opens the other columns' files only
+    for buckets where a chunk survives, and decodes one bucket at a
+    time. No payload byte is shuffled and no block file enters a
+    Spark scan.
+
+    Where the slices run is one rule (tokcodec.scan.scan_frame): when
+    the read's decoded size is bounded at or under
+    tokcodec.scan._DRIVER_SCAN_MAX_BYTES (from lineage ``orig_bytes``,
+    after a driver-side prune for a filtered read), the driver scans
+    them while this call builds the frame, which is then a local
+    relation with no Python task — a small lookup costs no task wave.
+    Above the cap the decode runs lazily, in one shuffle-free
+    mapInArrow task per slice of buckets.
 
     ``columns`` is projection pushdown — only those columns' block
     FILES are opened (reference P3). A filter or delete-key column

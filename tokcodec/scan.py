@@ -1,5 +1,5 @@
 """The read pipeline, written once: a Spark-free snapshot planner and
-the slice scan task every reader runs.
+the slice scan every reader runs, in two placements.
 
     plan_snapshot  table manifest + lineage -> accepted {bucket:
                    [run_id]} -> run-manifest file rows -> read schema,
@@ -7,19 +7,26 @@ the slice scan task every reader runs.
                    metadata IO: no Spark job, no JVM gateway, so the
                    same planner serves read_encoded on the driver and
                    the Python DataSource in its planner worker.
-    _scan_slice    one contiguous slice of buckets: each planned block
-                   file opened at most once -> the filter columns'
-                   files read first -> optional chunk allow-list /
-                   sample -> chunk pruning over the whole slice
-                   (_prune_block_table) -> the other columns' files
-                   read only for surviving buckets -> decode one
-                   bucket at a time -> removal lists -> optional
-                   Arrow-side projection.
+    _scan_slice    one contiguous slice of buckets, each planned block
+                   file opened at most once, in two phases:
+                   _prune_slice (the filter columns' files read first
+                   -> optional chunk allow-list / sample -> chunk
+                   pruning over the whole slice, _prune_block_table)
+                   and _decode_slice (the other columns' files read
+                   only for surviving buckets -> decode one bucket at
+                   a time -> removal lists -> optional Arrow-side
+                   projection).
     scan_frame     the Spark wrapper read_encoded, read_encoded_as,
                    sample_encoded and the aggregate boundary decode
-                   build on: one mapInArrow task per slice of the
-                   accepted buckets, fed by spark.range — no payload
-                   shuffle, no Spark scan of block files.
+                   build on. One rule places the scan: a read whose
+                   decoded size is bounded at or under
+                   _DRIVER_SCAN_MAX_BYTES runs its slices on the
+                   driver (_driver_scan) and becomes
+                   spark.createDataFrame(table) — no Python task; any
+                   other read runs one mapInArrow task per slice of
+                   the accepted buckets, fed by spark.range. Neither
+                   shuffles a payload or puts a block file in a Spark
+                   scan.
 
 The DataSource's batch and stream readers (one partition per slice)
 and join_encoded call _scan_slice directly; explain_scan,
@@ -27,11 +34,14 @@ count_encoded and the aggregate entry points start from
 plan_snapshot. Chunk pruning is decided from the same planned specs
 on every path, and from metadata before any other column's data is
 read (Global Range Encoding, EDBT 2018: elimination decided once,
-from one metadata structure, before touching data).
+from one metadata structure, before touching data); on the driver
+placement the same pruning result also decides where the decode
+runs.
 """
 
 from __future__ import annotations
 
+import posixpath
 from dataclasses import dataclass, field
 
 from pyspark.sql import types as T
@@ -46,6 +56,7 @@ from tokcodec.io_tables import (
     _deletes_in_force,
     _direct_file_rows,
     _evolution_fill_columns,
+    _fan_out,
     _lineage_local,
     _normalize_filter,
     _paths,
@@ -55,6 +66,16 @@ from tokcodec.io_tables import (
     _task_slots,
 )
 from tokcodec.schema import manifest_schema
+
+# scan_frame's placement rule: a read whose decoded size is bounded at
+# or under this many bytes is scanned on the driver (_driver_scan)
+# instead of by a wave of Python tasks, which costs a fixed
+# ~330-450 ms on a 4-core host. Full scans of 16-bucket synth tables
+# there (4 slices, one driver thread each) crossed between 16 MB
+# decoded (driver 425 ms, tasks 535 ms) and 28 MB (524 vs 491 ms);
+# the cap sits below that, and it also bounds the driver's memory
+# for one scan.
+_DRIVER_SCAN_MAX_BYTES = 16 << 20
 
 
 @dataclass
@@ -371,64 +392,70 @@ def _uuid_bytes(text):
          pa.py_buffer(raw.astype(np.uint8))])
 
 
-def _scan_slice(buckets, files, specs, decode, chunks=None, sample=None,
-                encryption_key: bytes | None = None, removals=(),
-                project=None):
-    """THE scan task body, for one slice of buckets (sorted): yields
-    (bucket, decoded pa.Table) for each bucket with rows, in order.
+def _prune_slice(buckets, files, specs, chunks=None, sample=None,
+                 encryption_key: bytes | None = None):
+    """Prune phase of the slice scan: {bucket: surviving filter-column
+    block rows} for a filtered slice (empty: no chunk survives), None
+    for an unfiltered one (``specs`` empty). The filter columns'
+    files (``specs``) are opened once each, read for the slice's
+    buckets, restricted to the allow-listed / sampled chunks
+    (``chunks``: a set of _chunk_keys; ``sample``: (fraction, seed))
+    and pruned in one pass (_prune_block_table); they are closed
+    before this returns."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    ``files``: the slice's planned block files (_slice_files); each is
-    opened at most once. The filter columns' files (``specs``) are
-    read first, restricted to the allow-listed / sampled chunks
-    (``chunks``: a set of _chunk_keys; ``sample``: (fraction, seed)),
-    and pruned in one pass (_prune_block_table). The other columns'
-    files are then opened only if some chunk survives, and read only
-    for the surviving buckets. Decode runs one bucket at a time (its
-    evolution fill and ``__bucket`` column are per bucket), then drops
-    rows on the removal lists (``removals``: dicts with key_column,
-    file, uuid; each list is read once per task) and applies the
-    optional ``project`` (pa.Table -> pa.Table)."""
+    if not specs:
+        return None
+    fcols = _spec_columns(specs)
+    opened = [_BlockFile(fp, bs) for fp, col, bs in files if col in fcols]
+    try:
+        parts = [t for f in opened for b in f.buckets
+                 if (t := f.take(b)) is not None]
+    finally:
+        for f in opened:
+            f.close()
+    if not parts:
+        return {}  # no filter-column rows: no chunk can match
+    tbl = pa.concat_tables(parts)
+    if chunks is not None or sample is not None:
+        tbl = _keep_chunks(tbl, chunks, sample)
+    tbl = _prune_block_table(tbl, specs, encryption_key=encryption_key)
+    bcol = tbl.column("bucket")
+    return {b: tbl.filter(pc.equal(bcol, b))
+            for b in pc.unique(bcol).to_pylist()}
+
+
+def _decode_slice(buckets, files, specs, pruned, decode, chunks=None,
+                  sample=None, removals=(), project=None):
+    """Decode phase of the slice scan, over the prune phase's result
+    ``pruned`` (_prune_slice; consumed): yields (bucket, decoded
+    pa.Table) for each bucket with rows, in order. The other columns'
+    files are opened only if some chunk survives, and read only for
+    the surviving buckets (of a filtered slice) and chunks. Decode
+    runs one bucket at a time (its evolution fill and ``__bucket``
+    column are per bucket), then drops rows on the removal lists
+    (``removals``: dicts with key_column, file, uuid; each list is
+    read once per slice) and applies the optional ``project``
+    (pa.Table -> pa.Table)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     fcols = _spec_columns(specs)
-    opened: list[_BlockFile] = []  # closed on exit
-    pruned: dict = {}  # bucket -> surviving filter-column rows
-    surviving = None  # pa.Array of surviving chunk keys
+    rest = [_BlockFile(fp, [b for b in bs if pruned is None or b in pruned])
+            for fp, col, bs in files if col not in fcols]
     drops = None
     try:
-        if specs:
-            opened = [_BlockFile(fp, bs) for fp, col, bs in files
-                      if col in fcols]
-            parts = [t for f in opened for b in f.buckets
-                     if (t := f.take(b)) is not None]
-            if not parts:
-                return  # no filter-column rows: no chunk can match
-            tbl = pa.concat_tables(parts)
-            if chunks is not None or sample is not None:
-                tbl = _keep_chunks(tbl, chunks, sample)
-            tbl = _prune_block_table(tbl, specs,
-                                     encryption_key=encryption_key)
-            if tbl.num_rows == 0:
-                return  # no other column's file is ever opened
-            surviving = pc.unique(_chunk_keys(tbl))
-            bcol = tbl.column("bucket")
-            for b in pc.unique(bcol).to_pylist():
-                pruned[b] = tbl.filter(pc.equal(bcol, b))
-        # the other columns' files, read for surviving buckets only
-        rest = [_BlockFile(fp, [b for b in bs if not specs or b in pruned])
-                for fp, col, bs in files if col not in fcols]
-        opened += rest
         for b in buckets:
-            if specs and b not in pruned:
+            if pruned is not None and b not in pruned:
                 continue
-            parts = [pruned.pop(b)] if specs else []
+            parts = [pruned.pop(b)] if pruned is not None else []
+            alive = pc.unique(_chunk_keys(parts[0])) if parts else None
             for f in rest:
                 if b not in f.has or (t := f.take(b)) is None:
                     continue
-                if surviving is not None:
-                    t = t.filter(pc.is_in(_chunk_keys(t),
-                                          value_set=surviving))
+                if alive is not None:
+                    t = t.filter(pc.is_in(_chunk_keys(t), value_set=alive))
                 elif chunks is not None or sample is not None:
                     t = _keep_chunks(t, chunks, sample)
                 parts.append(t)
@@ -445,14 +472,40 @@ def _scan_slice(buckets, files, specs, decode, chunks=None, sample=None,
                 out = project(out)
             yield b, out
     finally:
-        for f in opened:
+        for f in rest:
             f.close()
+
+
+def _scan_slice(buckets, files, specs, decode, chunks=None, sample=None,
+                encryption_key: bytes | None = None, removals=(),
+                project=None):
+    """THE scan task body, for one slice of buckets (sorted): yields
+    (bucket, decoded pa.Table) for each bucket with rows, in order.
+    ``files``: the slice's planned block files (_slice_files); each is
+    opened at most once. The prune phase (_prune_slice) reads the
+    filter columns' files first and prunes the slice's chunks in one
+    pass; the decode phase (_decode_slice) reads the other columns'
+    files for the survivors only and decodes them. scan_frame's
+    driver placement runs the two phases separately, so that it can
+    bound a read's decoded size between them."""
+    pruned = _prune_slice(buckets, files, specs, chunks=chunks,
+                          sample=sample, encryption_key=encryption_key)
+    yield from _decode_slice(buckets, files, specs, pruned, decode,
+                             chunks=chunks, sample=sample,
+                             removals=removals, project=project)
 
 
 def scan_frame(spark, snap: Snapshot, decode, out_schema, scan_cols,
                chunks=None, sample=None,
                encryption_key: bytes | None = None, project=None):
-    """DataFrame of _scan_slice over every accepted bucket of ``snap``.
+    """DataFrame of _scan_slice over every accepted bucket of ``snap``,
+    in one of two placements decided by one rule (_driver_scan): a
+    read whose decoded size is bounded at or under
+    _DRIVER_SCAN_MAX_BYTES runs its slices on the driver, now, and
+    comes back as spark.createDataFrame(table) — no Python task, no
+    MapInArrow; any other read, and any read of a type that cannot
+    cross createDataFrame (_crosses_arrow), runs one mapInArrow task
+    per slice, decoded when the frame is evaluated.
 
     The task input is spark.range over bucket indexes, sliced into
     one contiguous range per core (_bucket_feed; the same slices the
@@ -466,12 +519,24 @@ def scan_frame(spark, snap: Snapshot, decode, out_schema, scan_cols,
     opened at most once per read. ``chunks``: optional allow-list, a
     set of _chunk_keys; chunks are pruned by the snapshot's filter
     specs."""
-    blocks_p = _paths(snap.path)[0]
     buckets = sorted(snap.accepted)
-    plan = spark.sparkContext.broadcast((
-        buckets, snap.accepted,
-        _direct_file_rows(snap.files, scan_cols, blocks_p), chunks))
+    rows = _direct_file_rows(snap.files, scan_cols, _paths(snap.path)[0])
     specs = snap.specs
+    local = _driver_scan(snap, rows, _slices(buckets, _task_slots(
+        spark, len(buckets))), specs, decode, chunks=chunks, sample=sample,
+        encryption_key=encryption_key, project=project) \
+        if _crosses_arrow(out_schema) else None
+    if local is not None:
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        # an empty read too stays a local relation (a list would make
+        # an RDD scan)
+        return spark.createDataFrame(
+            pa.concat_tables(local) if local
+            else to_arrow_schema(out_schema).empty_table(), out_schema)
+    plan = spark.sparkContext.broadcast((buckets, snap.accepted, rows,
+                                         chunks))
 
     def fn(batches):
         all_b, accepted, rows, allow = plan.value
@@ -484,6 +549,99 @@ def scan_frame(spark, snap: Snapshot, decode, out_schema, scan_cols,
             yield from out.to_batches()
 
     return _bucket_feed(spark, len(buckets)).mapInArrow(fn, out_schema)
+
+
+def _crosses_arrow(schema: T.StructType) -> bool:
+    """Can every row of ``schema`` go through
+    spark.createDataFrame(arrow)? Not when a column holds a struct
+    with a non-nullable field, or a variant, geometry or geography
+    (whose Arrow form is such a struct, tokcodec.schema), at any
+    depth: createDataFrame casts the decoded table to the schema's
+    Arrow form, and that cast rejects a non-nullable struct field that
+    the decoded struct declares nullable, or that holds nulls under a
+    null parent. A read of such a column keeps the task placement."""
+
+    def ok(dt) -> bool:
+        if isinstance(dt, (T.VariantType, T.GeometryType,
+                           T.GeographyType)):
+            return False
+        if isinstance(dt, T.StructType):
+            return all(f.nullable and ok(f.dataType) for f in dt.fields)
+        if isinstance(dt, T.ArrayType):
+            return ok(dt.elementType)
+        if isinstance(dt, T.MapType):
+            return ok(dt.keyType) and ok(dt.valueType)
+        return True
+
+    return all(ok(f.dataType) for f in schema.fields)
+
+
+def _slices(buckets: list, n: int) -> list[list]:
+    """``buckets`` cut into ``n`` contiguous slices, exactly as
+    spark.range(0, len(buckets), numPartitions=n) cuts its indexes
+    (_bucket_feed): slice i takes [i*len//n, (i+1)*len//n)."""
+    m = len(buckets)
+    return [buckets[i * m // n:(i + 1) * m // n] for i in range(n)]
+
+
+def _driver_scan(snap: Snapshot, rows, slices, specs, decode, chunks=None,
+                 sample=None, encryption_key: bytes | None = None,
+                 project=None):
+    """The driver placement of scan_frame: the decoded pa.Tables of
+    the read's slices, scanned on the driver in bucket order, or None
+    when the read is over the cap and belongs to the tasks. The
+    driver never holds more than _DRIVER_SCAN_MAX_BYTES in block rows
+    or in decoded rows:
+
+    - an unfiltered read is bounded by its (run, bucket) pairs'
+      lineage ``orig_bytes`` (decoded bytes, every column), read from
+      the plan with no IO;
+    - a filtered read first needs its filter columns' files to total
+      at most the cap (run-manifest ``bytes``; else no file is opened
+      here); the prune phase (_prune_slice) then runs for every slice,
+      and the read is bounded by the surviving (run, bucket) pairs'
+      ``orig_bytes``.
+
+    At or under the cap the decode phase (_decode_slice) runs on the
+    survivors already held — no file is read twice."""
+    import pyarrow.compute as pc
+
+    cap = _DRIVER_SCAN_MAX_BYTES
+    plans = [(bks, _slice_files(rows, snap.accepted, bks))
+             for bks in slices if bks]
+    if specs:
+        fcols = _spec_columns(specs)
+        blocks_p = _paths(snap.path)[0]
+        size = {posixpath.join(blocks_p, f["path"]): f["bytes"]
+                for f in snap.files if f["column"] in fcols}
+        if sum(size[fp] for fp in {fp for _, files in plans
+                                   for fp, col, _ in files
+                                   if col in fcols}) > cap:
+            return None
+        pruned = _fan_out(lambda plan: _prune_slice(
+            *plan, specs, chunks=chunks, sample=sample,
+            encryption_key=encryption_key), plans, min_items=2)
+        taken = {(r, b) for p in pruned for b, t in p.items()
+                 for r in pc.unique(t.column("run_id")).to_pylist()}
+    else:
+        pruned = [None] * len(plans)
+        taken = {(r, b) for b, rs in snap.accepted.items() for r in rs}
+    win = snap.winners
+    held = [(r, b) in taken for r, b in zip(win.run_id, win.bucket)]
+    if int(win.orig_bytes[held].sum()) > cap:
+        return None
+
+    def decoded(job):
+        (bks, files), p = job
+        return [out for _b, out in _decode_slice(
+            bks, files, specs, p, decode, chunks=chunks, sample=sample,
+            project=project)]
+
+    # one thread per slice: block-file reads and the decode kernels
+    # release the GIL
+    return [out for outs in _fan_out(decoded, zip(plans, pruned),
+                                     min_items=2)
+            for out in outs]
 
 
 def _bucket_feed(spark, n: int):
