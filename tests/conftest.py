@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import sys
 
 import pytest
@@ -10,17 +11,20 @@ sys.path.insert(0, "/root/repo")
 def pytest_configure(config):
     config.addinivalue_line(
         "markers", "both_placements: also run the test as "
-        "'<name>[tasks]' with the scan's task placement forced")
+        "'<name>[tasks]' with the task placement of reads and writes "
+        "forced")
     config.addinivalue_line(
-        "markers", "task_placement: run the test with the scan's task "
-        "placement forced (tokcodec.scan._DRIVER_SCAN_MAX_BYTES = 0)")
+        "markers", "task_placement: run the test with the task "
+        "placement of reads and writes forced "
+        "(tokcodec.io_tables._DRIVER_MAX_BYTES = 0)")
 
 
 def pytest_collection_modifyitems(items):
     """A both_placements test keeps its own id and runs under the
-    default placement (at test sizes nearly every read lands on the
-    driver); its twin, '<name>[tasks]' (or '<name>[<params>-tasks]'),
-    runs the same function with the task placement forced."""
+    default placement (at test sizes nearly every read, and every
+    write of a local relation, lands on the driver); its twin,
+    '<name>[tasks]' (or '<name>[<params>-tasks]'), runs the same
+    function with the task placement forced."""
     out = []
     for item in items:
         out.append(item)
@@ -38,19 +42,46 @@ def pytest_collection_modifyitems(items):
     items[:] = out
 
 
-@pytest.fixture(autouse=True)
-def placement(request, monkeypatch) -> str:
-    """The scan placement this test's reads may take
-    (tokcodec.scan.scan_frame): "tasks" under the task_placement
-    marker, which sets _DRIVER_SCAN_MAX_BYTES to 0 so every read with
-    data runs mapInArrow tasks; "driver" otherwise, with the cap left
-    as it is."""
-    if request.node.get_closest_marker("task_placement") is None:
-        return "driver"
-    from tokcodec import scan
+@contextlib.contextmanager
+def placed(placement: str):
+    """Reads and writes inside the block take ``placement``: "tasks"
+    sets io_tables._DRIVER_MAX_BYTES to 0, so every read and every
+    write with data runs mapInArrow tasks; "driver" leaves the cap as
+    it is. Module-scoped fixtures use it to build one table per
+    placement, so that a both_placements test which changes its table
+    changes its own copy."""
+    with pytest.MonkeyPatch.context() as m:
+        if placement == "tasks":
+            from tokcodec import io_tables
 
-    monkeypatch.setattr(scan, "_DRIVER_SCAN_MAX_BYTES", 0)
-    return "tasks"
+            m.setattr(io_tables, "_DRIVER_MAX_BYTES", 0)
+        yield
+
+
+@pytest.fixture(autouse=True)
+def placement(request) -> str:
+    """The placement this test's reads and writes may take
+    (tokcodec.scan.scan_frame, tokcodec.io_tables._write_run): "tasks"
+    under the task_placement marker, "driver" otherwise (see
+    placed)."""
+    name = "driver" if request.node.get_closest_marker(
+        "task_placement") is None else "tasks"
+    with placed(name):
+        yield name
+
+
+def local_frame(df):
+    """``df`` as a LocalRelation, the input the driver placement of a
+    write takes (io_tables._driver_input): its rows collected as JVM
+    Rows and handed back to SparkSession.createDataFrame, every type
+    kept. spark.createDataFrame of a Python list makes an RDD-backed
+    frame, which always writes through the tasks."""
+    from pyspark.sql import DataFrame
+
+    spark = df.sparkSession
+    jdf = spark._jsparkSession.createDataFrame(df._jdf.collectAsList(),
+                                               df._jdf.schema())
+    return DataFrame(jdf, spark)
 
 
 @pytest.fixture(scope="session")

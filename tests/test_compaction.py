@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import Row, functions as F
 from pyspark.sql import types as T
 
+from conftest import local_frame, placed
 from tokcodec.io_tables import (
     compact_encoded,
     read_encoded,
@@ -18,6 +19,8 @@ from tokcodec.io_tables import (
     vacuum_encoded,
     write_encoded,
 )
+
+pytestmark = pytest.mark.both_placements
 
 SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
@@ -28,11 +31,11 @@ SCHEMA = T.StructType([
 
 
 def _mk(spark, lo, hi):
-    return spark.createDataFrame(
+    return local_frame(spark.createDataFrame(
         [Row(doc_id=f"d{i}", tokens=[i, 2 * i], n_tok=2, source=f"s{i % 3}")
          for i in range(lo, hi)],
         SCHEMA,
-    )
+    ))
 
 
 def _sum_tokens(df):
@@ -42,12 +45,24 @@ def _sum_tokens(df):
 
 
 @pytest.fixture(scope="module")
-def table(spark, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("cmp") / "t")
-    for epoch, (lo, hi) in enumerate([(0, 50), (50, 120), (120, 200)]):
-        write_encoded(_mk(spark, lo, hi), path, n_buckets=4,
-                      run_id=f"r{epoch}", epoch=epoch)
-    return path
+def tables(spark, tmp_path_factory):
+    """The three-run table, built once per placement (tests compact
+    and vacuum it)."""
+    out = {}
+    for placement in ("driver", "tasks"):
+        path = str(tmp_path_factory.mktemp("cmp") / "t")
+        with placed(placement):
+            for epoch, (lo, hi) in enumerate([(0, 50), (50, 120),
+                                               (120, 200)]):
+                write_encoded(_mk(spark, lo, hi), path, n_buckets=4,
+                              run_id=f"r{epoch}", epoch=epoch)
+        out[placement] = path
+    return out
+
+
+@pytest.fixture
+def table(tables, placement):
+    return tables[placement]
 
 
 def test_compact_preserves_data_and_supersedes_runs(spark, table):
@@ -117,11 +132,11 @@ def test_compact_preserves_uuid_columns(spark, tmp_path):
     import uuid as _uuid
 
     path = str(tmp_path / "t")
-    df = spark.createDataFrame(
+    df = local_frame(spark.createDataFrame(
         [Row(doc_id=str(_uuid.UUID(int=i)), tokens=[i], n_tok=1, source="s")
          for i in range(40)],
         SCHEMA,
-    )
+    ))
     write_encoded(df, path, n_buckets=2, run_id="a",
                   uuid_columns=["doc_id"])
     compact_encoded(spark, path, run_id="c")

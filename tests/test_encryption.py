@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import Row, functions as F
 from pyspark.sql import types as T
 
+from conftest import local_frame
 from tokcodec.crypto import block_aad, decrypt_block_row, encrypt_block_row
 from tokcodec.io_tables import (
     compact_encoded,
@@ -35,9 +36,9 @@ SCHEMA = T.StructType([
 
 
 def _mk(spark, n=200):
-    return spark.createDataFrame(
+    return local_frame(spark.createDataFrame(
         [Row(doc_id=f"d{i:04d}", tokens=[i, i + 1, i + 2], n_tok=3,
-             source=f"s{i % 3}") for i in range(n)], SCHEMA)
+             source=f"s{i % 3}") for i in range(n)], SCHEMA))
 
 
 def test_unit_roundtrip_and_aad_binding():
@@ -168,17 +169,17 @@ def test_evolution_append_omitting_encrypted_column(spark, tmp_path):
     legal: _evolve_schema null-fills it, and the filled column's
     blocks encrypt like any other."""
     path = str(tmp_path / "t")
-    base = spark.createDataFrame(
+    base = local_frame(spark.createDataFrame(
         [Row(doc_id=f"d{i}", secret=f"s{i}", n=i) for i in range(50)],
         T.StructType([
             T.StructField("doc_id", T.StringType(), False),
             T.StructField("secret", T.StringType(), True),
-            T.StructField("n", T.IntegerType(), False)]))
+            T.StructField("n", T.IntegerType(), False)])))
     write_encoded(base, path, n_buckets=1, run_id="r1",
                   encryption_key=KEY, encrypted_columns=["secret"])
-    nosecret = spark.createDataFrame(
+    nosecret = local_frame(spark.createDataFrame(
         [Row(doc_id=f"e{i}", n=100 + i) for i in range(20)],
-        "doc_id string, n int")
+        "doc_id string, n int"))
     write_encoded(nosecret, path, n_buckets=1, run_id="r2", epoch=1,
                   schema_evolution=True, encryption_key=KEY)
     out = read_encoded(spark, path, encryption_key=KEY)

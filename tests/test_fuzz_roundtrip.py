@@ -8,9 +8,13 @@ import os
 import random
 from decimal import Decimal
 
+import pytest
 from pyspark.sql import types as T
 
+from conftest import local_frame
 from tokcodec.io_tables import read_encoded, write_encoded
+
+pytestmark = pytest.mark.both_placements
 
 LEAVES = [
     T.IntegerType(), T.LongType(), T.ShortType(), T.ByteType(),
@@ -114,7 +118,7 @@ def test_fuzzed_schemas_roundtrip(spark, tmp_path):
             for f in schema.fields[1:]:
                 vals.append(rand_value(rng, f.dataType, f.nullable))
             rows.append(tuple(vals))
-        df = spark.createDataFrame(rows, schema)
+        df = local_frame(spark.createDataFrame(rows, schema))
         path = os.path.join(str(tmp_path), f"fz{seed}")
         write_encoded(df, path, n_buckets=2, run_id=f"fz{seed}",
                       chunk_max_rows=7)

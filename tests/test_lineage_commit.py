@@ -5,10 +5,14 @@ per write — fatal at 100 TB)."""
 
 import os
 
+import pytest
 from pyspark.sql import Row, functions as F
 from pyspark.sql import types as T
 
+from conftest import local_frame
 from tokcodec.io_tables import read_encoded, write_encoded
+
+pytestmark = pytest.mark.both_placements
 
 SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
@@ -19,11 +23,11 @@ SCHEMA = T.StructType([
 
 
 def _mk(spark, lo, hi):
-    return spark.createDataFrame(
+    return local_frame(spark.createDataFrame(
         [Row(doc_id=f"d{i}", tokens=[i, i + 1, i + 2], n_tok=3,
              source=f"s{i % 3}") for i in range(lo, hi)],
         SCHEMA,
-    )
+    ))
 
 
 def test_append_never_reads_existing_payload_blocks(spark, tmp_path):

@@ -11,13 +11,17 @@ import pytest
 from pyspark.sql import Row, functions as F
 from pyspark.sql import types as T
 
+from conftest import local_frame
 from tokcodec.io_tables import read_encoded, write_encoded
+
+pytestmark = pytest.mark.both_placements
 
 
 def _roundtrip(spark, tmp_path, df, n_buckets=2, **kw):
     path = os.path.join(str(tmp_path), "t")
     shutil.rmtree(path, ignore_errors=True)
-    write_encoded(df, path, n_buckets=n_buckets, run_id="nh", **kw)
+    write_encoded(local_frame(df), path, n_buckets=n_buckets, run_id="nh",
+                  **kw)
     return read_encoded(spark, path)
 
 
@@ -118,10 +122,10 @@ def test_multi_run_append_alignment(spark, tmp_path):
     path = os.path.join(str(tmp_path), "t")
 
     def mk(lo, hi):
-        return spark.createDataFrame(
+        return local_frame(spark.createDataFrame(
             [Row(doc_id=f"d{i}", n=i * 7, s=f"s{i}") for i in range(lo, hi)],
             schema,
-        )
+        ))
 
     write_encoded(mk(0, 40), path, n_buckets=2, run_id="zz_run",
                   epoch=0, chunk_max_rows=8)
@@ -157,9 +161,9 @@ def test_verify_checksums_forwarded_on_range_filter(spark, tmp_path):
         T.StructField("doc_id", T.StringType(), False),
         T.StructField("n_tok", T.IntegerType(), False),
     ])
-    df = spark.createDataFrame(
+    df = local_frame(spark.createDataFrame(
         [Row(doc_id=f"d{i}", n_tok=i) for i in range(100)], schema
-    )
+    ))
     path = os.path.join(str(tmp_path), "t")
     write_encoded(df, path, n_buckets=1, run_id="ck")
     # flip payload bytes in the n_tok block parquet by rewriting via
@@ -193,9 +197,9 @@ def test_range_filter_across_epochs(spark, tmp_path):
     path = os.path.join(str(tmp_path), "t")
 
     def mk(lo, hi):
-        return spark.createDataFrame(
+        return local_frame(spark.createDataFrame(
             [Row(doc_id=f"d{i}", n=i) for i in range(lo, hi)], schema
-        )
+        ))
 
     write_encoded(mk(0, 100), path, n_buckets=2, run_id="e0", epoch=0,
                   chunk_max_rows=16, cluster_by="n")

@@ -221,14 +221,14 @@ def test_read_entry_points_single_path(spark, tmp_path, monkeypatch):
 
 def test_small_reads_skip_the_python_task_wave(spark, tmp_path,
                                               monkeypatch):
-    """Below the driver cap (tokcodec.scan._DRIVER_SCAN_MAX_BYTES) a
+    """Below the driver cap (tokcodec.io_tables._DRIVER_MAX_BYTES) a
     bloom lookup and a token probe are scanned on the driver: their
     executed plans hold no MapInArrow and no other Python node. Over
     the cap a read keeps its mapInArrow task; when the filter
     column's files alone are over the cap the driver opens no block
     file, and when only the survivors are, it opens filter-column
     files only."""
-    from tokcodec import scan
+    from tokcodec import io_tables, scan
     from tokcodec.io_tables import _run_files, read_encoded, write_encoded
 
     df = spark.createDataFrame(
@@ -256,13 +256,13 @@ def test_small_reads_skip_the_python_task_wave(spark, tmp_path,
     doc_bytes = sum(f["bytes"] for f in _run_files(path, ["r"])
                     if f["column"] == "doc_id")
     # the filter column's files are over the cap: straight to the tasks
-    monkeypatch.setattr(scan, "_DRIVER_SCAN_MAX_BYTES", doc_bytes - 1)
+    monkeypatch.setattr(io_tables, "_DRIVER_MAX_BYTES", doc_bytes - 1)
     for q in (read_encoded(spark, path, eq_filter=("doc_id", "d0042")),
               read_encoded(spark, path)):
         assert "MapInArrow" in _plan(q)
     assert opened == []
     # they fit, but the surviving bucket's ~60 KB of text does not
-    monkeypatch.setattr(scan, "_DRIVER_SCAN_MAX_BYTES", doc_bytes)
+    monkeypatch.setattr(io_tables, "_DRIVER_MAX_BYTES", doc_bytes)
     q = read_encoded(spark, path, eq_filter=("doc_id", "d0042"))
     assert "MapInArrow" in _plan(q)
     assert opened and all("/col-doc_id/" in p for p in opened), opened

@@ -4,13 +4,16 @@ identical final result (BASELINE.md resumability row)."""
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import local_frame
 from tokcodec import read_encoded, verify_roundtrip, write_encoded
 from tokcodec.synth import synth_df
+
+pytestmark = pytest.mark.both_placements
 
 
 @pytest.fixture(scope="module")
 def seq_df(spark):
-    return synth_df(spark, 5_000, seed=42, partitions=8).cache()
+    return local_frame(synth_df(spark, 5_000, seed=42, partitions=8))
 
 
 def test_write_read_roundtrip(spark, seq_df, tmp_path):

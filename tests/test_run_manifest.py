@@ -10,12 +10,15 @@ import pytest
 from pyspark.sql import Row, functions as F
 from pyspark.sql import types as T
 
+from conftest import local_frame
 from tokcodec.io_tables import (
     _bucket_ranges,
     read_encoded,
     read_encoded_direct,
     write_encoded,
 )
+
+pytestmark = pytest.mark.both_placements
 
 SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
@@ -26,11 +29,11 @@ SCHEMA = T.StructType([
 
 
 def _mk(spark, lo, hi):
-    return spark.createDataFrame(
+    return local_frame(spark.createDataFrame(
         [Row(doc_id=f"d{i}", tokens=[i, i + 1], n_tok=2, source=f"s{i % 3}")
          for i in range(lo, hi)],
         SCHEMA,
-    )
+    ))
 
 
 def test_bucket_ranges_compact_and_exact():
@@ -107,11 +110,11 @@ def test_append_inherits_uuid_columns(spark, tmp_path):
     import uuid as _uuid
 
     def mk(lo, hi):
-        return spark.createDataFrame(
+        return local_frame(spark.createDataFrame(
             [Row(doc_id=str(_uuid.UUID(int=i)), tokens=[i], n_tok=1,
                  source="s") for i in range(lo, hi)],
             SCHEMA,
-        )
+        ))
 
     path = str(tmp_path / "t")
     write_encoded(mk(0, 30), path, n_buckets=2, run_id="r1", epoch=0,

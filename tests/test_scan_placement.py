@@ -1,6 +1,6 @@
 """scan_frame's two placements (tokcodec.scan): a read whose decoded
-size is bounded at or under _DRIVER_SCAN_MAX_BYTES is scanned on the
-driver and returned as spark.createDataFrame(table); any other read
+size is bounded at or under io_tables._DRIVER_MAX_BYTES is scanned on
+the driver and returned as spark.createDataFrame(table); any other read
 runs one mapInArrow task per slice. Both must return the same frame
 for every decoded type and every read option, and the driver frame
 must hold no Python node."""
@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.testing import assertDataFrameEqual
 
-from tokcodec import scan
+from tokcodec import io_tables, scan
 from tokcodec.io_tables import (
     read_encoded,
     read_encoded_as,
@@ -61,7 +61,7 @@ def _placed(monkeypatch, build):
     the cap as it is and once with the task placement forced."""
     drv = build()
     with monkeypatch.context() as m:
-        m.setattr(scan, "_DRIVER_SCAN_MAX_BYTES", 0)
+        m.setattr(io_tables, "_DRIVER_MAX_BYTES", 0)
         tsk = build()
     plan = _plan(drv)
     assert not any(n in plan for n in PYTHON_NODES), plan
@@ -151,7 +151,7 @@ def test_variant_and_geometry_stay_on_the_task_placement(spark, typed,
     _path, geo = typed
     drv = read_encoded(spark, geo)
     with monkeypatch.context() as m:
-        m.setattr(scan, "_DRIVER_SCAN_MAX_BYTES", 0)
+        m.setattr(io_tables, "_DRIVER_MAX_BYTES", 0)
         tsk = read_encoded(spark, geo)
     assert "MapInArrow" in _plan(drv) and "MapInArrow" in _plan(tsk)
     assert drv.schema == tsk.schema

@@ -216,7 +216,7 @@ def test_each_file_opened_at_most_once_per_slice(tables, monkeypatch,
         opens = _Opens(monkeypatch)
         _scan(plan, bks)
         assert len(opens.paths) == len(set(opens.paths)), (case, bks)
-        planned = {fp for fp, _c, _b in
+        planned = {fp for fp, _c, _r, _b in
                    _slice_files(plan[1], plan[0].accepted, bks)}
         assert set(opens.paths) <= planned
 
@@ -227,9 +227,9 @@ def test_unfiltered_slice_opens_exactly_its_files(tables, monkeypatch):
         opens = _Opens(monkeypatch)
         _scan(plan, bks)
         files = _slice_files(plan[1], plan[0].accepted, bks)
-        assert sorted(opens.paths) == sorted(fp for fp, _c, _b in files)
+        assert sorted(opens.paths) == sorted(fp for fp, *_ in files)
         # a file holds a range of buckets, yet it is opened once
-        assert any(len(bs) > 1 for _fp, _c, bs in files)
+        assert any(len(bs) > 1 for *_, bs in files)
 
 
 def test_present_key_lookup_skips_non_filter_files(tables, monkeypatch):
@@ -247,6 +247,40 @@ def test_present_key_lookup_skips_non_filter_files(tables, monkeypatch):
             assert set(opens.paths) - filter_files, bks
             found |= {r["doc_id"] for _b, rows in got for r in rows}
     assert empty and "d02345" in found
+
+
+@pytest.mark.both_placements
+def test_lookup_opens_only_surviving_runs_files(spark, tables, monkeypatch,
+                                                placement):
+    """On a two-run table (run "a" holds d00000-d01999, run "b"
+    d02000-d02999), an absent-key lookup opens filter-column files
+    only, and a present-key lookup opens other-column files of the
+    surviving run only — not those of the other run covering the same
+    bucket. Opens are counted in the driver's process: by the slice
+    scan run Spark-free, and by read_encoded when it is driver-placed
+    (the same files). The rows read_encoded returns are the same on
+    both placements."""
+    from tokcodec.io_tables import read_encoded
+
+    plan_rows = _plan(tables["plain"])[1]
+    col_of = {fp: col for _lo, _hi, fp, col, _r in plan_rows}
+    run_of = {fp: rid for _lo, _hi, fp, _c, rid in plan_rows}
+    assert set(run_of.values()) == {"a", "b"}
+    for key, runs in (("absent", set()), ("d02345", {"b"}),
+                      ("d00042", {"a"})):
+        kw = {"eq_filter": ("doc_id", key)}
+        plan = _plan(tables["plain"], kw)
+        opens = _Opens(monkeypatch)
+        for bks in _slices(plan[0], k=4):
+            _scan(plan, bks)
+        others = {p for p in opens.paths if col_of[p] != "doc_id"}
+        assert opens.paths and {run_of[p] for p in others} == runs, key
+        scanned = set(opens.paths)
+        opens = _Opens(monkeypatch)
+        got = read_encoded(spark, tables["plain"], **kw).collect()
+        assert [r.doc_id for r in got] == ([key] if runs else [])
+        if placement == "driver":
+            assert set(opens.paths) == scanned, key
 
 
 def test_datasource_one_partition_per_slice(spark, tmp_path, monkeypatch):
@@ -283,7 +317,7 @@ def test_datasource_slices_are_components(spark, tmp_path, monkeypatch):
     snap = plan_snapshot(path)
     parts = _make_partitions(snap, snap.schema, [])
     assert [p.buckets for p in parts] == [[0, 1, 2, 3], [4, 5, 6, 7]]
-    files = [fp for p in parts for fp, _c, _b in p.files]
+    files = [fp for p in parts for fp, *_ in p.files]
     assert len(files) == len(set(files))
 
 

@@ -11,38 +11,53 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import local_frame, placed
 from tokcodec import read_encoded, write_encoded
 from tokcodec.io_tables import compact_encoded, read_encoded_direct
 
+pytestmark = pytest.mark.both_placements
+
 
 def _epoch0(spark, n=400):
-    return spark.range(n).select(
+    return local_frame(spark.range(n).select(
         F.concat(F.lit("d"), F.col("id")).alias("doc_id"),
         F.col("id").cast("int").alias("n_tok"),
         F.when(F.col("id") % 2 == 0, "web").otherwise("book").alias("source"),
-    )
+    ))
 
 
 def _epoch1(spark, n=300):
     # evolved frame: adds a nullable `lang` column
-    return spark.range(1000, 1000 + n).select(
+    return local_frame(spark.range(1000, 1000 + n).select(
         F.concat(F.lit("d"), F.col("id")).alias("doc_id"),
         F.col("id").cast("int").alias("n_tok"),
         F.lit("crawl").alias("source"),
         F.when(F.col("id") % 3 == 0, "en").otherwise("de").alias("lang"),
-    )
+    ))
 
 
 @pytest.fixture(scope="module")
-def evolved(spark, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("evo") / "enc")
-    write_encoded(_epoch0(spark), path, n_buckets=4, run_id="r0", epoch=0)
-    with pytest.raises(ValueError, match="schema mismatch"):
-        write_encoded(_epoch1(spark), path, n_buckets=4, run_id="bad",
-                      resume=True, epoch=1)
-    write_encoded(_epoch1(spark), path, n_buckets=4, run_id="r1",
-                  resume=True, epoch=1, schema_evolution=True)
-    return path
+def evolved_tables(spark, tmp_path_factory):
+    """The evolved table, built once per placement (tests append to
+    it and compact it)."""
+    out = {}
+    for placement in ("driver", "tasks"):
+        path = str(tmp_path_factory.mktemp("evo") / "enc")
+        with placed(placement):
+            write_encoded(_epoch0(spark), path, n_buckets=4, run_id="r0",
+                          epoch=0)
+            with pytest.raises(ValueError, match="schema mismatch"):
+                write_encoded(_epoch1(spark), path, n_buckets=4,
+                              run_id="bad", resume=True, epoch=1)
+            write_encoded(_epoch1(spark), path, n_buckets=4, run_id="r1",
+                          resume=True, epoch=1, schema_evolution=True)
+        out[placement] = path
+    return out
+
+
+@pytest.fixture
+def evolved(evolved_tables, placement):
+    return evolved_tables[placement]
 
 
 def test_union_schema_and_fill(spark, evolved):

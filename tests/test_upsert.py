@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import Row, functions as F
 from pyspark.sql import types as T
 
+from conftest import local_frame
 from tokcodec.io_tables import (
     compact_encoded,
     count_encoded,
@@ -19,6 +20,8 @@ from tokcodec.io_tables import (
     write_encoded,
 )
 
+pytestmark = pytest.mark.both_placements
+
 SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
     T.StructField("tokens", T.ArrayType(T.IntegerType(), False), False),
@@ -28,12 +31,12 @@ SCHEMA = T.StructType([
 
 
 def _mk(spark, ids, tok_base=1, source=None):
-    return spark.createDataFrame(
+    return local_frame(spark.createDataFrame(
         [Row(doc_id=f"d{i}", tokens=[tok_base * i, tok_base * i + 1],
              n_tok=2, source=source or f"s{i % 3}")
          for i in ids],
         SCHEMA,
-    )
+    ))
 
 
 @pytest.fixture()

@@ -9,7 +9,10 @@ binary/int codec selection)."""
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import local_frame
 from tokcodec import read_encoded, write_encoded
+
+pytestmark = pytest.mark.both_placements
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -19,7 +22,7 @@ def _geospatial(spark):
 
 def _variant_df(spark, n=300):
     # heterogeneous JSON shapes + nulls: object, array, scalar, null
-    return spark.range(n).select(
+    return local_frame(spark.range(n).select(
         F.col("id"),
         F.when(
             F.col("id") % 11 == 0, F.lit(None)
@@ -35,7 +38,7 @@ def _variant_df(spark, n=300):
                 .otherwise(F.col("id").cast("string"))
             )
         ).alias("v"),
-    )
+    ))
 
 
 def test_variant_roundtrip(spark, tmp_path):

@@ -98,7 +98,7 @@ class _SlicePartition(InputPartition):
                  specs: list[dict], removals: list[dict],
                  extra: list[T.StructField], fill: str | None):
         self.buckets = buckets  # one contiguous slice, sorted
-        self.files = files  # _slice_files: (path, column, buckets)
+        self.files = files  # _slice_files: (path, column, run, buckets)
         self.specs = specs
         self.removals = removals
         self.extra = extra  # delete key columns outside the projection
@@ -118,7 +118,7 @@ def _slices(snap, rows) -> list[list[int]]:
     from tokcodec.scan import _slice_files
 
     buckets = sorted(snap.accepted)
-    spans = sorted((bs[0], bs[-1]) for _fp, _c, bs
+    spans = sorted((bs[0], bs[-1]) for _fp, _c, _r, bs
                    in _slice_files(rows, snap.accepted, buckets))
     comps: list[list[int]] = []
     for lo, hi in spans:

@@ -154,6 +154,48 @@ _META_IO_FANOUT_MIN = 9
 _META_IO_THREADS = 16
 
 
+# The one placement rule of reads and writes: an operation whose rows
+# are bounded at or under this many bytes runs its bucket slices on
+# the driver instead of in a wave of Python tasks, which costs a
+# fixed ~330-450 ms on a 4-core host. A read qualifies by its decoded
+# size (scan.scan_frame); a write by the Arrow size of an input the
+# driver already holds as a local relation (_driver_input). Crossovers
+# measured on that host, 16-bucket tables: full scans (4 slices, one
+# driver thread each) between 16 MB decoded (driver 425 ms, tasks
+# 535 ms) and 28 MB (524 vs 491 ms); fresh writes with blooms
+# between 13.1 MB of Arrow input (driver 789 ms, tasks 870 ms) and
+# 18.8 MB (1253 vs 1086 ms). The cap sits below both, and it also
+# bounds the driver's memory for one operation.
+_DRIVER_MAX_BYTES = 16 << 20
+
+
+def _crosses_arrow(schema: T.StructType) -> bool:
+    """Can every row of ``schema`` cross between the JVM and a driver
+    pa.Table — spark.createDataFrame(arrow) for a driver-placed read,
+    DataFrame.toArrow() for a driver-placed write? Not when a column
+    holds a struct with a non-nullable field, or a variant, geometry
+    or geography (whose Arrow form is such a struct, tokcodec.schema),
+    at any depth: both cast the table to the schema's Arrow form, and
+    that cast rejects a non-nullable struct field that the table
+    declares nullable, or that holds nulls under a null parent. A
+    read or write of such a column keeps the task placement, whose
+    mapInArrow batches need no such cast."""
+
+    def ok(dt) -> bool:
+        if isinstance(dt, (T.VariantType, T.GeometryType,
+                           T.GeographyType)):
+            return False
+        if isinstance(dt, T.StructType):
+            return all(f.nullable and ok(f.dataType) for f in dt.fields)
+        if isinstance(dt, T.ArrayType):
+            return ok(dt.elementType)
+        if isinstance(dt, T.MapType):
+            return ok(dt.keyType) and ok(dt.valueType)
+        return True
+
+    return all(ok(f.dataType) for f in schema.fields)
+
+
 def _task_slots(spark: SparkSession, n_units: int) -> int:
     """Python tasks for a stage over ``n_units`` buckets: one per core,
     never more than there are buckets. The one sizing rule of every
@@ -164,8 +206,9 @@ def _task_slots(spark: SparkSession, n_units: int) -> int:
     no-op wave of 4 tasks took 326-394 ms), so one wave of tasks beats
     two waves of half-size tasks; balance comes from giving each task
     an equal, contiguous slice of buckets, not from spare tasks. A
-    read small enough skips the wave altogether: scan_frame runs the
-    same slices on the driver (tokcodec.scan._DRIVER_SCAN_MAX_BYTES)."""
+    read or write small enough skips the wave altogether
+    (_DRIVER_MAX_BYTES): scan_frame and _write_run run the same
+    slices on the driver."""
     return max(1, min(n_units, spark.sparkContext.defaultParallelism))
 
 
@@ -202,7 +245,11 @@ def _make_block_writer(blocks_p: str, run_id: str,
     """mapInArrow stage that persists block rows: one parquet file per
     (task, column, flush) under blocks/col-<column>/, named by task
     attempt so retried/speculative attempts never collide — the
-    loser's files are orphans no manifest references. Yields one
+    loser's files are orphans no manifest references. The returned
+    ``fn(batches, part=None)`` names its files by ``part``, the slice
+    index, when the caller passes one (the driver placement of
+    _write_run, which has no TaskContext: one attempt per slice),
+    else by the task's partition id and attempt id. Yields one
     _FILEROW_DDL row per file written; the driver collects these
     (O(files of this run)) into the run manifest. Composed directly
     after the encode generator in the same Python stage, so payload
@@ -215,7 +262,7 @@ def _make_block_writer(blocks_p: str, run_id: str,
     fb = flush_bytes if flush_bytes is not None else FLUSH_BYTES
     split_min = _SPLIT_GROUP_MIN_BYTES
 
-    def fn(batches):
+    def fn(batches, part: int | None = None):
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
@@ -226,9 +273,12 @@ def _make_block_writer(blocks_p: str, run_id: str,
             ("bucket_ranges", pa.string()),
             ("n_rows", pa.int64()), ("bytes", pa.int64()),
         ])
-        tc = TaskContext.get()
-        tid = tc.partitionId() if tc else 0
-        att = tc.taskAttemptId() if tc else 0
+        if part is not None:
+            tid, att = part, 0
+        else:
+            tc = TaskContext.get()
+            tid = tc.partitionId() if tc else 0
+            att = tc.taskAttemptId() if tc else 0
         fs, root = _task_fs(blocks_p)
         rows: list[dict] = []
         buf: list = []
@@ -596,9 +646,11 @@ def write_encoded(
     buckets — the fault-injection hook for resumability tests.
 
     Commit protocol (all metadata O(this run), independent of table
-    size): encode tasks write their own block files and report them;
-    the driver writes ``_runs/<run_id>.json`` (the file manifest), then
-    appends one lineage file (THE commit point — a crash before it
+    size): the encoder writes its own block files and reports them
+    (in one wave of tasks, or on the driver when the input is a small
+    local relation: _write_run); the driver then writes
+    ``_runs/<run_id>.json`` (the file manifest), then appends one
+    lineage file (THE commit point — a crash before it
     leaves orphan files no reader ever opens), then refreshes
     ``_manifest.json``. All three are written Spark-free to a temp
     file and moved into place (_write_json_fs, _commit_lineage_local).
@@ -799,7 +851,22 @@ def _write_run(b: DataFrame, schema: T.StructType, path: str,
     run manifest (everything of a write EXCEPT the lineage commit,
     which the caller makes with _commit_lineage_local from the
     returned file rows — upsert and compact bundle their tombstones
-    into that same append). Returns the run's file rows."""
+    into that same append). Returns the run's file rows.
+
+    One encoder (make_encode_sorted_fn composed with
+    _make_block_writer) runs once per bucket slice — the slices
+    _task_slots sizes — in one of two placements:
+
+    - tasks: repartitionById places bucket b in task
+      ((b+1)*k - 1) div n, sortWithinPartitions makes each task's rows
+      bucket-contiguous, and mapInArrow runs the encoder;
+    - driver (_driver_input): an input the driver already holds as a
+      local relation, at most _DRIVER_MAX_BYTES in Arrow form, is
+      stable-sorted by bucket, cut into the same slices and encoded
+      on the driver (_driver_write) — no Exchange, no Python task.
+
+    Both give the same files (one per slice per column, same bucket
+    ranges), the same block rows and the same run manifest."""
     from tokcodec.encode import validate_annotations, validate_codec_override
 
     spark = b.sparkSession
@@ -831,35 +898,40 @@ def _write_run(b: DataFrame, schema: T.StructType, path: str,
     )
     writer = _make_block_writer(blocks_p, run_id)
 
-    def composed(batches):
+    def composed(batches, part=None):
         # encode -> persist in ONE Python stage: block payloads never
         # re-cross the JVM boundary; only tiny file-manifest rows do
-        yield from writer(enc(batches))
+        yield from writer(enc(batches), part)
 
-    # one task per core, each owning the bucket slice that
+    # one slice per core, slice i owning the buckets that
     # spark.range(n_buckets, numPartitions=k) gives scan task i,
-    # [i*n/k, (i+1)*n/k): bucket b goes to task ((b+1)*k - 1) div n.
+    # [i*n/k, (i+1)*n/k): bucket b goes to slice ((b+1)*k - 1) div n.
     # Exact, equal placement (hash placement left some tasks empty and
     # others with double), one bucket range per file, and one file per
-    # task per column rather than per bucket — parquet footers cost
+    # slice per column rather than per bucket — parquet footers cost
     # ~5% of the table at one file per bucket.
     n_tasks = _task_slots(spark, n_buckets)
-    task_of_bucket = F.expr(
-        f"((cast(`{BUCKET_COL}` as bigint) + 1) * {n_tasks} - 1) "
-        f"div {n_buckets}").cast("int")
-    filerows = (
-        b.repartitionById(n_tasks, task_of_bucket)
-        # bucket-contiguous rows -> the encode fn streams one bucket
-        # at a time (JVM-side sort, spills if needed; task memory is
-        # bounded by one bucket, not the whole task's bucket set)
-        .sortWithinPartitions(BUCKET_COL)
-        .mapInArrow(composed, _FILEROW_DDL)
-        .collect()  # O(files of this run) — the run manifest
-    )
+    local = _driver_input(b)
+    if local is not None:
+        filerows = _driver_write(local, composed, n_buckets, n_tasks)
+    else:
+        task_of_bucket = F.expr(
+            f"((cast(`{BUCKET_COL}` as bigint) + 1) * {n_tasks} - 1) "
+            f"div {n_buckets}").cast("int")
+        filerows = (
+            b.repartitionById(n_tasks, task_of_bucket)
+            # bucket-contiguous rows -> the encode fn streams one
+            # bucket at a time (JVM-side sort, spills if needed; task
+            # memory is bounded by one bucket, not the whole task's
+            # bucket set)
+            .sortWithinPartitions(BUCKET_COL)
+            .mapInArrow(composed, _FILEROW_DDL)
+            .collect()  # O(files of this run) — the run manifest
+        )
     files = [
-        {"path": r.path, "column": r.column,
-         "bucket_ranges": json.loads(r.bucket_ranges),
-         "n_rows": r.n_rows, "bytes": r.bytes}
+        {"path": r["path"], "column": r["column"],
+         "bucket_ranges": json.loads(r["bucket_ranges"]),
+         "n_rows": r["n_rows"], "bytes": r["bytes"]}
         for r in filerows
     ]
     _write_json_fs(
@@ -876,6 +948,52 @@ def _write_run(b: DataFrame, schema: T.StructType, path: str,
                    separators=(",", ":")),
     )
     return files
+
+
+def _driver_input(b: DataFrame):
+    """The bucketed write input ``b`` as one pa.Table when the write
+    belongs on the driver, else None. It does when its optimized plan
+    is a LocalRelation — rows the driver already holds, with
+    with_bucket's hash, a resume filter and evolution's null columns
+    folded in by Spark — of types that cross Arrow (_crosses_arrow),
+    and its Arrow form is at most _DRIVER_MAX_BYTES. Cached,
+    file-backed and derived inputs, whose size is not known before
+    they are collected, keep the tasks."""
+    plan = b._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() != "LocalRelation" \
+            or not _crosses_arrow(b.schema):
+        return None
+    tbl = b.toArrow()
+    return tbl if tbl.nbytes <= _DRIVER_MAX_BYTES else None
+
+
+def _driver_write(tbl, composed, n_buckets: int, n_slices: int) -> list:
+    """The driver placement of _write_run: the bucketed rows ``tbl``
+    stable-sorted by bucket (each bucket keeps its rows' input order,
+    as the tasks' shuffle and sort keep it), cut into the write tasks'
+    slices (bucket b to slice ((b+1)*k - 1) div n) and run through
+    ``composed(batches, slice index)`` one slice after another.
+    Returns the file rows, as dicts.
+
+    The slices run serially, not on a thread per slice: the encoder is
+    mostly Python between short numpy calls, and on a 4-core host
+    (16 buckets, blooms, interleaved appends) four threads contending
+    for the GIL took a median 482 ms per ~100k-token append against
+    374 ms serially (12 each), and 1357 against 1059 ms at ~10 MB of
+    input (4 each)."""
+    import numpy as np
+
+    bk = tbl.column(BUCKET_COL).to_numpy()
+    order = np.argsort(bk, kind="stable")
+    tbl = tbl.take(order)
+    slice_of = ((bk[order].astype(np.int64) + 1) * n_slices - 1) \
+        // n_buckets
+    cuts = np.searchsorted(slice_of, np.arange(n_slices + 1))
+    jobs = [(i, tbl.slice(a, z - a))
+            for i, (a, z) in enumerate(zip(cuts[:-1], cuts[1:])) if z > a]
+    return [r for i, rows in jobs
+            for out in composed(rows.to_batches(), i)
+            for r in out.to_pylist()]
 
 
 def suggest_buckets(total_bytes: int,
@@ -1359,7 +1477,7 @@ def read_encoded(
 
     Where the slices run is one rule (tokcodec.scan.scan_frame): when
     the read's decoded size is bounded at or under
-    tokcodec.scan._DRIVER_SCAN_MAX_BYTES (from lineage ``orig_bytes``,
+    _DRIVER_MAX_BYTES (from lineage ``orig_bytes``,
     after a driver-side prune for a filtered read), the driver scans
     them while this call builds the frame, which is then a local
     relation with no Python task — a small lookup costs no task wave.

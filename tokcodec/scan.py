@@ -13,14 +13,15 @@ the slice scan every reader runs, in two placements.
                    -> optional chunk allow-list / sample -> chunk
                    pruning over the whole slice, _prune_block_table)
                    and _decode_slice (the other columns' files read
-                   only for surviving buckets -> decode one bucket at
-                   a time -> removal lists -> optional Arrow-side
-                   projection).
+                   only for the buckets and runs with a surviving
+                   chunk -> decode one bucket at a time -> removal
+                   lists -> optional Arrow-side projection).
     scan_frame     the Spark wrapper read_encoded, read_encoded_as,
                    sample_encoded and the aggregate boundary decode
                    build on. One rule places the scan: a read whose
                    decoded size is bounded at or under
-                   _DRIVER_SCAN_MAX_BYTES runs its slices on the
+                   io_tables._DRIVER_MAX_BYTES (the cap writes place
+                   themselves by too) runs its slices on the
                    driver (_driver_scan) and becomes
                    spark.createDataFrame(table) — no Python task; any
                    other read runs one mapInArrow task per slice of
@@ -46,6 +47,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import types as T
 
+from tokcodec import io_tables
 from tokcodec.encode import METRICS_COLUMN
 from tokcodec.io_tables import (
     LAYOUT_VERSION,
@@ -53,6 +55,7 @@ from tokcodec.io_tables import (
     _blocks_df,
     _chunk_keys,
     _committed_pandas,
+    _crosses_arrow,
     _deletes_in_force,
     _direct_file_rows,
     _evolution_fill_columns,
@@ -66,16 +69,6 @@ from tokcodec.io_tables import (
     _task_slots,
 )
 from tokcodec.schema import manifest_schema
-
-# scan_frame's placement rule: a read whose decoded size is bounded at
-# or under this many bytes is scanned on the driver (_driver_scan)
-# instead of by a wave of Python tasks, which costs a fixed
-# ~330-450 ms on a 4-core host. Full scans of 16-bucket synth tables
-# there (4 slices, one driver thread each) crossed between 16 MB
-# decoded (driver 425 ms, tasks 535 ms) and 28 MB (524 vs 491 ms);
-# the cap sits below that, and it also bounds the driver's memory
-# for one scan.
-_DRIVER_SCAN_MAX_BYTES = 16 << 20
 
 
 @dataclass
@@ -257,22 +250,24 @@ def _spec_columns(specs) -> set:
             for s in (nf["subs"] if nf["kind"] == "or" else [nf])}
 
 
-def _slice_files(rows, accepted, buckets) -> list[tuple[str, str, list]]:
-    """The block files one slice task reads: (path, column, buckets it
-    takes from the file) for every file of the plan's ``rows``
-    (_direct_file_rows) that overlaps the sorted ``buckets``. A bucket
-    is taken from a file only when the file's run is accepted for it
-    (a file holds exactly one run), so the losing side of a re-encoded
-    bucket is never read. One bisect per file range."""
+def _slice_files(rows, accepted,
+                 buckets) -> list[tuple[str, str, str, list]]:
+    """The block files one slice task reads: (path, column, run id,
+    buckets it takes from the file) for every file of the plan's
+    ``rows`` (_direct_file_rows) that overlaps the sorted ``buckets``.
+    A bucket is taken from a file only when the file's run is accepted
+    for it (a file holds exactly one run), so the losing side of a
+    re-encoded bucket is never read. One bisect per file range."""
     import bisect
 
-    by_path: dict[str, tuple[str, list]] = {}
+    by_path: dict[str, tuple[str, str, list]] = {}
     for lo, hi, fp, col, rid in rows:
         for b in buckets[bisect.bisect_left(buckets, lo):
                          bisect.bisect_right(buckets, hi)]:
             if rid in accepted.get(b, ()):
-                by_path.setdefault(fp, (col, []))[1].append(b)
-    return [(fp, col, sorted(bs)) for fp, (col, bs) in by_path.items()]
+                by_path.setdefault(fp, (col, rid, []))[2].append(b)
+    return [(fp, col, rid, sorted(bs))
+            for fp, (col, rid, bs) in by_path.items()]
 
 
 def _open_block_file(path: str):
@@ -408,7 +403,8 @@ def _prune_slice(buckets, files, specs, chunks=None, sample=None,
     if not specs:
         return None
     fcols = _spec_columns(specs)
-    opened = [_BlockFile(fp, bs) for fp, col, bs in files if col in fcols]
+    opened = [_BlockFile(fp, bs) for fp, col, _r, bs in files
+              if col in fcols]
     try:
         parts = [t for f in opened for b in f.buckets
                  if (t := f.take(b)) is not None]
@@ -432,18 +428,24 @@ def _decode_slice(buckets, files, specs, pruned, decode, chunks=None,
     ``pruned`` (_prune_slice; consumed): yields (bucket, decoded
     pa.Table) for each bucket with rows, in order. The other columns'
     files are opened only if some chunk survives, and read only for
-    the surviving buckets (of a filtered slice) and chunks. Decode
-    runs one bucket at a time (its evolution fill and ``__bucket``
-    column are per bucket), then drops rows on the removal lists
-    (``removals``: dicts with key_column, file, uuid; each list is
-    read once per slice) and applies the optional ``project``
-    (pa.Table -> pa.Table)."""
+    the surviving buckets (of a filtered slice) and chunks: a file
+    (which holds one run) is read for a bucket only when a chunk of
+    its run survives there, so a file whose run has no survivor in
+    the slice is never opened. Decode runs one bucket at a time (its
+    evolution fill and ``__bucket`` column are per bucket), then drops
+    rows on the removal lists (``removals``: dicts with key_column,
+    file, uuid; each list is read once per slice) and applies the
+    optional ``project`` (pa.Table -> pa.Table)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     fcols = _spec_columns(specs)
-    rest = [_BlockFile(fp, [b for b in bs if pruned is None or b in pruned])
-            for fp, col, bs in files if col not in fcols]
+    runs = None if pruned is None else {
+        b: set(pc.unique(t.column("run_id")).to_pylist())
+        for b, t in pruned.items()}
+    rest = [_BlockFile(fp, [b for b in bs
+                            if runs is None or rid in runs.get(b, ())])
+            for fp, col, rid, bs in files if col not in fcols]
     drops = None
     try:
         for b in buckets:
@@ -501,7 +503,7 @@ def scan_frame(spark, snap: Snapshot, decode, out_schema, scan_cols,
     """DataFrame of _scan_slice over every accepted bucket of ``snap``,
     in one of two placements decided by one rule (_driver_scan): a
     read whose decoded size is bounded at or under
-    _DRIVER_SCAN_MAX_BYTES runs its slices on the driver, now, and
+    io_tables._DRIVER_MAX_BYTES runs its slices on the driver, now, and
     comes back as spark.createDataFrame(table) — no Python task, no
     MapInArrow; any other read, and any read of a type that cannot
     cross createDataFrame (_crosses_arrow), runs one mapInArrow task
@@ -551,31 +553,6 @@ def scan_frame(spark, snap: Snapshot, decode, out_schema, scan_cols,
     return _bucket_feed(spark, len(buckets)).mapInArrow(fn, out_schema)
 
 
-def _crosses_arrow(schema: T.StructType) -> bool:
-    """Can every row of ``schema`` go through
-    spark.createDataFrame(arrow)? Not when a column holds a struct
-    with a non-nullable field, or a variant, geometry or geography
-    (whose Arrow form is such a struct, tokcodec.schema), at any
-    depth: createDataFrame casts the decoded table to the schema's
-    Arrow form, and that cast rejects a non-nullable struct field that
-    the decoded struct declares nullable, or that holds nulls under a
-    null parent. A read of such a column keeps the task placement."""
-
-    def ok(dt) -> bool:
-        if isinstance(dt, (T.VariantType, T.GeometryType,
-                           T.GeographyType)):
-            return False
-        if isinstance(dt, T.StructType):
-            return all(f.nullable and ok(f.dataType) for f in dt.fields)
-        if isinstance(dt, T.ArrayType):
-            return ok(dt.elementType)
-        if isinstance(dt, T.MapType):
-            return ok(dt.keyType) and ok(dt.valueType)
-        return True
-
-    return all(ok(f.dataType) for f in schema.fields)
-
-
 def _slices(buckets: list, n: int) -> list[list]:
     """``buckets`` cut into ``n`` contiguous slices, exactly as
     spark.range(0, len(buckets), numPartitions=n) cuts its indexes
@@ -590,8 +567,8 @@ def _driver_scan(snap: Snapshot, rows, slices, specs, decode, chunks=None,
     """The driver placement of scan_frame: the decoded pa.Tables of
     the read's slices, scanned on the driver in bucket order, or None
     when the read is over the cap and belongs to the tasks. The
-    driver never holds more than _DRIVER_SCAN_MAX_BYTES in block rows
-    or in decoded rows:
+    driver never holds more than io_tables._DRIVER_MAX_BYTES in block
+    rows or in decoded rows:
 
     - an unfiltered read is bounded by its (run, bucket) pairs'
       lineage ``orig_bytes`` (decoded bytes, every column), read from
@@ -606,7 +583,7 @@ def _driver_scan(snap: Snapshot, rows, slices, specs, decode, chunks=None,
     survivors already held — no file is read twice."""
     import pyarrow.compute as pc
 
-    cap = _DRIVER_SCAN_MAX_BYTES
+    cap = io_tables._DRIVER_MAX_BYTES
     plans = [(bks, _slice_files(rows, snap.accepted, bks))
              for bks in slices if bks]
     if specs:
@@ -615,7 +592,7 @@ def _driver_scan(snap: Snapshot, rows, slices, specs, decode, chunks=None,
         size = {posixpath.join(blocks_p, f["path"]): f["bytes"]
                 for f in snap.files if f["column"] in fcols}
         if sum(size[fp] for fp in {fp for _, files in plans
-                                   for fp, col, _ in files
+                                   for fp, col, _r, _b in files
                                    if col in fcols}) > cap:
             return None
         pruned = _fan_out(lambda plan: _prune_slice(
