@@ -41,3 +41,18 @@ def test_tokcodec_imports_resolve(src):
             except ImportError:
                 missing.append(f"{module}.{name} (line {line})")
     assert not missing, f"{os.path.relpath(src, ROOT)}: {missing}"
+
+
+def test_task_wave_probe_is_covered_and_starts():
+    """scripts/probe_task_wave.py gives the fixed cost of a Python task
+    wave that the placement rules rest on: its imports are checked
+    above, and it parses its arguments without starting Spark."""
+    import subprocess
+    import sys
+
+    probe = os.path.join(ROOT, "scripts", "probe_task_wave.py")
+    assert probe in SOURCES
+    out = subprocess.run([sys.executable, probe, "--help"],
+                         capture_output=True, text=True, timeout=120)
+    assert out.returncode == 0, out.stderr
+    assert "--reps" in out.stdout

@@ -28,11 +28,12 @@ LINEAGE = ["n_rows", "orig_bytes", "enc_bytes", "checksum", "codecs"]
 
 
 class _Spy:
-    """Records the write's calls of the task path's DataFrame methods
-    and the executed plan of every query it collects."""
+    """Records the write's calls of the task path's DataFrame methods,
+    and the name and executed plan of every query it collects."""
 
     def __init__(self, monkeypatch):
         self.calls: list[str] = []
+        self.queries: list[str] = []
         self.plans: list[str] = []
         for name in ("repartitionById", "mapInArrow"):
             monkeypatch.setattr(ClassicDataFrame, name,
@@ -46,6 +47,7 @@ class _Spy:
 
         def spy(df, *a, **kw):
             if query:
+                self.queries.append(name)
                 self.plans.append(
                     df._jdf.queryExecution().executedPlan().toString())
             else:
@@ -104,7 +106,9 @@ def test_small_local_append_runs_no_task_wave(spark, tmp_path, monkeypatch):
 def test_other_inputs_keep_the_task_wave(spark, tmp_path, monkeypatch,
                                          kind):
     """A cached input, an over-cap local relation and a frame made from
-    a Python list (an RDD scan) take repartitionById + mapInArrow."""
+    a Python list (an RDD scan) take repartitionById + mapInArrow. The
+    over-cap relation's row count alone rules it out, so it is never
+    collected to the driver."""
     df = local_frame(spark.createDataFrame(_rows(400), DDL))
     if kind == "cached":
         df = df.cache()
@@ -116,8 +120,25 @@ def test_other_inputs_keep_the_task_wave(spark, tmp_path, monkeypatch,
     write_encoded(df, str(tmp_path / "t"), n_buckets=8)
     assert spy.calls == ["repartitionById", "mapInArrow"], spy.calls
     assert any("Exchange" in p and "MapInArrow" in p for p in spy.plans)
+    assert "toArrow" not in spy.queries, spy.queries
     if kind == "cached":
         df.unpersist()
+
+
+def test_arrow_row_bound_is_below_every_types_arrow_size(spark):
+    """_driver_input skips the collect when rows x
+    _arrow_row_min_bytes exceeds the cap, so the bound must never
+    exceed the real Arrow size: checked on every stored type (with
+    nulls), a boolean-only frame and an empty one."""
+    frames = [local_frame(spark.createDataFrame(_type_rows(), TYPES)),
+              local_frame(spark.createDataFrame(_rows(300), DDL)),
+              local_frame(spark.range(50).selectExpr("id % 2 = 0 as b")),
+              local_frame(spark.createDataFrame([], DDL))]
+    for df in frames:
+        rows = df._jdf.queryExecution().optimizedPlan().data().size()
+        bound = rows * io_tables._arrow_row_min_bytes(df.schema)
+        assert bound <= df.toArrow().nbytes, df.schema.simpleString()
+    assert io_tables._arrow_row_min_bytes(TYPES) > 0
 
 
 @pytest.mark.task_placement

@@ -54,6 +54,11 @@ from tokcodec.pack import pack_sequences  # noqa: F401
 from tokcodec.stateful import stream_source_cap  # noqa: F401
 from tokcodec.schema import SEQ_SCHEMA  # noqa: F401
 from tokcodec.synth import synth_df  # noqa: F401
+from tokcodec.session import guard_worker_zip_imports
+
+# a PySpark worker's tasks after its first tokcodec import skip
+# re-reading pyspark.zip (a no-op in the driver and on CPython 3.13+)
+guard_worker_zip_imports()
 
 
 def verify_roundtrip(original: DataFrame, decoded: DataFrame,

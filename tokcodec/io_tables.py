@@ -156,16 +156,22 @@ _META_IO_THREADS = 16
 
 # The one placement rule of reads and writes: an operation whose rows
 # are bounded at or under this many bytes runs its bucket slices on
-# the driver instead of in a wave of Python tasks, which costs a
-# fixed ~330-450 ms on a 4-core host. A read qualifies by its decoded
-# size (scan.scan_frame); a write by the Arrow size of an input the
-# driver already holds as a local relation (_driver_input). Crossovers
-# measured on that host, 16-bucket tables: full scans (4 slices, one
-# driver thread each) between 16 MB decoded (driver 425 ms, tasks
-# 535 ms) and 28 MB (524 vs 491 ms); fresh writes with blooms
-# between 13.1 MB of Arrow input (driver 789 ms, tasks 870 ms) and
-# 18.8 MB (1253 vs 1086 ms). The cap sits below both, and it also
-# bounds the driver's memory for one operation.
+# the driver instead of in a wave of Python tasks. A read qualifies by
+# its decoded size (scan.scan_frame); a write by the Arrow size of an
+# input the driver already holds as a local relation (_driver_input).
+# The cap was set when a wave cost a fixed ~330-450 ms on a 4-core
+# host, most of it each task's importlib.invalidate_caches()
+# re-reading pyspark.zip (session.guard_worker_zip_imports). With the
+# worker guard a no-op wave of 4 tasks takes ~220 ms (a JVM-only job
+# over the same range ~130 ms), and the crossovers on that host,
+# 16-bucket tables, sit well below the cap: fresh writes with blooms
+# between 2.0 MB of Arrow input (driver 345 ms, tasks 438 ms) and
+# 3.8 MB (501 vs 418 ms; 1019 vs 683 ms at 15.6 MB); full scans
+# (4 slices, one driver thread each) between 3.8 MB decoded (199 vs
+# 195 ms) and 11.8 MB (266 vs 192 ms). Without the guard the driver
+# won up to the cap (15.6 MB: writes 987 vs 1229 ms, scans 306 vs
+# 420 ms). The cap stays until a paired benchmark re-tunes it; it
+# also bounds the driver's memory for one operation.
 _DRIVER_MAX_BYTES = 16 << 20
 
 
@@ -200,15 +206,17 @@ def _task_slots(spark: SparkSession, n_units: int) -> int:
     """Python tasks for a stage over ``n_units`` buckets: one per core,
     never more than there are buckets. The one sizing rule of every
     stage that runs Python over buckets (write encode, scan, join). A
-    Python task costs a fixed ~200 ms on top of its work (measured on
-    a 4-core host: a no-op mapInArrow of 1, 2 or 4 tasks takes
-    ~280 ms, of 8 tasks ~540 ms; later, on another 4-core host, a
-    no-op wave of 4 tasks took 326-394 ms), so one wave of tasks beats
-    two waves of half-size tasks; balance comes from giving each task
-    an equal, contiguous slice of buckets, not from spare tasks. A
-    read or write small enough skips the wave altogether
-    (_DRIVER_MAX_BYTES): scan_frame and _write_run run the same
-    slices on the driver."""
+    wave of Python tasks has a fixed cost on top of its work (on a
+    4-core host a no-op mapInArrow of 1 task takes ~135 ms and of 4
+    tasks ~220 ms, against ~130 ms for a JVM-only job over the same
+    range; scripts/probe_task_wave.py measures it; a worker without
+    session.guard_worker_zip_imports adds ~200 ms a task re-reading
+    pyspark.zip, ~305 and ~405 ms for the same waves). So one wave
+    of tasks beats two waves of half-size tasks; balance comes from
+    giving each task an equal, contiguous slice of buckets, not from
+    spare tasks. A read or write small enough skips the wave
+    altogether (_DRIVER_MAX_BYTES): scan_frame and _write_run run the
+    same slices on the driver."""
     return max(1, min(n_units, spark.sparkContext.defaultParallelism))
 
 
@@ -956,15 +964,39 @@ def _driver_input(b: DataFrame):
     is a LocalRelation — rows the driver already holds, with
     with_bucket's hash, a resume filter and evolution's null columns
     folded in by Spark — of types that cross Arrow (_crosses_arrow),
-    and its Arrow form is at most _DRIVER_MAX_BYTES. Cached,
-    file-backed and derived inputs, whose size is not known before
-    they are collected, keep the tasks."""
+    and its Arrow form is at most _DRIVER_MAX_BYTES. A relation whose
+    row count times _arrow_row_min_bytes already exceeds the cap is
+    not collected. Cached, file-backed and derived inputs, whose size
+    is not known before they are collected, keep the tasks."""
     plan = b._jdf.queryExecution().optimizedPlan()
     if plan.getClass().getSimpleName() != "LocalRelation" \
-            or not _crosses_arrow(b.schema):
+            or not _crosses_arrow(b.schema) \
+            or plan.data().size() * _arrow_row_min_bytes(b.schema) \
+            > _DRIVER_MAX_BYTES:
         return None
     tbl = b.toArrow()
     return tbl if tbl.nbytes <= _DRIVER_MAX_BYTES else None
+
+
+# the bytes one row takes at least in a column's Arrow form: its
+# fixed-width value, or a string, binary, list or map column's 4-byte
+# offset. Booleans (bit-packed), validity bitmaps, string and list
+# contents and types not listed count 0.
+_ARROW_ROW_BYTES = {
+    T.ByteType: 1, T.ShortType: 2, T.IntegerType: 4, T.LongType: 8,
+    T.FloatType: 4, T.DoubleType: 8, T.DateType: 4, T.TimestampType: 8,
+    T.TimestampNTZType: 8, T.DecimalType: 16, T.StringType: 4,
+    T.BinaryType: 4, T.ArrayType: 4, T.MapType: 4,
+}
+
+
+def _arrow_row_min_bytes(dt) -> int:
+    """A lower bound on the bytes per row of ``dt``'s Arrow form, so
+    that rows x bound rejects an over-cap input in _driver_input
+    before it is collected. A struct's fields have its length."""
+    if isinstance(dt, T.StructType):
+        return sum(_arrow_row_min_bytes(f.dataType) for f in dt.fields)
+    return _ARROW_ROW_BYTES.get(type(dt), 0)
 
 
 def _driver_write(tbl, composed, n_buckets: int, n_slices: int) -> list:

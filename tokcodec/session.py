@@ -3,8 +3,68 @@
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
+
+# (st_mtime_ns, st_size) of each zip archive as this process last read
+# its directory through a stat-checked invalidation (None: no stat)
+_ZIP_STATS: dict[str, tuple[int, int] | None] = {}
+
+
+def _zip_stat(archive: str):
+    try:
+        st = os.stat(archive)
+    except OSError:
+        return None
+    return st.st_mtime_ns, st.st_size
+
+
+def guard_worker_zip_imports() -> bool:
+    """Make zipimporter invalidation stat-checked in a PySpark worker:
+    re-read an archive's directory only when its (st_mtime_ns,
+    st_size) differs from this process's last read of it. Returns
+    whether the guard is in place.
+
+    A PySpark worker calls importlib.invalidate_caches() at the start
+    of every task (pyspark.worker_util.setup_spark_files). On CPython
+    3.10-3.12 that makes every cached zipimporter re-parse its whole
+    archive directory in pure Python; a reused worker holds a dozen
+    of them over pyspark.zip (~1,300 entries, one importer per
+    imported pyspark sub-package): a median ~200 ms of every task on a
+    4-core host (scripts/probe_task_wave.py, ``invalidate_ms``), and
+    ~0.2 ms with the guard. CPython 3.13 made the invalidation lazy.
+    The guard gives a changed archive the same answer a re-read does.
+
+    Installed once per process, when tokcodec is first imported, and
+    only where the interpreter invalidates eagerly and the process is
+    a PySpark worker (the JVM sets PYTHON_WORKER_FACTORY_SECRET for
+    the worker daemon and the workers it forks); never in the driver.
+    """
+    zi = zipimport.zipimporter
+    if "PYTHON_WORKER_FACTORY_SECRET" not in os.environ \
+            or not (3, 10) <= sys.version_info[:2] < (3, 13):
+        return False
+    eager = zi.invalidate_caches
+    if getattr(eager, "stat_checked", False):
+        return True
+
+    def invalidate_caches(self):
+        stat = _zip_stat(self.archive)
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if stat is not None and files is not None \
+                and _ZIP_STATS.get(self.archive) == stat:
+            self._files = files
+            return
+        # stat before the read: an archive that changes during the
+        # read is read again on the next invalidation
+        eager(self)
+        _ZIP_STATS[self.archive] = stat
+
+    invalidate_caches.stat_checked = True
+    zi.invalidate_caches = invalidate_caches
+    return True
 
 
 def warm_python_workers(spark: SparkSession, waves: int = 2) -> None:
@@ -13,7 +73,9 @@ def warm_python_workers(spark: SparkSession, waves: int = 2) -> None:
 
     Uses mapInArrow over an explicitly partitioned range: no shuffle,
     so AQE cannot coalesce it below one task per core (a tiny grouped
-    warmup job would be coalesced to ~1 task and warm ~1 worker).
+    warmup job would be coalesced to ~1 task and warm ~1 worker). Its
+    tokcodec import also installs guard_worker_zip_imports in every
+    worker before any timed work.
     """
     import pyarrow as pa
 
