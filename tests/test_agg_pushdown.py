@@ -10,6 +10,7 @@ import json
 import shutil
 
 import pytest
+from conftest import placed
 from pyspark.sql import functions as F
 
 from tokcodec.agg import aggregate_encoded
@@ -430,27 +431,21 @@ def test_quantile_all_null_and_deletes(spark, tmp_path):
     assert got == _qtruth(list(range(50, 100)), 0.5)
 
 
-def test_fuzz_aggregate_and_quantile(spark, tmp_path, monkeypatch):
+def test_fuzz_aggregate_and_quantile(spark, tmp_path):
     """Randomized geometries: negatives, nulls, duplicates, clustered
     or not, random chunk sizes and random filter windows — aggregate
-    and quantile must equal Spark's own answers every time, on BOTH
-    planners (cached driver-side meta and the distributed pivot)."""
+    and quantile must equal Spark's own answers every time, in BOTH
+    placements of the metadata pass (on the driver, and in one task
+    per slice)."""
     import math
     import random
 
-    import tokcodec.agg as agg_mod
-
     def _both(fn):
-        agg_mod.clear_meta_cache()
-        monkeypatch.setattr(agg_mod, "_META_CACHE_MAX_ROWS", 1_000_000)
-        cached = fn()
-        agg_mod.clear_meta_cache()
-        monkeypatch.setattr(agg_mod, "_META_CACHE_MAX_ROWS", 0)
-        dist = fn()
-        assert cached == dist, (cached, dist)
-        agg_mod.clear_meta_cache()
-        monkeypatch.setattr(agg_mod, "_META_CACHE_MAX_ROWS", 1_000_000)
-        return cached
+        driver = fn()
+        with placed("tasks"):
+            tasks = fn()
+        assert driver == tasks, (driver, tasks)
+        return driver
 
     rng = random.Random(1234)
     for it in range(4):
@@ -503,6 +498,30 @@ def test_aggregate_time_travel_and_incremental(spark, tmp_path):
     assert q0 == 99
 
 
+def test_aggregate_beside_a_float_column(spark, tmp_path):
+    """The metadata pass reads only the int columns an aggregate
+    involves: a double column beside them (whose zone bounds are not
+    integers) changes nothing."""
+    base = str(tmp_path / "fl")
+    df = spark.range(300).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v"),
+        (F.col("id") / 7.0).alias("x"),
+        (F.col("id") / 50).cast("int").alias("day"))
+    write_encoded(df.repartition(1), base, n_buckets=2, chunk_max_rows=32,
+                  cluster_by="k")
+    for kw, pred in ((dict(), None),
+                     (dict(range_filter=("k", 40, 250)),
+                      (F.col("k") >= 40) & (F.col("k") <= 250)),
+                     (dict(range_filter=("x", 3.0, 9.5)),
+                      (F.col("x") >= 3.0) & (F.col("x") <= 9.5))):
+        _check(aggregate_encoded(spark, base, "v", **kw),
+               _truth(df, "v", pred))
+        got = aggregate_encoded_grouped(spark, base, "day", "v", **kw)
+        assert sorted((tuple(r) for r in got.collect()), key=repr) \
+            == _gtruth(df, "day", "v", pred)
+    assert quantile_encoded(spark, base, "v", 0.5) == 298
+
+
 def test_aggregate_or_filter(table):
     spark, base, df = table
     slabs = [("k", 0, 99), ("k", 800, 950)]
@@ -520,23 +539,18 @@ def test_aggregate_or_filter(table):
     assert sorted((tuple(r) for r in g.collect()), key=repr) == wantg
 
 
-# ------------------------------------------------- cached-meta planner
-# The driver-side values-meta cache (tokcodec.agg._values_meta_cached)
-# answers repeat aggregate/quantile planning with zero Spark jobs; the
-# distributed pivot is its fallback past the size cap. Both planners
-# must make the SAME covered/partial decision — telemetry included.
-
-import tokcodec.agg as _agg  # noqa: E402
+# ----------------------------------------- metadata pass placements
+# The metadata pass (tokcodec.scan.chunk_index) runs its slices on the
+# driver below the cap and in one task per slice above it. Both
+# placements must make the SAME covered/partial decision — telemetry
+# included.
 
 
-def _force_distributed(monkeypatch):
-    """Cap the cache at zero rows: every call stays on the
-    distributed plan (the 10^12-scale shape)."""
-    _agg.clear_meta_cache()
-    monkeypatch.setattr(_agg, "_META_CACHE_MAX_ROWS", 0)
+def _n_jobs(spark) -> int:
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
 
 
-def test_cached_and_distributed_paths_agree(table, monkeypatch):
+def test_driver_and_task_index_agree(table):
     spark, base, df = table
     cases = [
         dict(),
@@ -546,35 +560,32 @@ def test_cached_and_distributed_paths_agree(table, monkeypatch):
         dict(range_filter=("v", 300, 2400)),
         dict(range_filter=("k", 5000, 6000)),  # empty
     ]
-    _agg.clear_meta_cache()
-    cached = [aggregate_encoded(spark, base, "v", **kw)
+    driver = [aggregate_encoded(spark, base, "v", **kw)
               for kw in cases]
-    assert _agg._META_CACHE  # the cached planner actually ran
-    _force_distributed(monkeypatch)
-    for kw, want in zip(cases, cached):
-        got = aggregate_encoded(spark, base, "v", **kw)
-        assert got == want, (kw, got, want)
-    _agg.clear_meta_cache()
+    before = _n_jobs(spark)
+    with placed("tasks"):
+        for kw, want in zip(cases, driver):
+            got = aggregate_encoded(spark, base, "v", **kw)
+            assert got == want, (kw, got, want)
+    assert _n_jobs(spark) > before  # the task placement actually ran
 
 
-def test_cached_quantile_agrees(qtable, monkeypatch):
+def test_quantile_placements_agree(qtable):
     spark, base, want_sorted = qtable
-    _agg.clear_meta_cache()
     got_c = quantile_encoded(spark, base, "v", [0.1, 0.5, 0.99])
-    _force_distributed(monkeypatch)
-    got_d = quantile_encoded(spark, base, "v", [0.1, 0.5, 0.99])
+    with placed("tasks"):
+        got_d = quantile_encoded(spark, base, "v", [0.1, 0.5, 0.99])
     assert got_c == got_d
-    _agg.clear_meta_cache()
 
 
 def test_meta_cache_invalidated_by_append(spark, tmp_path):
-    """A new commit changes the (bucket, run_id) key set — the next
-    aggregate must see the appended rows, not the cached snapshot."""
+    """An aggregate right after an append sees the appended rows: the
+    metadata pass reads the snapshot the lineage commits, never a
+    stale one."""
     base = str(tmp_path / "inv")
     e0 = spark.range(100).select(F.col("id").alias("k"),
                                  F.col("id").alias("v"))
     write_encoded(e0, base, n_buckets=2, run_id="e0", epoch=0)
-    _agg.clear_meta_cache()
     first = aggregate_encoded(spark, base, "v")
     assert first["rows"] == 100
     e1 = spark.range(100, 250).select(F.col("id").alias("k"),
@@ -589,20 +600,18 @@ def test_meta_cache_invalidated_by_append(spark, tmp_path):
     assert snap == first
 
 
-def test_cached_grouped_agrees(gtable, monkeypatch):
+def test_grouped_placements_agree(gtable):
     spark, base, df = gtable
     cases = [dict(), dict(range_filter=("k", 50, 720)),
              dict(in_filter=("day", [1, 4]))]
-    _agg.clear_meta_cache()
-    cached = [sorted((tuple(r) for r in
+    driver = [sorted((tuple(r) for r in
                       aggregate_encoded_grouped(
                           spark, base, "day", "v", **kw).collect()),
                      key=repr) for kw in cases]
-    _force_distributed(monkeypatch)
-    for kw, want in zip(cases, cached):
-        got = sorted((tuple(r) for r in
-                      aggregate_encoded_grouped(
-                          spark, base, "day", "v", **kw).collect()),
-                     key=repr)
-        assert got == want, (kw, got, want)
-    _agg.clear_meta_cache()
+    with placed("tasks"):
+        for kw, want in zip(cases, driver):
+            got = sorted((tuple(r) for r in
+                          aggregate_encoded_grouped(
+                              spark, base, "day", "v", **kw).collect()),
+                         key=repr)
+            assert got == want, (kw, got, want)

@@ -193,3 +193,42 @@ def test_reader_construction_launches_no_jobs(spark, tmp_path):
         q._jdf.queryExecution().executedPlan()
     assert _n_jobs(spark) == before
     assert [q.count() for q in built] == [44, 22, 24, 44, 44]
+
+
+def test_metadata_answers_launch_no_jobs(spark, tmp_path):
+    """explain_scan, count_encoded and the metadata aggregates read
+    block metadata on the driver (tokcodec.scan.chunk_index) when the
+    files they read are under the driver cap: a cold call launches
+    zero Spark jobs, whatever the filter kind."""
+    from tokcodec.agg import aggregate_encoded, quantile_encoded
+    from tokcodec.io_tables import (
+        approx_count_distinct_encoded,
+        count_encoded,
+        explain_scan,
+        profile_encoded,
+    )
+
+    path = str(tmp_path / "meta")
+    df = spark.createDataFrame(
+        [(f"d{i:03d}", i, [i, i + 1]) for i in range(200)],
+        "doc_id string, n int, tokens array<int>")
+    write_encoded(df, path, n_buckets=4, run_id="r0", chunk_max_rows=16,
+                  cluster_by="n", bloom_columns=["doc_id"],
+                  sketch_columns=["doc_id"])
+    before = _n_jobs(spark)
+    rng = explain_scan(spark, path, range_filter=("n", 10, 20))
+    eq = explain_scan(spark, path, eq_filter=("doc_id", "d007"))
+    n = count_encoded(spark, path)
+    agg = aggregate_encoded(spark, path, "n")
+    q = quantile_encoded(spark, path, "n", 0.5)
+    prof = profile_encoded(spark, path)
+    ndv = approx_count_distinct_encoded(spark, path, "doc_id")
+    assert _n_jobs(spark) == before
+    for ex in (rng, eq):
+        assert 0 < ex["chunks_scanned"] < ex["chunks_total"], ex
+    assert n == 200
+    assert agg["chunks_decoded"] == 0 and agg["rows"] == 200
+    assert agg["sum"] == sum(range(200))
+    assert q == 99
+    assert prof["rows"] == 200 and prof["columns"]["n"]["max"] == 199
+    assert ndv["rows"] == 200 and ndv["chunks"] > 0

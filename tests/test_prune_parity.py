@@ -1,8 +1,11 @@
-"""Two chunk pruners exist: the DataFrame-side _filter_survivors
-(explain_scan, the distributed aggregate pivot) and the scan task's
-_prune_block_table (every read). Until one replaces the other they
-must keep the same chunks for every filter kind — explain_scan's
-chunks_scanned is checked against the task's own prune step.
+"""One chunk pruner, _prune_block_table, serves explain_scan and the
+scan task: both run it through the slice prune phase
+(tokcodec.scan._index_slice), explain_scan over block metadata plus
+the probed blooms (chunk_index), the scan task over the filter
+columns' files before it decodes. Their chunks must agree for every
+filter kind, so explain_scan's chunks_scanned is checked against the
+task's own prune step, under both placements of explain_scan (on the
+driver, and in one task per slice).
 
 The scan task runs here as ONE slice over all of a table's buckets,
 the way a read task prunes: the plain table has 2 buckets and 2 runs,
@@ -13,16 +16,20 @@ count mismatch."""
 import pytest
 from pyspark.sql import functions as F
 
+from tokcodec.agg import aggregate_encoded
 from tokcodec.io_tables import (
     _direct_file_rows,
     _filter_list,
     _paths,
     explain_scan,
+    read_encoded,
     write_encoded,
 )
 from tokcodec.scan import _scan_slice, _slice_files, plan_snapshot
 
 KEY = bytes(range(32))
+
+pytestmark = pytest.mark.both_placements
 
 
 def _source(spark, n=3000):
@@ -95,3 +102,32 @@ def test_explain_matches_scan_task_prune(spark, tables, case):
     assert ex["chunks_scanned"] == len(kept), (case, ex, sorted(kept))
     # non-vacuous: the filter keeps something and prunes something
     assert 0 < len(kept) < ex["chunks_total"], (case, ex)
+
+
+@pytest.fixture(scope="module")
+def shared_groups(spark, tmp_path_factory):
+    """32 buckets over at most 8 write slices: each block file holds
+    several buckets in one row group, which a slice splits by bucket
+    into zero-copy slices (arrays with offsets)."""
+    path = str(tmp_path_factory.mktemp("parity") / "shared")
+    df = _source(spark)
+    kw = dict(n_buckets=32, cluster_by="k", chunk_max_rows=40,
+              bloom_columns=["doc_id", "tokens"])
+    write_encoded(df.filter("k < 2000"), path, run_id="a", epoch=0, **kw)
+    write_encoded(df.filter("k >= 2000"), path, run_id="b", epoch=1,
+                  **kw)
+    return path
+
+
+@pytest.mark.parametrize("case", sorted(CASES))
+def test_prune_on_shared_row_groups(spark, shared_groups, case):
+    """The same agreement where block files share row groups across
+    buckets; an aggregate over the pruned chunks counts the rows the
+    read returns."""
+    kw = CASES[case]
+    ex = explain_scan(spark, shared_groups, **kw)
+    kept = _task_kept(shared_groups, _filter_list(**kw))
+    assert ex["chunks_scanned"] == len(kept), (case, ex, sorted(kept))
+    assert 0 < len(kept) < ex["chunks_total"], (case, ex)
+    assert aggregate_encoded(spark, shared_groups, "k", **kw)["rows"] \
+        == read_encoded(spark, shared_groups, **kw).count()

@@ -7,8 +7,10 @@ Every top-level scalar chunk's ``values`` block meta carries the zone
 bounds [lo, hi] (since r1), the exact null count (``nulls``, r5) and
 an overflow-guarded exact value sum (``sum``, r5 — int lanes only).
 ``aggregate_encoded`` plans like the readers do (lineage -> committed
-chunk set -> per-filter survivor intersection), then splits the
-surviving chunks:
+chunk set) and runs the readers' own prune phase over the block
+metadata (tokcodec.scan.chunk_index: _prune_block_table per slice of
+buckets, on the driver or in one task per slice). Each slice then
+splits its surviving chunks:
 
   * FULLY-COVERED chunks — every filter's zone proves every row
     passes (lo >= flo and hi <= fhi, and the filter column has zero
@@ -21,10 +23,11 @@ surviving chunks:
     the exact residual applied — correctness never depends on the
     stats.
 
-At 100 TB the fast path turns "SUM(x) WHERE day BETWEEN a AND b" into
-a metadata-only job plus a decode of the two boundary chunks per
-bucket; the worst case (nothing covered) degenerates to the plain
-filtered read the user would have run anyway.
+The driver merges the slices' partials. At 100 TB the fast path
+turns "SUM(x) WHERE day BETWEEN a AND b" into a metadata pass plus a
+decode of the two boundary chunks per bucket; the worst case (nothing
+covered) degenerates to the plain filtered read the user would have
+run anyway.
 
 Soundness notes: the metadata path is disabled wholesale when the
 table has pending equality deletes (merge-on-read would drop rows the
@@ -34,110 +37,73 @@ filter column is encrypted (stats live in the sealed emeta envelope);
 those cases route through the ordinary exact read. Coverage is only
 claimed for int-lane range/in filters — float filters (NaN rows fail
 residuals but are invisible to finite zone bounds), string prefix
-bounds, bloom eq and contains filters mark all their survivors
-partial. The reference has no aggregate machinery at all — parquet
-consumers get this from their engine's row-group stats; this is the
-encoded layout's native answer.
+bounds, disjunctions, bloom eq and contains filters prune like the
+readers do and mark all their survivors partial. The reference has no
+aggregate machinery at all — parquet consumers get this from their
+engine's row-group stats; this is the encoded layout's native answer.
 """
 
 from __future__ import annotations
 
-import os
 import posixpath
-from collections import OrderedDict
 from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from tokcodec.io_tables import (
-    METRICS_COLUMN,
     _evolution_fill_columns,
     _fan_out,
     _filter_list,
-    _filter_survivors,
     _normalize_filter,
-    _paths,
     _resolve_as_of,
     read_encoded,
 )
-from tokcodec.scan import plan_snapshot
-from tokcodec.schema import BLOCK_DDL, manifest_schema
+from tokcodec.scan import chunk_index, plan_snapshot
+from tokcodec.schema import manifest_schema
 
 _INT_LANES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
-# ---------------------------------------------------------------- meta cache
-# Driver-side cache of every committed VALUES block's metadata, keyed
-# by the table's exact commit state (the winning (bucket, run_id)
-# set). The fixed cost of the metadata fast path is small-JOB latency,
-# not data — a dashboard firing five aggregate/quantile calls against
-# the same snapshot re-scans the same block metas five times. One
-# JVM-parsed scan (get_json_object executor-side, payload pages never
-# read thanks to parquet column pruning) feeds every subsequent call
-# until the next commit changes the key. SIZE-CAPPED: past
-# _META_CACHE_MAX_ROWS chunk-column rows the entry records None and
-# callers stay on the distributed plan — at 10^12 rows the meta scan
-# must be a cluster job; the cache exists only to kill repeat
-# planning latency on tables whose metadata fits on the driver.
-_META_CACHE: OrderedDict = OrderedDict()
-_META_CACHE_MAX_ROWS = 1_000_000
-_META_CACHE_ENTRIES = 4
 
-
-def clear_meta_cache() -> None:
-    _META_CACHE.clear()
-
-
-def _values_meta_cached(spark, path, lin_rows, files):
+def _values_meta(tbl, columns) -> dict:
     """{column: {(run_id, bucket, chunk): (n_rows, lo, hi, nulls,
-    sum)}} for every committed values block — exact Python ints (no
-    float64 round-trip: sums/bounds may exceed 2**53), or None when
-    the table's metadata exceeds the driver-side cap."""
-    key = (os.path.abspath(path), tuple(sorted(lin_rows)))
-    if key in _META_CACHE:
-        _META_CACHE.move_to_end(key)
-        return _META_CACHE[key]
-    blocks_p, _, _ = _paths(path)
-    use = [f for f in files if f["column"] != METRICS_COLUMN]
-    paths = [posixpath.join(blocks_p, f["path"]) for f in use]
+    sum)}} for the ``values`` rows of ``columns`` among a slice's
+    block rows — exact Python ints from the chunk metas (no float64
+    round-trip: sums/bounds may exceed 2**53)."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    t = tbl.filter(pc.and_(
+        pc.equal(tbl.column("component"), "values"),
+        pc.is_in(tbl.column("column"),
+                 value_set=pa.array(sorted(columns), pa.string()))))
     by_col: dict = {}
-    if paths:
-        lin_df = spark.createDataFrame(sorted(set(lin_rows)),
-                                       "bucket int, run_id string")
-        rows = (
-            spark.read.schema(BLOCK_DDL).parquet(*paths)
-            .filter(F.col("component") == "values")
-            .join(F.broadcast(lin_df), ["bucket", "run_id"],
-                  "left_semi")
-            .select(
-                "run_id", "bucket", "chunk", "column", "n_rows",
-                F.get_json_object("meta", "$.lo").cast("long")
-                .alias("lo"),
-                F.get_json_object("meta", "$.hi").cast("long")
-                .alias("hi"),
-                F.get_json_object("meta", "$.nulls").cast("long")
-                .alias("nulls"),
-                F.get_json_object("meta", "$.sum").cast("long")
-                .alias("sum"),
-            )
-            .limit(_META_CACHE_MAX_ROWS + 1)
-            .collect()
-        )
-        if len(rows) > _META_CACHE_MAX_ROWS:
-            by_col = None
-        else:
-            for r in rows:
-                by_col.setdefault(r["column"], {})[
-                    (r["run_id"], int(r["bucket"]), int(r["chunk"]))
-                ] = (int(r["n_rows"]),
-                     None if r["lo"] is None else int(r["lo"]),
-                     None if r["hi"] is None else int(r["hi"]),
-                     None if r["nulls"] is None else int(r["nulls"]),
-                     None if r["sum"] is None else int(r["sum"]))
-    _META_CACHE[key] = by_col
-    while len(_META_CACHE) > _META_CACHE_ENTRIES:
-        _META_CACHE.popitem(last=False)
+    for rid, b, c, col, n, meta in zip(*(
+            t.column(k).to_pylist() for k in
+            ("run_id", "bucket", "chunk", "column", "n_rows", "meta"))):
+        m = json.loads(meta or "{}")
+        by_col.setdefault(col, {})[(rid, b, c)] = (n, *(
+            None if m.get(f) is None else int(m[f])
+            for f in ("lo", "hi", "nulls", "sum")))
     return by_col
+
+
+def _n_values(tbl, column: str) -> int:
+    """How many ``values`` chunks of ``column`` a slice holds."""
+    import pyarrow.compute as pc
+
+    return tbl.filter(pc.and_(
+        pc.equal(tbl.column("column"), column),
+        pc.equal(tbl.column("component"), "values"))).num_rows
+
+
+def _restrict(by_col: dict, keys) -> dict:
+    """``by_col`` (_values_meta) cut to the chunks ``keys``: the meta
+    a slice hands the driver for its partial chunks."""
+    return {c: {k: m[k] for k in keys if k in m}
+            for c, m in by_col.items()}
 
 
 # Driver-side decode cap for the partial-chunk fallback: past this
@@ -156,7 +122,7 @@ _DRIVER_DECODE_MAX_VALUES = 1 << 21
 def _driver_chunk_values(path, files, columns, keys):
     """Driver-side decode of the ``values`` component of a SMALL chunk
     set for int-lane columns: {column: {key: int64 ndarray}} with key =
-    (run_id, bucket, chunk). Caller guarantees (via the cached meta)
+    (run_id, bucket, chunk). Caller guarantees (via the chunk metas)
     that every requested chunk has zero nulls — the null-fill defaults
     inside ``values`` are then real data and no validity component is
     needed. Returns None when any requested chunk's block row cannot
@@ -209,10 +175,11 @@ def _driver_chunk_values(path, files, columns, keys):
 
 def _driver_partial_keys_ok(by_col, involved, keys):
     """Can the driver decode these partial chunks exactly? Every
-    involved column's chunk must be present in the cached meta with a
-    KNOWN ZERO null count (values are then null-fill-free), and the
-    total stored values must stay under the driver cap. Returns the
-    total row count, or None when ineligible."""
+    involved column's chunk must be present in ``by_col`` (the partial
+    chunks' metas, _values_meta) with a KNOWN ZERO null count (values
+    are then null-fill-free), and the total stored values must stay
+    under the driver cap. Returns the total row count, or None when
+    ineligible."""
     total = 0
     for k in keys:
         for c in involved:
@@ -233,8 +200,7 @@ def _driver_partial_agg(path, files, column, by_col, zf, keys):
     [lo, hi] window test); None -> caller uses the Spark path."""
     import numpy as np
 
-    if any(kind != "range" or len(bounds) != 1 for kind, _c, bounds, _e
-           in zf):
+    if not _pure_ranges(zf):
         return None
     involved = {column} | {c for _k, c, _b, _e in zf}
     total = _driver_partial_keys_ok(by_col, involved, keys)
@@ -275,74 +241,64 @@ def _driver_partial_agg(path, files, column, by_col, zf, keys):
             "mx": mx}
 
 
-def _zone_int_filters(schema, manifest, filts):
-    """Normalize the filter list for the cached-meta planner: a list
-    of (kind, col, storage-int bounds) iff EVERY filter is an
-    int-lane zone range/in on an unencrypted column (the only shapes
-    the cached (lo, hi, nulls) tuple can answer) — else None and the
-    caller stays on the distributed plan (blooms, string/float zones,
-    disjunctions, encrypted envelopes)."""
-    enc = set(manifest.get("encrypted_columns", []))
+def _pure_ranges(zf) -> bool:
+    """Is every filter a single int-zone range? The driver decode of
+    partial chunks then applies the exact residual itself (the stored
+    [lo, hi] window test)."""
+    return all(f is not None and f[0] == "range" and len(f[2]) == 1
+               for f in zf)
+
+
+def _cover_filters(schema, manifest, filts) -> list:
+    """Per filter, the cover test's normalized form: (kind, col,
+    storage-int bounds, in_exact) for an int-lane zone range/in — the
+    only shapes a chunk's (lo, hi, nulls) can prove covered — else
+    None (blooms, string/float zones, disjunctions: pruning only, their
+    survivors are partial)."""
     out = []
     for kind, spec in filts:
-        if kind not in ("range", "in"):
-            return None
-        nf = _normalize_filter(schema, manifest, kind, spec,
-                               make_residual=False)
-        if nf["kind"] != "zone" or nf["lane"] != "int" \
-                or nf["col"] in enc:
-            return None
+        nf = None if kind not in ("range", "in") else _normalize_filter(
+            schema, manifest, kind, spec, make_residual=False)
         out.append((kind, nf["col"],
                     [(int(a), int(b)) for a, b in nf["bounds"]],
-                    nf.get("in_exact", True)))
+                    nf.get("in_exact", True))
+                   if nf is not None and nf["kind"] == "zone"
+                   and nf["lane"] == "int" else None)
     return out
 
 
-def _chunk_filter_state(by_col, key, zf):
-    """(pruned, covered) for one chunk under the normalized int-zone
-    filters — THE shared prune/cover decision of the cached planners
-    (scalar and grouped), so the rule can never diverge between them.
-    survive = every filter's zone overlaps a bound OR the filter
-    column has no stats; covered = every filter's zone sits inside
-    one gap-free bound with zero nulls (in_exact gates the hull
-    case)."""
-    covered = True
-    for kind, fcol, bounds, exact in zf:
+def _chunk_covered(by_col, key, zf) -> bool:
+    """Does every filter provably pass every row of one surviving
+    chunk? THE cover decision of the scalar and grouped folds, so the
+    rule can never diverge between them: each filter is an int-zone
+    range/in whose column's zone in the chunk sits inside one gap-free
+    bound (in_exact gates the hull case) with zero nulls. A chunk
+    whose filter column has no stats is never covered."""
+    for f in zf:
+        if f is None:
+            return False
+        _kind, fcol, bounds, exact = f
         fr = by_col.get(fcol, {}).get(key)
-        flo, fhi, fnl = (fr[1], fr[2], fr[3]) if fr \
-            else (None, None, None)
-        if flo is None or fhi is None:
-            covered = False  # no stats: survives, never covered
-            continue
-        if not any(fhi >= b_lo and flo <= b_hi
-                   for b_lo, b_hi in bounds):
-            return True, False
-        c_ok = exact and any(flo >= b_lo and fhi <= b_hi
-                             for b_lo, b_hi in bounds)
-        covered = covered and c_ok and fnl == 0
-    return False, covered
+        if fr is None or fr[1] is None or fr[2] is None or fr[3] != 0:
+            return False
+        if not (exact and any(fr[1] >= b_lo and fr[2] <= b_hi
+                              for b_lo, b_hi in bounds)):
+            return False
+    return True
 
 
-def _agg_from_meta(by_col, column, zf):
-    """The covered/partial chunk split computed driver-side from the
-    cached meta — the same decision the distributed pivot makes,
-    expression for expression (survive = every filter's zone overlaps
-    a bound OR the filter column has no stats; covered = every
-    filter's zone sits inside a bound with zero nulls; meta-ok =
-    covered AND the agg column's nulls are known AND its sum is known
-    or the chunk is all-null). Exact Python-int arithmetic
-    throughout. Returns (meta-side totals, partial key list,
-    chunks_total)."""
-    acol = by_col.get(column, {})
-    n_total = len(acol)
+def _agg_from_meta(by_col, column, zf) -> dict:
+    """The covered/partial split of one slice's surviving chunks
+    (``by_col``: their metas, _values_meta): meta-ok = covered
+    (_chunk_covered) AND the agg column's nulls are known AND its sum
+    is known or the chunk is all-null. Exact Python-int arithmetic
+    throughout. Returns the meta-side totals, the partial chunk keys
+    and their metas."""
     rows = nonnull = total_sum = n_meta = 0
     mn = mx = None
     partial = []
-    for key, (n, lo, hi, nulls, s) in acol.items():
-        pruned, covered = _chunk_filter_state(by_col, key, zf)
-        if pruned:
-            continue
-        if covered and nulls is not None \
+    for key, (n, lo, hi, nulls, s) in by_col.get(column, {}).items():
+        if _chunk_covered(by_col, key, zf) and nulls is not None \
                 and (s is not None or nulls == n):
             n_meta += 1
             rows += n
@@ -356,7 +312,36 @@ def _agg_from_meta(by_col, column, zf):
             partial.append(key)
     return {"rows": rows, "nonnull": nonnull, "sum": total_sum,
             "min": mn, "max": mx, "n_meta": n_meta,
-            "partial": partial, "n_total": n_total}
+            "partial": partial, "meta": _restrict(by_col, partial)}
+
+
+def _merge_agg(parts: list) -> dict:
+    """The slices' _agg_from_meta partials (with ``n_total``) merged."""
+    out = {"rows": 0, "nonnull": 0, "sum": 0, "min": None, "max": None,
+           "n_meta": 0, "n_total": 0, "partial": [], "meta": {}}
+    for p in parts:
+        for k in ("rows", "nonnull", "sum", "n_meta", "n_total"):
+            out[k] += p[k]
+        for k, better in (("min", min), ("max", max)):
+            if p[k] is not None:
+                out[k] = p[k] if out[k] is None else better(out[k], p[k])
+        out["partial"] += p["partial"]
+        for c, m in p["meta"].items():
+            out["meta"].setdefault(c, {}).update(m)
+    return out
+
+
+def _fold_group(acc: list, n, nonnull, s, lo, hi) -> None:
+    """Fold a chunk's (or a group partial's) counts into a group
+    accumulator [n_rows, nonnull, sum, min, max]; a None sum or bound
+    adds nothing."""
+    acc[0] += n
+    acc[1] += nonnull
+    if s is not None:
+        acc[2] = s if acc[2] is None else acc[2] + s
+    if lo is not None:
+        acc[3] = lo if acc[3] is None or lo < acc[3] else acc[3]
+        acc[4] = hi if acc[4] is None or hi > acc[4] else acc[4]
 
 
 def _storage_to_logical(col, dt):
@@ -464,7 +449,7 @@ def aggregate_encoded(
                 else int(x)) if isinstance(dt, T.DecimalType) \
             else int(x)
 
-    lin_rows, files = snap.lin_rows(), snap.files
+    files = snap.files
     involved = set([column] + fcols)
     enc_cols = set(manifest.get("encrypted_columns", []))
     if snap.deletes or (involved & enc_cols) \
@@ -477,158 +462,46 @@ def aggregate_encoded(
                    path="decode")
         return out
 
-    # ---- cached-meta planner: when every filter is an int-zone
-    # range/in and the table's values-block metadata fits the driver
-    # cache, the covered/partial split costs ZERO Spark jobs after
-    # the first call against this commit state (the repeat-dashboard
-    # pattern: many small aggregates over one snapshot)
-    zf = _zone_int_filters(schema, manifest, filts)
-    by_col = _values_meta_cached(spark, path, lin_rows, files) \
-        if zf is not None else None
-    if by_col is not None:
-        r2 = _agg_from_meta(by_col, column, zf)
-        m = {"c": r2["n_meta"], "rows": r2["rows"],
-             "nonnull": r2["nonnull"], "s": r2["sum"],
-             "mn": r2["min"], "mx": r2["max"]}
-        n_partial = len(r2["partial"])
-        n_total = r2["n_total"]
-        n_scanned = r2["n_meta"] + n_partial
-        if n_partial:
-            # a plain key list: read_encoded prunes the decode's FILE
-            # plan to the touched buckets before scanning
-            partial = sorted(r2["partial"])
-            if not elements:
-                # SMALL boundary sets decode driver-side: the same
-                # codec decoders, pyarrow file reads, exact residual —
-                # zero Spark jobs instead of a 2-stage decode job
-                # whose fixed latency dwarfs the handful of chunks
-                # (size-capped; anything big stays distributed)
-                d = _driver_partial_agg(path, files, column, by_col,
-                                        zf, partial)
-                if d is not None:
-                    m = {"c": m["c"], "rows": m["rows"] + d["rows"],
-                         "nonnull": m["nonnull"] + d["nonnull"],
-                         "s": (m["s"] or 0) + d["s"],
-                         "mn": d["mn"] if m["mn"] is None or (
-                             d["mn"] is not None and d["mn"] < m["mn"])
-                         else m["mn"],
-                         "mx": d["mx"] if m["mx"] is None or (
-                             d["mx"] is not None and d["mx"] > m["mx"])
-                         else m["mx"]}
-                    return _finish_scalar_agg(
-                        spark, path, column, filts_kw, scale, elements,
-                        dict(m, c=r2["n_meta"]), 0, None, n_total,
-                        n_scanned, _to_logical,
-                        chunks_decoded=n_partial)
-        return _finish_scalar_agg(
-            spark, path, column, filts_kw, scale, elements, m,
-            n_partial, partial if n_partial else None, n_total,
-            n_scanned, _to_logical)
+    # ---- one metadata pass: each slice prunes like the readers and
+    # splits its survivors into covered and partial chunks
+    zf = _cover_filters(schema, manifest, filts)
+    cover_cols = {column} | {f[1] for f in zf if f is not None}
 
-    blocks = snap.blocks_df(spark, columns_needed=involved).persist()
-    try:
-        keys = ["run_id", "bucket", "chunk"]
-        # ---- survivor intersection (the readers' own pruning)
-        surv = None
-        for kind, spec in filts:
-            s, _res = _filter_survivors(blocks, schema, manifest, kind,
-                                        spec,
-                                        encryption_key=encryption_key)
-            surv = s if surv is None else surv.join(F.broadcast(s),
-                                                    keys, "inner")
-        # ---- one meta pivot per surviving chunk
-        vals = blocks.filter((F.col("component") == "values")
-                             & F.col("column").isin(list(involved)))
-        if surv is not None:
-            vals = vals.join(F.broadcast(surv), keys, "left_semi")
+    def fold(blocks, kept):
+        return dict(_agg_from_meta(_values_meta(kept, cover_cols),
+                                   column, zf),
+                    n_total=_n_values(blocks, column))
 
-        def _j(c, fld, t="long"):
-            return F.max(F.when(
-                F.col("column") == c,
-                F.get_json_object("meta", f"$.{fld}").cast(t)))
-
-        aggs = [
-            F.max(F.when(F.col("column") == column,
-                         F.col("n_rows"))).alias("n"),
-            _j(column, "lo").alias("a_lo"),
-            _j(column, "hi").alias("a_hi"),
-            _j(column, "nulls").alias("a_nulls"),
-            _j(column, "sum").alias("a_sum"),
-        ]
-        cov = F.lit(True)
-        for i, (kind, spec) in enumerate(filts):
-            if kind == "or":
-                cov = cov & F.lit(False)  # disjunction: never covers
-                continue
-            nf = _normalize_filter(schema, manifest, kind, spec,
-                                   make_residual=False)
-            c = nf["col"]
-            if nf["kind"] != "zone" or nf["lane"] != "int" \
-                    or kind not in ("range", "in"):
-                cov = cov & F.lit(False)  # bloom/str/float: partial
-                continue
-            aggs += [_j(c, "lo").alias(f"f{i}_lo"),
-                     _j(c, "hi").alias(f"f{i}_hi"),
-                     _j(c, "nulls").alias(f"f{i}_nulls")]
-            lo, hi, nl = (F.col(f"f{i}_lo"), F.col(f"f{i}_hi"),
-                          F.col(f"f{i}_nulls"))
-            if kind == "range":
-                (flo, fhi), = nf["bounds"]
-                c_ok = (lo >= F.lit(int(flo))) & (hi <= F.lit(int(fhi)))
-            elif not nf.get("in_exact", True):
-                # hull-collapsed probe list: pruning only, no coverage
-                c_ok = F.lit(False)
-            else:  # in: chunk inside ONE gap-free merged probe range
-                c_ok = F.lit(False)
-                for b_lo, b_hi in nf["bounds"]:
-                    c_ok = c_ok | ((lo >= F.lit(int(b_lo)))
-                                   & (hi <= F.lit(int(b_hi))))
-            cov = cov & lo.isNotNull() & c_ok & (nl == 0)
-        per_chunk = vals.groupBy(*keys).agg(*aggs)
-        # metadata-answerable: covered by every filter AND the agg
-        # column's own stats are complete (nulls known; sum known or
-        # the chunk is all-null, contributing 0)
-        meta_ok = (cov & F.col("a_nulls").isNotNull()
-                   & (F.col("a_sum").isNotNull()
-                      | (F.col("a_nulls") == F.col("n"))))
-        per_chunk = per_chunk.withColumn("meta_ok", meta_ok).persist()
-        # BOTH sides' aggregates in ONE job (the fast path's cost is
-        # fixed small-job latency, not data)
-        zero = {"c": 0, "rows": 0, "nonnull": 0, "s": None,
-                "mn": None, "mx": None}
-        sides = {bool(r["meta_ok"]): r for r in
-                 per_chunk.groupBy("meta_ok").agg(
-                     F.count(F.lit(1)).alias("c"),
-                     F.sum("n").alias("rows"),
-                     F.sum(F.col("n") - F.col("a_nulls"))
-                     .alias("nonnull"),
-                     F.sum(F.col("a_sum").cast("decimal(38,0)"))
-                     .alias("s"),
-                     F.min("a_lo").alias("mn"),
-                     F.max("a_hi").alias("mx"),
-                 ).collect()}
-        m = sides.get(True, zero)
-        n_partial = int(sides.get(False, zero)["c"] or 0)
-        if n_partial:
-            # collect the partial keys while blocks is cached: the
-            # boundary decode takes them as a chunk allow-list
-            partial = [tuple(r) for r in per_chunk.filter(
-                ~F.col("meta_ok")).select(*keys).collect()]
-        n_scanned = int(m["c"] or 0) + n_partial
-        n_total = n_scanned if not filts else int(blocks.filter(
-            (F.col("component") == "values")
-            & (F.col("column") == column)).count())
-    finally:
-        blocks.unpersist()
-        try:
-            per_chunk.unpersist()
-        except NameError:
-            pass
-
+    r2 = _merge_agg(chunk_index(spark, snap, involved, fold))
+    m = {"c": r2["n_meta"], "rows": r2["rows"], "nonnull": r2["nonnull"],
+         "s": r2["sum"], "mn": r2["min"], "mx": r2["max"]}
+    partial = sorted(r2["partial"])
+    n_total, n_scanned = r2["n_total"], r2["n_meta"] + len(partial)
+    if partial and not elements:
+        # SMALL boundary sets decode driver-side: the same codec
+        # decoders, pyarrow file reads, exact residual — zero Spark
+        # jobs instead of a 2-stage decode job whose fixed latency
+        # dwarfs the handful of chunks (size-capped; anything big
+        # stays distributed)
+        d = _driver_partial_agg(path, files, column, r2["meta"], zf,
+                                partial)
+        if d is not None:
+            m = {"c": m["c"], "rows": m["rows"] + d["rows"],
+                 "nonnull": m["nonnull"] + d["nonnull"],
+                 "s": m["s"] + d["s"],
+                 "mn": d["mn"] if m["mn"] is None or (
+                     d["mn"] is not None and d["mn"] < m["mn"])
+                 else m["mn"],
+                 "mx": d["mx"] if m["mx"] is None or (
+                     d["mx"] is not None and d["mx"] > m["mx"])
+                 else m["mx"]}
+            return _finish_scalar_agg(
+                spark, path, column, filts_kw, scale, elements, m, 0,
+                None, n_total, n_scanned, _to_logical,
+                chunks_decoded=len(partial))
     return _finish_scalar_agg(
-        spark, path, column, filts_kw, scale, elements, m, n_partial,
-        partial if n_partial else None, n_total, n_scanned,
-        _to_logical)
+        spark, path, column, filts_kw, scale, elements, m, len(partial),
+        partial or None, n_total, n_scanned, _to_logical)
 
 
 def _finish_scalar_agg(spark, path, column, filts_kw, scale, elements,
@@ -636,8 +509,7 @@ def _finish_scalar_agg(spark, path, column, filts_kw, scale, elements,
                        _to_logical, chunks_decoded=None):
     """Shared tail of aggregate_encoded: merge the meta side with the
     exact decode of the partial chunk set (if any) and assemble the
-    result dict. ``m`` is the meta-side totals (a collected Row on
-    the distributed plan, a plain dict on the cached one).
+    result dict. ``m``: the merged meta-side totals.
     ``chunks_decoded``: already-merged driver-side decode count (the
     partial set was folded into ``m`` with zero Spark jobs; telemetry
     still reports those chunks as decoded)."""
@@ -753,7 +625,7 @@ def aggregate_encoded_grouped(
             group_col, "n_rows", "nonnull",
             F.col("sum").cast("long").alias("sum"), "min", "max")
 
-    lin_rows, files = snap.lin_rows(), snap.files
+    files = snap.files
     involved = set([group_col, column] + fcols)
     enc_cols = set(manifest.get("encrypted_columns", []))
     if snap.deletes or (involved & enc_cols) \
@@ -763,214 +635,103 @@ def aggregate_encoded_grouped(
         return _finish(_group_agg(read_encoded(
             spark, path, columns=[group_col, column], **filts_kw)))
 
-    # ---- cached-meta planner (same gate as aggregate_encoded): the
-    # per-group covered/partial split runs driver-side, the surviving
-    # meta groups become a LocalRelation, and only straddler chunks
-    # cost a Spark job
-    zf = _zone_int_filters(schema, manifest, filts)
-    by_col = _values_meta_cached(spark, path, lin_rows, files) \
-        if zf is not None else None
-    if by_col is not None:
-        acol = by_col.get(column, {})
+    # ---- one metadata pass (as in aggregate_encoded): each slice
+    # folds its covered single-group chunks into per-group totals; the
+    # merged groups become a LocalRelation, and only straddler chunks
+    # can cost a Spark job
+    zf = _cover_filters(schema, manifest, filts)
+    cover_cols = {group_col, column} | {f[1] for f in zf if f is not None}
+
+    def fold(blocks, kept):
+        by_col = _values_meta(kept, cover_cols)
         gmeta = by_col.get(group_col, {})
         groups: dict = {}  # g storage-int -> [n, nonnull, sum, mn, mx]
-        partial_keys = []
+        partial = []
         n_meta = 0
-        for key, (n, lo, hi, nulls, s) in acol.items():
-            pruned, covered = _chunk_filter_state(by_col, key, zf)
-            if pruned:
-                continue
+        for key, (n, lo, hi, nulls, s) in by_col.get(column, {}).items():
             g = gmeta.get(key)
             g_ok = (g is not None and g[1] is not None
                     and g[1] == g[2] and g[3] == 0)
-            if covered and g_ok and nulls is not None \
-                    and (s is not None or nulls == n):
+            if _chunk_covered(by_col, key, zf) and g_ok \
+                    and nulls is not None and (s is not None or nulls == n):
                 n_meta += 1
-                acc = groups.setdefault(g[1], [0, 0, None, None, None])
-                acc[0] += n
-                acc[1] += n - nulls
-                if s is not None:
-                    acc[2] = s if acc[2] is None else acc[2] + s
-                if lo is not None:
-                    acc[3] = lo if acc[3] is None or lo < acc[3] \
-                        else acc[3]
-                    acc[4] = hi if acc[4] is None or hi > acc[4] \
-                        else acc[4]
+                _fold_group(groups.setdefault(g[1], [0, 0, None, None,
+                                                     None]),
+                            n, n - nulls, s, lo, hi)
             else:
-                partial_keys.append(key)
-        if stats_out is not None:
-            stats_out.update(
-                chunks_total=len(acol), chunks_meta=n_meta,
-                chunks_decoded=len(partial_keys),
-                path="meta+decode" if partial_keys else "meta")
-        if partial_keys and not any(
-                kind != "range" or len(b) != 1 for kind, _c, b, _e
-                in zf):
-            # SMALL straddler sets (the day-boundary chunks of a
-            # clustered table) decode driver-side and fold straight
-            # into the meta group map — zero Spark jobs instead of a
-            # decode job plus a merge shuffle (size-capped; big
-            # straddler sets stay distributed)
-            pk = sorted(partial_keys)
-            involved2 = {group_col, column} | {c for _k, c, _b, _e
-                                               in zf}
-            total = _driver_partial_keys_ok(by_col, involved2, pk)
-            mag = max((max(abs(int(r[1])), abs(int(r[2])))
-                       for r in (by_col[column][k] for k in pk)
-                       if r[1] is not None), default=0)
-            if total is not None and not (
-                    mag and mag.bit_length()
-                    + max(total - 1, 1).bit_length() + 1 >= 63):
-                vals = _driver_chunk_values(path, files, involved2, pk)
-                if vals is not None:
-                    import numpy as np
-                    for k in pk:
-                        mask = None
-                        for _kind, c, bounds, _e in zf:
-                            (flo, fhi), = bounds
-                            v = vals[c][k]
-                            mm = (v >= flo) & (v <= fhi)
-                            mask = mm if mask is None else (mask & mm)
-                        gv = vals[group_col][k]
-                        av = vals[column][k]
-                        if mask is not None:
-                            gv, av = gv[mask], av[mask]
-                        for g in np.unique(gv):
-                            sel = av[gv == g]
-                            acc = groups.setdefault(
-                                int(g), [0, 0, None, None, None])
-                            acc[0] += len(sel)
-                            acc[1] += len(sel)
-                            s = int(sel.sum(dtype=np.int64))
-                            acc[2] = s if acc[2] is None else acc[2] + s
-                            lo2, hi2 = int(sel.min()), int(sel.max())
-                            if acc[3] is None or lo2 < acc[3]:
-                                acc[3] = lo2
-                            if acc[4] is None or hi2 > acc[4]:
-                                acc[4] = hi2
-                    partial_keys = []
-        meta_g = spark.createDataFrame(
-            [(g, a[0], a[1],
-              None if a[2] is None else Decimal(a[2]), a[3], a[4])
-             for g, a in sorted(groups.items())],
-            "g_lo long, n_rows long, nonnull long, "
-            "sum decimal(38,0), min long, max long",
-        ).select(
-            _storage_to_logical(F.col("g_lo"), gdt).alias(group_col),
-            "n_rows", "nonnull", "sum", "min", "max")
-        if not partial_keys:
-            return _finish(meta_g)
-        dec_g = _group_agg(read_encoded(
-            spark, path, columns=[group_col, column],
-            **dict(filts_kw, _chunk_subset=sorted(partial_keys))))
-        merged = meta_g.unionByName(dec_g).groupBy(group_col).agg(
-            F.sum("n_rows").alias("n_rows"),
-            F.sum("nonnull").alias("nonnull"),
-            F.sum("sum").alias("sum"),
-            F.min("min").alias("min"), F.max("max").alias("max"),
-        )
-        return _finish(merged)
+                partial.append(key)
+        return {"groups": groups, "partial": partial, "n_meta": n_meta,
+                "n_total": _n_values(blocks, column),
+                "meta": _restrict(by_col, partial)}
 
-    blocks = snap.blocks_df(spark, columns_needed=involved).persist()
-    try:
-        keys = ["run_id", "bucket", "chunk"]
-        surv = None
-        for kind, spec in filts:
-            s, _res = _filter_survivors(blocks, schema, manifest, kind,
-                                        spec,
-                                        encryption_key=encryption_key)
-            surv = s if surv is None else surv.join(F.broadcast(s),
-                                                    keys, "inner")
-        vals = blocks.filter((F.col("component") == "values")
-                             & F.col("column").isin(list(involved)))
-        if surv is not None:
-            vals = vals.join(F.broadcast(surv), keys, "left_semi")
-
-        def _j(c, fld):
-            return F.max(F.when(
-                F.col("column") == c,
-                F.get_json_object("meta", f"$.{fld}").cast("long")))
-
-        aggs = [
-            F.max(F.when(F.col("column") == column,
-                         F.col("n_rows"))).alias("n"),
-            _j(column, "lo").alias("a_lo"),
-            _j(column, "hi").alias("a_hi"),
-            _j(column, "nulls").alias("a_nulls"),
-            _j(column, "sum").alias("a_sum"),
-            _j(group_col, "lo").alias("g_lo"),
-            _j(group_col, "hi").alias("g_hi"),
-            _j(group_col, "nulls").alias("g_nulls"),
-        ]
-        cov = F.lit(True)
-        for i, (kind, spec) in enumerate(filts):
-            if kind == "or":
-                cov = cov & F.lit(False)  # disjunction: never covers
-                continue
-            nf = _normalize_filter(schema, manifest, kind, spec,
-                                   make_residual=False)
-            c = nf["col"]
-            if nf["kind"] != "zone" or nf["lane"] != "int" \
-                    or kind not in ("range", "in"):
-                cov = cov & F.lit(False)
-                continue
-            aggs += [_j(c, "lo").alias(f"f{i}_lo"),
-                     _j(c, "hi").alias(f"f{i}_hi"),
-                     _j(c, "nulls").alias(f"f{i}_nulls")]
-            lo, hi, nl = (F.col(f"f{i}_lo"), F.col(f"f{i}_hi"),
-                          F.col(f"f{i}_nulls"))
-            if kind == "range":
-                (flo, fhi), = nf["bounds"]
-                c_ok = (lo >= F.lit(int(flo))) & (hi <= F.lit(int(fhi)))
-            elif not nf.get("in_exact", True):
-                # hull-collapsed probe list: pruning only, no coverage
-                c_ok = F.lit(False)
-            else:  # in: chunk inside ONE gap-free merged probe range
-                c_ok = F.lit(False)
-                for b_lo, b_hi in nf["bounds"]:
-                    c_ok = c_ok | ((lo >= F.lit(int(b_lo)))
-                                   & (hi <= F.lit(int(b_hi))))
-            cov = cov & lo.isNotNull() & c_ok & (nl == 0)
-        meta_ok = (cov
-                   & F.col("g_lo").isNotNull()
-                   & (F.col("g_lo") == F.col("g_hi"))
-                   & (F.col("g_nulls") == 0)
-                   & F.col("a_nulls").isNotNull()
-                   & (F.col("a_sum").isNotNull()
-                      | (F.col("a_nulls") == F.col("n"))))
-        per_chunk = (vals.groupBy(*keys).agg(*aggs)
-                     .withColumn("meta_ok", meta_ok).persist())
-        meta_g = per_chunk.filter("meta_ok").groupBy("g_lo").agg(
-            F.sum("n").alias("n_rows"),
-            F.sum(F.col("n") - F.col("a_nulls")).alias("nonnull"),
-            F.sum(F.col("a_sum").cast("decimal(38,0)")).alias("sum"),
-            F.min("a_lo").alias("min"), F.max("a_hi").alias("max"),
-        ).select(
-            _storage_to_logical(F.col("g_lo"), gdt).alias(group_col),
-            "n_rows", "nonnull", "sum", "min", "max",
-        ).localCheckpoint(eager=True)
-        partial = [tuple(r) for r in per_chunk.filter(
-            ~F.col("meta_ok")).select(*keys).collect()]
-        n_partial = len(partial)
-        if stats_out is not None:
-            stats_out.update(
-                chunks_total=int(blocks.filter(
-                    (F.col("component") == "values")
-                    & (F.col("column") == column)).count()),
-                chunks_meta=int(per_chunk.filter("meta_ok").count()),
-                chunks_decoded=n_partial,
-                path="meta+decode" if n_partial else "meta")
-    finally:
-        blocks.unpersist()
-        try:
-            per_chunk.unpersist()
-        except NameError:
-            pass
-    if not n_partial:
+    groups: dict = {}
+    partial_keys, meta = [], {}
+    n_meta = n_total = 0
+    for p in chunk_index(spark, snap, involved, fold):
+        for g, a in p["groups"].items():
+            _fold_group(groups.setdefault(g, [0, 0, None, None, None]), *a)
+        partial_keys += p["partial"]
+        n_meta += p["n_meta"]
+        n_total += p["n_total"]
+        for c, cm in p["meta"].items():
+            meta.setdefault(c, {}).update(cm)
+    if stats_out is not None:
+        stats_out.update(
+            chunks_total=n_total, chunks_meta=n_meta,
+            chunks_decoded=len(partial_keys),
+            path="meta+decode" if partial_keys else "meta")
+    if partial_keys and _pure_ranges(zf):
+        # SMALL straddler sets (the day-boundary chunks of a
+        # clustered table) decode driver-side and fold straight into
+        # the group map — zero Spark jobs instead of a decode job
+        # plus a merge shuffle (size-capped; big straddler sets stay
+        # distributed)
+        pk = sorted(partial_keys)
+        involved2 = {group_col, column} | {f[1] for f in zf}
+        total = _driver_partial_keys_ok(meta, involved2, pk)
+        mag = max((max(abs(int(r[1])), abs(int(r[2])))
+                   for r in (meta[column][k] for k in pk)
+                   if r[1] is not None), default=0)
+        if total is not None and not (
+                mag and mag.bit_length()
+                + max(total - 1, 1).bit_length() + 1 >= 63):
+            vals = _driver_chunk_values(path, files, involved2, pk)
+            if vals is not None:
+                import numpy as np
+                for k in pk:
+                    mask = None
+                    for _kind, c, bounds, _e in zf:
+                        (flo, fhi), = bounds
+                        v = vals[c][k]
+                        mm = (v >= flo) & (v <= fhi)
+                        mask = mm if mask is None else (mask & mm)
+                    gv = vals[group_col][k]
+                    av = vals[column][k]
+                    if mask is not None:
+                        gv, av = gv[mask], av[mask]
+                    for g in np.unique(gv):
+                        sel = av[gv == g]
+                        _fold_group(
+                            groups.setdefault(int(g),
+                                              [0, 0, None, None, None]),
+                            len(sel), len(sel),
+                            int(sel.sum(dtype=np.int64)),
+                            int(sel.min()), int(sel.max()))
+                partial_keys = []
+    meta_g = spark.createDataFrame(
+        [(g, a[0], a[1],
+          None if a[2] is None else Decimal(a[2]), a[3], a[4])
+         for g, a in sorted(groups.items())],
+        "g_lo long, n_rows long, nonnull long, "
+        "sum decimal(38,0), min long, max long",
+    ).select(
+        _storage_to_logical(F.col("g_lo"), gdt).alias(group_col),
+        "n_rows", "nonnull", "sum", "min", "max")
+    if not partial_keys:
         return _finish(meta_g)
     dec_g = _group_agg(read_encoded(
         spark, path, columns=[group_col, column],
-        **dict(filts_kw, _chunk_subset=partial)))
+        **dict(filts_kw, _chunk_subset=sorted(partial_keys))))
     merged = meta_g.unionByName(dec_g).groupBy(group_col).agg(
         F.sum("n_rows").alias("n_rows"),
         F.sum("nonnull").alias("nonnull"),
@@ -1063,34 +824,23 @@ def quantile_encoded(
         finally:
             df.unpersist()
 
-    lin_rows, files = snap.lin_rows(), snap.files
+    files = snap.files
     if snap.deletes or column in manifest.get("encrypted_columns", []) \
             or _evolution_fill_columns(files, {column}):
         return _fallback()
 
-    by_col = _values_meta_cached(spark, path, lin_rows, files)
-    if by_col is not None:
-        # cached-meta stats (shared with aggregate_encoded): the
-        # rank-search plan costs zero Spark jobs after the first
-        # call against this commit state
-        stats = [
-            {"run_id": k[0], "bucket": k[1], "chunk": k[2],
-             "lo": lo, "hi": hi,
-             "nn": None if nulls is None else n - nulls}
-            for k, (n, lo, hi, nulls, _s)
-            in by_col.get(column, {}).items()
-        ]
-    else:
-        blocks = snap.blocks_df(spark, columns_needed={column})
-        stats = blocks.filter((F.col("component") == "values")
-                              & (F.col("column") == column)).select(
-            "run_id", "bucket", "chunk",
-            F.get_json_object("meta", "$.lo").cast("long").alias("lo"),
-            F.get_json_object("meta", "$.hi").cast("long").alias("hi"),
-            (F.col("n_rows")
-             - F.get_json_object("meta", "$.nulls").cast("long"))
-            .alias("nn"),
-        ).collect()
+    # one metadata pass over the column's chunk stats (chunk_index:
+    # on the driver, or one task per slice past the cap)
+    acol: dict = {}
+    for p in chunk_index(spark, snap, {column}, lambda blocks, _kept:
+                         _values_meta(blocks, {column}).get(column, {})):
+        acol.update(p)
+    by_col = {column: acol}
+    stats = [
+        {"run_id": k[0], "bucket": k[1], "chunk": k[2],
+         "lo": lo, "hi": hi, "nn": None if nulls is None else n - nulls}
+        for k, (n, lo, hi, nulls, _s) in acol.items()
+    ]
     if any(r["nn"] is None for r in stats):
         return _fallback()  # pre-r5 chunks: null counts unknown
     n = sum(int(r["nn"]) for r in stats)
@@ -1138,7 +888,7 @@ def quantile_encoded(
     cand = {(valued[i]["run_id"], int(valued[i]["bucket"]),
              int(valued[i]["chunk"]))
             for i in np.flatnonzero(decode_set)}
-    if by_col is not None and isinstance(dt, _INT_LANES):
+    if isinstance(dt, _INT_LANES):
         # SMALL candidate windows of a plain int column decode
         # driver-side (same cap and decoders as aggregate_encoded's
         # boundary path): the whole rank search then costs zero Spark

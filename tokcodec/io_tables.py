@@ -58,7 +58,6 @@ from tokcodec.encode import (
     with_bucket,
 )
 from tokcodec.schema import (
-    BLOCK_DDL,
     LAYOUT_VERSION,
     LINEAGE_DDL,
     manifest_schema,
@@ -1239,32 +1238,6 @@ def _evolution_fill_columns(files: list[dict], needed) -> bool:
     )
 
 
-def _blocks_df(spark: SparkSession, path: str, lin: DataFrame,
-               columns_needed=None, files: list[dict] | None = None
-               ) -> DataFrame:
-    """Blocks DataFrame planned lineage -> run manifests -> explicit
-    file paths. ``columns_needed``: projection pushdown — unrequested
-    columns' files never enter the scan at all (reference P3).
-    ``files``: pre-planned run-manifest file rows (avoids re-reading
-    the manifests when the caller already planned them)."""
-    blocks_p, _, _ = _paths(path)
-    if files is None:
-        run_ids = [r.run_id
-                   for r in lin.select("run_id").distinct().collect()]
-        files = _run_files(path, run_ids)
-    if columns_needed is not None:
-        files = [f for f in files if f["column"] in columns_needed]
-    else:
-        files = [f for f in files if f["column"] != METRICS_COLUMN]
-    paths = [posixpath.join(blocks_p, f["path"]) for f in files]
-    if not paths:
-        return spark.createDataFrame([], BLOCK_DDL)
-    blocks = spark.read.schema(BLOCK_DDL).parquet(*paths)
-    # one lineage row per bucket — broadcast the semi join (a losing
-    # run of a re-encoded bucket may share files' bucket ranges)
-    return blocks.join(F.broadcast(lin), ["bucket", "run_id"], "left_semi")
-
-
 def _expand_uuid_cols(out: DataFrame, uuid_cols) -> DataFrame:
     for c in uuid_cols:
         if c not in out.columns:
@@ -1396,84 +1369,6 @@ def _str_bytes(v) -> bytes:
     raise ValueError(
         f"string/binary zone filter bound must be str or bytes, "
         f"got {type(v).__name__}: {v!r}"
-    )
-
-
-def _str_zone_preds():
-    """(no_stats, overlap(lo_bytes, hi_bytes)) Column builders over the
-    string zone bounds in block meta: ``slo``/``shi`` are
-    base64-truncated min/max (see blocks._string_zone_bounds);
-    ``shi_inf`` marks a max whose truncation has no finite upper bound.
-    Comparison is Spark binary ordering = unsigned lexicographic, the
-    same order the bounds were computed in."""
-    slo = F.unbase64(F.get_json_object("meta", "$.slo"))
-    shi = F.unbase64(F.get_json_object("meta", "$.shi"))
-    shi_inf = F.get_json_object("meta", "$.shi_inf").isNotNull()
-    no_stats = slo.isNull() & ~shi_inf
-
-    def overlap(lo_b: bytes, hi_b: bytes):
-        upper_ok = shi_inf | shi.isNull() | (shi >= F.lit(lo_b))
-        return upper_ok & (slo <= F.lit(hi_b))
-
-    return no_stats, overlap
-
-
-def _bloom_survivors(blocks: DataFrame, col: str, value,
-                     encryption_key: bytes | None = None) -> DataFrame:
-    """(run_id, bucket, chunk)s whose bloom might contain ``value`` —
-    or ANY value when a list is passed (contains_filter's banned-token
-    list); chunks of ``col`` without a bloom block always survive
-    (mixed old/new runs stay correct). The membership test runs
-    executor-side, vectorized over chunk blooms — nothing is
-    collected. Encrypted columns' bloom payloads (parquet encrypts
-    bloom filter modules of encrypted columns) are decrypted in the
-    task before the probe."""
-    import pyarrow as pa
-
-    from tokcodec.bloom import bloom_params, bloom_test_arrow
-
-    vals = value if isinstance(value, list) else [value]
-    params = [bloom_params(v.encode("utf-8") if isinstance(v, str)
-                           else bytes(v)) for v in vals]
-    keys = ["run_id", "bucket", "chunk"]
-
-    def test(batches):
-        from tokcodec.crypto import decrypt_block_row, is_encrypted
-
-        for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            pay = tbl.column("payload")
-            if any('"enc":"gcm"' in m
-                   for m in tbl.column("meta").to_pylist()):
-                recs = tbl.to_pylist()
-                for r in recs:
-                    if is_encrypted(r):
-                        decrypt_block_row(encryption_key, r)
-                pay = pa.array([r["payload"] for r in recs], pa.binary())
-            hit = bloom_test_arrow(pay, *params[0])
-            for g1, g2 in params[1:]:  # ANY-of: OR across probes
-                hit |= bloom_test_arrow(pay, g1, g2)
-            yield pa.RecordBatch.from_arrays(
-                [tbl.column(k).combine_chunks() for k in keys]
-                + [pa.array(hit)],
-                names=keys + ["hit"],
-            )
-
-    blooms = blocks.filter(
-        (F.col("column") == col) & (F.col("component") == "bloom")
-    ).select(*keys, "column", "component", "meta", "payload")
-    hits = blooms.mapInArrow(
-        test, "run_id string, bucket int, chunk int, hit boolean"
-    )
-    # no distinct: one "values" block row per (run_id, bucket, chunk,
-    # column) — already unique (a distinct costs a shuffle)
-    vals = blocks.filter(
-        (F.col("column") == col) & (F.col("component") == "values")
-    ).select(*keys)
-    return (
-        vals.join(hits, keys, "left")
-        .filter(F.col("hit").isNull() | F.col("hit"))
-        .select(*keys)
     )
 
 
@@ -1933,73 +1828,6 @@ def _normalize_filter(schema: T.StructType, manifest: dict,
             "bounds": bounds, "residual": residual}
 
 
-def _filter_survivors(blocks: DataFrame, schema: T.StructType,
-                      manifest: dict, kind: str, spec: tuple,
-                      encryption_key: bytes | None = None
-                      ) -> tuple[DataFrame, object]:
-    """One filter -> (surviving (run_id, bucket, chunk) set, exact
-    residual predicate). Chunks with no stats always survive.
-
-    ``kind='or'``: spec is a LIST of (col, lo, hi) range triples with
-    DISJUNCTIVE semantics (the multi-slab Z-order read: "this window
-    OR that window", possibly over different columns). Survivors =
-    UNION of the branches' survivor sets; residual = OR of the exact
-    branch residuals. The whole disjunction stays ONE conjunct next
-    to the other filters."""
-    if kind == "or":
-        surv, residual = None, F.lit(False)
-        for rf in spec:
-            s, res = _filter_survivors(blocks, schema, manifest,
-                                       "range", tuple(rf),
-                                       encryption_key=encryption_key)
-            residual = residual | res
-            surv = s if surv is None else surv.unionByName(s)
-        # union can duplicate a chunk surviving several branches; the
-        # set is tiny metadata, so one distinct keeps the downstream
-        # intersection joins honest
-        return surv.distinct(), residual
-    nf = _normalize_filter(schema, manifest, kind, spec)
-    col = nf["col"]
-    if nf["kind"] in ("eq", "contains"):
-        # contains probes the column's ELEMENT bloom with the same
-        # machinery (its value is already probe bytes)
-        return (_bloom_survivors(blocks, col, nf["value"],
-                                 encryption_key=encryption_key),
-                nf["residual"])
-    if col in manifest.get("encrypted_columns", []):
-        # encrypted column: its zone bounds live in the encrypted
-        # emeta envelope (stats redaction, parquet parity) — the
-        # overlap test runs executor-side after a meta-only decrypt
-        return (_zone_survivors_encrypted(blocks, col, nf,
-                                          encryption_key),
-                nf["residual"])
-    if nf["lane"] == "str":
-        no_stats, zover = _str_zone_preds()
-        zpred = F.lit(False)
-        for lo_b, hi_b in nf["bounds"]:
-            zpred = zpred | zover(lo_b, hi_b)
-    else:
-        cast_t = "long" if nf["lane"] == "int" else "double"
-        zlo = F.get_json_object("meta", "$.lo").cast(cast_t)
-        zhi = F.get_json_object("meta", "$.hi").cast(cast_t)
-        no_stats = zlo.isNull() | zhi.isNull()
-        zpred = F.lit(False)
-        for zv_lo, zv_hi in nf["bounds"]:
-            zpred = zpred | ((zhi >= zv_lo) & (zlo <= zv_hi))
-    # zone-map pass: chunks whose stats overlap the predicate — or
-    # carry no stats. All components of a surviving (run_id, bucket,
-    # chunk) are kept so row alignment holds (keyed by run_id too:
-    # multi-epoch appends reuse chunk numbers).
-    # no distinct: exactly ONE "values" block row exists per
-    # (run_id, bucket, chunk, column), so the projection is already
-    # unique — a distinct here costs a shuffle per filter
-    zones = blocks.filter(
-        (F.col("column") == col) & (F.col("component") == "values")
-        & (zpred | no_stats)
-    ).select("run_id", "bucket", "chunk")
-    return zones, nf["residual"]
-
-
 def read_encoded_direct(*args, **kwargs) -> DataFrame:
     """Alias of read_encoded, the one reader (kept for callers of the
     former separate shuffle-free reader)."""
@@ -2043,8 +1871,9 @@ def _direct_file_rows(
 def _meta_zone_hit(meta: dict, nf: dict) -> bool:
     """Does one chunk's (already-decrypted) meta overlap the filter's
     bounds? Chunks with no stats always survive — never a false
-    negative. Shared by the scan task's pruning (_prune_block_table)
-    and the DataFrame-side encrypted-column path."""
+    negative. The zone test of _prune_block_table, for every lane
+    (int, float, and the truncated string bounds, compared as
+    unsigned bytes, the order they were computed in)."""
     import base64 as _b64
 
     if nf["lane"] in ("int", "float"):
@@ -2061,44 +1890,6 @@ def _meta_zone_hit(meta: dict, nf: dict) -> bool:
     shi_b = _b64.b64decode(shi) if shi else None
     return any(((shi_b is None) or (shi_b >= b_lo)) and slo_b <= b_hi
                for b_lo, b_hi in nf["bounds"])
-
-
-def _zone_survivors_encrypted(blocks: DataFrame, col: str, nf: dict,
-                              encryption_key: bytes | None) -> DataFrame:
-    """Zone pruning for an ENCRYPTED column (DataFrame side —
-    explain_scan and the aggregate pivot): the
-    bounds live in the encrypted ``emeta`` envelope, so the overlap
-    test runs executor-side in Python after a meta-only decrypt —
-    the analogue of parquet's encrypted column index. Pruning is
-    preserved WITH the key; without it the read fails fast at the
-    plan-time key check before this runs."""
-    import pyarrow as pa
-
-    keys = ["run_id", "bucket", "chunk"]
-    spec = {k: v for k, v in nf.items() if k != "residual"}
-    rows = blocks.filter(
-        (F.col("column") == col) & (F.col("component") == "values")
-    ).select(*keys, "column", "component", "meta")
-
-    def fn(batches):
-        from tokcodec.crypto import decrypt_block_meta
-
-        for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            hits = [
-                _meta_zone_hit(decrypt_block_meta(encryption_key, r),
-                               spec)
-                for r in tbl.to_pylist()
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [tbl.column(k).combine_chunks() for k in keys]
-                + [pa.array(hits)],
-                names=keys + ["hit"],
-            )
-
-    out = rows.mapInArrow(
-        fn, "run_id string, bucket int, chunk int, hit boolean")
-    return out.filter("hit").select(*keys)
 
 
 def _chunk_key(run_id: str, bucket: int, chunk: int) -> str:
@@ -2160,36 +1951,43 @@ def _bloom_hits(tbl, keys, nf: dict, encryption_key) -> set:
             if blooms.get(k, True)}
 
 
+def _chunk_survivors(tbl, keys, nf: dict, encryption_key) -> set:
+    """Chunk keys of ``tbl`` (``keys``: its _chunk_keys) that one
+    prune spec keeps: an ``or`` spec's branch zones united, blooms for
+    eq and contains, the zone bounds otherwise. Only chunks with a
+    values row of the spec's column can survive."""
+    if nf["kind"] == "or":
+        # disjunction: a chunk survives when ANY branch's zone hits
+        # (branches are range specs, possibly on different columns);
+        # the exact OR residual runs after decode
+        return set().union(*(_zone_hits(tbl, keys, sub, encryption_key)
+                             for sub in nf["subs"]))
+    if nf["kind"] in ("eq", "contains"):
+        return _bloom_hits(tbl, keys, nf, encryption_key)
+    return _zone_hits(tbl, keys, nf, encryption_key)
+
+
 def _prune_block_table(tbl, specs: list[dict],
                        encryption_key: bytes | None = None):
-    """The scan task's chunk pruning (tokcodec.scan._scan_slice):
-    evaluate each filter's surviving chunks from a slice's block rows
-    (zone bounds in the values metas; blooms for eq and contains),
-    then keep only the rows of chunks that survive every filter. A
-    chunk is keyed (run_id, bucket, chunk) (_chunk_key), so the rows
-    may span several buckets and runs. Mirrors _filter_survivors'
-    DataFrame-side semantics: chunks with no stats survive; a run
-    lacking the filter column entirely contributes nothing (NULL never
-    matches a filter). Encrypted columns' stats/blooms are decrypted
-    per row before the test. Python loops run over the filter
-    columns' values and bloom rows only; the final mask is one Arrow
-    is_in over the chunk keys."""
+    """THE chunk pruning, over the block rows of one slice of buckets
+    (tokcodec.scan._index_slice: the scan task's prune phase and every
+    metadata answer): each filter's surviving chunks
+    (_chunk_survivors: zone bounds in the values metas, blooms for eq
+    and contains), then only the rows of chunks that survive every
+    filter. A chunk is keyed (run_id, bucket, chunk) (_chunk_key), so
+    the rows may span several buckets and runs. Chunks with no stats
+    survive; a run lacking the filter column entirely contributes
+    nothing (NULL never matches a filter). Encrypted columns'
+    stats/blooms are decrypted per row before the test. Python loops
+    run over the filter columns' values and bloom rows only; the final
+    mask is one Arrow is_in over the chunk keys."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     keys = _chunk_keys(tbl)
     allowed: set | None = None
     for nf in specs:
-        if nf["kind"] == "or":
-            # disjunction: a chunk survives when ANY branch's zone
-            # hits (branches are range specs, possibly on different
-            # columns); the exact OR residual runs after decode
-            surv = set().union(*(_zone_hits(tbl, keys, sub, encryption_key)
-                                 for sub in nf["subs"]))
-        elif nf["kind"] in ("eq", "contains"):
-            surv = _bloom_hits(tbl, keys, nf, encryption_key)
-        else:
-            surv = _zone_hits(tbl, keys, nf, encryption_key)
+        surv = _chunk_survivors(tbl, keys, nf, encryption_key)
         allowed = surv if allowed is None else (allowed & surv)
     if allowed is None:
         return tbl
@@ -2293,10 +2091,14 @@ def delete_encoded(spark: SparkSession, path: str, key_column: str,
     protocol as data runs: a crash before the lineage append leaves an
     orphan key file no reader ever consults (vacuum reclaims it).
 
-    Readers (read_encoded / read_encoded_direct / register_encoded /
-    count_encoded) apply pending deletes as a merge-on-read ANTI-JOIN
-    on the key column — broadcast while the list is small — even when
-    the projection does not request the key column. ``compact_encoded``
+    Every reader applies pending deletes on the key column, even when
+    the projection does not request it. read_encoded (and with it
+    read_encoded_direct, register_encoded and count_encoded),
+    read_encoded_as and join_encoded ANTI-JOIN the decoded rows with
+    the removal lists in Spark, broadcast while a list is small; the
+    DataSource readers remove the keys inside their scan task
+    (tokcodec.scan._decode_slice, each list read once per slice).
+    ``compact_encoded``
     materializes deletes into the rewritten data and retires the log
     entries; ``vacuum_encoded`` then reclaims the key files.
 
@@ -2756,11 +2558,12 @@ def explain_scan(
     "does my predicate actually skip data, or am I about to decode
     the whole table?").
 
-    Plans with the readers' snapshot planner, then evaluates the
-    same normalized filters DataFrame-side (_filter_survivors) over
-    block METADATA + bloom payloads only — the prune decision the
-    scan task's _prune_block_table makes per slice of buckets (a
-    parity test pins the two). Returns::
+    Plans with the readers' snapshot planner, then runs the readers'
+    own prune phase over block METADATA plus the probed bloom
+    payloads only (tokcodec.scan.chunk_index: _prune_block_table per
+    slice of buckets, on the driver or in one task per slice by the
+    scan's placement rule), so it keeps the chunks the real scan
+    keeps. Returns::
 
         {chunks_total, chunks_scanned, rows_total, rows_scanned,
          bytes_total, bytes_scanned,         # enc_bytes of the decode
@@ -2774,7 +2577,9 @@ def explain_scan(
     predicate's individual pruning power; the combined numbers are
     their intersection, as in the real read.
     """
-    from tokcodec.scan import plan_snapshot
+    import pyarrow.compute as pc
+
+    from tokcodec.scan import chunk_index, plan_snapshot
 
     as_of_epoch = _resolve_as_of(spark, path, as_of_epoch, as_of_ts,
                                  as_of_tag)
@@ -2793,66 +2598,61 @@ def explain_scan(
                    else list(dict.fromkeys(list(columns) + fcols)))
     _check_encryption_key(manifest, decode_cols or fcols or None,
                           encryption_key)
-    blocks = snap.blocks_df(
-        spark,
-        columns_needed=None if decode_cols is None else set(decode_cols),
-    ).persist()
-    try:
-        # anchor chunk/row counts on one column's values rows (chunk
-        # geometry is shared across a bucket's columns)
-        anchor = fcols[0] if fcols else schema.fields[0].name
-        vals = blocks.filter((F.col("column") == anchor)
-                             & (F.col("component") == "values"))
-        tot = blocks.agg(
-            F.sum("enc_bytes").alias("b"),
-        ).collect()[0]
-        vt = vals.agg(F.count("*").alias("c"),
-                      F.sum("n_rows").alias("r"),
-                      F.countDistinct("bucket").alias("bk")).collect()[0]
-        out = {
-            "chunks_total": int(vt["c"] or 0),
-            "rows_total": int(vt["r"] or 0),
-            "bytes_total": int(tot["b"] or 0),
-            "buckets_total": int(vt["bk"] or 0),
-            "filters": [],
-        }
-        if not filts:
-            out.update(chunks_scanned=out["chunks_total"],
-                       rows_scanned=out["rows_total"],
-                       bytes_scanned=out["bytes_total"],
-                       selectivity=1.0)
-            return out
-        keys = ["run_id", "bucket", "chunk"]
-        surv = None
-        for kind, spec in filts:
-            s, _res = _filter_survivors(blocks, schema, manifest, kind,
-                                        spec,
-                                        encryption_key=encryption_key)
-            s = s.persist()
-            out["filters"].append({
-                "kind": kind,
-                "column": ("|".join(rf[0] for rf in spec)
-                           if kind == "or" else spec[0]),
-                "chunks_surviving": int(s.count()),
-            })
-            surv = s if surv is None else surv.join(
-                F.broadcast(s), keys, "inner")
-        kept = blocks.join(F.broadcast(surv), keys, "left_semi")
-        kb = kept.agg(F.sum("enc_bytes").alias("b")).collect()[0]
-        kv = kept.filter((F.col("column") == anchor)
-                         & (F.col("component") == "values")).agg(
-            F.count("*").alias("c"),
-            F.sum("n_rows").alias("r")).collect()[0]
-        out.update(
-            chunks_scanned=int(kv["c"] or 0),
-            rows_scanned=int(kv["r"] or 0),
-            bytes_scanned=int(kb["b"] or 0),
-            selectivity=(int(kv["c"] or 0) / out["chunks_total"]
-                         if out["chunks_total"] else 0.0),
-        )
+    # anchor chunk/row counts on one column's values rows (chunk
+    # geometry is shared across a bucket's columns)
+    anchor = fcols[0] if fcols else schema.fields[0].name
+    specs = snap.specs
+
+    def counts(t) -> list:
+        vals = t.filter(pc.and_(pc.equal(t.column("column"), anchor),
+                                pc.equal(t.column("component"), "values")))
+        return [vals.num_rows, pc.sum(vals.column("n_rows")).as_py() or 0,
+                pc.sum(t.column("enc_bytes")).as_py() or 0,
+                len(pc.unique(vals.column("bucket")))]
+
+    def fold(blocks, kept):
+        keys = _chunk_keys(blocks)
+        return (counts(blocks), counts(kept),
+                [len(_chunk_survivors(blocks, keys, nf, encryption_key))
+                 for nf in specs])
+
+    parts = chunk_index(
+        spark, snap, set(decode_cols) if decode_cols is not None
+        else {f["column"] for f in snap.files} - {METRICS_COLUMN}, fold,
+        encryption_key=encryption_key)
+
+    def merged(i: int, n: int) -> list:
+        return [sum(x) for x in zip(*(p[i] for p in parts))] or [0] * n
+
+    tot, kept, per_filter = merged(0, 4), merged(1, 4), merged(2, len(filts))
+    out = {
+        "chunks_total": tot[0],
+        "rows_total": tot[1],
+        "bytes_total": tot[2],
+        "buckets_total": tot[3],
+        "filters": [],
+    }
+    if not filts:
+        out.update(chunks_scanned=out["chunks_total"],
+                   rows_scanned=out["rows_total"],
+                   bytes_scanned=out["bytes_total"],
+                   selectivity=1.0)
         return out
-    finally:
-        blocks.unpersist()
+    for (kind, spec), n in zip(filts, per_filter):
+        out["filters"].append({
+            "kind": kind,
+            "column": ("|".join(rf[0] for rf in spec)
+                       if kind == "or" else spec[0]),
+            "chunks_surviving": n,
+        })
+    out.update(
+        chunks_scanned=kept[0],
+        rows_scanned=kept[1],
+        bytes_scanned=kept[2],
+        selectivity=(kept[0] / out["chunks_total"]
+                     if out["chunks_total"] else 0.0),
+    )
+    return out
 
 
 def approx_count_distinct_encoded(
@@ -2868,11 +2668,13 @@ def approx_count_distinct_encoded(
     columns report their DISTINCT-ELEMENT count (token-vocabulary
     NDV), scalar columns their distinct-value count.
 
-    Scale shape: sketches merge associatively, so each task max-folds
-    its partition's 4 KB payloads down to ONE and the driver merges
-    only O(partitions) registers — at 10^6 chunks the job moves ~4 GB
-    of sketch bytes through executors but only ~128 KB to the driver.
-    Time travel / incremental windows compose like every reader.
+    Scale shape: sketches merge associatively, so each slice of
+    buckets max-folds its chunks' 4 KB registers down to ONE inside
+    the metadata reader (tokcodec.scan.chunk_index, which reads the
+    column's block files) and the driver merges one register set per
+    slice — at 10^6 chunks ~4 GB of sketch bytes are read where the
+    files live, ~128 KB reach the driver. Time travel / incremental
+    windows compose like every reader.
 
     Returns ``{estimate, relative_error, chunks, rows}`` where
     ``relative_error`` is the sketch's standard error (1.04/sqrt(m))
@@ -2883,8 +2685,7 @@ def approx_count_distinct_encoded(
     import numpy as np
 
     from tokcodec.hll import M as _HLL_M, hll_estimate, hll_merge
-
-    from tokcodec.scan import plan_snapshot
+    from tokcodec.scan import chunk_index, plan_snapshot
 
     as_of_epoch = _resolve_as_of(spark, path, as_of_epoch, as_of_ts,
                                  as_of_tag)
@@ -2896,51 +2697,40 @@ def approx_count_distinct_encoded(
             f"column {column!r} not in encoded table "
             f"{schema.fieldNames()}")
     _check_encryption_key(snap.manifest, [column], encryption_key)
-    target = snap.blocks_df(spark, columns_needed={column}).filter(
-        (F.col("column") == column) & (F.col("component") == "hll"))
 
-    def fold(batches):
-        import pyarrow as pa
+    def fold(blocks, _kept):
+        import pyarrow.compute as pc
 
         from tokcodec.crypto import decrypt_block_row, is_encrypted
 
         acc = np.zeros(_HLL_M, dtype=np.uint8)
-        n_chunks = 0
-        n_rows = 0
-        for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            recs = tbl.to_pylist()
-            for r in recs:
-                if is_encrypted(r):
-                    decrypt_block_row(encryption_key, r)
-                np.maximum(acc, np.frombuffer(r["payload"],
-                                              dtype=np.uint8), out=acc)
-                n_chunks += 1
-                n_rows += int(r["n_rows"] or 0)
-        if n_chunks:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([acc.tobytes()], pa.binary()),
-                 pa.array([n_chunks], pa.int64()),
-                 pa.array([n_rows], pa.int64())],
-                names=["payload", "chunks", "rows"])
+        n_chunks = n_rows = 0
+        # run_id/bucket/chunk/column/component ride along for the AAD
+        # of encrypted sketches (decrypt_block_row authenticates
+        # position)
+        for r in blocks.filter(pc.and_(
+                pc.equal(blocks.column("column"), column),
+                pc.equal(blocks.column("component"), "hll"))).to_pylist():
+            if is_encrypted(r):
+                decrypt_block_row(encryption_key, r)
+            np.maximum(acc, np.frombuffer(r["payload"], dtype=np.uint8),
+                       out=acc)
+            n_chunks += 1
+            n_rows += int(r["n_rows"] or 0)
+        return (acc.tobytes(), n_chunks, n_rows) if n_chunks else None
 
-    # run_id/bucket/chunk/column/component ride along for the AAD of
-    # encrypted sketches (decrypt_block_row authenticates position)
-    parts = target.select(
-        "run_id", "bucket", "chunk", "column", "component",
-        "meta", "payload", "n_rows",
-    ).mapInArrow(
-        fold, "payload binary, chunks long, rows long").collect()
+    parts = chunk_index(spark, snap, {column}, fold, payload_cols={column},
+                        encryption_key=encryption_key)
     if not parts:
         raise ValueError(
             f"no HLL sketch blocks for column {column!r} — write with "
             f"sketch_columns=[{column!r}] (or compact with it) first")
-    regs = hll_merge([bytes(r["payload"]) for r in parts])
+    regs = hll_merge([p[0] for p in parts])
     return {
         "estimate": int(round(hll_estimate(regs))),
         "relative_error": round(1.04 / (_HLL_M ** 0.5), 4),
-        "chunks": int(sum(r["chunks"] for r in parts)),
-        "rows": int(sum(r["rows"] for r in parts)),
+        "chunks": sum(p[1] for p in parts),
+        "rows": sum(p[2] for p in parts),
     }
 
 
@@ -2984,15 +2774,16 @@ def profile_encoded(spark: SparkSession, path: str,
     (list lanes: bounds/NDV describe the ELEMENTS), null_chunks,
     null_rows_upper_bound, orig_bytes, enc_bytes, codecs: {codec:
     chunk count}, ndv (present iff the column was written with
-    sketch_columns — the HLL registers max-fold task-side exactly
+    sketch_columns — the HLL registers max-fold per slice exactly
     like approx_count_distinct_encoded), encrypted}``.
 
-    Scale shape: one distributed pass over block-metadata rows with
-    per-task partial aggregation — the driver merges O(partitions x
-    columns) partials, each a few numbers plus at most one 4 KB HLL
-    register set per column. Projection skips unrequested columns'
-    files entirely (reference P3); the parquet payload column is
-    read only when a requested column carries sketches (its HLL rows
+    Scale shape: one pass over block-metadata rows per slice of
+    buckets (tokcodec.scan.chunk_index, on the driver or in one task
+    per slice), each slice folding its rows to one partial per column
+    — a few numbers plus at most one 4 KB HLL register set — which
+    the driver merges. Projection skips unrequested columns' files
+    entirely (reference P3); the payload column is read only from the
+    files of requested columns that carry sketches (their HLL rows
     live in the same files). Encrypted columns' bounds live in the
     encrypted ``emeta`` envelope: WITH the key they profile like any
     column; without it they come back redacted (``min``/``max``
@@ -3010,7 +2801,7 @@ def profile_encoded(spark: SparkSession, path: str,
     column is the corpus token checksum)."""
     import base64 as _b64
 
-    from tokcodec.scan import plan_snapshot
+    from tokcodec.scan import chunk_index, plan_snapshot
 
     as_of_epoch = _resolve_as_of(spark, path, as_of_epoch, as_of_ts,
                                  as_of_tag)
@@ -3028,113 +2819,98 @@ def profile_encoded(spark: SparkSession, path: str,
     if encryption_key is not None:
         _check_encryption_key(manifest, list(enc_cols), encryption_key)
     sketched = set(manifest.get("sketch_columns", [])) & set(columns)
-    blocks = snap.blocks_df(spark, columns_needed=set(columns))
     meta_cols = ["run_id", "bucket", "chunk", "column", "component",
                  "codec", "n_rows", "meta", "orig_bytes", "enc_bytes"]
-    if sketched:
-        meta_cols.append("payload")  # only for the HLL register rows
-    want_ndv = frozenset(sketched)
     key = encryption_key
     have_key = key is not None
 
-    def fold(batches):
+    def fresh() -> dict:
+        return {"chunks": 0, "lo": None, "hi": None, "slo": None,
+                "shi": None, "shi_inf": False, "null_chunks": 0,
+                "null_rows": 0, "orig": 0, "enc": 0, "codecs": {},
+                "regs": [],
+                # r5 small-materialized-aggregate stats: exact when
+                # every values chunk carries them (nk/sk count the
+                # chunks that do)
+                "nulls": 0, "nk": 0, "sum": 0, "sk": 0}
+
+    def fold(blocks, _kept):
         import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
 
-        from tokcodec.crypto import decrypt_block_meta, is_encrypted
+        from tokcodec.crypto import (
+            decrypt_block_meta,
+            decrypt_block_row,
+            is_encrypted,
+        )
         from tokcodec.hll import M as _HLL_M
 
         acc: dict[str, dict] = {}
-
-        def a(col):
-            if col not in acc:
-                acc[col] = {"chunks": 0, "lo": None, "hi": None,
-                            "slo": None, "shi": None, "shi_inf": False,
-                            "null_chunks": 0, "null_rows": 0,
-                            "orig": 0, "enc": 0, "codecs": {},
-                            "regs": None,
-                            # r5 small-materialized-aggregate stats:
-                            # exact when every values chunk carries
-                            # them (nk/sk count the chunks that do)
-                            "nulls": 0, "nk": 0, "sum": 0, "sk": 0}
-            return acc[col]
-
-        for batch in batches:
-            for r in pa.Table.from_batches([batch]).to_pylist():
-                col, comp = r["column"], r["component"]
-                st = a(col)
-                st["orig"] += int(r["orig_bytes"] or 0)
-                st["enc"] += int(r["enc_bytes"] or 0)
-                if comp == "validity":
-                    st["null_chunks"] += 1
-                    st["null_rows"] += int(r["n_rows"] or 0)
+        for r in blocks.select(meta_cols).to_pylist():
+            col, comp = r["column"], r["component"]
+            st = acc.setdefault(col, fresh())
+            st["orig"] += int(r["orig_bytes"] or 0)
+            st["enc"] += int(r["enc_bytes"] or 0)
+            if comp == "validity":
+                st["null_chunks"] += 1
+                st["null_rows"] += int(r["n_rows"] or 0)
+                continue
+            if comp != "values":
+                continue
+            st["chunks"] += 1
+            st["codecs"][r["codec"]] = st["codecs"].get(r["codec"], 0) + 1
+            meta = json.loads(r["meta"] or "{}")
+            if "emeta" in meta:
+                if not have_key:
+                    continue  # redacted without the key
+                meta = decrypt_block_meta(key, r)
+            if meta.get("nulls") is not None:
+                st["nulls"] += int(meta["nulls"])
+                st["nk"] += 1
+            if meta.get("sum") is not None:
+                st["sum"] += int(meta["sum"])
+                st["sk"] += 1
+            elif meta.get("nulls") is not None \
+                    and int(meta["nulls"]) == int(r["n_rows"] or 0):
+                st["sk"] += 1  # all-null chunk: sum contributes 0
+            merge(st, {"lo": meta.get("lo"), "hi": meta.get("hi"),
+                       "slo": (_b64.b64decode(meta["slo"])
+                               if meta.get("slo") is not None else None),
+                       "shi": (_b64.b64decode(meta["shi"])
+                               if meta.get("shi") is not None else None),
+                       "shi_inf": bool(meta.get("shi_inf"))})
+        # the sketched columns' HLL registers max-fold to one per column
+        regs: dict = {}
+        for r in blocks.filter(pc.and_(
+                pc.equal(blocks.column("component"), "hll"),
+                pc.is_in(blocks.column("column"), value_set=pa.array(
+                    sorted(sketched), pa.string())))).to_pylist():
+            if is_encrypted(r):
+                if not have_key:
                     continue
-                if comp == "hll" and col in want_ndv:
-                    if is_encrypted(r):
-                        if not have_key:
-                            continue
-                        from tokcodec.crypto import decrypt_block_row
+                decrypt_block_row(key, r)
+            reg = regs.setdefault(r["column"],
+                                  np.zeros(_HLL_M, dtype=np.uint8))
+            np.maximum(reg, np.frombuffer(r["payload"], dtype=np.uint8),
+                       out=reg)
+        for col, reg in regs.items():
+            acc[col]["regs"] = [reg.tobytes()]
+        return acc
 
-                        decrypt_block_row(key, r)
-                    regs = np.frombuffer(r["payload"], dtype=np.uint8)
-                    if st["regs"] is None:
-                        st["regs"] = np.zeros(_HLL_M, dtype=np.uint8)
-                    np.maximum(st["regs"], regs, out=st["regs"])
-                    continue
-                if comp != "values":
-                    continue
-                st["chunks"] += 1
-                st["codecs"][r["codec"]] = \
-                    st["codecs"].get(r["codec"], 0) + 1
-                meta = json.loads(r["meta"] or "{}")
-                if "emeta" in meta:
-                    if not have_key:
-                        continue  # redacted without the key
-                    meta = decrypt_block_meta(key, r)
-                if meta.get("nulls") is not None:
-                    st["nulls"] += int(meta["nulls"])
-                    st["nk"] += 1
-                if meta.get("sum") is not None:
-                    st["sum"] += int(meta["sum"])
-                    st["sk"] += 1
-                elif meta.get("nulls") is not None \
-                        and int(meta["nulls"]) == int(r["n_rows"] or 0):
-                    st["sk"] += 1  # all-null chunk: sum contributes 0
-                lo, hi = meta.get("lo"), meta.get("hi")
-                if lo is not None:
-                    st["lo"] = lo if st["lo"] is None \
-                        else min(st["lo"], lo)
-                if hi is not None:
-                    st["hi"] = hi if st["hi"] is None \
-                        else max(st["hi"], hi)
-                slo = meta.get("slo")
-                if slo is not None:
-                    b = _b64.b64decode(slo)
-                    st["slo"] = b if st["slo"] is None \
-                        else min(st["slo"], b)
-                if meta.get("shi_inf"):
-                    st["shi_inf"] = True
-                shi = meta.get("shi")
-                if shi is not None:
-                    b = _b64.b64decode(shi)
-                    st["shi"] = b if st["shi"] is None \
-                        else max(st["shi"], b)
-        if acc:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([json.dumps(
-                    {c: {**s,
-                         "slo": (_b64.b64encode(s["slo"]).decode()
-                                 if s["slo"] is not None else None),
-                         "shi": (_b64.b64encode(s["shi"]).decode()
-                                 if s["shi"] is not None else None),
-                         "regs": (_b64.b64encode(
-                             s["regs"].tobytes()).decode()
-                             if s["regs"] is not None else None)}
-                     for c, s in acc.items()})], pa.string())],
-                names=["partial"])
-
-    parts = blocks.select(*meta_cols).mapInArrow(
-        fold, "partial string").collect()
+    def merge(m: dict, s: dict) -> None:
+        """Fold partial ``s`` (or one chunk's bounds) into ``m``."""
+        for k in ("chunks", "null_chunks", "null_rows", "nulls", "nk",
+                  "sum", "sk", "orig", "enc"):
+            m[k] += s.get(k, 0)
+        for cdc, n in s.get("codecs", {}).items():
+            m["codecs"][cdc] = m["codecs"].get(cdc, 0) + n
+        for k, better in (("lo", min), ("hi", max), ("slo", min),
+                          ("shi", max)):
+            if s[k] is not None:
+                m[k] = s[k] if m[k] is None else better(m[k], s[k])
+        m["shi_inf"] = m["shi_inf"] or s["shi_inf"]
+        m["regs"] += s.get("regs", [])
 
     from tokcodec.hll import hll_estimate, hll_merge
 
@@ -3142,34 +2918,10 @@ def profile_encoded(spark: SparkSession, path: str,
     table_rows = int(win.n_rows.sum()) if len(win) else 0
     out: dict = {"rows": table_rows, "columns": {}}
     merged: dict[str, dict] = {}
-    for p in parts:
-        for col, s in json.loads(p["partial"]).items():
-            m = merged.setdefault(col, {
-                "chunks": 0, "lo": None, "hi": None, "slo": None,
-                "shi": None, "shi_inf": False, "null_chunks": 0,
-                "null_rows": 0, "orig": 0, "enc": 0, "codecs": {},
-                "regs": [], "nulls": 0, "nk": 0, "sum": 0, "sk": 0})
-            m["chunks"] += s["chunks"]
-            m["null_chunks"] += s["null_chunks"]
-            m["null_rows"] += s["null_rows"]
-            m["nulls"] += s.get("nulls", 0)
-            m["nk"] += s.get("nk", 0)
-            m["sum"] += s.get("sum", 0)
-            m["sk"] += s.get("sk", 0)
-            m["orig"] += s["orig"]
-            m["enc"] += s["enc"]
-            for cdc, n in s["codecs"].items():
-                m["codecs"][cdc] = m["codecs"].get(cdc, 0) + n
-            for k, better in (("lo", min), ("hi", max)):
-                if s[k] is not None:
-                    m[k] = s[k] if m[k] is None else better(m[k], s[k])
-            for k, better in (("slo", min), ("shi", max)):
-                if s[k] is not None:
-                    b = _b64.b64decode(s[k])
-                    m[k] = b if m[k] is None else better(m[k], b)
-            m["shi_inf"] = m["shi_inf"] or s["shi_inf"]
-            if s["regs"] is not None:
-                m["regs"].append(_b64.b64decode(s["regs"]))
+    for p in chunk_index(spark, snap, set(columns), fold,
+                         payload_cols=sketched, encryption_key=key):
+        for col, s in p.items():
+            merge(merged.setdefault(col, fresh()), s)
     for col in columns:
         fld = by_name[col]
         dt = fld.dataType

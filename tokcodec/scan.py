@@ -1,5 +1,6 @@
-"""The read pipeline, written once: a Spark-free snapshot planner and
-the slice scan every reader runs, in two placements.
+"""The read pipeline, written once: a Spark-free snapshot planner, the
+slice prune phase every block-metadata reader runs, and the slice scan
+every reader runs, in two placements.
 
     plan_snapshot  table manifest + lineage -> accepted {bucket:
                    [run_id]} -> run-manifest file rows -> read schema,
@@ -7,15 +8,20 @@ the slice scan every reader runs, in two placements.
                    metadata IO: no Spark job, no JVM gateway, so the
                    same planner serves read_encoded on the driver and
                    the Python DataSource in its planner worker.
+    _index_slice   the prune phase, THE block-metadata reader: one
+                   slice's block files, each opened once -> optional
+                   chunk allow-list / sample -> chunk pruning over the
+                   whole slice (_prune_block_table) -> a caller's fold
+                   over the slice's rows and its survivors. Its callers:
+                   _prune_slice (the scan's prune phase, payloads
+                   kept) and chunk_index (payloads projected out).
     _scan_slice    one contiguous slice of buckets, each planned block
                    file opened at most once, in two phases:
                    _prune_slice (the filter columns' files read first
-                   -> optional chunk allow-list / sample -> chunk
-                   pruning over the whole slice, _prune_block_table)
-                   and _decode_slice (the other columns' files read
-                   only for the buckets and runs with a surviving
-                   chunk -> decode one bucket at a time -> removal
-                   lists -> optional Arrow-side projection).
+                   and pruned) and _decode_slice (the other columns'
+                   files read only for the buckets and runs with a
+                   surviving chunk -> decode one bucket at a time ->
+                   removal lists -> optional Arrow-side projection).
     scan_frame     the Spark wrapper read_encoded, read_encoded_as,
                    sample_encoded and the aggregate boundary decode
                    build on. One rule places the scan: a read whose
@@ -28,16 +34,23 @@ the slice scan every reader runs, in two placements.
                    the accepted buckets, fed by spark.range. Neither
                    shuffles a payload or puts a block file in a Spark
                    scan.
+    chunk_index    the metadata answers (explain_scan, the aggregates,
+                   quantiles, HLL, profile): _index_slice with a
+                   caller's fold over block metadata, payloads
+                   projected out but for the probed blooms' files and
+                   the sketched columns'; one small partial per slice,
+                   merged on the driver. Same two placements, same
+                   cap: on the driver when the files it reads are
+                   small, else one mapInArrow task per slice.
 
 The DataSource's batch and stream readers (one partition per slice)
-and join_encoded call _scan_slice directly; explain_scan,
-count_encoded and the aggregate entry points start from
-plan_snapshot. Chunk pruning is decided from the same planned specs
-on every path, and from metadata before any other column's data is
-read (Global Range Encoding, EDBT 2018: elimination decided once,
-from one metadata structure, before touching data); on the driver
-placement the same pruning result also decides where the decode
-runs.
+and join_encoded call _scan_slice directly; count_encoded and every
+metadata answer start from plan_snapshot. Chunk pruning is decided
+from the same planned specs by the same function on every path, and
+from metadata before any other column's data is read (Global Range
+Encoding, EDBT 2018: elimination decided once, from one metadata
+structure, before touching data); on the driver placement the same
+pruning result also decides where the decode runs.
 """
 
 from __future__ import annotations
@@ -52,7 +65,6 @@ from tokcodec.encode import METRICS_COLUMN
 from tokcodec.io_tables import (
     LAYOUT_VERSION,
     _as_of_schema,
-    _blocks_df,
     _chunk_keys,
     _committed_pandas,
     _crosses_arrow,
@@ -94,18 +106,6 @@ class Snapshot:
     def specs(self) -> list[dict]:
         """Picklable prune specs for the scan task (no Columns)."""
         return [_strip(nf) for nf in self.filters]
-
-    def lin_rows(self) -> list[tuple[int, str]]:
-        return sorted((b, r) for b, rs in self.accepted.items()
-                      for r in rs)
-
-    def blocks_df(self, spark, columns_needed=None):
-        """The plan's block rows as a DataFrame (explain_scan and the
-        aggregate pivot evaluate _filter_survivors over it)."""
-        lin = spark.createDataFrame(self.lin_rows(),
-                                    "bucket int, run_id string")
-        return _blocks_df(spark, self.path, lin,
-                          columns_needed=columns_needed, files=self.files)
 
 
 def _strip(nf: dict) -> dict:
@@ -283,13 +283,17 @@ class _BlockFile:
     first take() and at most once; its row groups are read in bucket
     order, only when a taken bucket lies in their footer's bucket
     range, and split by bucket. Rows of buckets the slice does not
-    take from the file are dropped."""
+    take from the file are dropped. ``payload=False`` reads every
+    column but ``payload``."""
 
-    def __init__(self, path: str, buckets: list[int]):
+    def __init__(self, path: str, buckets: list[int],
+                 payload: bool = True):
         self.path = path
         self.buckets = buckets
         self.has = set(buckets)
+        self.payload = payload
         self._pf = None
+        self._columns = None  # None: every column
         self._groups: list[tuple[int, int, int]] = []  # (lo, hi, index)
         self._held: dict = {}  # bucket -> rows read, not yet taken
 
@@ -298,6 +302,9 @@ class _BlockFile:
 
         self._pf = _open_block_file(self.path)
         md = self._pf.metadata
+        if not self.payload:
+            self._columns = [n for n in self._pf.schema_arrow.names
+                             if n != "payload"]
         col = md.schema.to_arrow_schema().get_field_index("bucket")
         for i in range(md.num_row_groups):
             st = md.row_group(i).column(col).statistics
@@ -320,7 +327,7 @@ class _BlockFile:
             lo, hi, i = self._groups.pop(0)
             if hi < bucket:
                 continue  # only buckets this slice skipped
-            t = self._pf.read_row_group(i)
+            t = self._pf.read_row_group(i, columns=self._columns)
             if lo == hi:  # lo == bucket
                 self._held[lo] = t
                 continue
@@ -387,24 +394,30 @@ def _uuid_bytes(text):
          pa.py_buffer(raw.astype(np.uint8))])
 
 
-def _prune_slice(buckets, files, specs, chunks=None, sample=None,
-                 encryption_key: bytes | None = None):
-    """Prune phase of the slice scan: {bucket: surviving filter-column
-    block rows} for a filtered slice (empty: no chunk survives), None
-    for an unfiltered one (``specs`` empty). The filter columns'
-    files (``specs``) are opened once each, read for the slice's
-    buckets, restricted to the allow-listed / sampled chunks
-    (``chunks``: a set of _chunk_keys; ``sample``: (fraction, seed))
-    and pruned in one pass (_prune_block_table); they are closed
-    before this returns."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+def _index_slice(files, specs, fold, payload_cols=None, chunks=None,
+                 sample=None, encryption_key: bytes | None = None):
+    """The one block-metadata reader, for one slice of buckets:
+    ``fold(blocks, kept)`` over the slice's block rows, or None when
+    the slice holds none. ``files``: the slice's planned block files
+    of the columns to read (_slice_files rows), each opened once and
+    read for the buckets it is taken for; ``blocks``: their rows,
+    restricted to the allow-listed / sampled chunks (``chunks``: a set
+    of _chunk_keys; ``sample``: (fraction, seed)); ``kept``: the rows
+    of the chunks that survive every prune spec (_prune_block_table;
+    ``blocks`` itself when ``specs`` is empty).
 
-    if not specs:
-        return None
-    fcols = _spec_columns(specs)
-    opened = [_BlockFile(fp, bs) for fp, col, _r, bs in files
-              if col in fcols]
+    ``payload_cols=None`` reads every payload: the scan's prune phase
+    (_prune_slice), whose survivors are decoded. A set of columns is
+    the metadata callers' projection: only the files of those columns
+    and of the columns an eq/contains spec probes (their blooms) are
+    read with the payload column; the other files' rows come with a
+    null payload."""
+    import pyarrow as pa
+
+    probed = {s["col"] for s in specs if s["kind"] in ("eq", "contains")}
+    opened = [_BlockFile(fp, bs, payload_cols is None or col in probed
+                         or col in payload_cols)
+              for fp, col, _r, bs in files]
     try:
         parts = [t for f in opened for b in f.buckets
                  if (t := f.take(b)) is not None]
@@ -412,14 +425,39 @@ def _prune_slice(buckets, files, specs, chunks=None, sample=None,
         for f in opened:
             f.close()
     if not parts:
-        return {}  # no filter-column rows: no chunk can match
-    tbl = pa.concat_tables(parts)
+        return None
+    # a part read without its payload column gets a null one
+    tbl = pa.concat_tables(parts, promote_options="default")
     if chunks is not None or sample is not None:
         tbl = _keep_chunks(tbl, chunks, sample)
-    tbl = _prune_block_table(tbl, specs, encryption_key=encryption_key)
-    bcol = tbl.column("bucket")
-    return {b: tbl.filter(pc.equal(bcol, b))
+    kept = _prune_block_table(tbl, specs, encryption_key=encryption_key) \
+        if specs else tbl
+    return fold(tbl, kept)
+
+
+def _by_bucket(_blocks, kept) -> dict:
+    """{bucket: surviving block rows}: the prune phase's fold."""
+    import pyarrow.compute as pc
+
+    bcol = kept.column("bucket")
+    return {b: kept.filter(pc.equal(bcol, b))
             for b in pc.unique(bcol).to_pylist()}
+
+
+def _prune_slice(buckets, files, specs, chunks=None, sample=None,
+                 encryption_key: bytes | None = None):
+    """Prune phase of the slice scan: {bucket: surviving filter-column
+    block rows} for a filtered slice (empty: no chunk survives), None
+    for an unfiltered one (``specs`` empty). _index_slice reads the
+    filter columns' files, payloads kept (the decode phase decodes
+    the survivors), and prunes the slice's chunks in one pass; the
+    files are closed before this returns."""
+    if not specs:
+        return None
+    fcols = _spec_columns(specs)
+    return _index_slice([f for f in files if f[1] in fcols], specs,
+                        _by_bucket, chunks=chunks, sample=sample,
+                        encryption_key=encryption_key) or {}
 
 
 def _decode_slice(buckets, files, specs, pruned, decode, chunks=None,
@@ -619,6 +657,57 @@ def _driver_scan(snap: Snapshot, rows, slices, specs, decode, chunks=None,
     return [out for outs in _fan_out(decoded, zip(plans, pruned),
                                      min_items=2)
             for out in outs]
+
+
+def chunk_index(spark, snap: Snapshot, columns, fold, payload_cols=(),
+                encryption_key: bytes | None = None) -> list:
+    """The block-metadata answer of ``snap`` (explain_scan, the
+    aggregates, quantiles, HLL, profile): one partial per slice of the
+    accepted buckets, ``fold(blocks, kept)`` over the slice's block
+    rows of ``columns`` and its chunks that survive the snapshot's
+    filter specs (_index_slice; payloads read only from the files of
+    ``payload_cols`` and of the columns eq/contains pruning probes),
+    slices without rows dropped. The caller merges the partials.
+
+    scan_frame's two placements, by the same rule and cap: when the
+    run-manifest ``bytes`` of the files the slices read total at most
+    io_tables._DRIVER_MAX_BYTES the slices run on the driver, one
+    _fan_out thread each, and no Spark job starts; otherwise one
+    mapInArrow task per slice (_bucket_feed) returns its partial
+    pickled."""
+    import pickle
+
+    buckets = sorted(snap.accepted)
+    blocks_p = _paths(snap.path)[0]
+    rows = _direct_file_rows(snap.files, columns, blocks_p)
+    specs, pay = snap.specs, set(payload_cols)
+    plans = [_slice_files(rows, snap.accepted, bks) for bks in _slices(
+        buckets, _task_slots(spark, len(buckets))) if bks]
+    size = {posixpath.join(blocks_p, f["path"]): f["bytes"]
+            for f in snap.files}
+    if sum(size[fp] for fp in {f[0] for files in plans for f in files}) \
+            <= io_tables._DRIVER_MAX_BYTES:
+        parts = _fan_out(lambda files: _index_slice(
+            files, specs, fold, pay, encryption_key=encryption_key),
+            plans, min_items=2)
+        return [p for p in parts if p is not None]
+    plan = spark.sparkContext.broadcast((buckets, snap.accepted, rows))
+
+    def fn(batches):
+        import pyarrow as pa
+
+        all_b, accepted, file_rows = plan.value
+        bks = sorted(all_b[i] for batch in batches
+                     for i in batch.column(0).to_pylist())
+        part = _index_slice(_slice_files(file_rows, accepted, bks), specs,
+                            fold, pay, encryption_key=encryption_key)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([pickle.dumps(part)], pa.binary())],
+            names=["partial"])
+
+    parts = [pickle.loads(r.partial) for r in _bucket_feed(
+        spark, len(buckets)).mapInArrow(fn, "partial binary").collect()]
+    return [p for p in parts if p is not None]
 
 
 def _bucket_feed(spark, n: int):
