@@ -300,3 +300,43 @@ def test_encrypted_table_through_source(spark, table, tmp_path):
     # no key -> decode must fail
     with pytest.raises(Exception):
         spark.read.format("tokcodec").load(path).collect()
+
+
+def test_pushdown_partitions_list_only_summary_matches(spark, tmp_path):
+    """The pushdown reader prunes by file before it cuts partitions:
+    an eq filter lists only the files of the run holding the key, an
+    absent key or a zone miss lists none (Spark then reads no
+    partition), and the rows are exact."""
+    from pyspark.sql.datasource import (
+        EqualTo, GreaterThanOrEqual, LessThanOrEqual)
+
+    from tokcodec.datasource import TokcodecPushdownBatchReader
+
+    spark.dataSource.register(TokcodecDataSource)
+    path = str(tmp_path / "runs")
+    for epoch, prefix in enumerate("abc"):
+        write_encoded(_mk(spark, 100, prefix=prefix)
+                      .withColumn("n_tok", F.lit(10 * epoch)), path,
+                      n_buckets=4, run_id=f"r{prefix}", epoch=epoch,
+                      bloom_columns=["doc_id"])
+
+    def planned(*filters):
+        reader = TokcodecPushdownBatchReader({"path": path}, SCHEMA)
+        reader.pushFilters(list(filters))
+        return {fp.rsplit("/run-", 1)[1].split("-p")[0]
+                for p in reader.partitions() for fp, *_ in p.files}
+
+    assert planned() == {"ra", "rb", "rc"}
+    assert planned(EqualTo(("doc_id",), "b7")) == {"rb"}
+    # (blooms hash deterministically: this key hits no file bloom)
+    assert planned(EqualTo(("doc_id",), "absent-7")) == set()
+    assert planned(GreaterThanOrEqual(("n_tok",), 15),
+                   LessThanOrEqual(("n_tok",), 25)) == {"rc"}
+    assert planned(GreaterThanOrEqual(("n_tok",), 99),
+                   LessThanOrEqual(("n_tok",), 100)) == set()
+    out = spark.read.format("tokcodec").option("pushdown", "true") \
+        .load(path)
+    assert out.filter(F.col("doc_id") == "b7").count() == 1
+    assert out.filter(F.col("doc_id") == "absent-7").count() == 0
+    assert out.filter(F.col("n_tok").between(15, 25)).count() == 100
+    assert out.filter(F.col("n_tok").between(99, 100)).count() == 0

@@ -296,6 +296,39 @@ def test_encrypted_zone_and_bloom_pruning_with_key(spark, tmp_path):
         assert 0 < ex["chunks_scanned"] < ex["chunks_total"], (kw, ex)
 
 
+def test_run_manifest_holds_no_summary_of_encrypted_columns(spark,
+                                                            tmp_path):
+    """File summaries are metadata in clear: an encrypted column gets
+    neither a zone nor a file bloom in the run manifest or its bloom
+    sidecar, while a plaintext column of the same run gets both. With
+    the key, chunk pruning of the encrypted columns still works."""
+    from tokcodec.io_tables import explain_scan
+
+    path = str(tmp_path / "t")
+    write_encoded(_mk(spark, 400), path, n_buckets=2, run_id="r1",
+                  chunk_max_rows=32, bloom_columns=["doc_id", "source"],
+                  encryption_key=KEY, encrypted_columns=["doc_id", "n_tok"])
+    runs = os.path.join(path, "_runs")
+    m = json.loads(open(os.path.join(runs, "r1.json")).read())
+    enc = [f for f in m["files"] if f["column"] in ("doc_id", "n_tok")]
+    plain = [f for f in m["files"] if f["column"] == "source"]
+    assert enc and plain
+    assert not any("zone" in f or "bloom" in f for f in enc)
+    assert all("zone" in f and "bloom" in f for f in plain)
+    # the sidecar holds the plaintext column's blooms and nothing else
+    side = open(os.path.join(runs, "r1.bloom"), "rb").read()
+    assert len(side) == sum(f["bloom"][1] for f in plain)
+    for kw in ({"range_filter": ("n_tok", 3, 3)},
+               {"eq_filter": ("doc_id", "d0007")}):
+        ex = explain_scan(spark, path, encryption_key=KEY, **kw)
+        assert ex["files_pruned"] == 0, (kw, ex)
+    ex = explain_scan(spark, path, encryption_key=KEY,
+                      eq_filter=("doc_id", "d0007"))
+    assert 0 < ex["chunks_scanned"] < ex["chunks_total"], ex
+    assert read_encoded(spark, path, eq_filter=("doc_id", "d0007"),
+                        encryption_key=KEY).count() == 1
+
+
 def test_deterministic_nonces(spark):
     """Nonces derive from (salt, position, purpose): same salt+position
     -> identical stored bytes; fresh salt -> different nonce (no

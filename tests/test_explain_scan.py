@@ -103,3 +103,42 @@ def test_cli_explain(spark, tmp_path):
                        if ln.startswith("{")][-1])
     assert res["chunks_scanned"] < res["chunks_total"]
     assert res["filters"][0]["column"] == "ts"
+
+
+def test_projected_unfiltered_counts_anchor_on_a_read_column(spark,
+                                                             tmp_path):
+    """An unfiltered explain of a projection that leaves out the
+    schema's first field counts the chunks and rows of a projected
+    column, not 0 of each; every other field keeps its value, and the
+    file counts cover the projected columns' files."""
+    path = _table(spark, tmp_path)
+    full = explain_scan(spark, path)
+    ex = explain_scan(spark, path, columns=["ts"])
+    assert (ex["chunks_total"], ex["rows_total"]) \
+        == (full["chunks_total"], full["rows_total"]) == (ex["chunks_scanned"],
+                                                           2000)
+    assert 0 < ex["bytes_total"] < full["bytes_total"]
+    assert ex["files_total"] == 2 and ex["files_pruned"] == 0
+    assert full["files_total"] == 6 and full["files_pruned"] == 0
+
+
+def test_files_pruned_counts_the_runs_summaries_drop(spark, tmp_path):
+    """On a table of two runs with disjoint keys, a range and a key
+    lookup on one run's keys report the other run's files as pruned,
+    and their chunks as not scanned, as the read does."""
+    path = _table(spark, tmp_path)
+    more = spark.createDataFrame(
+        [Row(doc_id=f"e{i:05d}", ts=10_000 + i, tokens=[5000 + i])
+         for i in range(500)], "doc_id string, ts bigint, tokens array<int>")
+    write_encoded(more, path, n_buckets=2, run_id="r2", epoch=1,
+                  chunk_max_rows=128, cluster_by="ts")
+    # (filters, columns read): one file per bucket per column per run
+    for kw, n_cols in (({"range_filter": ("ts", 10_100, 10_199)}, 3),
+                       ({"eq_filter": ("doc_id", "e00007")}, 3),
+                       ({"range_filter": ("ts", 100, 199),
+                         "columns": ["doc_id"]}, 2)):
+        ex = explain_scan(spark, path, **kw)
+        per_run = 2 * n_cols
+        assert ex["files_total"] == 2 * per_run, (kw, ex)
+        assert ex["files_pruned"] >= per_run, (kw, ex)
+        assert ex["rows_scanned"] >= read_encoded(spark, path, **kw).count()

@@ -225,11 +225,11 @@ def test_small_reads_skip_the_python_task_wave(spark, tmp_path,
     bloom lookup and a token probe are scanned on the driver: their
     executed plans hold no MapInArrow and no other Python node. Over
     the cap a read keeps its mapInArrow task; when the filter
-    column's files alone are over the cap the driver opens no block
-    file, and when only the survivors are, it opens filter-column
-    files only."""
+    column's planned files (those the file summaries keep) alone are
+    over the cap the driver opens no block file, and when only the
+    survivors are, it opens filter-column files only."""
     from tokcodec import io_tables, scan
-    from tokcodec.io_tables import _run_files, read_encoded, write_encoded
+    from tokcodec.io_tables import read_encoded, write_encoded
 
     df = spark.createDataFrame(
         [Row(doc_id=f"d{i:04d}", tokens=[i, i + 1], text="x" * 300)
@@ -253,8 +253,9 @@ def test_small_reads_skip_the_python_task_wave(spark, tmp_path,
     real_open = scan._open_block_file
     monkeypatch.setattr(scan, "_open_block_file",
                         lambda p: opened.append(p) or real_open(p))
-    doc_bytes = sum(f["bytes"] for f in _run_files(path, ["r"])
-                    if f["column"] == "doc_id")
+    doc_bytes = sum(f["bytes"] for f in scan.plan_snapshot(
+        path, filters=[("eq", ("doc_id", "d0042"))]).files
+        if f["column"] == "doc_id")
     # the filter column's files are over the cap: straight to the tasks
     monkeypatch.setattr(io_tables, "_DRIVER_MAX_BYTES", doc_bytes - 1)
     for q in (read_encoded(spark, path, eq_filter=("doc_id", "d0042")),

@@ -177,3 +177,85 @@ def test_filter_column_autoincluded_in_projection(spark, tmp_path):
     hit = read_encoded(spark, path, columns=["n_tok"],
                        eq_filter=("doc_id", "d7"))
     assert hit.columns == ["n_tok"] and hit.count() == 1
+
+
+def _two_runs(spark, path):
+    """Runs r1 (d0-d399) and r2 (d400-d599, n_tok 2 -> 5): disjoint
+    keys and zones, blooms on doc_id."""
+    write_encoded(_mk(spark, 0, 400), path, n_buckets=3, run_id="r1",
+                  bloom_columns=["doc_id"], chunk_max_rows=64)
+    more = _mk(spark, 400, 600).withColumn("n_tok", F.lit(5))
+    write_encoded(local_frame(more), path, n_buckets=3, run_id="r2",
+                  epoch=1, chunk_max_rows=64)
+
+
+LOOKUPS = ({"eq_filter": ("doc_id", "d450")},
+           {"eq_filter": ("doc_id", "absent")},
+           {"range_filter": ("n_tok", 5, 9)},
+           {"range_filter": ("source", "t", "z")})
+
+
+def test_runs_without_summaries_keep_every_file(spark, tmp_path):
+    """Run manifests written before file summaries (no zone, no bloom,
+    no sidecar) plan every file and read identically."""
+    import shutil
+
+    from tokcodec.scan import plan_snapshot
+
+    path = str(tmp_path / "t")
+    _two_runs(spark, path)
+    legacy = str(tmp_path / "legacy")
+    shutil.copytree(path, legacy)
+    runs = os.path.join(legacy, "_runs")
+    for name in os.listdir(runs):
+        p = os.path.join(runs, name)
+        if name.endswith(".bloom"):
+            os.remove(p)
+        elif name.endswith(".json"):
+            m = json.loads(open(p).read())
+            for f in m["files"]:
+                f.pop("zone", None)
+                f.pop("bloom", None)
+            open(p, "w").write(json.dumps(m))
+    for kw in LOOKUPS:
+        filts = [(k.split("_")[0], v) for k, v in kw.items()]
+        new, old = plan_snapshot(path, filters=filts), \
+            plan_snapshot(legacy, filters=filts)
+        assert new.dropped and not old.dropped, kw
+        assert old.accepted == plan_snapshot(legacy).accepted
+        assert len(old.files) == len(plan_snapshot(legacy).files)
+        got = sorted(tuple(r) for r in read_encoded(spark, legacy, **kw)
+                     .collect())
+        assert got == sorted(tuple(r) for r in read_encoded(spark, path, **kw)
+                             .collect()), kw
+
+
+def test_vacuum_reclaims_an_uncommitted_runs_bloom_sidecar(
+        spark, tmp_path, monkeypatch):
+    """A write that dies after its run manifest and bloom sidecar, but
+    before the lineage commit, leaves both behind; vacuum deletes them
+    and keeps the committed run's."""
+    import tokcodec.io_tables as iot
+
+    path = str(tmp_path / "t")
+    _two_runs(spark, path)
+    runs = os.path.join(path, "_runs")
+    assert os.path.exists(os.path.join(runs, "r1.bloom"))
+
+    def crash(*_a, **_k):
+        raise RuntimeError("crash before the commit point")
+
+    monkeypatch.setattr(iot, "_commit_lineage_local", crash)
+    with pytest.raises(RuntimeError, match="commit point"):
+        write_encoded(_mk(spark, 600, 700), path, n_buckets=3, run_id="r3",
+                      epoch=2)
+    monkeypatch.undo()
+    assert {"r3.json", "r3.bloom"} <= set(os.listdir(runs))
+    res = iot.vacuum_encoded(spark, path)
+    assert res["deleted_run_manifests"] == 1
+    assert res["deleted_bloom_sidecars"] == 1
+    assert sorted(os.listdir(runs)) == ["r1.bloom", "r1.json", "r2.bloom",
+                                        "r2.json"]
+    assert read_encoded(spark, path, eq_filter=("doc_id", "d450")).count() \
+        == 1
+    assert read_encoded(spark, path).count() == 600

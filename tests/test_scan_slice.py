@@ -253,13 +253,14 @@ def test_present_key_lookup_skips_non_filter_files(tables, monkeypatch):
 def test_lookup_opens_only_surviving_runs_files(spark, tables, monkeypatch,
                                                 placement):
     """On a two-run table (run "a" holds d00000-d01999, run "b"
-    d02000-d02999), an absent-key lookup opens filter-column files
-    only, and a present-key lookup opens other-column files of the
-    surviving run only — not those of the other run covering the same
-    bucket. Opens are counted in the driver's process: by the slice
-    scan run Spark-free, and by read_encoded when it is driver-placed
-    (the same files). The rows read_encoded returns are the same on
-    both placements."""
+    d02000-d02999), an absent-key lookup opens no block file (the
+    file blooms in the run manifests drop every file before the scan),
+    and a present-key lookup opens files of the surviving run only —
+    not those of the other run covering the same bucket. Opens are
+    counted in the driver's process: by the slice scan run
+    Spark-free, and by read_encoded when it is driver-placed (the
+    same files). The rows read_encoded returns are the same on both
+    placements."""
     from tokcodec.io_tables import read_encoded
 
     plan_rows = _plan(tables["plain"])[1]
@@ -274,7 +275,8 @@ def test_lookup_opens_only_surviving_runs_files(spark, tables, monkeypatch,
         for bks in _slices(plan[0], k=4):
             _scan(plan, bks)
         others = {p for p in opens.paths if col_of[p] != "doc_id"}
-        assert opens.paths and {run_of[p] for p in others} == runs, key
+        assert {run_of[p] for p in others} == runs, key
+        assert {run_of[p] for p in opens.paths} == runs, key
         scanned = set(opens.paths)
         opens = _Opens(monkeypatch)
         got = read_encoded(spark, tables["plain"], **kw).collect()

@@ -56,3 +56,18 @@ def test_task_wave_probe_is_covered_and_starts():
                          capture_output=True, text=True, timeout=120)
     assert out.returncode == 0, out.stderr
     assert "--reps" in out.stdout
+
+
+def test_run_growth_probe_is_covered_and_starts():
+    """scripts/probe_run_growth.py measures how a lookup's cost grows
+    with the number of appended runs: its imports are checked above,
+    and it parses its arguments without starting Spark."""
+    import subprocess
+    import sys
+
+    probe = os.path.join(ROOT, "scripts", "probe_run_growth.py")
+    assert probe in SOURCES
+    out = subprocess.run([sys.executable, probe, "--help"],
+                         capture_output=True, text=True, timeout=120)
+    assert out.returncode == 0, out.stderr
+    assert "--appends" in out.stdout

@@ -31,16 +31,23 @@ BITS_PER_KEY = 10
 
 def polyhash_batch(data: bytes, lengths: np.ndarray) -> np.ndarray:
     """One 64-bit hash per value over the flattened (data, lengths)
-    chunk layout — lockstep over byte positions, no per-value Python."""
+    chunk layout — lockstep over byte positions, no per-value Python.
+    Positions below the shortest value's length update every hash, so
+    only the positions past it pay a mask."""
     b = np.frombuffer(data, dtype=np.uint8)
     lengths = np.asarray(lengths, dtype=np.int64)
     starts = np.zeros(len(lengths), dtype=np.int64)
     np.cumsum(lengths[:-1], out=starts[1:])
     h = np.full(len(lengths), _SEED, dtype=np.uint64)
     cap = int(min(lengths.max(), _HASH_CAP)) if len(lengths) else 0
-    for pos in range(cap):
+    every = min(int(lengths.min()), cap) if len(lengths) else 0
+    p = np.uint64(_P)
+    for pos in range(every):
+        h *= p
+        h ^= b[starts + pos]
+    for pos in range(every, cap):
         m = lengths > pos
-        h[m] = (h[m] * np.uint64(_P)) ^ b[starts[m] + pos].astype(np.uint64)
+        h[m] = (h[m] * p) ^ b[starts[m] + pos].astype(np.uint64)
     h ^= lengths.astype(np.uint64) * np.uint64(_LEN_MIX)
     return h
 
@@ -70,20 +77,34 @@ def _mix64_np(z: np.ndarray) -> np.ndarray:
 def bloom_build(data: bytes, lengths: np.ndarray) -> tuple[bytes, int]:
     """Chunk bloom: returns (bit bytes, m_bits). m is a power of two
     sized at ~BITS_PER_KEY bits per value."""
-    n = max(len(lengths), 1)
-    m = 1 << max(6, (BITS_PER_KEY * n - 1).bit_length())
-    h = polyhash_batch(data, np.asarray(lengths))
+    return bloom_bits(polyhash_batch(data, np.asarray(lengths)),
+                      len(lengths))
+
+
+def bloom_bits(h: np.ndarray, n: int) -> tuple[bytes, int]:
+    """(bit bytes, m_bits) of the bloom over the polyhash values ``h``,
+    sized for ``n`` keys: m is a power of two of ~BITS_PER_KEY bits per
+    key. Bits are set by one boolean scatter per probe and packed
+    least-significant bit first (bit i of the filter is bit i & 7 of
+    byte i >> 3, the order bloom_might_contain tests)."""
+    m = 1 << max(6, (BITS_PER_KEY * max(n, 1) - 1).bit_length())
     g1 = _mix64_np(h)
     g2 = _mix64_np(h ^ np.uint64(_G2_TWEAK)) | np.uint64(1)
-    bits = np.zeros(m // 8, dtype=np.uint8)
+    flags = np.zeros(m, dtype=bool)
     for j in range(K):
-        idx = (g1 + np.uint64(j) * g2) & np.uint64(m - 1)
-        np.bitwise_or.at(
-            bits,
-            (idx >> np.uint64(3)).astype(np.int64),
-            (np.uint64(1) << (idx & np.uint64(7))).astype(np.uint8),
-        )
-    return bits.tobytes(), m
+        flags[((g1 + np.uint64(j) * g2) & np.uint64(m - 1))
+              .astype(np.intp)] = True
+    return np.packbits(flags, bitorder="little").tobytes(), m
+
+
+def file_bloom(hashes) -> bytes:
+    """One bloom over the polyhash arrays ``hashes`` of a block file's
+    chunk blooms (the hashes the chunk blooms were built from, so
+    nothing is hashed twice), sized at BITS_PER_KEY per distinct
+    value in the file. Chunk blooms are sized per chunk, so they
+    cannot be OR-ed into one."""
+    h = np.unique(np.concatenate(hashes))
+    return bloom_bits(h, len(h))[0]
 
 
 def bloom_params(value: bytes) -> tuple[int, int]:
@@ -102,17 +123,23 @@ def bloom_might_contain(bits: bytes, g1: int, g2: int) -> bool:
     return True
 
 
-def bloom_block_row(bucket: int, column: str, arr) -> dict:
+def bloom_block_row(bucket: int, column: str, arr,
+                    hashes: list | None = None) -> dict:
     """Block row (component='bloom') for one string/binary chunk.
     orig_bytes=0: the bloom is index overhead, so it inflates enc_bytes
-    in the lineage ratio without claiming input bytes."""
+    in the lineage ratio without claiming input bytes. ``hashes``: a
+    list that receives the chunk's polyhash array (the block writer's
+    file bloom is built from it; file_bloom)."""
     import json
     import zlib
 
     from tokcodec.codecs.strcodecs import arrow_to_strchunk
 
     data, lengths = arrow_to_strchunk(arr)
-    payload, m = bloom_build(data, lengths)
+    h = polyhash_batch(data, lengths)
+    if hashes is not None:
+        hashes.append(h)
+    payload, m = bloom_bits(h, len(lengths))
     return {
         "run_id": "", "bucket": int(bucket), "chunk": 0,
         "column": column, "component": "bloom", "codec": "bloom64",
@@ -134,7 +161,8 @@ def element_probe_bytes(value) -> bytes:
     return int(value).to_bytes(8, "little", signed=True)
 
 
-def bloom_block_row_elements(bucket: int, column: str, arr) -> dict:
+def bloom_block_row_elements(bucket: int, column: str, arr,
+                             hashes: list | None = None) -> dict:
     """Block row (component='bloom') over the DISTINCT ELEMENTS of an
     array column's chunk — the 'which chunks contain token X'
     membership index behind ``contains_filter`` pushdown (the
@@ -149,6 +177,7 @@ def bloom_block_row_elements(bucket: int, column: str, arr) -> dict:
     same blocked-bloom build as scalar columns. Int-lane elements
     hash their 8-byte little-endian int64 encoding; string/binary
     elements hash raw bytes (element_probe_bytes is the probe twin).
+    ``hashes``: as for bloom_block_row.
     """
     import json
     import zlib
@@ -170,7 +199,10 @@ def bloom_block_row_elements(bucket: int, column: str, arr) -> dict:
         from tokcodec.codecs.strcodecs import arrow_to_strchunk
 
         data, lengths = arrow_to_strchunk(uniq)
-    payload, m = bloom_build(data, lengths)
+    h = polyhash_batch(data, lengths)
+    if hashes is not None:
+        hashes.append(h)
+    payload, m = bloom_bits(h, len(lengths))
     return {
         "run_id": "", "bucket": int(bucket), "chunk": 0,
         "column": column, "component": "bloom", "codec": "bloom64",

@@ -186,9 +186,14 @@ def _extra_delete_fields(schema: T.StructType, manifest: dict,
 def _read_partition(part: _SlicePartition, schema: T.StructType,
                     key_hex):
     """Executor side: read_encoded's scan task on one slice, with the
-    removal lists applied in the task."""
+    removal lists applied in the task. Spark reads a plan without
+    partitions (every file pruned, or none planned) as one None
+    partition, which holds no rows."""
     from tokcodec.decode import make_decode_fn
     from tokcodec.scan import _scan_slice
+
+    if part is None:
+        return
 
     key = bytes.fromhex(key_hex) if key_hex else None
     names = [f.name for f in schema.fields]
@@ -347,17 +352,23 @@ class TokcodecBatchReader(DataSourceReader):
 
 
 class TokcodecPushdownBatchReader(TokcodecBatchReader):
-    """Batch reader + WHERE-predicate chunk pruning. Spark refuses a
-    reader that merely DEFINES pushFilters unless
+    """Batch reader + WHERE-predicate file and chunk pruning. Spark
+    refuses a reader that merely DEFINES pushFilters unless
     ``spark.sql.python.filterPushdown.enabled=true`` (off by default
     in Spark 4.1), so pruning is opt-in via
     ``.option("pushdown", "true")`` — tokcodec.session.get_spark
     enables the conf."""
 
     def pushFilters(self, filters):
+        from tokcodec.scan import _prune_files
+
         manifest = self.snap.manifest
         self.specs = _filter_specs(manifest_schema(manifest), manifest,
                                    filters)
+        if self.specs:
+            # the planner's file pruning: partitions list only the
+            # files of the (run, bucket) pairs whose summaries match
+            _prune_files(self.snap, self.specs)
         # hand every filter back: pruning is ours, exactness is Spark's
         return filters
 
@@ -411,9 +422,10 @@ def _csv_opt(options: dict, key: str) -> list[str]:
 
 class _RunFilesMessage(WriterCommitMessage):
     """Per-task commit message: the file-manifest rows this task wrote
-    (path, column, bucket_ranges, n_rows, bytes) — O(files), never
-    payload bytes. ``run_id`` matters for the streaming sink, where
-    every task mints its own (see TokcodecStreamWriter)."""
+    (path, column, bucket_ranges, n_rows, bytes, and the file summary:
+    zone, bloom) — O(files), never payload bytes. ``run_id`` matters
+    for the streaming sink, where every task mints its own (see
+    TokcodecStreamWriter)."""
 
     def __init__(self, files: list[dict], run_id: str):
         self.files = files
@@ -511,7 +523,9 @@ class _WriterCore:
                                      dtype=np.int32)))
 
         files: list[dict] = []
-        for out in writer(enc(with_bucket(iterator))):
+        hashes: dict = {}
+        for out in writer(enc(with_bucket(iterator), bloom_hashes=hashes),
+                          bloom_hashes=hashes):
             files.extend(out.to_pylist())
         return _RunFilesMessage(files, self.run_id)
 
@@ -519,21 +533,14 @@ class _WriterCore:
                             epoch: int) -> None:
         """Durable file list for one run — must exist before the
         lineage append makes any of its rows visible."""
-        from tokcodec.io_tables import _run_manifest_path
+        from tokcodec.io_tables import _run_manifest_path, _write_run_manifest
 
-        rman = _run_manifest_path(self.path, run_id)
-        if _read_json_if_exists(rman) is not None:
+        if _read_json_if_exists(_run_manifest_path(self.path, run_id)) \
+                is not None:
             raise ValueError(
                 f"run_id {run_id!r} already has a manifest at "
                 f"{self.path!r} — duplicate commit refused")
-        _write_json_fs(rman, json.dumps(
-            {"run_id": run_id, "epoch": int(epoch),
-             "schema_json": json.dumps(self.schema.jsonValue()),
-             "files": [{k: f[k] for k in ("path", "column",
-                                          "bucket_ranges", "n_rows",
-                                          "bytes")}
-                       for f in _decoded_ranges(files)]},
-            separators=(",", ":")))
+        _write_run_manifest(self.path, run_id, epoch, self.schema, files)
 
     def _commit_files(self, files: list[dict], epoch: int,
                       tombstones=None, n_buckets_floor: int = 0,
@@ -583,20 +590,6 @@ class _WriterCore:
                         posixpath.join(blocks_root, f["path"]))
                 except Exception:
                     pass  # best-effort: orphans are invisible anyway
-
-
-def _decoded_ranges(files: list[dict]) -> list[dict]:
-    """Writer tasks report bucket_ranges as a JSON string; parse it so
-    the run manifest stores the list-of-pairs shape write_encoded
-    writes (both writers emit identical manifests)."""
-    out = []
-    for f in files:
-        g = dict(f)
-        g["bucket_ranges"] = json.loads(f["bucket_ranges"]) \
-            if isinstance(f["bucket_ranges"], str) else \
-            f["bucket_ranges"]
-        out.append(g)
-    return out
 
 
 def _plan_epoch_and_tombstones(path: str, run_id: str,

@@ -445,7 +445,10 @@ def make_encode_fn(schema: T.StructType, run_id: str,
     chunk index to the set of (column, component) string leaves whose
     FSST trial lost outright on that chunk index in an earlier bucket of
     the same task (see make_encode_sorted_fn); without it every chunk
-    trials.
+    trials. Its keyword ``bloom_hashes``, a dict, receives under
+    (bucket, column) the list of polyhash arrays of each bloom column's
+    chunks (unencrypted columns only): the block writer builds its
+    file blooms from them (_make_block_writer).
 
     ``encrypted_columns``/``encryption_key``: AES-GCM these columns'
     block payloads AND metadata (zone bounds, value-bearing codec
@@ -482,7 +485,8 @@ def make_encode_fn(schema: T.StructType, run_id: str,
     )
 
     def fn(key: tuple, table: pa.Table, *,
-           trial_memo: dict[int, set] | None = None) -> pa.Table:
+           trial_memo: dict[int, set] | None = None,
+           bloom_hashes: dict | None = None) -> pa.Table:
         import pyarrow.compute as pc
 
         t0 = time.monotonic()
@@ -543,14 +547,20 @@ def make_encode_fn(schema: T.StructType, run_id: str,
                         bloom_block_row_elements,
                     )
 
+                    hashes = None
+                    if bloom_hashes is not None \
+                            and name not in encrypted_columns:
+                        hashes = bloom_hashes.setdefault((bucket, name), [])
                     if isinstance(dt, T.ArrayType):
                         # element bloom: membership of single values
                         # INSIDE the arrays (contains_filter pushdown)
-                        br = bloom_block_row_elements(bucket, name, arr)
+                        br = bloom_block_row_elements(bucket, name, arr,
+                                                      hashes=hashes)
                     else:
                         br = bloom_block_row(bucket, name,
                                              arr.fill_null("")
-                                             if arr.null_count else arr)
+                                             if arr.null_count else arr,
+                                             hashes=hashes)
                     br["run_id"] = run_id
                     br["chunk"] = ci
                     if name in encrypted_columns:
@@ -692,7 +702,9 @@ def make_encode_sorted_fn(schema: T.StructType, run_id: str,
     at a boundary may flip). ``cluster_by`` re-sorts each bucket
     before chunking, so clustered writes keep no memo and trial every
     chunk; a task with a single bucket (the DataSource writer's) has
-    nothing to share. Winning chunks always train their own table."""
+    nothing to share. Winning chunks always train their own table.
+    ``bloom_hashes``: passed to every bucket's encode (make_encode_fn).
+    """
     inner = make_encode_fn(schema, run_id, cluster_by=cluster_by,
                            chunk_max_rows=chunk_max_rows,
                            chunk_max_values=chunk_max_values,
@@ -704,7 +716,7 @@ def make_encode_sorted_fn(schema: T.StructType, run_id: str,
                            encryption_key=encryption_key,
                            encryption_salt=encryption_salt)
 
-    def fn(batches):
+    def fn(batches, bloom_hashes: dict | None = None):
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -717,7 +729,7 @@ def make_encode_sorted_fn(schema: T.StructType, run_id: str,
             if tbl.num_rows == 0:
                 return []
             out = inner((cur,), tbl.drop_columns([BUCKET_COL]),
-                        trial_memo=trial_memo)
+                        trial_memo=trial_memo, bloom_hashes=bloom_hashes)
             return out.to_batches()
 
         for batch in batches:

@@ -44,6 +44,7 @@ import json
 import os
 import posixpath
 import re
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -64,9 +65,10 @@ from tokcodec.schema import (
     schema_manifest,
 )
 
-# one row per block file a run wrote (the writer tasks' output)
+# one row per block file a run wrote (the writer tasks' output): its
+# place and size, plus its file summary (_make_block_writer)
 _FILEROW_DDL = ("path string, column string, bucket_ranges string, "
-                "n_rows bigint, bytes bigint")
+                "n_rows bigint, bytes bigint, zone string, bloom binary")
 
 
 def _paths(path: str) -> tuple[str, str, str]:
@@ -77,6 +79,13 @@ def _paths(path: str) -> tuple[str, str, str]:
 
 def _run_manifest_path(path: str, run_id: str) -> str:
     return posixpath.join(path, "_runs", f"{run_id}.json")
+
+
+def _run_blooms_path(path: str, run_id: str) -> str:
+    """A run's file-bloom sidecar: the file blooms of its block files,
+    concatenated, each located by its run-manifest entry's ``bloom``
+    [offset, length]. Read only by a plan that probes a bloom."""
+    return posixpath.join(path, "_runs", f"{run_id}.bloom")
 
 
 # a leading URI scheme ("file:", "s3:", "hdfs:", ...)
@@ -133,12 +142,17 @@ def _write_json_fs(path: str, content: str) -> None:
     via pyarrow fs, temp file + atomic move, so a reader sees the old
     file or the new one, never a torn one, on local/HDFS/S3 paths
     alike."""
+    _write_bytes_fs(path, content.encode("utf-8"))
+
+
+def _write_bytes_fs(path: str, content: bytes) -> None:
+    """_write_json_fs for bytes (the run's file-bloom sidecar)."""
     fs, root = _task_fs(path)
     fs.create_dir(posixpath.dirname(root), recursive=True)
     tmp = posixpath.join(posixpath.dirname(root),
                          f".{uuid.uuid4().hex}.tmp")
     with fs.open_output_stream(tmp) as out:
-        out.write(content.encode("utf-8"))
+        out.write(content)
     fs.move(tmp, root)
 
 
@@ -219,19 +233,38 @@ def _task_slots(spark: SparkSession, n_units: int) -> int:
     return max(1, min(n_units, spark.sparkContext.defaultParallelism))
 
 
+_META_POOL: list = []  # [(pid, ThreadPoolExecutor)]
+_META_POOL_LOCK = threading.Lock()
+_META_THREAD = "tokcodec-meta"
+
+
+def _meta_pool():
+    """The metadata thread pool: started once per process and kept, as
+    starting its threads anew cost ~0.7 ms each per call (a plan of a
+    96-run table fans out twice). Threads do not survive a fork, so a
+    forked child starts its own."""
+    with _META_POOL_LOCK:
+        if not _META_POOL or _META_POOL[0][0] != os.getpid():
+            from concurrent.futures import ThreadPoolExecutor
+
+            _META_POOL[:] = [(os.getpid(), ThreadPoolExecutor(
+                max_workers=_META_IO_THREADS,
+                thread_name_prefix=_META_THREAD))]
+        return _META_POOL[0][1]
+
+
 def _fan_out(fn, items, min_items: int = _META_IO_FANOUT_MIN) -> list:
     """[fn(x) for x in items], on the metadata thread pool when there
     are at least ``min_items`` items (order preserved; the first
     exception propagates). The driver placement of a scan passes 2:
-    its items are whole bucket slices, at most one per core."""
+    its items are whole bucket slices, at most one per core. A call
+    from a pool thread runs serially, so that nested fan-outs cannot
+    wait on their own pool."""
     items = list(items)
-    if len(items) < min_items:
+    if len(items) < min_items \
+            or threading.current_thread().name.startswith(_META_THREAD):
         return [fn(x) for x in items]
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(
-            max_workers=min(len(items), _META_IO_THREADS)) as ex:
-        return list(ex.map(fn, items))
+    return list(_meta_pool().map(fn, items))
 
 
 # a writer task flushes its buffered block rows to files once they
@@ -263,22 +296,36 @@ def _make_block_writer(blocks_p: str, run_id: str,
     bytes cross the Arrow boundary exactly once. Parquet statistics
     are written only for bucket/run_id (the scan task picks row
     groups by their bucket range) — full stats on payload columns were pure
-    footer overhead that showed up at small-file sizes."""
+    footer overhead that showed up at small-file sizes.
+
+    Each row also carries the file's summary, which the run manifest
+    stores and the planner tests before any block file is opened
+    (tokcodec.scan._summary_dropped): ``zone``, the JSON of the
+    file's values metas merged (_merge_zone_metas; null when a chunk
+    is encrypted, so that no bound leaves in clear), and ``bloom``,
+    one file bloom over the distinct values of a bloom column
+    (bloom.file_bloom), built from the chunk blooms' hashes that the
+    encoder leaves in ``bloom_hashes`` under (bucket, column); null
+    when a bucket of the file left none there (encrypted columns)."""
     # resolved at call time (driver) so tests can lower the module
     # constants — the closure ships the VALUES to executors
     fb = flush_bytes if flush_bytes is not None else FLUSH_BYTES
     split_min = _SPLIT_GROUP_MIN_BYTES
 
-    def fn(batches, part: int | None = None):
+    def fn(batches, part: int | None = None,
+           bloom_hashes: dict | None = None):
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
         from pyspark import TaskContext
 
+        from tokcodec.bloom import file_bloom
+
         schema_out = pa.schema([
             ("path", pa.string()), ("column", pa.string()),
             ("bucket_ranges", pa.string()),
             ("n_rows", pa.int64()), ("bytes", pa.int64()),
+            ("zone", pa.string()), ("bloom", pa.binary()),
         ])
         if part is not None:
             tid, att = part, 0
@@ -332,12 +379,19 @@ def _make_block_writer(blocks_p: str, run_id: str,
                         for bkt in bs:
                             w.write_table(sub.filter(
                                 pc.equal(sub.column("bucket"), bkt)))
+                # a bucket whose rows span two flushes left its hashes
+                # to the first file: the second gets no bloom
+                hashes = [bloom_hashes.pop((b, col), None)
+                          for b in bs] if bloom_hashes else [None]
                 rows.append({
                     "path": rel,
                     "column": col,
                     "bucket_ranges": json.dumps(_bucket_ranges(bs)),
                     "n_rows": sub.num_rows,
                     "bytes": int(fs.get_file_info(full).size),
+                    "zone": _file_zone(sub),
+                    "bloom": None if None in hashes
+                    else file_bloom([h for hs in hashes for h in hs]),
                 })
             part += 1
 
@@ -351,6 +405,22 @@ def _make_block_writer(blocks_p: str, run_id: str,
             yield pa.RecordBatch.from_pylist(rows, schema=schema_out)
 
     return fn
+
+
+def _file_zone(sub) -> str | None:
+    """The zone summary of one block file's rows ``sub`` (one column):
+    its values metas merged (_merge_zone_metas), as JSON; None when
+    the file has no values rows, when no zone survives the merge, or
+    when a meta is encrypted."""
+    import pyarrow.compute as pc
+
+    metas = [json.loads(m) for m in pc.filter(
+        sub.column("meta"),
+        pc.equal(sub.column("component"), "values")).to_pylist()]
+    if not metas or any("emeta" in m for m in metas):
+        return None
+    zone = _merge_zone_metas(metas)
+    return json.dumps(zone, separators=(",", ":")) if zone else None
 
 
 def _uuid_to_binary(df: DataFrame, uuid_columns) -> DataFrame:
@@ -908,7 +978,9 @@ def _write_run(b: DataFrame, schema: T.StructType, path: str,
     def composed(batches, part=None):
         # encode -> persist in ONE Python stage: block payloads never
         # re-cross the JVM boundary; only tiny file-manifest rows do
-        yield from writer(enc(batches), part)
+        hashes: dict = {}
+        yield from writer(enc(batches, bloom_hashes=hashes), part,
+                          bloom_hashes=hashes)
 
     # one slice per core, slice i owning the buckets that
     # spark.range(n_buckets, numPartitions=k) gives scan task i,
@@ -925,7 +997,8 @@ def _write_run(b: DataFrame, schema: T.StructType, path: str,
         task_of_bucket = F.expr(
             f"((cast(`{BUCKET_COL}` as bigint) + 1) * {n_tasks} - 1) "
             f"div {n_buckets}").cast("int")
-        filerows = (
+        filerows = [
+            r.asDict() for r in
             b.repartitionById(n_tasks, task_of_bucket)
             # bucket-contiguous rows -> the encode fn streams one
             # bucket at a time (JVM-side sort, spills if needed; task
@@ -934,13 +1007,38 @@ def _write_run(b: DataFrame, schema: T.StructType, path: str,
             .sortWithinPartitions(BUCKET_COL)
             .mapInArrow(composed, _FILEROW_DDL)
             .collect()  # O(files of this run) — the run manifest
-        )
-    files = [
-        {"path": r["path"], "column": r["column"],
-         "bucket_ranges": json.loads(r["bucket_ranges"]),
-         "n_rows": r["n_rows"], "bytes": r["bytes"]}
-        for r in filerows
-    ]
+        ]
+    return _write_run_manifest(path, run_id, epoch, schema, filerows)
+
+
+def _write_run_manifest(path: str, run_id: str, epoch: int,
+                        schema: T.StructType, filerows) -> list[dict]:
+    """Store one run's file manifest, ``_runs/<run_id>.json``, from
+    its writer's file rows (_FILEROW_DDL, as dicts), and return its
+    file entries. Each entry holds the file's path, column, bucket
+    ranges, rows and bytes, plus its summary: ``zone`` (a merged
+    values meta) and ``bloom``, the [offset, length] of its file bloom
+    in the run's sidecar (_run_blooms_path), which is written first,
+    so that a manifest never names a sidecar that is not there. Both
+    writers (_write_run and the DataSource sink) store runs here."""
+    files, blooms, at = [], [], 0
+    # grouped by column: a plan reads one contiguous range per probed
+    # column of a run
+    for r in sorted(filerows, key=lambda r: r["column"]):
+        f = {"path": r["path"], "column": r["column"],
+             "bucket_ranges": json.loads(r["bucket_ranges"])
+             if isinstance(r["bucket_ranges"], str)
+             else r["bucket_ranges"],
+             "n_rows": r["n_rows"], "bytes": r["bytes"]}
+        if r.get("zone"):
+            f["zone"] = json.loads(r["zone"])
+        if r.get("bloom"):
+            f["bloom"] = [at, len(r["bloom"])]
+            blooms.append(bytes(r["bloom"]))
+            at += len(r["bloom"])
+        files.append(f)
+    if blooms:
+        _write_bytes_fs(_run_blooms_path(path, run_id), b"".join(blooms))
     _write_json_fs(
         _run_manifest_path(path, run_id),
         # schema_json: the stored schema AS OF this run (a run's schema
@@ -1201,7 +1299,9 @@ def _run_files(path: str, run_ids,
     schemas: dict[str, str | None] = {}
     for rid, m in zip(rids, mans):
         schemas[rid] = m.get("schema_json")
-        files.extend(dict(f, run_id=rid) for f in m["files"])
+        for f in m["files"]:  # freshly parsed: tagged in place
+            f["run_id"] = rid
+        files.extend(m["files"])
     return (files, schemas) if with_schemas else files
 
 
@@ -1871,9 +1971,10 @@ def _direct_file_rows(
 def _meta_zone_hit(meta: dict, nf: dict) -> bool:
     """Does one chunk's (already-decrypted) meta overlap the filter's
     bounds? Chunks with no stats always survive — never a false
-    negative. The zone test of _prune_block_table, for every lane
-    (int, float, and the truncated string bounds, compared as
-    unsigned bytes, the order they were computed in)."""
+    negative. THE zone test, of _prune_block_table and of the file
+    summaries (_merge_zone_metas; tokcodec.scan._summary_dropped),
+    for every lane (int, float, and the truncated string bounds,
+    compared as unsigned bytes, the order they were computed in)."""
     import base64 as _b64
 
     if nf["lane"] in ("int", "float"):
@@ -1890,6 +1991,34 @@ def _meta_zone_hit(meta: dict, nf: dict) -> bool:
     shi_b = _b64.b64decode(shi) if shi else None
     return any(((shi_b is None) or (shi_b >= b_lo)) and slo_b <= b_hi
                for b_lo, b_hi in nf["bounds"])
+
+
+def _merge_zone_metas(metas: list[dict]) -> dict:
+    """One zone meta over chunk values ``metas`` (already decrypted),
+    for a file summary: _meta_zone_hit passes it for every spec that
+    one of the chunks passes, because each merged bound is the min or
+    max of the chunks' own. Int and float ``lo``/``hi`` merge when
+    every chunk has them; the truncated string bounds when every
+    chunk has a lower one (an unbounded chunk, ``shi_inf``, or one
+    without ``shi`` makes the merge unbounded above). A chunk with no
+    stats leaves its lane out: {} keeps every file, like such a
+    chunk."""
+    import base64 as _b64
+
+    out: dict = {}
+    if all(m.get("lo") is not None and m.get("hi") is not None
+           for m in metas):
+        out["lo"] = min(m["lo"] for m in metas)
+        out["hi"] = max(m["hi"] for m in metas)
+    if all(m.get("slo") is not None or m.get("shi_inf") for m in metas):
+        out["slo"] = _b64.b64encode(min(
+            _b64.b64decode(m.get("slo") or "") for m in metas)).decode()
+        if all(m.get("shi") for m in metas):
+            out["shi"] = _b64.b64encode(max(
+                _b64.b64decode(m["shi"]) for m in metas)).decode()
+        else:
+            out["shi_inf"] = 1
+    return out
 
 
 def _chunk_key(run_id: str, bucket: int, chunk: int) -> str:
@@ -1931,22 +2060,36 @@ def _zone_hits(tbl, keys, nf: dict, encryption_key) -> set:
             if _meta_zone_hit(decrypt_block_meta(encryption_key, r), nf)}
 
 
+def _bloom_params(nf: dict) -> list:
+    """(g1, g2) probe parameters of an eq or contains spec's values."""
+    from tokcodec.bloom import bloom_params
+
+    vals = nf["value"] if isinstance(nf["value"], list) else [nf["value"]]
+    return [bloom_params(v.encode("utf-8") if isinstance(v, str)
+                         else bytes(v)) for v in vals]
+
+
+def _bloom_hit(bits: bytes, params: list) -> bool:
+    """THE bloom test, of a chunk's bloom and of a file summary's
+    (tokcodec.scan._summary_dropped): may the bloom ``bits`` hold one
+    of the values probed by ``params`` (_bloom_params)?"""
+    from tokcodec.bloom import bloom_might_contain
+
+    return any(bloom_might_contain(bits, g1, g2) for g1, g2 in params)
+
+
 def _bloom_hits(tbl, keys, nf: dict, encryption_key) -> set:
     """Chunk keys whose bloom may hold one of the spec's values; a
     chunk with no bloom always survives."""
-    from tokcodec.bloom import bloom_might_contain, bloom_params
     from tokcodec.crypto import decrypt_block_row, is_encrypted
 
-    vals = nf["value"] if isinstance(nf["value"], list) else [nf["value"]]
-    params = [bloom_params(v.encode("utf-8") if isinstance(v, str)
-                           else bytes(v)) for v in vals]
+    params = _bloom_params(nf)
     blooms: dict = {}
     for k, r in _component_rows(tbl, keys, nf["col"], "bloom",
                                 with_payload=True):
         if is_encrypted(r):
             decrypt_block_row(encryption_key, r)
-        blooms[k] = any(bloom_might_contain(r["payload"], g1, g2)
-                        for g1, g2 in params)
+        blooms[k] = _bloom_hit(r["payload"], params)
     return {k for k, _r in _component_rows(tbl, keys, nf["col"], "values")
             if blooms.get(k, True)}
 
@@ -2466,9 +2609,10 @@ def compact_encoded(
 
 def vacuum_encoded(spark: SparkSession, path: str) -> dict:
     """Delete block files no committed run references, and the run
-    manifests of fully superseded runs (post-compaction / crashed-
-    attempt garbage). The ONLY operation that lists the blocks
-    directory — it must discover garbage by definition; it is explicit
+    manifests and file-bloom sidecars of fully superseded runs
+    (post-compaction / crashed-attempt garbage). The ONLY operation
+    that lists the blocks directory — it must discover garbage by
+    definition; it is explicit
     maintenance, never on any read/write path. Single writer assumed:
     do not vacuum while an encode is in flight (its files are not yet
     referenced)."""
@@ -2492,16 +2636,17 @@ def vacuum_encoded(spark: SparkSession, path: str) -> dict:
             fs.delete_file(info.path)
             deleted += 1
     runs_fs, runs_root = _task_fs(posixpath.join(path, "_runs"))
-    stale = 0
+    stale = {".json": 0, ".bloom": 0}  # run manifests, bloom sidecars
     for info in runs_fs.get_file_info(
             pafs.FileSelector(runs_root, recursive=False,
                               allow_not_found=True)):
         if info.type != pafs.FileType.File:
             continue
-        rid = posixpath.basename(info.path)
-        if rid.endswith(".json") and rid[:-5] not in live_runs:
-            runs_fs.delete_file(info.path)
-            stale += 1
+        name = posixpath.basename(info.path)
+        for ext in stale:
+            if name.endswith(ext) and name[:-len(ext)] not in live_runs:
+                runs_fs.delete_file(info.path)
+                stale[ext] += 1
     # removal-list key files whose delete-log entry was retired by
     # compaction (or never committed — a crashed delete_encoded)
     active_dels = {d["delete_id"] for d in snap.deletes}
@@ -2515,7 +2660,9 @@ def vacuum_encoded(spark: SparkSession, path: str) -> dict:
         if posixpath.basename(info.path) not in active_dels:
             del_fs.delete_dir(info.path)
             stale_dels += 1
-    return {"deleted_files": deleted, "deleted_run_manifests": stale,
+    return {"deleted_files": deleted,
+            "deleted_run_manifests": stale[".json"],
+            "deleted_bloom_sidecars": stale[".bloom"],
             "deleted_removal_lists": stale_dels,
             "referenced_files": len(referenced)}
 
@@ -2569,7 +2716,19 @@ def explain_scan(
          bytes_total, bytes_scanned,         # enc_bytes of the decode
                                              # set's block rows
          buckets_total, selectivity,         # scanned/total chunks
+         files_total, files_pruned,          # block files planned; of
+                                             # them, dropped by the
+                                             # file summaries
          filters: [{kind, column, chunks_surviving}, ...]}
+
+    The totals and the per-filter counts cover the whole plan, which
+    is not pruned by file here; ``files_pruned`` counts the files of
+    the read's columns that a read with the same filters never lists
+    (the run-manifest file summaries rule out all of their (run,
+    bucket) pairs; tokcodec.scan._summary_dropped), and the scanned
+    counts leave their chunks out, as the read does. A zone summary
+    drops only chunks the chunk pruner drops too; a file bloom may
+    also drop a chunk whose own bloom gave a false positive.
 
     rows_scanned is an UPPER BOUND (chunk granularity — the exact
     residual still drops rows inside surviving chunks; pending
@@ -2579,14 +2738,15 @@ def explain_scan(
     """
     import pyarrow.compute as pc
 
-    from tokcodec.scan import chunk_index, plan_snapshot
+    from tokcodec.scan import _file_pairs, chunk_index, plan_snapshot
 
     as_of_epoch = _resolve_as_of(spark, path, as_of_epoch, as_of_ts,
                                  as_of_tag)
     filts = _filter_list(range_filter, in_filter, eq_filter,
                          contains_filter, or_filter)
     snap = plan_snapshot(path, as_of_epoch=as_of_epoch,
-                         since_epoch=since_epoch, filters=filts)
+                         since_epoch=since_epoch, filters=filts,
+                         prune_files=False)
     manifest, fcols = snap.manifest, snap.filter_columns
     schema = manifest_schema(manifest)
     if columns is not None:
@@ -2598,9 +2758,11 @@ def explain_scan(
                    else list(dict.fromkeys(list(columns) + fcols)))
     _check_encryption_key(manifest, decode_cols or fcols or None,
                           encryption_key)
-    # anchor chunk/row counts on one column's values rows (chunk
+    # anchor chunk/row counts on one read column's values rows (chunk
     # geometry is shared across a bucket's columns)
-    anchor = fcols[0] if fcols else schema.fields[0].name
+    anchor = fcols[0] if fcols else (decode_cols or schema.fieldNames())[0]
+    read_cols = set(decode_cols) if decode_cols is not None \
+        else {f["column"] for f in snap.files} - {METRICS_COLUMN}
     specs = snap.specs
 
     def counts(t) -> list:
@@ -2610,16 +2772,29 @@ def explain_scan(
                 pc.sum(t.column("enc_bytes")).as_py() or 0,
                 len(pc.unique(vals.column("bucket")))]
 
+    # a read with these filters never lists the (run, bucket) pairs
+    # the file summaries drop, so none of their chunks is scanned
+    dropped = sorted(f"{r}/{b}" for r, b in snap.dropped)
+
     def fold(blocks, kept):
+        import pyarrow as pa
+
         keys = _chunk_keys(blocks)
+        if dropped:
+            pair = pc.binary_join_element_wise(
+                kept.column("run_id"),
+                pc.cast(kept.column("bucket"), pa.string()), "/")
+            kept = kept.filter(pc.invert(pc.is_in(
+                pair, value_set=pa.array(dropped, pa.string()))))
         return (counts(blocks), counts(kept),
                 [len(_chunk_survivors(blocks, keys, nf, encryption_key))
                  for nf in specs])
 
-    parts = chunk_index(
-        spark, snap, set(decode_cols) if decode_cols is not None
-        else {f["column"] for f in snap.files} - {METRICS_COLUMN}, fold,
-        encryption_key=encryption_key)
+    parts = chunk_index(spark, snap, read_cols, fold,
+                        encryption_key=encryption_key)
+    buckets = sorted(snap.accepted)
+    planned = [ps for f in snap.files if f["column"] in read_cols
+               if (ps := _file_pairs(f, snap.accepted, buckets))]
 
     def merged(i: int, n: int) -> list:
         return [sum(x) for x in zip(*(p[i] for p in parts))] or [0] * n
@@ -2630,6 +2805,9 @@ def explain_scan(
         "rows_total": tot[1],
         "bytes_total": tot[2],
         "buckets_total": tot[3],
+        "files_total": len(planned),
+        "files_pruned": sum(all(p in snap.dropped for p in ps)
+                            for ps in planned),
         "filters": [],
     }
     if not filts:

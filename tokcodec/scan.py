@@ -4,10 +4,14 @@ every reader runs, in two placements.
 
     plan_snapshot  table manifest + lineage -> accepted {bucket:
                    [run_id]} -> run-manifest file rows -> read schema,
-                   prune specs, pending deletes. Pure pyarrow-fs
-                   metadata IO: no Spark job, no JVM gateway, so the
-                   same planner serves read_encoded on the driver and
-                   the Python DataSource in its planner worker.
+                   prune specs, pending deletes -> file pruning: the
+                   (run, bucket) pairs whose file summaries (zone
+                   bounds, file blooms) rule out every row leave the
+                   plan before any block file is opened
+                   (_summary_dropped). Pure pyarrow-fs metadata IO:
+                   no Spark job, no JVM gateway, so the same planner
+                   serves read_encoded on the driver and the Python
+                   DataSource in its planner worker.
     _index_slice   the prune phase, THE block-metadata reader: one
                    slice's block files, each opened once -> optional
                    chunk allow-list / sample -> chunk pruning over the
@@ -45,12 +49,15 @@ every reader runs, in two placements.
 
 The DataSource's batch and stream readers (one partition per slice)
 and join_encoded call _scan_slice directly; count_encoded and every
-metadata answer start from plan_snapshot. Chunk pruning is decided
-from the same planned specs by the same function on every path, and
-from metadata before any other column's data is read (Global Range
-Encoding, EDBT 2018: elimination decided once, from one metadata
-structure, before touching data); on the driver placement the same
-pruning result also decides where the decode runs.
+metadata answer start from plan_snapshot. Pruning is decided from the
+same planned specs by the same tests on every path, twice from
+metadata before any data is read: by file, from the run manifests'
+summaries, before any block file is opened (Global Range Encoding,
+EDBT 2018: elimination decided once, from one metadata structure,
+before touching a partition; Iceberg's per-file bounds), then by
+chunk, from the filter columns' metas and blooms, before any other
+column's file is read; on the driver placement the same pruning
+result also decides where the decode runs.
 """
 
 from __future__ import annotations
@@ -65,6 +72,8 @@ from tokcodec.encode import METRICS_COLUMN
 from tokcodec.io_tables import (
     LAYOUT_VERSION,
     _as_of_schema,
+    _bloom_hit,
+    _bloom_params,
     _chunk_keys,
     _committed_pandas,
     _crosses_arrow,
@@ -73,11 +82,14 @@ from tokcodec.io_tables import (
     _evolution_fill_columns,
     _fan_out,
     _lineage_local,
+    _meta_zone_hit,
     _normalize_filter,
     _paths,
     _prune_block_table,
     _read_json_fs,
+    _run_blooms_path,
     _run_files,
+    _task_fs,
     _task_slots,
 )
 from tokcodec.schema import manifest_schema
@@ -90,7 +102,10 @@ class Snapshot:
     schema (the snapshot schema for as-of reads); ``filters``: the
     normalized filters, each with its exact residual Column;
     ``deletes``: removal lists in force;
-    ``winners``: the winning lineage rows (pandas)."""
+    ``winners``: the winning lineage rows (pandas), of every accepted
+    run, before file pruning; ``dropped``: the (run_id, bucket) pairs
+    the file summaries ruled out (_summary_dropped), gone from
+    ``accepted`` and ``files`` once the plan is pruned."""
 
     path: str
     manifest: dict
@@ -101,6 +116,7 @@ class Snapshot:
     winners: object
     filters: list[dict] = field(default_factory=list)
     filter_columns: list[str] = field(default_factory=list)
+    dropped: set = field(default_factory=set)
 
     @property
     def specs(self) -> list[dict]:
@@ -139,7 +155,8 @@ def _normalize_filters(schema: T.StructType, manifest: dict,
 def plan_snapshot(path: str, as_of_epoch: int | None = None,
                   since_epoch: int | None = None,
                   buckets=None, filters=(),
-                  with_files: bool = True) -> Snapshot:
+                  with_files: bool = True,
+                  prune_files: bool = True) -> Snapshot:
     """Plan a read of the table at ``path`` from its metadata alone:
     the manifest, the lineage (winner per (bucket, epoch) in the
     (since_epoch, as_of_epoch] window), the winning runs' file
@@ -153,7 +170,15 @@ def plan_snapshot(path: str, as_of_epoch: int | None = None,
     DataSource passes none). ``with_files=False`` skips the run
     manifests (and
     with them the snapshot-schema projection) for metadata-only
-    callers."""
+    callers.
+
+    A filtered plan is then pruned by file (_prune_files): each spec
+    is tested against the file summaries the run manifests carry, with
+    the chunk pruner's own zone and bloom tests, and a (run, bucket)
+    pair none of whose files of a spec's column can match leaves
+    ``accepted`` with all of its columns' files, so no reader lists,
+    opens or bounds them. ``prune_files=False`` records the pairs in
+    ``dropped`` but keeps them (explain_scan counts the whole plan)."""
     manifest = _read_json_fs(_paths(path)[2])
     if manifest.get("layout", 1) != LAYOUT_VERSION:
         raise ValueError(
@@ -199,9 +224,118 @@ def plan_snapshot(path: str, as_of_epoch: int | None = None,
             schema = _as_of_schema(full, run_schemas)
             snap_names = set(schema.fieldNames())
             dels = [d for d in dels if d["key_column"] in snap_names]
-    return Snapshot(path=path, manifest=manifest, schema=schema,
+    snap = Snapshot(path=path, manifest=manifest, schema=schema,
                     accepted=accepted, files=files, deletes=dels,
                     winners=win, filters=nfs, filter_columns=fcols)
+    if files and nfs:
+        _prune_files(snap, snap.specs, apply=prune_files)
+    return snap
+
+
+def _file_pairs(f: dict, accepted: dict, buckets: list) -> list:
+    """The accepted (run_id, bucket) pairs block file ``f`` (a
+    run-manifest entry) holds rows of; ``buckets``: sorted(accepted).
+    One bisect per bucket range, as in _slice_files."""
+    import bisect
+
+    rid = f["run_id"]
+    return [(rid, b) for lo, hi in f["bucket_ranges"]
+            for b in buckets[bisect.bisect_left(buckets, lo):
+                             bisect.bisect_right(buckets, hi)]
+            if rid in accepted[b]]
+
+
+def _summary_dropped(path: str, files: list[dict], accepted: dict,
+                     specs: list[dict]) -> set:
+    """The accepted (run_id, bucket) pairs that the file summaries in
+    the run manifests rule out: for some spec, every block file of
+    the spec's column holding the pair misses it (for an ``or`` spec,
+    every branch's files miss). A file misses an eq or contains spec
+    when its file bloom holds none of the probed values, and any
+    other spec when its zone summary lies outside the spec's bounds;
+    the tests are _prune_block_table's (_bloom_hit, _meta_zone_hit),
+    and each summary covers all of the file's chunks, so no pair is
+    dropped whose chunks the chunk pruner would keep. A file with no
+    summary (encrypted columns, run manifests written before
+    summaries) never misses, and a pair with no file of a spec's
+    column is kept for the chunk pruner to decide. Only the probed
+    columns' blooms are read, one range of each run's sidecar."""
+    buckets = sorted(accepted)
+    probed = {s["col"] for s in specs if s["kind"] in ("eq", "contains")}
+    blooms = _file_blooms(path, [f for f in files
+                                 if f["column"] in probed and "bloom" in f])
+    by_col: dict = {}
+    for f in files:
+        by_col.setdefault(f["column"], []).append(f)
+    dropped: set = set()
+    for nf in specs:
+        out = None
+        for s in (nf["subs"] if nf["kind"] == "or" else [nf]):
+            params = _bloom_params(s) \
+                if s["kind"] in ("eq", "contains") else None
+            hit, miss = set(), set()
+            for f in by_col.get(s["col"], ()):
+                if params is not None:
+                    bits = blooms.get((f["run_id"], f["path"]))
+                    ok = bits is None or _bloom_hit(bits, params)
+                else:
+                    ok = "zone" not in f or _meta_zone_hit(f["zone"], s)
+                (hit if ok else miss).update(_file_pairs(f, accepted,
+                                                         buckets))
+            miss -= hit
+            out = miss if out is None else out & miss
+        dropped |= out
+    return dropped
+
+
+def _file_blooms(path: str, files: list[dict]) -> dict:
+    """{(run_id, path): file bloom bytes} of ``files`` (run-manifest
+    entries with a ``bloom`` [offset, length]): one read of each run's
+    sidecar, over the range its files' blooms span (the sidecar keeps
+    each column's blooms together), overlapped across runs on the
+    metadata pool."""
+    by_run: dict = {}
+    for f in files:
+        by_run.setdefault(f["run_id"], []).append(f)
+
+    def read(item):
+        rid, fl = item
+        lo = min(f["bloom"][0] for f in fl)
+        hi = max(f["bloom"][0] + f["bloom"][1] for f in fl)
+        fs, p = _task_fs(_run_blooms_path(path, rid))
+        with fs.open_input_file(p) as fh:
+            buf = fh.read_at(hi - lo, lo)
+        return {(rid, f["path"]): buf[f["bloom"][0] - lo:
+                                      f["bloom"][0] - lo + f["bloom"][1]]
+                for f in fl}
+
+    out: dict = {}
+    for part in _fan_out(read, by_run.items()):
+        out.update(part)
+    return out
+
+
+def _prune_files(snap: Snapshot, specs: list[dict],
+                 apply: bool = True) -> None:
+    """File pruning of a planned read: record in ``snap.dropped`` the
+    (run, bucket) pairs the file summaries rule out for ``specs``
+    (_summary_dropped) and, with ``apply``, take them out of
+    ``snap.accepted``, and take out of ``snap.files`` every file left
+    with no accepted pair. Every column's files of a pair go
+    together, so evolution fill and deletes see whole pairs."""
+    snap.dropped = _summary_dropped(snap.path, snap.files, snap.accepted,
+                                    specs)
+    if not apply or not snap.dropped:
+        return
+    snap.accepted = {b: kept for b, rs in snap.accepted.items()
+                     if (kept := [r for r in rs
+                                  if (r, b) not in snap.dropped])}
+    buckets = sorted(snap.accepted)
+    live = {r for rs in snap.accepted.values() for r in rs}
+    # only a run that lost some of its pairs has files to check
+    part = {r for r, _b in snap.dropped} & live
+    snap.files = [f for f in snap.files if f["run_id"] in live and (
+        f["run_id"] not in part or _file_pairs(f, snap.accepted, buckets))]
 
 
 def fill_anchor(files: list[dict], wanted, filter_columns) -> str | None:
@@ -611,9 +745,10 @@ def _driver_scan(snap: Snapshot, rows, slices, specs, decode, chunks=None,
     - an unfiltered read is bounded by its (run, bucket) pairs'
       lineage ``orig_bytes`` (decoded bytes, every column), read from
       the plan with no IO;
-    - a filtered read first needs its filter columns' files to total
-      at most the cap (run-manifest ``bytes``; else no file is opened
-      here); the prune phase (_prune_slice) then runs for every slice,
+    - a filtered read first needs its filter columns' planned files
+      (those the file summaries kept, plan_snapshot) to total at most
+      the cap (run-manifest ``bytes``; else no file is opened here);
+      the prune phase (_prune_slice) then runs for every slice,
       and the read is bounded by the surviving (run, bucket) pairs'
       ``orig_bytes``.
 
