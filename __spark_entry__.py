@@ -937,11 +937,11 @@ def q_delete_roundtrip(spark, sf_dir):
     maintenance op a training table needs for contamination/opt-out
     removal) under the hash gate: sequences encoded, every doc_id
     with id % 7 == 3 deleted via delete_encoded (keys written as a
-    parquet removal list, ONE O(1) lineage commit), decoded through
-    the merge-on-read BROADCAST anti-join (plan-pinned in
-    tests/test_deletes.py). The oracle recomputes the aggregates from
-    the raw documents minus the same keys — a single surviving
-    deleted row breaks the hash."""
+    parquet removal list, ONE O(1) lineage commit), decoded with the
+    keys removed inside the slice scan (merge-on-read, no join:
+    plan-pinned in tests/test_deletes.py). The oracle recomputes the
+    aggregates from the raw documents minus the same keys — a single
+    surviving deleted row breaks the hash."""
     key = os.path.abspath(sf_dir) + "#del"
     if key not in _DECODED_CACHE:
         import shutil

@@ -1,15 +1,21 @@
-"""Guard for the one block-metadata reader: no tokcodec module puts
-block files in a Spark scan. Pruning and every metadata answer read
-block rows with pyarrow, in the slice prune phase
+"""Guard for the one block-metadata reader and the one filesystem
+layer: no tokcodec module puts block files in a Spark scan, and none
+reads or writes table files through Spark. Pruning and every metadata
+answer read block rows with pyarrow, in the slice prune phase
 (tokcodec.scan._index_slice / chunk_index), so a Spark DataFrame over
 block files (``spark.read…schema(BLOCK_DDL)``, ``_blocks_df``,
 ``blocks_df(``) is a second pruner coming back.
 
-The Spark reads that remain on table paths are the removal lists of
-merge-on-read deletes. They are listed here, exactly, and go when the
-deletes move into the slice scan task (ROADMAP G, its deletes half);
-that change empties ALLOWED_TABLE_READS. sources.py's JDBC read is not
-a table path and stays outside the guard. Reads the files only."""
+Every table file — block files, metadata and the removal lists of
+merge-on-read deletes — is read and written through pyarrow
+(io_tables._task_fs), so ALLOWED_TABLE_READS is empty: a ``spark.read``
+in a tokcodec module fails the guard, and so does a Spark
+DataFrameWriter call (``df.write…parquet(…)``, ``.save(…)``,
+``.json(…)``, …), whose Hadoop paths resolve a percent-encoded
+``file:`` URI to another directory than _task_fs does. sources.py's
+JDBC read is not a table path and stays outside the guard. The checks
+parse the code, so docstrings and comments never trip them. Reads the
+files only."""
 
 import ast
 import glob
@@ -22,13 +28,12 @@ MODULES = sorted(glob.glob(os.path.join(ROOT, "tokcodec", "**", "*.py"),
                            recursive=True))
 OUTSIDE = {os.path.join("tokcodec", "sources.py")}  # JDBC, not a table
 
-# (module, function) -> the Spark reads of removal lists that ROADMAP
-# G's deletes half moves into the slice scan task
-ALLOWED_TABLE_READS = {
-    (os.path.join("tokcodec", "io_tables.py"), "read_encoded_as"),
-    (os.path.join("tokcodec", "io_tables.py"), "delete_encoded"),
-    (os.path.join("tokcodec", "io_tables.py"), "_delete_keys_df"),
-}
+# (module, function) -> Spark reads allowed on table paths: none
+ALLOWED_TABLE_READS: set = set()
+
+# a DataFrameWriter's (or DataStreamWriter's) terminal calls
+WRITER_SINKS = {"parquet", "save", "json", "csv", "orc", "text",
+                "saveAsTable", "insertInto", "start", "toTable"}
 
 
 def _rel(p: str) -> str:
@@ -65,6 +70,31 @@ def _spark_reads(tree):
                     and isinstance(child.value, ast.Name) \
                     and child.value.id == "spark":
                 out.append((name, child.lineno))
+            visit(child, name)
+
+    visit(tree, None)
+    return out
+
+
+def _spark_writes(tree):
+    """(enclosing function, line) of every Spark DataFrameWriter call in
+    ``tree``: a call chain through ``.write``, ``.writeStream`` or
+    ``.writeTo`` that ends in a sink (``df.write.mode(m).parquet(p)``).
+    A file object's ``out.write(data)`` is no writer: nothing is called
+    on its result."""
+    out = []
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            name = fn
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                name = child.name if fn is None else fn
+            if isinstance(child, ast.Call) \
+                    and isinstance(child.func, ast.Attribute) \
+                    and child.func.attr in WRITER_SINKS:
+                names, _args = _chain(child)
+                if {"write", "writeStream", "writeTo"} & set(names[1:]):
+                    out.append((name, child.lineno))
             visit(child, name)
 
     visit(tree, None)
@@ -111,6 +141,13 @@ def test_table_reads_are_the_listed_removal_lists():
         f"{sorted(ALLOWED_TABLE_READS - found)}")
 
 
+def test_no_spark_writes_of_table_files():
+    found = sorted((_rel(src), fn, line) for src in MODULES
+                   if _rel(src) not in OUTSIDE
+                   for fn, line in _spark_writes(_parse(src)))
+    assert not found, f"Spark writes of table files: {found}"
+
+
 def test_guard_sees_a_block_scan():
     """The checks above fire on the shapes they forbid."""
     bad = ast.parse(
@@ -120,3 +157,10 @@ def test_guard_sees_a_block_scan():
     assert _block_scans(bad) == [(2, "blocks_df"),
                                  (3, "spark.read of BLOCK_DDL")]
     assert _spark_reads(bad) == [("f", 3)]
+    writes = ast.parse(
+        'def g(kdf, path, out, data):\n'
+        '    """kdf.write.parquet(path) in a docstring is no call"""\n'
+        '    kdf.write.mode("error").parquet(path)\n'
+        '    kdf.write.format("tokcodec").save(path)\n'
+        '    out.write(data)\n')
+    assert _spark_writes(writes) == [("g", 3), ("g", 4)]

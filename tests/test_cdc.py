@@ -176,6 +176,26 @@ def test_delete_on_evolved_key_with_requested_postdating_column(
     assert _rows(rebuilt, ["k", "v"]) == _rows(now, ["k", "v"])
 
 
+@pytest.mark.both_placements
+def test_delete_rows_survive_a_projection_the_snapshot_predates(
+        spark, tmp_path):
+    # every requested column postdates the snapshot: the delete rows'
+    # read projects all of its columns away, and still keeps one row
+    # per deleted key (the key itself is decoded for the match only)
+    base = str(tmp_path / "evw")
+    write_encoded(spark.range(20).select(F.col("id").alias("k")),
+                  base, n_buckets=2, run_id="a", epoch=0)
+    e1 = spark.range(20, 30).select(F.col("id").alias("k"),
+                                    (F.col("id") * 10).alias("w"))
+    write_encoded(e1, base, n_buckets=2, run_id="b", epoch=1,
+                  resume=True, schema_evolution=True)
+    delete_encoded(spark, base, "k", [3, 7, 25])  # epoch 2
+    ch = changes_encoded(spark, base, since_epoch=0, columns=["w"])
+    got = sorted((r["_change_type"], r["w"]) for r in ch.collect())
+    assert got == sorted([("delete", None)] * 2 + [
+        ("insert", 10 * i) for i in range(20, 30) if i != 25])
+
+
 def test_delete_key_postdating_snapshot_skipped_columns_none(
         spark, tmp_path):
     """Review fix: with columns=None, a delete keyed on a column the

@@ -1,7 +1,8 @@
 """Equality deletes (removal lists): Iceberg equality-delete analogue
-with merge-on-read anti-joins, compaction materialization and vacuum
-reclaim. The reference has no row-delete (a Parquet file is immutable,
-CarpetWriter.java writes whole files); this is the table-format
+with merge-on-read removal inside the slice scan, compaction
+materialization and vacuum reclaim. The reference has no row-delete
+(a Parquet file is immutable, CarpetWriter.java writes whole files);
+this is the table-format
 operation a 10^12-row training table needs for contamination/opt-out
 removal without rewriting the table per removal."""
 
@@ -165,11 +166,14 @@ def test_delete_applies_to_later_appends(spark, table):
     assert "d42" in ids and "d43" in ids
 
 
-def test_delete_broadcast_plan(spark, table):
+def test_delete_plan_has_no_join(spark, table):
+    # deletes are removed inside the slice scan: the executed plan is
+    # the scan alone, with no join against the removal list
     delete_encoded(spark, table, "doc_id", ["d1"])
-    plan = read_encoded(spark, table)._jdf.queryExecution().executedPlan() \
-        .toString()
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+    out = read_encoded(spark, table)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan, plan
+    assert _ids(out) == sorted(f"d{i}" for i in range(40) if i != 1)
 
 
 def test_schema_on_read_maps_delete_key(spark, table):
@@ -182,10 +186,12 @@ def test_schema_on_read_maps_delete_key(spark, table):
     assert out.columns == ["docId", "nTok"]
     assert out.count() == 39
     assert "d9" not in {r.docId for r in out.collect()}
-    # a read schema that drops the key column must fail loudly
+    # a read schema that drops the key column still honours the
+    # removal list: the key is decoded for the removal step only
     rs2 = T.StructType([T.StructField("nTok", T.LongType())])
-    with pytest.raises(ValueError, match="pending delete"):
-        read_encoded_as(spark, table, rs2)
+    out2 = read_encoded_as(spark, table, rs2)
+    assert out2.columns == ["nTok"]
+    assert [r.nTok for r in out2.collect()] == [2] * 39
 
 
 def test_uuid_key_delete(spark, tmp_path):
@@ -200,6 +206,14 @@ def test_uuid_key_delete(spark, tmp_path):
     delete_encoded(spark, path, "uid", [ids[0], ids[3]])
     left = {r.uid for r in read_encoded(spark, path).collect()}
     assert left == set(ids) - {ids[0], ids[3]}
+    # keys match after canonicalisation (dashes optional, either
+    # case), and a malformed key fails the delete before its commit
+    delete_encoded(spark, path, "uid", [ids[5].upper().replace("-", "")])
+    left = {r.uid for r in read_encoded(spark, path).collect()}
+    assert left == set(ids) - {ids[0], ids[3], ids[5]}
+    with pytest.raises(Exception, match="not a UUID"):
+        delete_encoded(spark, path, "uid", ["not-a-uuid"])
+    assert len(describe_encoded(spark, path)["pending_deletes"]) == 2
 
 
 def test_crashed_delete_is_invisible_and_vacuumed(spark, table):
@@ -211,3 +225,82 @@ def test_crashed_delete_is_invisible_and_vacuumed(spark, table):
     v = vacuum_encoded(spark, table)
     assert v["deleted_removal_lists"] == 1
     assert not os.path.exists(os.path.join(table, "_deletes", "orphan"))
+
+
+def test_delete_keeps_rows_predating_the_key_column(spark, tmp_path):
+    # rows of a run written before schema evolution added the key
+    # column decode with a null key, which no removal list matches
+    path = str(tmp_path / "evo")
+    write_encoded(spark.createDataFrame([(i,) for i in range(6)],
+                                        "n int"),
+                  path, n_buckets=2, run_id="old")
+    write_encoded(spark.createDataFrame(
+        [(i, f"k{i}") for i in range(6, 10)], "n int, key string"),
+        path, n_buckets=2, run_id="new", epoch=1, schema_evolution=True)
+    delete_encoded(spark, path, "key", ["k6", "k8", "k99"])
+    got = sorted((r.n, r.key) for r in read_encoded(spark, path).collect())
+    assert got == [(i, None) for i in range(6)] + [(7, "k7"), (9, "k9")]
+    assert sorted(r.n for r in read_encoded(
+        spark, path, columns=["n"]).collect()) == [0, 1, 2, 3, 4, 5, 7, 9]
+    assert count_encoded(spark, path) == 8
+
+
+def test_removal_lookup_matches_join_equality(tmp_path):
+    # the slice's removal step is exact: keys that differ only in a
+    # trailing NUL byte stay distinct, NaN matches NaN and -0.0 matches
+    # 0.0 (Spark's join equality), a null key matches nothing, and a
+    # keep list keeps only its matches
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tokcodec.scan import _Removals
+
+    def kept(keys, col, keep=False):
+        f = str(tmp_path / f"keys{len(os.listdir(tmp_path))}.parquet")
+        pq.write_table(pa.table({"k": keys}), f)
+        rm = _Removals([{"key_column": "k", "file": f, "uuid": False,
+                         "keep": keep, "drop": False}])
+        return rm.apply(pa.table({"k": col})).column("k").to_pylist()
+
+    assert kept(pa.array([b"a", b"b\x00"]),
+                pa.array([b"a\x00", b"b", b"b\x00", None, b"a"])) \
+        == [b"a\x00", b"b", None]
+    assert kept(pa.array([float("nan"), 0.0]),
+                pa.array([float("nan"), -0.0, 1.0, None])) == [1.0, None]
+    ts = pa.timestamp("us", tz="UTC")
+    assert kept(pa.array([1, 5], ts), pa.array([5, 2, None], ts),
+                keep=True) == [pa.scalar(5, ts).as_py()]
+
+
+def test_removal_step_shared_by_threads(tmp_path):
+    # a driver-placed read's slices share one removal step from many
+    # threads: the lookup is built once, under its lock, and every
+    # thread's bucket loses exactly its deleted rows
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tokcodec.scan import _Removals
+
+    f = str(tmp_path / "keys.parquet")
+    pq.write_table(pa.table({"k": [f"d{i}" for i in range(0, 3000, 3)]}), f)
+    rm = _Removals([{"key_column": "k", "file": f, "uuid": False,
+                     "keep": False, "drop": False}])
+    builds = []
+    build = rm._build
+    rm._build = lambda schema: builds.append(1) or build(schema)
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(16) as pool:
+            outs = list(pool.map(lambda lo: rm.apply(pa.table(
+                {"k": [f"d{i}" for i in range(lo, lo + 300)]})),
+                range(0, 3000, 300)))
+    finally:
+        sys.setswitchinterval(old)
+    assert builds == [1]
+    for lo, out in zip(range(0, 3000, 300), outs):
+        assert out.column("k").to_pylist() == [
+            f"d{i}" for i in range(lo, lo + 300) if i % 3]

@@ -1,8 +1,8 @@
 """Tables addressed by file: URIs resolve through the one filesystem
 layer (io_tables._task_fs): the short "file:/p" form and percent-encoded
 "file:///…/a%20b" paths both land every file — blocks, run manifests,
-lineage, tags, the table manifest — under the decoded local directory,
-and the table reads back."""
+lineage, tags, the table manifest, removal lists — under the decoded
+local directory, and the table reads back."""
 
 import os
 from urllib.parse import quote
@@ -13,9 +13,11 @@ from pyspark.sql import types as T
 
 from tokcodec.io_tables import (
     compact_encoded,
+    delete_encoded,
     read_encoded,
     tag_encoded,
     tags_encoded,
+    vacuum_encoded,
     write_encoded,
 )
 
@@ -64,6 +66,43 @@ def test_file_uri_table_lifecycle(spark, tmp_path, monkeypatch, form):
     assert [f for f in os.listdir(os.path.join(local, "lineage"))
             if f.endswith(".parquet")]
     assert os.listdir(os.path.join(local, "blocks"))
+    for root, dirs, _files in os.walk(tmp_path):
+        for d in dirs:
+            assert "%20" not in d and not d.startswith("file:"), \
+                os.path.join(root, d)
+
+
+@pytest.mark.both_placements
+@pytest.mark.parametrize("form", ["file:", "file://+quoted"])
+def test_file_uri_deletes(spark, tmp_path, monkeypatch, form):
+    # the removal list lands under the decoded directory, so
+    # read_encoded and the DataSource agree on the surviving rows,
+    # compaction materializes the delete and vacuum reclaims the list
+    from tokcodec.datasource import TokcodecDataSource
+
+    monkeypatch.chdir(tmp_path)
+    local = str(tmp_path / ("t" if form == "file:" else "a b"))
+    uri = ("file:" + local if form == "file:"
+           else "file://" + quote(local))
+    write_encoded(spark.createDataFrame(_rows(0, 40), SCHEMA), uri,
+                  n_buckets=3, run_id="r0")
+    info = delete_encoded(spark, uri, "doc_id", ["d3", "d17", "d99"],
+                          delete_id="rm")
+    assert info["n_keys"] == 3
+    assert os.listdir(os.path.join(local, "_deletes", "rm"))
+    want = sorted(_key(r) for r in _rows(0, 40)
+                  if r.doc_id not in ("d3", "d17"))
+    assert sorted(_key(r) for r in read_encoded(spark, uri).collect()) \
+        == want
+    spark.dataSource.register(TokcodecDataSource)
+    src = spark.read.format("tokcodec").load(uri)
+    assert sorted(_key(r) for r in src.collect()) == want
+    assert compact_encoded(spark, uri, run_id="c0")["rows"] == len(want)
+    v = vacuum_encoded(spark, uri)
+    assert v["deleted_removal_lists"] == 1
+    assert not os.path.exists(os.path.join(local, "_deletes", "rm"))
+    assert sorted(_key(r) for r in read_encoded(spark, uri).collect()) \
+        == want
     for root, dirs, _files in os.walk(tmp_path):
         for d in dirs:
             assert "%20" not in d and not d.startswith("file:"), \

@@ -157,11 +157,52 @@ def test_left_deletes_apply(spark, tmp_path):
     assert got.count() == 90
     assert got.filter(F.col("doc_id").isin(
         [f"d{i}" for i in range(10)])).count() == 0
-    # right-side deletes: fine for inner, refused otherwise
+    # right-side deletes apply before the join, under every how: the
+    # deleted right row leaves its left row unmatched
     delete_encoded(spark, rp, "doc_id", ["d50"])
     assert join_encoded(spark, lp, rp, on="doc_id").count() == 89
-    with pytest.raises(ValueError, match="pending equality deletes"):
-        join_encoded(spark, lp, rp, on="doc_id", how="left")
+    outer = join_encoded(spark, lp, rp, on="doc_id", how="left")
+    assert sorted((r.doc_id, r.v, r.w) for r in outer.collect()) == sorted(
+        (f"d{i}", i, None if i == 50 else 2 * i) for i in range(10, 100))
+
+
+def _deleted_sides(spark, tmp_path):
+    """Two co-bucketed tables sharing a non-join column ``src``, with
+    pending deletes on the join key and on ``src`` on both sides."""
+    lp, rp = str(tmp_path / "l"), str(tmp_path / "r")
+    left = spark.range(120).select(
+        F.concat(F.lit("d"), F.col("id")).alias("doc_id"),
+        F.col("id").cast("int").alias("v"),
+        F.concat(F.lit("s"), F.col("id") % 5).alias("src"))
+    right = spark.range(40, 160).select(
+        F.concat(F.lit("d"), F.col("id")).alias("doc_id"),
+        (F.col("id") * 2).cast("int").alias("w"),
+        F.concat(F.lit("s"), F.col("id") % 7).alias("src"))
+    write_encoded(left, lp, n_buckets=8, salt_cols=("doc_id",))
+    write_encoded(right, rp, n_buckets=8, salt_cols=("doc_id",))
+    delete_encoded(spark, lp, "doc_id", ["d3", "d41", "d77"])
+    delete_encoded(spark, rp, "doc_id", ["d42", "d43", "d90", "d150"])
+    delete_encoded(spark, lp, "src", ["s4"])
+    delete_encoded(spark, rp, "src", ["s6"])
+    return lp, rp
+
+
+@pytest.mark.both_placements
+@pytest.mark.parametrize("how", ["inner", "left", "left_semi", "left_anti"])
+def test_deletes_apply_before_the_join(spark, tmp_path, how):
+    # both sides' deletes, on the join key and on a non-join column,
+    # are removed in each side's slice scan: the result is Spark's join
+    # of the two read_encoded sides, and the delete key ``src``, a
+    # column of both sides outside both projections, no longer collides
+    lp, rp = _deleted_sides(spark, tmp_path)
+    got = join_encoded(spark, lp, rp, on="doc_id", how=how,
+                       left_columns=["doc_id", "v"],
+                       right_columns=["doc_id", "w"])
+    want = read_encoded(spark, lp, columns=["doc_id", "v"]).join(
+        read_encoded(spark, rp, columns=["doc_id", "w"]), "doc_id", how)
+    assert sorted(got.columns) == sorted(want.columns)
+    assert _rows(got) == _rows(want)
+    assert got.count() > 0
 
 
 def test_salt_recorded_and_append_validated(spark, tmp_path):

@@ -195,6 +195,26 @@ def test_reader_construction_launches_no_jobs(spark, tmp_path):
     assert [q.count() for q in built] == [44, 22, 24, 44, 44]
 
 
+def test_read_with_pending_delete_launches_no_jobs(spark, tmp_path):
+    """A driver-placed read of a table with a pending delete removes
+    the keys in the slice scan while read_encoded builds the frame: the
+    frame is a local relation, built with zero Spark jobs."""
+    from tokcodec.io_tables import delete_encoded
+
+    path = str(tmp_path / "deleted")
+    df = spark.createDataFrame([(f"d{i}", i) for i in range(200)],
+                               "doc_id string, n int")
+    write_encoded(df, path, n_buckets=4, run_id="r0")
+    delete_encoded(spark, path, "doc_id", ["d7", "d150"])
+    before = _n_jobs(spark)
+    out = read_encoded(spark, path, columns=["n"])
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert _n_jobs(spark) == before
+    assert "LocalTableScan" in plan, plan
+    assert sorted(r.n for r in out.collect()) == [
+        i for i in range(200) if i not in (7, 150)]
+
+
 def test_metadata_answers_launch_no_jobs(spark, tmp_path):
     """explain_scan, count_encoded and the metadata aggregates read
     block metadata on the driver (tokcodec.scan.chunk_index) when the

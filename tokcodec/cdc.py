@@ -13,8 +13,8 @@ leading ``_change_type`` column —
     never appears);
   * ``delete`` — the full content of rows that were VISIBLE at the
     ``since`` snapshot and are removed by a delete committed inside
-    the window (looked up from the ``as_of_epoch=since`` snapshot by
-    key semi-join, so already-gone rows are never re-deleted).
+    the window (read from the ``as_of_epoch=since`` snapshot, so
+    already-gone rows are never re-deleted).
 
 A consumer that applied the ``since`` snapshot replays the stream —
 apply deletes by key, append inserts — and holds exactly the
@@ -24,10 +24,12 @@ inserts, no deletes) — the bootstrap read.
 
 Scale shape: inserts are the ordinary incremental read (explicit file
 plan over the window's run manifests — O(window), not O(history));
-each delete lookup is one snapshot scan semi-joined against the key
-file (broadcast under DELETE_BROADCAST_MAX_KEYS, shuffled past it),
-and the key files a 100 TB table accumulates are the small side by
-construction. Deviation from Iceberg, documented: per-row change
+the delete rows are one scan of the ``since`` snapshot whose slice
+scan runs the readers' own removal step over the window's removal
+lists, keeping the rows any of them matches instead of dropping them
+(tokcodec.scan._decode_slice) — no Spark join; a row matched by lists
+on two key columns is one delete row. Deviation from
+Iceberg, documented: per-row change
 ordering inside the window is not exposed (no ``_epoch`` column) —
 the window is the granularity, matching the removal-list delete
 model. Rewrites inside the window (compact_encoded, upsert_encoded's
@@ -45,21 +47,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from tokcodec.io_tables import (
-    _active_deletes,
-    _delete_keys_df,
-    _resolve_as_of,
-    read_encoded,
-)
+from tokcodec.io_tables import _active_deletes, _resolve_as_of, read_encoded
 from tokcodec.scan import plan_snapshot
 
 CHANGE_COL = "_change_type"
-
-
-def _snapshot_names(spark, path, epoch) -> set[str]:
-    """Column names visible in the ``as_of_epoch=epoch`` snapshot
-    (the planner's snapshot schema, as read_encoded projects it)."""
-    return set(plan_snapshot(path, as_of_epoch=epoch).schema.fieldNames())
 
 
 def changes_encoded(
@@ -72,8 +63,8 @@ def changes_encoded(
 ) -> DataFrame:
     """Net change stream of ``(since_epoch, as_of]`` — see module
     docstring. ``columns`` projects both the insert and delete rows
-    (delete-key columns are read internally and dropped when not
-    requested)."""
+    (delete-key columns are decoded inside the scan and dropped there
+    when not requested)."""
     as_of_epoch = _resolve_as_of(spark, path, as_of_epoch, as_of_ts,
                                  as_of_tag)
     ins = read_encoded(spark, path, columns=columns,
@@ -86,33 +77,20 @@ def changes_encoded(
     win = [d for d in _active_deletes(spark, path,
                                       as_of_epoch=as_of_epoch)
            if d["epoch"] > int(since_epoch)]
+    if win:  # a key the since snapshot predates matches no visible row
+        snap_names = set(plan_snapshot(
+            path, as_of_epoch=since_epoch).schema.fieldNames())
+        win = [d for d in win if d["key_column"] in snap_names]
     if not win:
         return out
-    by_col: dict[str, list[dict]] = {}
-    for d in win:
-        by_col.setdefault(d["key_column"], []).append(d)
-    snap_names = _snapshot_names(spark, path, since_epoch)
-    for col, ds in sorted(by_col.items()):
-        if col not in snap_names:
-            # the key column postdates the snapshot: no visible row
-            # can match the equality delete — nothing to emit
-            continue
-        # read only snapshot-visible columns; requested columns the
-        # snapshot predates come back as NULLs on the delete rows
-        # (the pre-image had no value), via allowMissingColumns below
-        snap_cols = columns
-        if columns is not None:
-            snap_cols = [c for c in columns if c in snap_names]
-            if col not in snap_cols:
-                snap_cols = snap_cols + [col]
-        snap = read_encoded(spark, path, columns=snap_cols,
-                            as_of_epoch=since_epoch,
-                            encryption_key=encryption_key)
-        deleted = snap.join(_delete_keys_df(spark, path, ds),
-                            [col], "left_semi")
-        if columns is not None and col not in columns:
-            deleted = deleted.drop(col)
-        out = out.unionByName(
-            deleted.select(F.lit("delete").alias(CHANGE_COL), "*"),
-            allowMissingColumns=True)
-    return out
+    # one read of the since snapshot keeps the rows any window list
+    # matches; requested columns the snapshot predates come back NULL
+    # on them (the pre-image had no value), via allowMissingColumns
+    deleted = read_encoded(
+        spark, path, columns=None if columns is None
+        else [c for c in columns if c in snap_names],
+        as_of_epoch=since_epoch, encryption_key=encryption_key,
+        _deleted_by=win)
+    return out.unionByName(
+        deleted.select(F.lit("delete").alias(CHANGE_COL), "*"),
+        allowMissingColumns=True)

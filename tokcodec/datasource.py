@@ -36,9 +36,9 @@ side is read_encoded's pipeline, not a copy of it:
   window (exactly ``read_encoded(since_epoch=...)``'s incremental
   semantics), so `readStream` tails a table that streaming ingest or
   upserts keep appending to;
-- pending equality deletes are applied in the scan task (each task
-  reads each removal-list parquet once; for a huge list prefer
-  read_encoded's broadcast anti-join).
+- pending equality deletes are removed in the scan task by the
+  readers' one removal step (tokcodec.scan.removal_plan; each task
+  reads each removal list once and builds one lookup per key column).
 
 - the WRITE path reuses write_encoded's exact task body (encode ->
   block files -> O(run) metadata commit), so DataSource-written and
@@ -100,7 +100,7 @@ class _SlicePartition(InputPartition):
         self.buckets = buckets  # one contiguous slice, sorted
         self.files = files  # _slice_files: (path, column, run, buckets)
         self.specs = specs
-        self.removals = removals
+        self.removals = removals  # removal_plan dicts
         self.extra = extra  # delete key columns outside the projection
         self.fill = fill
 
@@ -146,19 +146,15 @@ def _make_partitions(snap, schema: T.StructType, specs: list[dict]):
     its exact file list (a file holds exactly one run, so accept/reject
     is decided here and read() never run-filters rows)."""
     from tokcodec.io_tables import _direct_file_rows, _paths
-    from tokcodec.scan import _slice_files, fill_anchor
+    from tokcodec.scan import _slice_files, fill_anchor, removal_plan
 
-    extra = _extra_delete_fields(schema, snap.manifest, snap.deletes)
+    removals, extra = removal_plan(snap, schema.fieldNames())
     wanted = [f.name for f in schema.fields] + [f.name for f in extra]
     # pruned reads anchor evolution fill on a pruned column (rows of
     # runs predating it cannot pass that filter anyway)
     fill = fill_anchor(snap.files, wanted, [s["col"] for s in specs])
     rows = _direct_file_rows(snap.files, {*wanted, fill} - {None},
                              _paths(snap.path)[0])
-    uuids = set(snap.manifest.get("uuid_columns", []))
-    removals = [{"key_column": d["key_column"],
-                 "file": posixpath.join(snap.path, d["file"]),
-                 "uuid": d["key_column"] in uuids} for d in snap.deletes]
     parts = []
     for bks in _slices(snap, rows):
         files = _slice_files(rows, snap.accepted, bks)
@@ -166,21 +162,6 @@ def _make_partitions(snap, schema: T.StructType, specs: list[dict]):
             parts.append(_SlicePartition(bks, files, specs, removals,
                                          extra, fill))
     return parts
-
-
-def _extra_delete_fields(schema: T.StructType, manifest: dict,
-                         dels: list[dict]) -> list[T.StructField]:
-    """Delete key columns missing from the projected schema must be
-    decoded anyway (and dropped after the mask)."""
-    have = {f.name for f in schema.fields}
-    full = {f.name: f for f in manifest_schema(manifest).fields}
-    out = []
-    for d in dels:
-        kc = d["key_column"]
-        if kc not in have and kc in full and full[kc].name not in {
-                f.name for f in out}:
-            out.append(full[kc])
-    return out
 
 
 def _read_partition(part: _SlicePartition, schema: T.StructType,
@@ -196,14 +177,12 @@ def _read_partition(part: _SlicePartition, schema: T.StructType,
         return
 
     key = bytes.fromhex(key_hex) if key_hex else None
-    names = [f.name for f in schema.fields]
     decode = make_decode_fn(
         T.StructType(list(schema.fields) + list(part.extra)),
         encryption_key=key, fill_from=part.fill)
     for _b, out in _scan_slice(
             part.buckets, part.files, part.specs, decode,
-            encryption_key=key, removals=part.removals,
-            project=(lambda t: t.select(names)) if part.extra else None):
+            encryption_key=key, removals=part.removals):
         yield from out.to_batches()
 
 

@@ -1489,6 +1489,7 @@ def read_encoded(
     or_filter: list[tuple] | None = None,
     _chunk_subset=None,
     _sample: tuple[float, int] | None = None,
+    _deleted_by: list[dict] | None = None,
 ) -> DataFrame:
     """Decode an encoded table. Every option shape takes the same
     path: the snapshot planner (tokcodec.scan.plan_snapshot) picks
@@ -1528,6 +1529,8 @@ def read_encoded(
     and quantile_encoded use it to decode exactly the boundary chunks
     their metadata fast path could not answer. ``_sample``
     (internal): (fraction, seed) — see sample_encoded.
+    ``_deleted_by`` (internal): delete-log entries; only the rows their
+    lists match are kept (changes_encoded's delete rows).
 
     ``since_epoch``: incremental (CDC-append) read — only rows
     committed at epochs AFTER the given one, i.e. "changes since my
@@ -1561,7 +1564,7 @@ def read_encoded(
     LIST is the multi-key point lookup ("which of these doc_ids
     exist") — ANY bloom hit keeps the chunk, the residual becomes IN;
     per-chunk probe cost is O(keys), so for removal lists past a few
-    thousand keys prefer ``delete_encoded`` or a broadcast semi-join.
+    thousand keys prefer ``delete_encoded``.
 
     ``contains_filter=(array_column, value_or_list)`` is array-element
     membership — "every row whose tokens array contains X", or with a
@@ -1593,10 +1596,15 @@ def read_encoded(
     _load_table). Schema-evolved tables (columns added by
     ``write_encoded(schema_evolution=True)``) decode transparently:
     rows from runs written before a column existed come back NULL.
-    Pending equality deletes apply as an anti-join on the decoded rows
-    (broadcast while the removal lists are small)."""
+    Pending equality deletes are removed inside the slice scan, right
+    after each bucket's decode (tokcodec.scan._decode_slice)."""
     from tokcodec.decode import make_decode_fn
-    from tokcodec.scan import fill_anchor, plan_snapshot, scan_frame
+    from tokcodec.scan import (
+        fill_anchor,
+        plan_snapshot,
+        removal_plan,
+        scan_frame,
+    )
 
     as_of_epoch = _resolve_as_of(spark, path, as_of_epoch, as_of_ts,
                                  as_of_tag)
@@ -1618,11 +1626,10 @@ def read_encoded(
         # bucket)s, not the table: the others' files are never opened
         snap.accepted = {b: kept for b, rs in snap.accepted.items()
                          if (kept := [r for r in rs if r in runs[b]])}
+    if _deleted_by:
+        snap.deletes = snap.deletes + [dict(d, keep=True)
+                                       for d in _deleted_by]
     fcols = snap.filter_columns
-    extra = list(fcols)
-    for d in snap.deletes:
-        if d["key_column"] not in extra:
-            extra.append(d["key_column"])
     by_name = {f.name: f for f in snap.schema.fields}
     names = list(by_name)
     if columns is not None:
@@ -1631,13 +1638,14 @@ def read_encoded(
         if missing:
             raise ValueError(
                 f"columns not in encoded table: {sorted(missing)}")
-        names = list(columns) + [c for c in extra if c not in columns]
+        names = list(columns) + [c for c in fcols if c not in columns]
     for c in names + fcols:
         if c not in by_name:
             raise ValueError(
                 f"column {c!r} does not exist as of epoch {as_of_epoch}")
-    schema = T.StructType([by_name[c] for c in names])
-    fill_from = fill_anchor(snap.files, names, fcols)
+    removals, dkeys = removal_plan(snap, names)
+    schema = T.StructType([by_name[c] for c in names] + dkeys)
+    fill_from = fill_anchor(snap.files, schema.fieldNames(), fcols)
     if fill_from == METRICS_COLUMN and (chunks is not None
                                         or _sample is not None):
         raise ValueError(
@@ -1654,22 +1662,22 @@ def read_encoded(
             "is unsupported — compact_encoded first")
     _check_encryption_key(snap.manifest, names, encryption_key)
     bcol = BUCKET_COL if with_bucket_column else None
-    out_schema = schema if bcol is None else T.StructType(
-        list(schema.fields) + [T.StructField(bcol, T.IntegerType(), False)])
+    out_schema = T.StructType([by_name[c] for c in names])
+    if bcol is not None:
+        out_schema.add(bcol, T.IntegerType(), False)
     decode = make_decode_fn(schema, verify_checksums=verify_checksums,
                             fill_from=fill_from,
                             encryption_key=encryption_key,
                             bucket_column=bcol)
     out = scan_frame(
-        spark, snap, decode, out_schema, {*names, fill_from} - {None},
-        chunks=chunks, sample=_sample, encryption_key=encryption_key)
+        spark, snap, decode, out_schema,
+        {*schema.fieldNames(), fill_from} - {None}, chunks=chunks,
+        sample=_sample, encryption_key=encryption_key, removals=removals)
     for nf in snap.filters:
         out = out.filter(nf["residual"])
     out = _expand_uuid_cols(out, snap.manifest.get("uuid_columns", []))
-    if snap.deletes:  # anti-join AFTER uuid expansion: keys are canonical
-        out = _apply_deletes(spark, path, out, snap.deletes)
     if columns is not None:
-        out = out.drop(*[c for c in extra if c not in columns])
+        out = out.drop(*[c for c in fcols if c not in columns])
     return out
 
 
@@ -2158,10 +2166,16 @@ def read_encoded_as(
       default; with ``fail_on_narrowing=True`` an overflowing value
       raises (reference validatePrimitiveCompatibility semantics).
 
-    Renames, casts and defaults run Arrow-side inside the scan task."""
+    Renames, casts and defaults run Arrow-side inside the scan task,
+    after its removal step (deletes match the stored key column)."""
     from tokcodec.decode import make_decode_fn, make_read_as_fn
     from tokcodec.naming import map_fields
-    from tokcodec.scan import fill_anchor, plan_snapshot, scan_frame
+    from tokcodec.scan import (
+        fill_anchor,
+        plan_snapshot,
+        removal_plan,
+        scan_frame,
+    )
 
     snap = plan_snapshot(path)
     by_name = {f.name: f for f in snap.schema.fields}
@@ -2176,35 +2190,17 @@ def read_encoded_as(
     # a plaintext-only projection over a partially-encrypted table
     # needs no key (ADVICE r4: was an unconditional whole-table check)
     _check_encryption_key(snap.manifest, present, encryption_key)
-    fill_from = fill_anchor(snap.files, present, [])
-    out = scan_frame(
+    removals, dkeys = removal_plan(snap, present)
+    schema = T.StructType([by_name[c] for c in present] + dkeys)
+    fill_from = fill_anchor(snap.files, schema.fieldNames(), [])
+    return scan_frame(
         spark, snap,
-        make_decode_fn(T.StructType([by_name[c] for c in present]),
-                       fill_from=fill_from,
+        make_decode_fn(schema, fill_from=fill_from,
                        encryption_key=encryption_key),
         read_schema,
-        {*present, fill_from} - {None},
-        encryption_key=encryption_key,
+        {*schema.fieldNames(), fill_from} - {None},
+        encryption_key=encryption_key, removals=removals,
         project=make_read_as_fn(plan, fail_on_narrowing))
-    # pending equality deletes apply through the name mapping: the
-    # anti-join runs on the READ name the stored key column resolves
-    # to. A read schema that drops the key column cannot honor the
-    # removal list — fail loudly rather than resurrect deleted rows.
-    stored_to_read = {ff.name: rf for rf, ff in plan if ff}
-    for d in snap.deletes:
-        rf = stored_to_read.get(d["key_column"])
-        if rf is None:
-            raise ValueError(
-                f"table has a pending delete on {d['key_column']!r} "
-                "but the read schema does not map that column — "
-                "include it or compact_encoded first")
-        keys = (spark.read.parquet(posixpath.join(path, d["file"]))
-                .select(F.col(d["key_column"]).cast(rf.dataType)
-                        .alias(rf.name)))
-        if d["n_keys"] <= DELETE_BROADCAST_MAX_KEYS:
-            keys = F.broadcast(keys)
-        out = out.join(keys, on=rf.name, how="left_anti")
-    return out
 
 
 # ----------------------------------------------------------- row deletes
@@ -2212,12 +2208,6 @@ def read_encoded_as(
 # lineage rows with this bucket are delete-log entries, invisible to
 # committed() (which filters status committed/tombstone per real bucket)
 DELETE_BUCKET = -1
-
-# removal lists at or below this many keys ride a broadcast anti-join
-# (the common case: an opt-out/contamination list is MBs against a
-# 100 TB table); larger lists fall back to a shuffled anti-join
-DELETE_BROADCAST_MAX_KEYS = 4_000_000
-
 
 def delete_encoded(spark: SparkSession, path: str, key_column: str,
                    keys, delete_id: str | None = None) -> dict:
@@ -2227,21 +2217,19 @@ def delete_encoded(spark: SparkSession, path: str, key_column: str,
     the table per removal is impossible).
 
     ``keys``: a one-column DataFrame or a Python iterable of key
-    values. They are written as a parquet removal list under
-    ``<path>/_deletes/<delete_id>`` (distributed write — a billion-key
-    list is fine), then committed with ONE lineage row
+    values. Their distinct non-null values are written as a parquet
+    removal list under ``<path>/_deletes/<delete_id>``, one part per
+    task, through _task_fs like every table file (a billion-key list
+    is fine). The list is then committed with ONE lineage row
     (bucket=DELETE_BUCKET, status='delete') — the same O(1) commit
-    protocol as data runs: a crash before the lineage append leaves an
-    orphan key file no reader ever consults (vacuum reclaims it).
+    protocol as data runs: a crash before the lineage append leaves
+    an orphan key file no reader ever consults (vacuum reclaims it).
 
-    Every reader applies pending deletes on the key column, even when
-    the projection does not request it. read_encoded (and with it
-    read_encoded_direct, register_encoded and count_encoded),
-    read_encoded_as and join_encoded ANTI-JOIN the decoded rows with
-    the removal lists in Spark, broadcast while a list is small; the
-    DataSource readers remove the keys inside their scan task
-    (tokcodec.scan._decode_slice, each list read once per slice).
-    ``compact_encoded``
+    Every reader — read_encoded and all built on it, read_encoded_as,
+    both sides of join_encoded, the DataSource, changes_encoded —
+    applies pending deletes on the key column, even when the
+    projection does not request it, in one place: the slice scan's
+    removal step (tokcodec.scan._decode_slice). ``compact_encoded``
     materializes deletes into the rewritten data and retires the log
     entries; ``vacuum_encoded`` then reclaims the key files.
 
@@ -2257,7 +2245,11 @@ def delete_encoded(spark: SparkSession, path: str, key_column: str,
     The key column must be a top-level atomic (or UUID) column and
     must not be encrypted — the removal list itself is plaintext, so a
     delete keyed on an encrypted column would leak exactly the values
-    encryption hides."""
+    encryption hides. UUID keys must parse as UUIDs (canonical text,
+    dashes optional, either case); a malformed one fails the delete
+    before anything is committed."""
+    from pyarrow import fs as pafs
+
     manifest, _lin = _load_table(spark, path)  # validates layout
     schema = manifest_schema(manifest)
     by_name = {f.name: f for f in schema.fields}
@@ -2273,7 +2265,8 @@ def delete_encoded(spark: SparkSession, path: str, key_column: str,
             f"refusing to delete by encrypted column {key_column!r}: "
             "the removal list is stored in plaintext and would leak "
             "the encrypted values — delete by an unencrypted key")
-    if key_column in manifest.get("uuid_columns", []):
+    is_uuid = key_column in manifest.get("uuid_columns", [])
+    if is_uuid:
         dt = T.StringType()  # the exposed (canonical-string) type
     delete_id = delete_id or f"delete-{uuid.uuid4().hex[:12]}"
     if not re.fullmatch(r"[A-Za-z0-9._=-]+", delete_id):
@@ -2287,10 +2280,44 @@ def delete_encoded(spark: SparkSession, path: str, key_column: str,
         kdf = spark.createDataFrame(
             [(k,) for k in keys],
             T.StructType([T.StructField(key_column, dt)]))
-    kdf = kdf.na.drop().distinct()
     rel = posixpath.join("_deletes", delete_id)
-    kdf.write.mode("error").parquet(posixpath.join(path, rel))
-    n_keys = spark.read.parquet(posixpath.join(path, rel)).count()
+    fs, root = _task_fs(posixpath.join(path, rel))
+    if fs.get_file_info(root).type != pafs.FileType.NotFound:
+        raise ValueError(f"removal list {rel!r} already exists")
+
+    def write_part(tbl, part: int = 0):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        if is_uuid:
+            from tokcodec.scan import _uuid_bytes
+
+            _uuid_bytes(tbl.column(0).combine_chunks())  # validates
+        sink = pa.BufferOutputStream()
+        pq.write_table(tbl, sink)
+        # whole or not at all, as every table file: a retried task
+        # rewrites its own part
+        _write_bytes_fs(posixpath.join(path, rel, f"part-{part:05d}.parquet"),
+                        sink.getvalue())
+        return tbl.num_rows
+
+    def write_task(batches):
+        import pyarrow as pa
+        from pyspark import TaskContext
+
+        tbl = pa.Table.from_batches(list(batches), schema=arrow_schema)
+        n = write_part(tbl, TaskContext.get().partitionId()) \
+            if tbl.num_rows else 0
+        yield pa.RecordBatch.from_arrays([pa.array([n], pa.int64())],
+                                         names=["n"])
+
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    kdf = kdf.na.drop().distinct()
+    arrow_schema = to_arrow_schema(kdf.schema)
+    # a list no lineage row commits is invisible to every reader
+    n_keys = sum(r.n for r in kdf.mapInArrow(write_task, "n long")
+                 .collect()) or write_part(arrow_schema.empty_table())
     full = _lineage_local(path)
     full = full[full.status.isin(["committed", "delete"])]
     epoch = (int(full.epoch.max()) if len(full) else -1) + 1
@@ -2331,39 +2358,6 @@ def _deletes_in_force(lin, as_of_epoch: int | None = None) -> list[dict]:
                     "n_keys": int(r.n_rows or 0),
                     "key_column": meta["key_column"],
                     "file": meta["file"]})
-    return out
-
-
-def _delete_keys_df(spark: SparkSession, path: str, ds: list[dict]):
-    """One key column's removal lists -> a (possibly broadcast) keys
-    DataFrame: union the parquet key files, distinct across lists,
-    broadcast under the cap. Shared by the merge-on-read anti-joins
-    and the changelog's delete-row semi-join so the two paths can't
-    diverge."""
-    keys = None
-    for d in ds:
-        k = spark.read.parquet(posixpath.join(path, d["file"]))
-        keys = k if keys is None else keys.unionByName(k)
-    if len(ds) > 1:
-        keys = keys.distinct()
-    if sum(d["n_keys"] for d in ds) <= DELETE_BROADCAST_MAX_KEYS:
-        keys = F.broadcast(keys)
-    return keys
-
-
-def _apply_deletes(spark: SparkSession, path: str, out: DataFrame,
-                   dels: list[dict]) -> DataFrame:
-    """Merge-on-read: anti-join the decoded rows against each pending
-    removal list (one join per distinct key column; multiple lists on
-    the same column union first). NULL keys never match an equality
-    anti-join, so evolution-filled rows predating the key column
-    survive, as they must."""
-    by_col: dict[str, list[dict]] = {}
-    for d in dels:
-        by_col.setdefault(d["key_column"], []).append(d)
-    for col, ds in sorted(by_col.items()):
-        out = out.join(_delete_keys_df(spark, path, ds),
-                       on=col, how="left_anti")
     return out
 
 

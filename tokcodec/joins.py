@@ -34,10 +34,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from tokcodec.decode import make_decode_fn
 from tokcodec.io_tables import (
-    _apply_deletes,
     _check_encryption_key,
     _direct_file_rows,
     _expand_uuid_cols,
@@ -51,6 +51,7 @@ from tokcodec.scan import (
     _slice_files,
     fill_anchor,
     plan_snapshot,
+    removal_plan,
 )
 from tokcodec.schema import manifest_schema
 
@@ -68,8 +69,10 @@ def _plan_side(spark: SparkSession, path: str, on: list[str],
                as_of_tag: str | None = None):
     """Slice-scan plan for one join side: the accepted runs per
     bucket, the file rows each task's _slice_files lists its slice's
-    files from, how to decode them, and which extra columns ride along
-    (delete keys). Returns a dict. Time travel (``as_of_*``) snapshots the
+    files from, how to decode them, and its removal step
+    (removal_plan). ``schema``: what the side's scan yields, its
+    projection plus any join key outside it. Returns a dict. Time
+    travel (``as_of_*``) snapshots the
     side independently — join "training set as of epoch 7" against
     "labels as of tag v2" for reproducible pipelines; bucketing is
     immutable across epochs (appends keep the recorded salt), so
@@ -87,24 +90,22 @@ def _plan_side(spark: SparkSession, path: str, on: list[str],
     if unknown:
         raise ValueError(
             f"columns not in encoded table: {sorted(unknown)}")
-    extra = [c for c in on if c not in want]
-    extra += [d["key_column"] for d in snap.deletes
-              if d["key_column"] not in want + extra]
-    decode_names = want + extra
-    schema = T.StructType([by_name[c] for c in decode_names])
-    fill_from = fill_anchor(snap.files, decode_names, [])
-    _check_encryption_key(snap.manifest, decode_names, encryption_key)
+    names = want + [c for c in on if c not in want]
+    _check_encryption_key(snap.manifest, names, encryption_key)
+    removals, dkeys = removal_plan(snap, names)
+    decoded = T.StructType([by_name[c] for c in names] + dkeys)
+    fill_from = fill_anchor(snap.files, decoded.fieldNames(), [])
     return {
         "manifest": snap.manifest,
-        "schema": schema,
+        "schema": T.StructType([by_name[c] for c in names]),
         "want": want,
-        "deletes": snap.deletes,
         "accepted": snap.accepted,
         "file_rows": _direct_file_rows(
-            snap.files, {*decode_names, fill_from} - {None},
+            snap.files, {*decoded.fieldNames(), fill_from} - {None},
             _paths(path)[0]),
-        "decode": make_decode_fn(schema, fill_from=fill_from,
+        "decode": make_decode_fn(decoded, fill_from=fill_from,
                                  encryption_key=encryption_key),
+        "removals": removals,
     }
 
 
@@ -153,11 +154,10 @@ def join_encoded(
     via ``left_as_of_epoch/_ts/_tag`` and ``right_as_of_*`` (snapshot
     schema included) — "sequences as of epoch 7 joined to labels as
     of tag v2" for reproducible pipelines; bucketing is immutable
-    across epochs, so co-partitioning holds at any snapshot pair. Pending equality deletes apply
-    merge-on-read: left-side deletes under every ``how``; right-side
-    deletes only under ``how='inner'`` (any other shape would need
-    the delete applied BEFORE the join — read through read_encoded
-    and join in Spark for that case).
+    across epochs, so co-partitioning holds at any snapshot pair.
+    Pending equality deletes apply merge-on-read on both sides, under
+    every ``how``: each side's slice scan removes its deleted rows
+    before the join, so a deleted right row never matches.
     """
     on = [on] if isinstance(on, str) else list(on)
     if how not in _ACERO_HOW:
@@ -194,23 +194,14 @@ def join_encoded(
                 f"{lby[k].dataType.simpleString()} vs "
                 f"{rby[k].dataType.simpleString()} (the bucket hash "
                 "is type-sensitive)")
-    if rp["deletes"] and how != "inner":
-        raise ValueError(
-            f"right table has pending equality deletes; how={how!r} "
-            "would need them applied before the join — read through "
-            "read_encoded and join in Spark, or compact the table")
 
     semi = how in ("left_semi", "left_anti")
     r_out = [] if semi else [c for c in rp["want"] if c not in on]
-    # delete keys ride along (dropped at the end) — they must survive
-    # the join output for the merge-on-read anti-joins below
+    # join keys outside the left projection ride along, dropped at the
+    # end
     l_extra = [c for c in lp["schema"].fieldNames()
                if c not in lp["want"]]
-    r_extra = [] if semi else [
-        c for c in rp["schema"].fieldNames()
-        if c not in rp["want"] and c not in on]
-    collide = (set(lp["want"] + l_extra)
-               & set(r_out + r_extra)) - set(on)
+    collide = (set(lp["want"] + l_extra) & set(r_out)) - set(on)
     if collide:
         raise ValueError(
             f"column name collision outside join keys: "
@@ -222,12 +213,11 @@ def join_encoded(
         out_fields += [
             T.StructField(f.name, f.dataType,
                           f.nullable or nullable)
-            for f in (rby[c] for c in r_out + r_extra)]
+            for f in (rby[c] for c in r_out)]
     out_schema = T.StructType(out_fields)
 
     acero_how = _ACERO_HOW[how]
     l_names = lp["schema"].fieldNames()
-    r_payload = r_out + r_extra
     # plans broadcast; decode closures ship via the mapInArrow
     # function itself (cloudpickle) — sc.broadcast can't pickle them
     lacc_b = spark.sparkContext.broadcast(lp["accepted"])
@@ -235,16 +225,13 @@ def join_encoded(
     lfr_b = spark.sparkContext.broadcast(lp["file_rows"])
     rfr_b = spark.sparkContext.broadcast(rp["file_rows"])
     l_decode, r_decode = lp["decode"], rp["decode"]
-    r_schema_json = rp["schema"].json()
+    l_rm, r_rm = lp["removals"], rp["removals"]
+    r_empty = to_arrow_schema(rp["schema"]).empty_table()
 
     def fn(batches):
-        import json as _json
-
         import numpy as np
         import pyarrow as pa
-        from pyspark.sql.types import StructType as _St
 
-        r_spark_schema = _St.fromJson(_json.loads(r_schema_json))
         all_b = bk_b.value
         bks = sorted(all_b[i] for batch in batches
                      for i in batch.column(0).to_pylist())
@@ -253,11 +240,12 @@ def join_encoded(
         lacc, racc = lacc_b.value, racc_b.value
         rbks = [b for b in bks if b in racc]
         right = _scan_slice(rbks, _slice_files(rfr_b.value, racc, rbks),
-                            (), r_decode)
+                            (), r_decode, removals=r_rm)
         try:
             rnext = next(right, None)
             for bucket, lt in _scan_slice(
-                    bks, _slice_files(lfr_b.value, lacc, bks), (), l_decode):
+                    bks, _slice_files(lfr_b.value, lacc, bks), (),
+                    l_decode, removals=l_rm):
                 while rnext is not None and rnext[0] < bucket:
                     rnext = next(right, None)
                 rt = rnext[1] if rnext is not None and rnext[0] == bucket \
@@ -265,12 +253,7 @@ def join_encoded(
                 if rt is None:
                     if how == "inner" or how == "left_semi":
                         continue
-                    rt = lt.select(on).slice(0, 0)  # keys only, empty
-                    for name in r_payload:
-                        f = next(f for f in r_spark_schema.fields
-                                 if f.name == name)
-                        rt = rt.append_column(
-                            name, pa.nulls(0, _arrow_type(f.dataType)))
+                    rt = r_empty
                 # hash-join on (keys, row index); payloads gathered by
                 # take afterwards (Acero can't carry nested payloads)
                 lk = lt.select(on).append_column(
@@ -280,18 +263,11 @@ def join_encoded(
                 j = lk.join(rk, keys=on, join_type=acero_how)
                 if j.num_rows == 0:
                     continue
-                cols = []
-                ltaken = lt.take(j.column("__lidx"))
-                for name in l_names:
-                    cols.append(ltaken.column(name))
-                if not semi:
-                    rtaken = rt.select(r_payload).take(
-                        j.column("__ridx")) if r_payload else None
-                    for name in r_payload:
-                        cols.append(rtaken.column(name))
-                out = pa.table(
-                    dict(zip(l_names + ([] if semi else r_payload), cols)))
-                yield from out.to_batches()
+                cols = lt.select(l_names).take(j.column("__lidx")).columns
+                if r_out:  # a semi or anti join has no __ridx
+                    cols += rt.select(r_out).take(j.column("__ridx")).columns
+                yield from pa.Table.from_arrays(
+                    cols, names=l_names + r_out).to_batches()
         finally:
             right.close()  # its block files
 
@@ -307,23 +283,7 @@ def join_encoded(
         (set(lman.get("uuid_columns", []))
          | set(rman.get("uuid_columns", [])))
         & set(out_schema.fieldNames()))
-    out = _expand_uuid_cols(out, uuid_cols)
-    for side_path, dels in ((left_path, lp["deletes"]),
-                            (right_path, rp["deletes"])):
-        if dels:
-            out = _apply_deletes(spark, side_path, out, dels)
-    drop = [c for c in l_extra + r_extra
-            if c not in (lp["want"] if semi else lp["want"] + r_out)]
-    for c in drop:
-        out = out.drop(c)
-    return out
-
-
-def _arrow_type(dt):
-    """Spark leaf type -> arrow type for the empty right-side stub."""
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    return to_arrow_type(dt)
+    return _expand_uuid_cols(out, uuid_cols).drop(*l_extra)
 
 
 def join_runtime_filtered(

@@ -25,7 +25,8 @@ every reader runs, in two placements.
                    and pruned) and _decode_slice (the other columns'
                    files read only for the buckets and runs with a
                    surviving chunk -> decode one bucket at a time ->
-                   removal lists -> optional Arrow-side projection).
+                   the removal step, where every reader applies the
+                   pending deletes -> optional Arrow-side projection).
     scan_frame     the Spark wrapper read_encoded, read_encoded_as,
                    sample_encoded and the aggregate boundary decode
                    build on. One rule places the scan: a read whose
@@ -63,6 +64,7 @@ result also decides where the decode runs.
 from __future__ import annotations
 
 import posixpath
+import threading
 from dataclasses import dataclass, field
 
 from pyspark.sql import types as T
@@ -484,19 +486,102 @@ class _BlockFile:
             self._pf.close()
 
 
-def _removal_sets(removals) -> list:
-    """(key column, keys) per removal list, each list read once. UUID
-    keys are stored as 16-byte binary, so their canonical text is
-    hex-decoded (vectorized) before matching."""
-    import pyarrow.parquet as pq
+def removal_plan(snap: Snapshot, names) -> tuple[list[dict], list]:
+    """The removal step every reader's slice scan runs for ``snap``'s
+    deletes: (removals, extra). A dict per removal list: key_column,
+    file (full path), uuid (canonical text, matched as 16-byte
+    binary), keep (changes_encoded's delete rows: keep the matches,
+    drop the rest) and drop (the key is outside ``names``: decoded for
+    the match, then projected away); ``extra``: those keys' fields."""
+    uuids = set(snap.manifest.get("uuid_columns", []))
+    by_name = {f.name: f for f in snap.schema.fields}
+    removals = [{"key_column": d["key_column"],
+                 "file": posixpath.join(snap.path, d["file"]),
+                 "uuid": d["key_column"] in uuids,
+                 "keep": bool(d.get("keep")),
+                 "drop": d["key_column"] not in names} for d in snap.deletes]
+    return removals, [by_name[c] for c in dict.fromkeys(
+        r["key_column"] for r in removals if r["drop"])]
 
-    out = []
-    for d in removals:
-        kcol = pq.read_table(d["file"], columns=[d["key_column"]]) \
-            .column(d["key_column"]).combine_chunks()
-        out.append((d["key_column"],
-                    _uuid_bytes(kcol) if d["uuid"] else kcol))
-    return out
+
+class _Removals:
+    """The removal step of one read on the driver placement (its slices
+    share it) or of one slice on the tasks. On first use each (key
+    column, keep) group's lists are read, canonicalised, cast to the
+    decoded type and sorted, once; every bucket then binary-searches
+    them (pc.is_in would rebuild its set of a whole list per call)."""
+
+    def __init__(self, removals=()):
+        self.removals, self.lookups = list(removals), None
+        self.lock = threading.Lock()
+
+    def _build(self, schema) -> dict:
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        parts: dict = {}
+        for d in self.removals:
+            kc = d["key_column"]
+            fs, p = _task_fs(d["file"])
+            keys = pq.read_table(p, filesystem=fs, columns=[kc]) \
+                .column(kc).combine_chunks()
+            parts.setdefault((kc, d["keep"]), []).append(
+                (_uuid_bytes(keys) if d["uuid"] else keys)
+                .cast(schema.field(kc).type))
+        out = {}
+        for g, arrs in parts.items():
+            keys = pa.concat_arrays(arrs).drop_null()
+            out[g] = keys.take(pc.sort_indices(keys))
+        return out
+
+    def apply(self, tbl):
+        """Decoded bucket ``tbl`` without the rows a drop list matches
+        and, given keep lists, without those none of them matches."""
+        import numpy as np
+        import pyarrow as pa
+
+        if not self.removals:
+            return tbl
+        with self.lock:
+            if self.lookups is None:
+                self.lookups = self._build(tbl.schema)
+        drop, keep = np.zeros(tbl.num_rows, bool), None
+        for (kc, kept), keys in self.lookups.items():
+            hit = _key_hits(keys, tbl.column(kc).combine_chunks())
+            if kept:
+                keep = hit if keep is None else keep | hit
+            else:
+                drop |= hit
+        if keep is not None:
+            drop |= ~keep
+        return tbl.filter(pa.array(~drop)).drop_columns(sorted(
+            {r["key_column"] for r in self.removals if r["drop"]}))
+
+
+def _key_hits(keys, col):
+    """numpy mask of the values of ``col`` in the sorted ``keys``: a
+    vectorized lower-bound search, then an exact equality test, as
+    Spark's join equality (NaN = NaN, -0.0 = 0.0, null matches none)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = len(keys)
+    if not n:
+        return np.zeros(len(col), bool)
+    lo = np.zeros(len(col), np.int64)
+    hi = np.full(len(col), n, np.int64)
+    while (lo < hi).any():  # bounded: log2(n) + 1 rounds
+        mid = (lo + hi) // 2
+        below = (lo < hi) & pc.less(keys.take(np.minimum(mid, n - 1)), col) \
+            .fill_null(False).to_numpy(zero_copy_only=False)
+        lo = np.where(below, mid + 1, lo)
+        hi = np.where(below, hi, np.minimum(hi, mid))
+    hit = pc.equal(keys.take(np.minimum(lo, n - 1)), col).fill_null(False)
+    if pa.types.is_floating(col.type) and pc.is_nan(keys[n - 1]).as_py():
+        hit = pc.or_(hit, pc.is_nan(col).fill_null(False))  # NaNs sort last
+    return hit.to_numpy(zero_copy_only=False)
 
 
 def _uuid_bytes(text):
@@ -509,23 +594,21 @@ def _uuid_bytes(text):
 
     hexed = pc.replace_substring(text.drop_null(), "-", "").cast(pa.string())
     n = len(hexed)
-    if n and not pc.all(pc.equal(pc.binary_length(hexed), 32)).as_py():
-        raise ValueError("removal list holds a value that is not a UUID")
     offs = np.frombuffer(hexed.buffers()[1], np.int32,
                          count=n + 1, offset=4 * hexed.offset)
-    chars = np.frombuffer(hexed.buffers()[2], np.uint8)[offs[0]:offs[-1]] \
-        if n else np.zeros(0, np.uint8)
-    lut = np.full(256, 255, np.uint8)  # hex digit -> nibble
-    lut[np.frombuffer(b"0123456789abcdef", np.uint8)] = np.arange(16)
-    lut[np.frombuffer(b"ABCDEF", np.uint8)] = np.arange(10, 16)
-    nib = lut[chars]
-    if (nib > 15).any():
+    try:  # every value 32 hex digits, so the data is 16 bytes each
+        raw = bytes.fromhex(hexed.buffers()[2].to_pybytes()[
+            offs[0]:offs[-1]].decode("ascii")) if n else b""
+        ok = pc.all(pc.equal(pc.binary_length(hexed), 32)).as_py() \
+            and len(raw) == 16 * n
+    except ValueError:  # bytes.fromhex, or decode: not ASCII hex
+        ok = False
+    if n and not ok:
         raise ValueError("removal list holds a value that is not a UUID")
-    raw = (nib[0::2] << 4) | nib[1::2]
     return pa.Array.from_buffers(
         pa.binary(), n,
         [None, pa.py_buffer(np.arange(0, 16 * n + 1, 16, dtype=np.int32)),
-         pa.py_buffer(raw.astype(np.uint8))])
+         pa.py_buffer(raw)])
 
 
 def _index_slice(files, specs, fold, payload_cols=None, chunks=None,
@@ -594,8 +677,8 @@ def _prune_slice(buckets, files, specs, chunks=None, sample=None,
                         encryption_key=encryption_key) or {}
 
 
-def _decode_slice(buckets, files, specs, pruned, decode, chunks=None,
-                  sample=None, removals=(), project=None):
+def _decode_slice(buckets, files, specs, pruned, decode, removals,
+                  chunks=None, sample=None, project=None):
     """Decode phase of the slice scan, over the prune phase's result
     ``pruned`` (_prune_slice; consumed): yields (bucket, decoded
     pa.Table) for each bucket with rows, in order. The other columns'
@@ -604,10 +687,9 @@ def _decode_slice(buckets, files, specs, pruned, decode, chunks=None,
     (which holds one run) is read for a bucket only when a chunk of
     its run survives there, so a file whose run has no survivor in
     the slice is never opened. Decode runs one bucket at a time (its
-    evolution fill and ``__bucket`` column are per bucket), then drops
-    rows on the removal lists (``removals``: dicts with key_column,
-    file, uuid; each list is read once per slice) and applies the
-    optional ``project`` (pa.Table -> pa.Table)."""
+    evolution fill and ``__bucket`` column are per bucket), then runs
+    the removal step (``removals``: a _Removals) and the optional
+    ``project`` (pa.Table -> pa.Table)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -618,7 +700,6 @@ def _decode_slice(buckets, files, specs, pruned, decode, chunks=None,
     rest = [_BlockFile(fp, [b for b in bs
                             if runs is None or rid in runs.get(b, ())])
             for fp, col, rid, bs in files if col not in fcols]
-    drops = None
     try:
         for b in buckets:
             if pruned is not None and b not in pruned:
@@ -636,12 +717,7 @@ def _decode_slice(buckets, files, specs, pruned, decode, chunks=None,
             tbl = pa.concat_tables(parts) if parts else None
             if tbl is None or tbl.num_rows == 0:
                 continue
-            out = decode((b,), tbl)
-            if removals and drops is None:
-                drops = _removal_sets(removals)
-            for kc, keys in drops or ():
-                out = out.filter(pc.invert(pc.is_in(out.column(kc),
-                                                    value_set=keys)))
+            out = removals.apply(decode((b,), tbl))
             if project is not None:
                 out = project(out)
             yield b, out
@@ -659,19 +735,21 @@ def _scan_slice(buckets, files, specs, decode, chunks=None, sample=None,
     opened at most once. The prune phase (_prune_slice) reads the
     filter columns' files first and prunes the slice's chunks in one
     pass; the decode phase (_decode_slice) reads the other columns'
-    files for the survivors only and decodes them. scan_frame's
-    driver placement runs the two phases separately, so that it can
-    bound a read's decoded size between them."""
+    files for the survivors only, decodes them and removes the rows
+    on ``removals`` (removal_plan). scan_frame's driver placement runs
+    the two phases separately, so that it can bound a read's decoded
+    size between them."""
     pruned = _prune_slice(buckets, files, specs, chunks=chunks,
                           sample=sample, encryption_key=encryption_key)
     yield from _decode_slice(buckets, files, specs, pruned, decode,
-                             chunks=chunks, sample=sample,
-                             removals=removals, project=project)
+                             _Removals(removals), chunks=chunks,
+                             sample=sample, project=project)
 
 
 def scan_frame(spark, snap: Snapshot, decode, out_schema, scan_cols,
                chunks=None, sample=None,
-               encryption_key: bytes | None = None, project=None):
+               encryption_key: bytes | None = None, project=None,
+               removals=()):
     """DataFrame of _scan_slice over every accepted bucket of ``snap``,
     in one of two placements decided by one rule (_driver_scan): a
     read whose decoded size is bounded at or under
@@ -692,17 +770,21 @@ def scan_frame(spark, snap: Snapshot, decode, out_schema, scan_cols,
     (_slice_files) and runs one _scan_slice over them, so each file is
     opened at most once per read. ``chunks``: optional allow-list, a
     set of _chunk_keys; chunks are pruned by the snapshot's filter
-    specs."""
+    specs. ``removals``: removal_plan's, whose extra key columns
+    ``decode`` decodes."""
     buckets = sorted(snap.accepted)
     rows = _direct_file_rows(snap.files, scan_cols, _paths(snap.path)[0])
     specs = snap.specs
     local = _driver_scan(snap, rows, _slices(buckets, _task_slots(
         spark, len(buckets))), specs, decode, chunks=chunks, sample=sample,
-        encryption_key=encryption_key, project=project) \
-        if _crosses_arrow(out_schema) else None
+        encryption_key=encryption_key, project=project,
+        removals=removals) if _crosses_arrow(out_schema) else None
     if local is not None:
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
+
+        if not out_schema.fields:  # Arrow drops a 0-column row count
+            return spark.range(sum(t.num_rows for t in local)).select()
 
         # an empty read too stays a local relation (a list would make
         # an RDD scan)
@@ -719,7 +801,8 @@ def scan_frame(spark, snap: Snapshot, decode, out_schema, scan_cols,
         for _b, out in _scan_slice(
                 bks, _slice_files(rows, accepted, bks), specs, decode,
                 chunks=allow, sample=sample,
-                encryption_key=encryption_key, project=project):
+                encryption_key=encryption_key, removals=removals,
+                project=project):
             yield from out.to_batches()
 
     return _bucket_feed(spark, len(buckets)).mapInArrow(fn, out_schema)
@@ -735,7 +818,7 @@ def _slices(buckets: list, n: int) -> list[list]:
 
 def _driver_scan(snap: Snapshot, rows, slices, specs, decode, chunks=None,
                  sample=None, encryption_key: bytes | None = None,
-                 project=None):
+                 project=None, removals=()):
     """The driver placement of scan_frame: the decoded pa.Tables of
     the read's slices, scanned on the driver in bucket order, or None
     when the read is over the cap and belongs to the tasks. The
@@ -753,7 +836,8 @@ def _driver_scan(snap: Snapshot, rows, slices, specs, decode, chunks=None,
       ``orig_bytes``.
 
     At or under the cap the decode phase (_decode_slice) runs on the
-    survivors already held — no file is read twice."""
+    survivors already held — no file is read twice — and every slice
+    shares one removal step."""
     import pyarrow.compute as pc
 
     cap = io_tables._DRIVER_MAX_BYTES
@@ -781,11 +865,13 @@ def _driver_scan(snap: Snapshot, rows, slices, specs, decode, chunks=None,
     if int(win.orig_bytes[held].sum()) > cap:
         return None
 
+    drops = _Removals(removals)
+
     def decoded(job):
         (bks, files), p = job
         return [out for _b, out in _decode_slice(
-            bks, files, specs, p, decode, chunks=chunks, sample=sample,
-            project=project)]
+            bks, files, specs, p, decode, drops, chunks=chunks,
+            sample=sample, project=project)]
 
     # one thread per slice: block-file reads and the decode kernels
     # release the GIL
