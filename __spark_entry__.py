@@ -229,7 +229,7 @@ def q_contains_token_scan(spark, sf_dir):
     token X" at 100 TB without decoding non-matching chunks). The
     entry table writes bloom_columns=["doc_id", "tokens"]; the tokens
     bloom indexes each chunk's DISTINCT token vocabulary, the exact
-    arrays_overlap residual runs JVM-side on surviving chunks. The
+    arrays_overlap match runs in the scan on surviving chunks. The
     probe is a banned-token LIST (ANY-of — a chunk survives when its
     bloom might contain any probe), so the multi-value path sits under
     the hash gate; one probe value is deliberately absent from the
@@ -299,7 +299,8 @@ def q_metadata_rowcount(spark, sf_dir):
     per-chunk small materialized aggregates (aggregate_encoded,
     VLDB'98 SMA — every chunk metadata-answered, nothing decoded);
     'mid' = the same aggregate under a zone range filter whose
-    boundary chunks decode exactly (meta + residual-decode mix). All
+    boundary chunks decode exactly, in the slices that pruned them
+    (meta + residual-decode mix). All
     three must equal DuckDB recomputing from the raw parquet — the
     metadata fast paths a 10^12-row table needs, proven exact."""
     from tokcodec.agg import aggregate_encoded

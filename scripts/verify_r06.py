@@ -6,7 +6,7 @@ import shutil
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 QUERIES = sys.argv[1:] or [
     "minhash_neardup_pairs", "simhash_hamming_hist",

@@ -1,11 +1,18 @@
 from __future__ import annotations
 
 import contextlib
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout these tests belong to, first: the driver imports its
+# modules, and so do the Spark workers it starts (PYTHONPATH)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep)
+              if p and p != ROOT])
 
 
 def pytest_configure(config):

@@ -140,7 +140,10 @@ def test_deletes_force_decode_path(table, tmp_path):
     got = aggregate_encoded(spark, dst, "v")
     want = _truth(read_encoded(spark, dst), "v")
     _check(got, want)
-    assert got["path"] == "decode"
+    # every surviving chunk is partial and decodes in its slice
+    assert got["path"] == "meta+decode"
+    assert got["chunks_meta"] == 0
+    assert got["chunks_decoded"] == got["chunks_scanned"] > 0
     assert got["rows"] == 997
 
 
@@ -346,7 +349,7 @@ def test_grouped_deletes_fallback(gtable, tmp_path):
                                     stats_out=st)
     want = _gtruth(read_encoded(spark, dst), "day", "v")
     assert sorted((tuple(r) for r in got.collect()), key=repr) == want
-    assert st["path"] == "decode"
+    assert st["path"] == "meta+decode" and st["chunks_meta"] == 0
 
 
 # ----------------------------------------------------------- quantiles
@@ -427,7 +430,8 @@ def test_quantile_all_null_and_deletes(spark, tmp_path):
     delete_encoded(spark, base2, "k", list(range(50)))
     st = {}
     got = quantile_encoded(spark, base2, "v", 0.5, stats_out=st)
-    assert st["path"] == "decode"  # pending deletes: exact fallback
+    # pending deletes: every chunk decodes, with the removal step
+    assert st["path"] == "meta+decode"
     assert got == _qtruth(list(range(50, 100)), 0.5)
 
 
@@ -576,6 +580,26 @@ def test_quantile_placements_agree(qtable):
     with placed("tasks"):
         got_d = quantile_encoded(spark, base, "v", [0.1, 0.5, 0.99])
     assert got_c == got_d
+
+
+def test_quantile_evolved_table_placements_agree(spark, tmp_path):
+    """Rows of a run that predates the column are NULL and never rank,
+    on both placements: past the driver cap the candidate chunks
+    decode through read_encoded, whose plan then holds only the runs
+    that carry the column, so no evolution fill is asked for."""
+    base = str(tmp_path / "qe")
+    write_encoded(spark.range(300).select(F.col("id").alias("k")), base,
+                  n_buckets=2, run_id="r0", chunk_max_rows=50)
+    write_encoded(spark.range(300, 600).select(
+        F.col("id").alias("k"), (F.col("id") * 7 % 1000).alias("v")),
+        base, n_buckets=2, run_id="r1", epoch=1, resume=True,
+        schema_evolution=True, chunk_max_rows=50, cluster_by="v")
+    qs = [0.1, 0.5, 0.99]
+    want = [_qtruth([i * 7 % 1000 for i in range(300, 600)], q)
+            for q in qs]
+    assert quantile_encoded(spark, base, "v", qs) == want
+    with placed("tasks"):
+        assert quantile_encoded(spark, base, "v", qs) == want
 
 
 def test_meta_cache_invalidated_by_append(spark, tmp_path):

@@ -4,6 +4,8 @@ chunk pruning, and spark.readStream epoch-tailing CDC — the
 reference's 'reads like any table format' promise through Spark's own
 source integration (CarpetReader's parquet DataSource analogue)."""
 
+import pickle
+
 import pytest
 from pyspark.sql import Row, functions as F
 from pyspark.sql import types as T
@@ -85,7 +87,10 @@ def test_filter_specs_shapes(spark, table):
     assert specs[0]["bounds"] == [(2, 9)]
     assert specs[2]["bounds"] == [(3, 3), (5, 5)]
     assert specs[3]["value"] == ["s1", "s2"]
-    assert all("residual" not in s for s in specs)
+    # an IN keeps its exact values for the task's residual, and every
+    # spec pickles into the partitions
+    assert specs[2]["values"] == [3, 5]
+    assert pickle.loads(pickle.dumps(specs)) == specs
 
 
 def test_filter_specs_string_between_merges(spark, table):

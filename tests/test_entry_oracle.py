@@ -9,8 +9,9 @@ import sys
 
 import duckdb
 import pytest
+from conftest import ROOT
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod
 

@@ -6,6 +6,7 @@ import os
 from pyspark.sql import Row, functions as F
 from pyspark.sql import types as T
 import pytest
+from conftest import ROOT
 
 from tokcodec.io_tables import explain_scan, read_encoded, write_encoded
 
@@ -89,13 +90,13 @@ def test_cli_explain(spark, tmp_path):
 
     path = _table(spark, tmp_path)
     submit = _shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
-    env = dict(os.environ, PYTHONPATH="/root/repo",
+    env = dict(os.environ, PYTHONPATH=ROOT,
                SPARK_LOCAL_DIRS="/dev/shm")
     r = _sub.run(
         [submit, "--master", "local[4]", "scripts/submit_decode.py",
          "--input", path, "--explain",
          "--range-filter", "ts:100:199"],
-        cwd="/root/repo", env=env, capture_output=True, text=True,
+        cwd=ROOT, env=env, capture_output=True, text=True,
         timeout=420,
     )
     assert r.returncode == 0, r.stderr[-2000:]

@@ -6,9 +6,10 @@ import os
 import sys
 
 import numpy as np
+from conftest import ROOT
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, ROOT)
 
 SF_DIR = "/root/testdata/sf0.01"
 

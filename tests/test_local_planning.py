@@ -215,11 +215,76 @@ def test_read_with_pending_delete_launches_no_jobs(spark, tmp_path):
         i for i in range(200) if i not in (7, 150)]
 
 
+# every filter kind, with the rows it keeps of _rows' tuples
+# (doc_id, n, tokens, g)
+_FILTERS = {
+    "range": ({"range_filter": ("n", 10, 20)}, lambda r: 10 <= r[1] <= 20),
+    "in": ({"in_filter": ("n", [3, 50, 51, 199])},
+           lambda r: r[1] in (3, 50, 51, 199)),
+    "eq": ({"eq_filter": ("doc_id", ["d007", "d150"])},
+           lambda r: r[0] in ("d007", "d150")),
+    "contains": ({"contains_filter": ("tokens", [8, 151])},
+                 lambda r: bool({8, 151} & set(r[2]))),
+    "or": ({"or_filter": [("n", 0, 5), ("n", 190, 195)]},
+           lambda r: r[1] <= 5 or 190 <= r[1] <= 195),
+}
+
+
+def _rows(lo=0, hi=200):
+    return [(f"d{i:03d}", i, [i, i + 1], i // 50) for i in range(lo, hi)]
+
+
+def _check_aggregates_launch_no_jobs(spark, path, rows, column,
+                                     key=None):
+    """Every filter kind: aggregate_encoded, aggregate_encoded_grouped
+    (collected) and, unfiltered, quantile_encoded launch no Spark job
+    on the driver placement, and answer what ``rows`` (tuples of
+    (doc_id, n, tokens, g, [column value])) say."""
+    from tokcodec.agg import aggregate_encoded, aggregate_encoded_grouped
+    from tokcodec.agg import quantile_encoded
+
+    def value(r):
+        return r[1] if column == "n" else r[4]
+
+    before = _n_jobs(spark)
+    got = {name: (aggregate_encoded(spark, path, column,
+                                    encryption_key=key, **kw),
+                  aggregate_encoded_grouped(spark, path, "g", column,
+                                            encryption_key=key,
+                                            **kw).collect())
+           for name, (kw, _keep) in _FILTERS.items()}
+    q = quantile_encoded(spark, path, column, [0.1, 0.5],
+                         encryption_key=key)
+    assert _n_jobs(spark) == before
+    for name, (agg, grouped) in got.items():
+        keep = [r for r in rows if _FILTERS[name][1](r)]
+        vals = [value(r) for r in keep if value(r) is not None]
+        assert (agg["rows"], agg["nonnull"], agg["sum"]) == (
+            len(keep), len(vals), sum(vals) if vals else None), name
+        want = {}
+        for r in keep:
+            a = want.setdefault(r[3], [0, 0, None, None, None])
+            a[0] += 1
+            if value(r) is not None:
+                v = value(r)
+                a[1] += 1
+                a[2] = v if a[2] is None else a[2] + v
+                a[3] = v if a[3] is None else min(a[3], v)
+                a[4] = v if a[4] is None else max(a[4], v)
+        assert {r.g: [r.n_rows, r.nonnull, r["sum"], r["min"], r["max"]]
+                for r in grouped} == want, name
+    vals = sorted(value(r) for r in rows if value(r) is not None)
+    assert q == [vals[max(1, -(-len(vals) * x // 10)) - 1]
+                 for x in (1, 5)]
+
+
 def test_metadata_answers_launch_no_jobs(spark, tmp_path):
     """explain_scan, count_encoded and the metadata aggregates read
     block metadata on the driver (tokcodec.scan.chunk_index) when the
     files they read are under the driver cap: a cold call launches
-    zero Spark jobs, whatever the filter kind."""
+    zero Spark jobs, whatever the filter kind. The aggregates decode
+    their partial chunks in the same slices, so they launch none
+    either, for every filter kind."""
     from tokcodec.agg import aggregate_encoded, quantile_encoded
     from tokcodec.io_tables import (
         approx_count_distinct_encoded,
@@ -230,10 +295,9 @@ def test_metadata_answers_launch_no_jobs(spark, tmp_path):
 
     path = str(tmp_path / "meta")
     df = spark.createDataFrame(
-        [(f"d{i:03d}", i, [i, i + 1]) for i in range(200)],
-        "doc_id string, n int, tokens array<int>")
+        _rows(), "doc_id string, n int, tokens array<int>, g int")
     write_encoded(df, path, n_buckets=4, run_id="r0", chunk_max_rows=16,
-                  cluster_by="n", bloom_columns=["doc_id"],
+                  cluster_by="n", bloom_columns=["doc_id", "tokens"],
                   sketch_columns=["doc_id"])
     before = _n_jobs(spark)
     rng = explain_scan(spark, path, range_filter=("n", 10, 20))
@@ -252,3 +316,59 @@ def test_metadata_answers_launch_no_jobs(spark, tmp_path):
     assert q == 99
     assert prof["rows"] == 200 and prof["columns"]["n"]["max"] == 199
     assert ndv["rows"] == 200 and ndv["chunks"] > 0
+    _check_aggregates_launch_no_jobs(spark, path, _rows(), "n")
+
+
+@pytest.mark.parametrize("variant", ["deleted", "encrypted", "evolved"])
+def test_aggregates_launch_no_jobs_on_every_table(spark, tmp_path,
+                                                  variant):
+    """With a pending delete, an encrypted column (key given) or
+    evolution fill, no chunk's stats answer it, so every surviving
+    chunk is decoded — in its slice, still with no Spark job."""
+    from tokcodec.io_tables import delete_encoded
+
+    key = bytes(range(32)) if variant == "encrypted" else None
+    path = str(tmp_path / variant)
+    ddl = "doc_id string, n int, tokens array<int>, g int"
+    kw = dict(n_buckets=4, chunk_max_rows=16, cluster_by="n",
+              bloom_columns=["doc_id", "tokens"])
+    rows, column = _rows(), "n"
+    if variant == "evolved":
+        # the second run adds m: the first run's rows fill it with NULL
+        write_encoded(spark.createDataFrame(_rows(0, 100), ddl), path,
+                      run_id="r0", **kw)
+        write_encoded(spark.createDataFrame(
+            [r + (r[1] * 3,) for r in _rows(100, 200)], ddl + ", m int"),
+            path, run_id="r1", epoch=1, resume=True,
+            schema_evolution=True, **kw)
+        rows = [r + (None,) for r in _rows(0, 100)] \
+            + [r + (r[1] * 3,) for r in _rows(100, 200)]
+        column = "m"
+    else:
+        write_encoded(spark.createDataFrame(rows, ddl), path, run_id="r0",
+                      encryption_key=key, encrypted_columns=["n"]
+                      if key else None, **kw)
+    if variant == "deleted":
+        delete_encoded(spark, path, "doc_id", ["d007", "d050", "d191"])
+        rows = [r for r in rows if r[0] not in ("d007", "d050", "d191")]
+    _check_aggregates_launch_no_jobs(spark, path, rows, column, key=key)
+
+
+def test_present_key_lookup_is_exactly_its_rows(spark, tmp_path):
+    """A driver-placed eq_filter lookup applies the exact residual in
+    the slice scan: the local relation it builds holds the matching
+    row alone, not every row of the chunks that survive pruning."""
+    path = str(tmp_path / "lookup")
+    df = spark.createDataFrame(
+        _rows(), "doc_id string, n int, tokens array<int>, g int")
+    write_encoded(df, path, n_buckets=4, run_id="r0", chunk_max_rows=16,
+                  bloom_columns=["doc_id"])
+    before = _n_jobs(spark)
+    out = read_encoded(spark, path, eq_filter=("doc_id", "d042"))
+    leaves = out._jdf.queryExecution().analyzed().collectLeaves()
+    assert _n_jobs(spark) == before
+    assert leaves.size() == 1
+    leaf = leaves.apply(0)
+    assert leaf.getClass().getSimpleName() == "LocalRelation"
+    assert leaf.data().size() == 1
+    assert [(r.doc_id, r.n) for r in out.collect()] == [("d042", 42)]

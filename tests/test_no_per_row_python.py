@@ -9,7 +9,7 @@ or the line itself."""
 import os
 import re
 
-ROOT = "/root/repo"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SOURCES = ["tokcodec", "__spark_entry__.py", "bench.py"]
 PAT = re.compile(
     r"for\s+\w+\s+in\s+(range\(len\(|(lengths|offsets|offs|seg_ends)\s*:)")

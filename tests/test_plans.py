@@ -197,16 +197,13 @@ def test_read_entry_points_single_path(spark, tmp_path, monkeypatch):
 
     seen: list = []
     monkeypatch.setattr(agg, "read_encoded", recording(read_encoded, seen))
-    # an in_filter over gapped keys leaves partial boundary chunks the
-    # driver-side shortcut does not take: they decode through
-    # read_encoded with a chunk allow-list
+    # an in_filter over gapped keys leaves partial boundary chunks:
+    # they decode in the slices that pruned them (chunk_index's decode
+    # fold), never through a separate read
     res = aggregate_encoded(spark, path, "v",
                             in_filter=("k", list(range(0, 1200, 6))))
     assert res["rows"] == 200 and res["chunks_decoded"]
-    subset = [q for kw, q in seen if "_chunk_subset" in kw]
-    assert subset
-    for q in subset:
-        _assert_single_path(q)
+    assert not seen
 
     seen.clear()
     monkeypatch.setattr(io_tables, "read_encoded",

@@ -25,7 +25,7 @@ from tokcodec.io_tables import (
     read_encoded,
     write_encoded,
 )
-from tokcodec.scan import _scan_slice, _slice_files, plan_snapshot
+from tokcodec.scan import _prune_slice, _slice_files, plan_snapshot
 
 KEY = bytes(range(32))
 
@@ -66,20 +66,16 @@ def _task_kept(path, filts, key=None) -> set:
 
 
 def _kept(snap, key=None) -> set:
-    """_task_kept over a planned snapshot."""
+    """_task_kept over a planned snapshot: the slice scan's prune phase
+    (_prune_slice), whose surviving chunks its decode phase decodes."""
     rows = _direct_file_rows(snap.files, set(snap.schema.fieldNames()),
                              _paths(snap.path)[0])
     buckets = sorted(snap.accepted)
-
-    def keys(_bucket, tbl):  # stands in for decode: the pruned rows
-        return tbl.select(["run_id", "bucket", "chunk"])
-
-    kept: set = set()
-    for _b, out in _scan_slice(
-            buckets, _slice_files(rows, snap.accepted, buckets),
-            snap.specs, keys, encryption_key=key):
-        kept |= set(zip(*(out.column(i).to_pylist() for i in range(3))))
-    return kept
+    pruned = _prune_slice(buckets, _slice_files(rows, snap.accepted,
+                                                buckets),
+                          snap.specs, encryption_key=key)
+    return {k for t in pruned.values() for k in zip(*(
+        t.column(c).to_pylist() for c in ("run_id", "bucket", "chunk")))}
 
 
 CASES = {
@@ -201,6 +197,23 @@ BLOOM_CASES = {
     "eq_list": {"eq_filter": ("doc_id", ["d00042", "d02999", "nope"])},
     "contains": {"contains_filter": ("tokens", [1500, 10 ** 7])},
 }
+# each case's rows, as a Spark predicate over the source frame
+PREDICATES = {
+    "int_range": lambda: F.col("k").between(1200, 1300),
+    "in_10k_keys": lambda: F.col("k").isin(
+        ZONE_CASES["in_10k_keys"]["in_filter"][1]),
+    "float_nan": lambda: F.col("f").between(0.4, 0.45),
+    "binary_truncated": lambda: F.col("b").between(
+        F.lit(b"\xff" * 3), F.lit(b"\xff" * 40)),
+    "timestamp": lambda: F.col("t").between(_ts(2100), _ts(2200)),
+    "null_only_chunks": lambda: F.col("nk").between(1500, 1600),
+    "or": lambda: F.col("k").between(0, 100) | F.col("f").between(0.9, 1.0),
+    "eq_present": lambda: F.col("doc_id") == "d01500",
+    "eq_absent": lambda: F.col("doc_id") == "nope",
+    "eq_list": lambda: F.col("doc_id").isin("d00042", "d02999", "nope"),
+    "contains": lambda: F.arrays_overlap(
+        "tokens", F.array(F.lit(1500), F.lit(10 ** 7))),
+}
 # every case but one misses whole runs, or whole buckets of a run, so
 # its files drop; in the one left, every file of nk holds a null-only
 # chunk, and so has no zone summary
@@ -230,9 +243,7 @@ def test_file_summaries_keep_what_chunks_keep(spark, lanes, case):
         assert kept <= kept_all, case
         assert {(r, b) for r, b, _c in kept_all - kept} <= whole.dropped
     assert bool(whole.dropped) != (case in KEEPS_ALL), (case, whole.dropped)
-    want = df
-    for nf in whole.filters:
-        want = want.filter(nf["residual"])
+    want = df.filter(PREDICATES[case]())
     assert read_encoded(spark, path, **kw).count() == want.count(), case
     ex = explain_scan(spark, path, **kw)
     assert ex["chunks_scanned"] == len(kept), (case, ex)

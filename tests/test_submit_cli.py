@@ -6,6 +6,7 @@ import os
 import shutil
 import subprocess
 
+from conftest import ROOT
 from pyspark.sql import functions as F
 
 
@@ -19,14 +20,14 @@ def test_spark_submit_encode(spark, tmp_path):
 
     submit = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
     env = dict(os.environ,
-               PYTHONPATH="/root/repo",
+               PYTHONPATH=ROOT,
                SPARK_LOCAL_DIRS="/dev/shm")
     r = subprocess.run(
         [submit, "--master", "local[4]",
          "scripts/submit_encode.py",
          "--input", src, "--output", out, "--buckets", "0",
          "--run-id", "cli", "--bloom-columns", "doc_id"],
-        cwd="/root/repo", env=env, capture_output=True, text=True,
+        cwd=ROOT, env=env, capture_output=True, text=True,
         timeout=420,
     )
     assert r.returncode == 0, r.stderr[-2000:]
@@ -61,13 +62,13 @@ def test_spark_submit_decode(spark, tmp_path):
     n_src = seq.count()
 
     submit = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
-    env = dict(os.environ, PYTHONPATH="/root/repo",
+    env = dict(os.environ, PYTHONPATH=ROOT,
                SPARK_LOCAL_DIRS="/dev/shm")
     r = subprocess.run(
         [submit, "--master", "local[4]", "scripts/submit_decode.py",
          "--input", enc, "--output", out,
          "--columns", "doc_id,n_tok"],
-        cwd="/root/repo", env=env, capture_output=True, text=True,
+        cwd=ROOT, env=env, capture_output=True, text=True,
         timeout=420,
     )
     assert r.returncode == 0, r.stderr[-2000:]
@@ -103,12 +104,12 @@ def test_spark_submit_maintenance(spark, tmp_path):
     write_encoded(mk(40, 90), enc, n_buckets=2, run_id="e1", epoch=1)
 
     submit = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
-    env = dict(os.environ, PYTHONPATH="/root/repo",
+    env = dict(os.environ, PYTHONPATH=ROOT,
                SPARK_LOCAL_DIRS="/dev/shm")
     r = subprocess.run(
         [submit, "--master", "local[4]", "scripts/submit_maintenance.py",
          "--table", enc, "--compact", "--vacuum", "--run-id", "cmp"],
-        cwd="/root/repo", env=env, capture_output=True, text=True,
+        cwd=ROOT, env=env, capture_output=True, text=True,
         timeout=420,
     )
     assert r.returncode == 0, r.stderr[-2000:]
@@ -137,13 +138,13 @@ def test_spark_submit_evolution_and_time_travel(spark, tmp_path):
     n1 = spark.read.parquet(src1).count()
 
     submit = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
-    env = dict(os.environ, PYTHONPATH="/root/repo",
+    env = dict(os.environ, PYTHONPATH=ROOT,
                SPARK_LOCAL_DIRS="/dev/shm")
 
     def run(args):
         r = subprocess.run(
             [submit, "--master", "local[4]"] + args,
-            cwd="/root/repo", env=env, capture_output=True, text=True,
+            cwd=ROOT, env=env, capture_output=True, text=True,
             timeout=420,
         )
         assert r.returncode == 0, r.stderr[-2000:]
@@ -192,13 +193,13 @@ def test_spark_submit_delete_tag_incremental(spark, tmp_path):
         enc, n_buckets=2, run_id="e1", epoch=1)
 
     submit = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
-    env = dict(os.environ, PYTHONPATH="/root/repo",
+    env = dict(os.environ, PYTHONPATH=ROOT,
                SPARK_LOCAL_DIRS="/dev/shm")
 
     def run(args):
         r = subprocess.run(
             [submit, "--master", "local[4]"] + args,
-            cwd="/root/repo", env=env, capture_output=True, text=True,
+            cwd=ROOT, env=env, capture_output=True, text=True,
             timeout=420,
         )
         assert r.returncode == 0, r.stderr[-2000:]
@@ -242,13 +243,13 @@ def test_spark_submit_contains_filter(spark, tmp_path):
         bloom_columns=["tokens"])
 
     submit = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
-    env = dict(os.environ, PYTHONPATH="/root/repo",
+    env = dict(os.environ, PYTHONPATH=ROOT,
                SPARK_LOCAL_DIRS="/dev/shm")
     r = subprocess.run(
         [submit, "--master", "local[4]", "scripts/submit_decode.py",
          "--input", enc, "--output", out,
          "--contains-filter", "tokens:403"],
-        cwd="/root/repo", env=env, capture_output=True, text=True,
+        cwd=ROOT, env=env, capture_output=True, text=True,
         timeout=420,
     )
     assert r.returncode == 0, r.stderr[-2000:]
@@ -263,7 +264,7 @@ def test_spark_submit_contains_filter(spark, tmp_path):
         [submit, "--master", "local[4]", "scripts/submit_decode.py",
          "--input", enc, "--output", out,
          "--contains-filter", "tokens:403,168,9999"],
-        cwd="/root/repo", env=env, capture_output=True, text=True,
+        cwd=ROOT, env=env, capture_output=True, text=True,
         timeout=420,
     )
     assert r.returncode == 0, r.stderr[-2000:]
@@ -290,13 +291,13 @@ def test_spark_submit_aggregate_and_sample(spark, tmp_path):
     write_encoded(df.repartition(1), enc, n_buckets=2,
                   chunk_max_rows=64, cluster_by="day")
     submit = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
-    env = dict(os.environ, PYTHONPATH="/root/repo",
+    env = dict(os.environ, PYTHONPATH=ROOT,
                SPARK_LOCAL_DIRS="/dev/shm")
 
     def run(args):
         r = subprocess.run(
             [submit, "--master", "local[4]"] + args,
-            cwd="/root/repo", env=env, capture_output=True, text=True,
+            cwd=ROOT, env=env, capture_output=True, text=True,
             timeout=420,
         )
         assert r.returncode == 0, r.stderr[-2000:]
@@ -337,12 +338,12 @@ def test_spark_submit_quantile(spark, tmp_path):
     write_encoded(df.repartition(1), enc, n_buckets=2,
                   chunk_max_rows=100, cluster_by="v")
     submit = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
-    env = dict(os.environ, PYTHONPATH="/root/repo",
+    env = dict(os.environ, PYTHONPATH=ROOT,
                SPARK_LOCAL_DIRS="/dev/shm")
     r = subprocess.run(
         [submit, "--master", "local[4]", "scripts/submit_decode.py",
          "--input", enc, "--quantile", "v:0.5,0.99"],
-        cwd="/root/repo", env=env, capture_output=True, text=True,
+        cwd=ROOT, env=env, capture_output=True, text=True,
         timeout=420)
     assert r.returncode == 0, r.stderr[-2000:]
     res = json.loads([ln for ln in r.stdout.splitlines()
@@ -371,14 +372,14 @@ def test_spark_submit_changes(spark, tmp_path):
     delete_encoded(spark, enc, "k", [1, 45])  # epoch 2
 
     submit = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
-    env = dict(os.environ, PYTHONPATH="/root/repo",
+    env = dict(os.environ, PYTHONPATH=ROOT,
                SPARK_LOCAL_DIRS="/dev/shm")
     r = subprocess.run(
         [submit, "--master", "local[4]",
          "scripts/submit_decode.py",
          "--input", enc, "--output", out,
          "--changes", "--since-epoch", "0"],
-        cwd="/root/repo", env=env, capture_output=True, text=True,
+        cwd=ROOT, env=env, capture_output=True, text=True,
         timeout=420,
     )
     assert r.returncode == 0, r.stderr[-2000:]

@@ -18,48 +18,59 @@ splits its surviving chunks:
     rows += n_rows, nonnull += n_rows - nulls, sum += sum,
     min/max fold lo/hi. No payload is read, nothing is decoded.
   * PARTIAL chunks (filter boundary, missing stats, all-null with
-    unknown counts) are decoded through read_encoded restricted to
-    exactly that chunk set (a chunk allow-list in the scan task) with
-    the exact residual applied — correctness never depends on the
-    stats.
+    unknown counts) are decoded in the same slice by chunk_index's
+    decode fold (tokcodec.scan._decode_slice over exactly those
+    chunks, with the readers' removal step and exact Arrow residual
+    applied) and folded into the slice's partial — correctness never
+    depends on the stats.
 
-The driver merges the slices' partials. At 100 TB the fast path
-turns "SUM(x) WHERE day BETWEEN a AND b" into a metadata pass plus a
-decode of the two boundary chunks per bucket; the worst case (nothing
-covered) degenerates to the plain filtered read the user would have
-run anyway.
+A slice returns O(1) (scalar) or O(groups) (grouped) partials, which
+the driver merges; no Spark job runs on the driver placement. At
+100 TB the fast path turns "SUM(x) WHERE day BETWEEN a AND b" into a
+metadata pass plus a decode of the two boundary chunks per bucket;
+the worst case (nothing covered) decodes what the plain filtered read
+would have.
 
-Soundness notes: the metadata path is disabled wholesale when the
-table has pending equality deletes (merge-on-read would drop rows the
-stats still count), when evolution null-fill is active for any
-involved column (fill rows have no block rows), or when the agg or a
-filter column is encrypted (stats live in the sealed emeta envelope);
-those cases route through the ordinary exact read. Coverage is only
-claimed for int-lane range/in filters — float filters (NaN rows fail
-residuals but are invisible to finite zone bounds), string prefix
-bounds, disjunctions, bloom eq and contains filters prune like the
-readers do and mark all their survivors partial. The reference has no
-aggregate machinery at all — parquet consumers get this from their
-engine's row-group stats; this is the encoded layout's native answer.
+Soundness notes: with pending equality deletes (merge-on-read drops
+rows the stats still count) or evolution null-fill on an involved
+column (fill rows have no block rows), no chunk's stats are its
+answer: every surviving chunk is partial and the decode covers every
+chunk the slice keeps, with the readers' fill anchor (scan.fill_anchor)
+and removal step. An encrypted column's stats are sealed in its
+``emeta`` envelope, so its chunks are partial too and decode with the
+key. Coverage is only claimed for int-lane range/in filters — float
+filters (NaN rows fail the residual but are invisible to finite zone
+bounds), string prefix bounds, disjunctions, bloom eq and contains
+filters prune like the readers do and leave their survivors partial.
+Decoded sums add the 32-bit halves apart, so they are exact where an
+int64 sum could wrap; a chunk's stored sum exists only under
+blocks.int_sum_stat's guard. The reference has no aggregate machinery
+at all — parquet consumers get this from their engine's row-group
+stats; this is the encoded layout's native answer.
 """
 
 from __future__ import annotations
 
-import posixpath
 from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from tokcodec.io_tables import (
-    _evolution_fill_columns,
-    _fan_out,
+    _check_encryption_key,
     _filter_list,
-    _normalize_filter,
     _resolve_as_of,
     read_encoded,
 )
-from tokcodec.scan import chunk_index, plan_snapshot
+from tokcodec.scan import (
+    _chunk_key,
+    _driver_scan,
+    _lane_ints,
+    chunk_index,
+    fill_anchor,
+    plan_snapshot,
+    removal_plan,
+)
 from tokcodec.schema import manifest_schema
 
 _INT_LANES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
@@ -99,172 +110,15 @@ def _n_values(tbl, column: str) -> int:
         pc.equal(tbl.column("component"), "values"))).num_rows
 
 
-def _restrict(by_col: dict, keys) -> dict:
-    """``by_col`` (_values_meta) cut to the chunks ``keys``: the meta
-    a slice hands the driver for its partial chunks."""
-    return {c: {k: m[k] for k in keys if k in m}
-            for c, m in by_col.items()}
-
-
-# Driver-side decode cap for the partial-chunk fallback: past this
-# many stored values the boundary decode is real data work and belongs
-# in a Spark job; under it, the job's fixed scheduling latency (~0.3 s)
-# dwarfs the decode itself, so the driver reads the handful of block
-# payloads with pyarrow and runs the SAME codec decoders the executors
-# would (the _commit_lineage_local argument applied to reads). The cap
-# is sized against the metadata fan-out that reads those files
-# (io_tables._fan_out): 2M int64 values are 16 MB decoded, which the
-# _META_IO_THREADS reader threads fetch and decode in well under one
-# job's latency; raise the cap only together with the thread count.
-_DRIVER_DECODE_MAX_VALUES = 1 << 21
-
-
-def _driver_chunk_values(path, files, columns, keys):
-    """Driver-side decode of the ``values`` component of a SMALL chunk
-    set for int-lane columns: {column: {key: int64 ndarray}} with key =
-    (run_id, bucket, chunk). Caller guarantees (via the chunk metas)
-    that every requested chunk has zero nulls — the null-fill defaults
-    inside ``values`` are then real data and no validity component is
-    needed. Returns None when any requested chunk's block row cannot
-    be found (caller falls back to the distributed decode)."""
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    from tokcodec.blocks import decode_int_component
-    from tokcodec.io_tables import _paths, _task_fs
-
-    blocks_p, _, _ = _paths(path)
-    by_run_bucket: dict[str, set[int]] = {}
-    for rid, b, _c in keys:
-        by_run_bucket.setdefault(rid, set()).add(int(b))
-    want = {(c, k) for c in columns for k in keys}
-    out: dict[str, dict] = {c: {} for c in columns}
-
-    def _read_one(args):
-        fp, buckets = args
-        fs, root = _task_fs(posixpath.join(blocks_p, fp))
-        with fs.open_input_file(root) as f:
-            return pq.read_table(
-                f, filters=[("bucket", "in", sorted(buckets)),
-                            ("component", "=", "values")])
-
-    plan = []
-    for f in files:
-        if f["column"] not in columns:
-            continue
-        buckets = {
-            b for lo, hi in f["bucket_ranges"]
-            for b in by_run_bucket.get(f["run_id"], ())
-            if lo <= b <= hi
-        }
-        if buckets:
-            plan.append((f["path"], buckets))
-    keyset = set(keys)
-    for t in _fan_out(_read_one, plan):
-        for r in t.to_pylist():
-            k = (r["run_id"], int(r["bucket"]), int(r["chunk"]))
-            if k not in keyset or r["column"] not in columns:
-                continue
-            out[r["column"]][k] = decode_int_component(
-                r, out_dtype=np.int64)
-            want.discard((r["column"], k))
-    if want:
-        return None
-    return out
-
-
-def _driver_partial_keys_ok(by_col, involved, keys):
-    """Can the driver decode these partial chunks exactly? Every
-    involved column's chunk must be present in ``by_col`` (the partial
-    chunks' metas, _values_meta) with a KNOWN ZERO null count (values
-    are then null-fill-free), and the total stored values must stay
-    under the driver cap. Returns the total row count, or None when
-    ineligible."""
-    total = 0
-    for k in keys:
-        for c in involved:
-            r = by_col.get(c, {}).get(k)
-            if r is None or r[3] != 0:
-                return None
-        total += by_col[next(iter(involved))][k][0]
-    if total > _DRIVER_DECODE_MAX_VALUES:
-        return None
-    return total
-
-
-def _driver_partial_agg(path, files, column, by_col, zf, keys):
-    """Driver-side exact (rows, nonnull, sum, min, max) over the
-    partial chunk set — the same residual-filtered aggregate the
-    distributed _decode_path computes, minus the Spark job. Only for
-    pure range-filter reads (the residual is then exactly the stored
-    [lo, hi] window test); None -> caller uses the Spark path."""
-    import numpy as np
-
-    if not _pure_ranges(zf):
-        return None
-    involved = {column} | {c for _k, c, _b, _e in zf}
-    total = _driver_partial_keys_ok(by_col, involved, keys)
-    if total is None:
-        return None
-    # int64-sum overflow guard, same bound as blocks.int_sum_stat
-    mag = 0
-    for k in keys:
-        _n, lo, hi, _nl, _s = by_col[column][k]
-        if lo is not None:
-            mag = max(mag, abs(int(lo)), abs(int(hi)))
-    if mag and mag.bit_length() + max(total - 1, 1).bit_length() + 1 >= 63:
-        return None
-    vals = _driver_chunk_values(path, files, involved, keys)
-    if vals is None:
-        return None
-    rows = nonnull = s = 0
-    mn = mx = None
-    for k in keys:
-        mask = None
-        for _kind, c, bounds, _e in zf:
-            (flo, fhi), = bounds
-            v = vals[c][k]
-            m = (v >= flo) & (v <= fhi)
-            mask = m if mask is None else (mask & m)
-        av = vals[column][k]
-        if mask is not None:
-            av = av[mask]
-        if not len(av):
-            continue
-        rows += len(av)
-        nonnull += len(av)
-        s += int(av.sum(dtype=np.int64))
-        lo, hi = int(av.min()), int(av.max())
-        mn = lo if mn is None or lo < mn else mn
-        mx = hi if mx is None or hi > mx else mx
-    return {"rows": rows, "nonnull": nonnull, "s": s, "mn": mn,
-            "mx": mx}
-
-
-def _pure_ranges(zf) -> bool:
-    """Is every filter a single int-zone range? The driver decode of
-    partial chunks then applies the exact residual itself (the stored
-    [lo, hi] window test)."""
-    return all(f is not None and f[0] == "range" and len(f[2]) == 1
-               for f in zf)
-
-
-def _cover_filters(schema, manifest, filts) -> list:
-    """Per filter, the cover test's normalized form: (kind, col,
-    storage-int bounds, in_exact) for an int-lane zone range/in — the
-    only shapes a chunk's (lo, hi, nulls) can prove covered — else
+def _cover_filters(specs) -> list:
+    """Per normalized filter (Snapshot.specs), the cover test's form:
+    (col, storage-int bounds, in_exact) for an int-lane zone range/in —
+    the only shapes a chunk's (lo, hi, nulls) can prove covered — else
     None (blooms, string/float zones, disjunctions: pruning only, their
     survivors are partial)."""
-    out = []
-    for kind, spec in filts:
-        nf = None if kind not in ("range", "in") else _normalize_filter(
-            schema, manifest, kind, spec, make_residual=False)
-        out.append((kind, nf["col"],
-                    [(int(a), int(b)) for a, b in nf["bounds"]],
-                    nf.get("in_exact", True))
-                   if nf is not None and nf["kind"] == "zone"
-                   and nf["lane"] == "int" else None)
-    return out
+    return [(nf["col"], nf["bounds"], nf.get("in_exact", True))
+            if nf["kind"] == "zone" and nf["lane"] == "int" else None
+            for nf in specs]
 
 
 def _chunk_covered(by_col, key, zf) -> bool:
@@ -277,7 +131,7 @@ def _chunk_covered(by_col, key, zf) -> bool:
     for f in zf:
         if f is None:
             return False
-        _kind, fcol, bounds, exact = f
+        fcol, bounds, exact = f
         fr = by_col.get(fcol, {}).get(key)
         if fr is None or fr[1] is None or fr[2] is None or fr[3] != 0:
             return False
@@ -285,50 +139,6 @@ def _chunk_covered(by_col, key, zf) -> bool:
                               for b_lo, b_hi in bounds)):
             return False
     return True
-
-
-def _agg_from_meta(by_col, column, zf) -> dict:
-    """The covered/partial split of one slice's surviving chunks
-    (``by_col``: their metas, _values_meta): meta-ok = covered
-    (_chunk_covered) AND the agg column's nulls are known AND its sum
-    is known or the chunk is all-null. Exact Python-int arithmetic
-    throughout. Returns the meta-side totals, the partial chunk keys
-    and their metas."""
-    rows = nonnull = total_sum = n_meta = 0
-    mn = mx = None
-    partial = []
-    for key, (n, lo, hi, nulls, s) in by_col.get(column, {}).items():
-        if _chunk_covered(by_col, key, zf) and nulls is not None \
-                and (s is not None or nulls == n):
-            n_meta += 1
-            rows += n
-            nonnull += n - nulls
-            if s is not None:
-                total_sum += s
-            if lo is not None:
-                mn = lo if mn is None or lo < mn else mn
-                mx = hi if mx is None or hi > mx else mx
-        else:
-            partial.append(key)
-    return {"rows": rows, "nonnull": nonnull, "sum": total_sum,
-            "min": mn, "max": mx, "n_meta": n_meta,
-            "partial": partial, "meta": _restrict(by_col, partial)}
-
-
-def _merge_agg(parts: list) -> dict:
-    """The slices' _agg_from_meta partials (with ``n_total``) merged."""
-    out = {"rows": 0, "nonnull": 0, "sum": 0, "min": None, "max": None,
-           "n_meta": 0, "n_total": 0, "partial": [], "meta": {}}
-    for p in parts:
-        for k in ("rows", "nonnull", "sum", "n_meta", "n_total"):
-            out[k] += p[k]
-        for k, better in (("min", min), ("max", max)):
-            if p[k] is not None:
-                out[k] = p[k] if out[k] is None else better(out[k], p[k])
-        out["partial"] += p["partial"]
-        for c, m in p["meta"].items():
-            out["meta"].setdefault(c, {}).update(m)
-    return out
 
 
 def _fold_group(acc: list, n, nonnull, s, lo, hi) -> None:
@@ -344,37 +154,107 @@ def _fold_group(acc: list, n, nonnull, s, lo, hi) -> None:
         acc[4] = hi if acc[4] is None or hi > acc[4] else acc[4]
 
 
-def _storage_to_logical(col, dt):
-    """Zone-domain int -> the column's logical Spark value (the same
-    storage mapping the int lane uses: dates are days, timestamps are
-    epoch-µs)."""
-    if isinstance(dt, T.DateType):
-        return F.date_from_unix_date(col.cast("int"))
-    if isinstance(dt, T.TimestampType):
-        return F.timestamp_micros(col)
-    return col.cast(dt)
+def _decoded_partials(tbl, column, group_col=None,
+                      elements=False) -> list:
+    """Exact (group, n_rows, nonnull, sum, min, max) of ``column``'s
+    storage ints (scan._lane_ints) in one decoded bucket: one tuple per
+    storage-int value of ``group_col`` (None: the NULL group), or one
+    with group None without it. ``elements`` folds the elements of a
+    flat array column (null arrays hold none). Sums add the 32-bit
+    halves apart, so they are exact where an int64 sum could wrap."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    v = tbl.column(column).combine_chunks()
+    v = _lane_ints(pc.list_flatten(v) if elements else v)
+    cols = {"v": v, "hi": pc.shift_right(v, 32),
+            "lo": pc.bit_wise_and(v, 0xFFFFFFFF)}
+    if group_col is not None:
+        cols["g"] = _lane_ints(tbl.column(group_col).combine_chunks())
+    out = pa.table(cols).group_by(["g"] if group_col else []).aggregate(
+        [([], "count_all"), ("v", "count"), ("hi", "sum"), ("lo", "sum"),
+         ("v", "min"), ("v", "max")])
+    return [(r.get("g"), r["count_all"], r["v_count"],
+             None if r["hi_sum"] is None
+             else (r["hi_sum"] << 32) + r["lo_sum"], r["v_min"], r["v_max"])
+            for r in out.to_pylist()]
 
 
-def _decode_path(spark, path, column, filts_kw, scale,
-                 elements=False) -> dict:
-    """Exact fallback: ordinary filtered read + aggregate. In element
-    mode the rows explode first (null/empty arrays contribute no
-    elements — the same thing the stored lengths say)."""
-    df = read_encoded(spark, path, columns=[column], **filts_kw)
-    c = column
-    if elements:
-        df = df.select(F.explode(column).alias("__el"))
-        c = "__el"
-    r = df.agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.count(c).alias("nonnull"),
-        F.sum(F.col(c).cast("decimal(38," + str(scale) + ")"))
-        .alias("s"),
-        F.min(c).alias("mn"),
-        F.max(c).alias("mx"),
-    ).collect()[0]
-    return {"rows": int(r["rows"]), "nonnull": int(r["nonnull"]),
-            "sum": r["s"], "min": r["mn"], "max": r["mx"]}
+def _aggregate(spark, snap, column, group_col=None, elements=False,
+               encryption_key: bytes | None = None):
+    """THE aggregate pass of aggregate_encoded (``group_col`` None) and
+    aggregate_encoded_grouped: one chunk_index over the plan, whose
+    metadata fold answers each slice's covered chunks — and, grouped,
+    single-group chunks (the group column's zone a point, zero nulls) —
+    from their metas, and whose decode fold decodes the slice's other
+    surviving chunks in the slice. Returns ({group storage int (None
+    ungrouped): [n_rows, nonnull, sum, min, max]}, chunks_meta,
+    chunks_decoded, chunks_total), in storage ints."""
+    from tokcodec.decode import make_decode_fn
+
+    agg_cols = [c for c in (group_col, column) if c]
+    names = list(dict.fromkeys(agg_cols + snap.filter_columns))
+    by_name = {f.name: f for f in snap.schema.fields}
+    missing = [c for c in names if c not in by_name]
+    if missing:
+        raise ValueError(f"columns {missing} do not exist in the "
+                         "snapshot's schema")
+    _check_encryption_key(snap.manifest, names, encryption_key)
+    removals, dkeys = removal_plan(snap, names)
+    schema = T.StructType([by_name[c] for c in names] + dkeys)
+    fill = fill_anchor(snap.files, schema.fieldNames(), snap.filter_columns,
+                       snap.specs)
+    # deletes and evolution fill: no chunk's stats are its answer, so
+    # the decode takes every chunk the slice keeps (the anchor's too)
+    whole = bool(removals) or fill is not None
+    zf = _cover_filters(snap.specs)
+    cover_cols = set(agg_cols) | {f[0] for f in zf if f is not None}
+
+    def fold(blocks, kept):
+        by_col = _values_meta(kept, cover_cols)
+        gmeta = by_col.get(group_col, {})
+        groups: dict = {}
+        partial, n_meta = [], 0
+        for key, (n, lo, hi, nulls, s) in by_col.get(column, {}).items():
+            # grouped, only a chunk whose group zone is a point with no
+            # nulls holds a single group
+            g = gmeta.get(key, (0, None, None, None)) if group_col \
+                else None
+            single = g is None or (g[1] is not None and g[1] == g[2]
+                                   and g[3] == 0)
+            if not whole and single and _chunk_covered(by_col, key, zf) \
+                    and nulls is not None and (s is not None or nulls == n):
+                n_meta += 1
+                _fold_group(groups.setdefault(
+                    None if g is None else g[1], [0, 0, None, None, None]),
+                    n, n - nulls, s, lo, hi)
+            else:
+                partial.append(key)
+        return {"groups": groups, "n_total": _n_values(blocks, column),
+                "n_meta": n_meta, "n_decoded": len(partial),
+                "decode": partial if not whole
+                else list(set(zip(*(kept.column(c).to_pylist() for c in
+                                    ("run_id", "bucket", "chunk")))))}
+
+    def dfold(part, tbl):
+        for g, *acc in _decoded_partials(tbl, column, group_col, elements):
+            _fold_group(part["groups"].setdefault(g, [0, 0, None, None,
+                                                      None]), *acc)
+
+    decode = make_decode_fn(schema, fill_from=fill,
+                            encryption_key=encryption_key)
+    groups: dict = {}
+    n_meta = n_decoded = n_total = 0
+    for p in chunk_index(spark, snap, {*schema.fieldNames(), fill} - {None},
+                         fold, encryption_key=encryption_key,
+                         decode=(decode, dfold, removals)):
+        for g, acc in p["groups"].items():
+            _fold_group(groups.setdefault(g, [0, 0, None, None, None]),
+                        *acc)
+        n_meta += p["n_meta"]
+        n_decoded += p["n_decoded"]
+        n_total += p["n_total"]
+    return groups, n_meta, n_decoded, n_total
 
 
 def aggregate_encoded(
@@ -388,9 +268,10 @@ def aggregate_encoded(
 ) -> dict:
     """Exact ``{rows, nonnull, sum, min, max}`` of one int/decimal
     column under the readers' filter surface, plus telemetry
-    ``{chunks_total, chunks_scanned, chunks_meta, chunks_decoded}``
-    (chunks_meta answered without decoding anything). Filters take
-    the same shapes read_encoded does. SQL alignment: ``rows`` is
+    ``{chunks_total, chunks_scanned, chunks_meta, chunks_decoded,
+    path}`` (chunks_meta answered without decoding anything; path
+    "meta", or "meta+decode" when some chunk was decoded). Filters
+    take the same shapes read_encoded does. SQL alignment: ``rows`` is
     COUNT(*), ``nonnull`` is COUNT(column); ``sum``/``min``/``max``
     are NULL (None) when no non-null row passes.
 
@@ -405,13 +286,12 @@ def aggregate_encoded(
     """
     as_of_epoch = _resolve_as_of(spark, path, as_of_epoch, as_of_ts,
                                  as_of_tag)
-    filts = _filter_list(range_filter, in_filter, eq_filter,
-                         contains_filter, or_filter)
     snap = plan_snapshot(path, as_of_epoch=as_of_epoch,
-                         since_epoch=since_epoch, filters=filts)
-    manifest, fcols = snap.manifest, snap.filter_columns
-    schema = manifest_schema(manifest)
-    by_name = {f.name: f for f in schema.fields}
+                         since_epoch=since_epoch,
+                         filters=_filter_list(range_filter, in_filter,
+                                              eq_filter, contains_filter,
+                                              or_filter))
+    by_name = {f.name: f for f in manifest_schema(snap.manifest).fields}
     if column not in by_name:
         raise ValueError(f"column {column!r} not in encoded table")
     dt = by_name[column].dataType
@@ -436,113 +316,22 @@ def aggregate_encoded(
             f"columns; {column!r} is {dt.simpleString()} — read + "
             "aggregate instead")
 
-    filts_kw = dict(range_filter=range_filter, in_filter=in_filter,
-                    eq_filter=eq_filter, contains_filter=contains_filter,
-                    or_filter=or_filter,
-                    encryption_key=encryption_key,
-                    as_of_epoch=as_of_epoch, since_epoch=since_epoch)
-
     def _to_logical(x):
-        if x is None:
-            return None
-        return (Decimal(int(x)).scaleb(-scale) if scale
-                else int(x)) if isinstance(dt, T.DecimalType) \
-            else int(x)
+        return Decimal(int(x)).scaleb(-scale) if scale else int(x)
 
-    files = snap.files
-    involved = set([column] + fcols)
-    enc_cols = set(manifest.get("encrypted_columns", []))
-    if snap.deletes or (involved & enc_cols) \
-            or _evolution_fill_columns(files, involved):
-        out = _decode_path(spark, path, column, filts_kw, scale,
-                           elements=elements)
-        out["sum"] = None if out["sum"] is None else (
-            out["sum"] if scale else int(out["sum"]))
-        out.update(chunks_meta=0, chunks_decoded=None,
-                   path="decode")
-        return out
-
-    # ---- one metadata pass: each slice prunes like the readers and
-    # splits its survivors into covered and partial chunks
-    zf = _cover_filters(schema, manifest, filts)
-    cover_cols = {column} | {f[1] for f in zf if f is not None}
-
-    def fold(blocks, kept):
-        return dict(_agg_from_meta(_values_meta(kept, cover_cols),
-                                   column, zf),
-                    n_total=_n_values(blocks, column))
-
-    r2 = _merge_agg(chunk_index(spark, snap, involved, fold))
-    m = {"c": r2["n_meta"], "rows": r2["rows"], "nonnull": r2["nonnull"],
-         "s": r2["sum"], "mn": r2["min"], "mx": r2["max"]}
-    partial = sorted(r2["partial"])
-    n_total, n_scanned = r2["n_total"], r2["n_meta"] + len(partial)
-    if partial and not elements:
-        # SMALL boundary sets decode driver-side: the same codec
-        # decoders, pyarrow file reads, exact residual — zero Spark
-        # jobs instead of a 2-stage decode job whose fixed latency
-        # dwarfs the handful of chunks (size-capped; anything big
-        # stays distributed)
-        d = _driver_partial_agg(path, files, column, r2["meta"], zf,
-                                partial)
-        if d is not None:
-            m = {"c": m["c"], "rows": m["rows"] + d["rows"],
-                 "nonnull": m["nonnull"] + d["nonnull"],
-                 "s": m["s"] + d["s"],
-                 "mn": d["mn"] if m["mn"] is None or (
-                     d["mn"] is not None and d["mn"] < m["mn"])
-                 else m["mn"],
-                 "mx": d["mx"] if m["mx"] is None or (
-                     d["mx"] is not None and d["mx"] > m["mx"])
-                 else m["mx"]}
-            return _finish_scalar_agg(
-                spark, path, column, filts_kw, scale, elements, m, 0,
-                None, n_total, n_scanned, _to_logical,
-                chunks_decoded=len(partial))
-    return _finish_scalar_agg(
-        spark, path, column, filts_kw, scale, elements, m, len(partial),
-        partial or None, n_total, n_scanned, _to_logical)
-
-
-def _finish_scalar_agg(spark, path, column, filts_kw, scale, elements,
-                       m, n_partial, partial, n_total, n_scanned,
-                       _to_logical, chunks_decoded=None):
-    """Shared tail of aggregate_encoded: merge the meta side with the
-    exact decode of the partial chunk set (if any) and assemble the
-    result dict. ``m``: the merged meta-side totals.
-    ``chunks_decoded``: already-merged driver-side decode count (the
-    partial set was folded into ``m`` with zero Spark jobs; telemetry
-    still reports those chunks as decoded)."""
-    rows = int(m["rows"] or 0)
-    nonnull = int(m["nonnull"] or 0)
-    total_sum = int(m["s"]) if m["s"] is not None else 0
-    mn = m["mn"]
-    mx = m["mx"]
-    if n_partial:
-        d = _decode_path(spark, path, column,
-                         dict(filts_kw, _chunk_subset=partial), scale,
-                         elements=elements)
-        rows += d["rows"]
-        nonnull += d["nonnull"]
-        if d["sum"] is not None:
-            ds = d["sum"]
-            total_sum += int(ds.scaleb(scale)) if scale else int(ds)
-        for v, pick in ((d["min"], min), (d["max"], max)):
-            if v is not None:
-                sv = int(Decimal(v).scaleb(scale)) if scale else int(v)
-                mn = sv if pick is min and (mn is None or sv < mn) \
-                    else mn
-                mx = sv if pick is max and (mx is None or sv > mx) \
-                    else mx
-    dec_n = n_partial if chunks_decoded is None else chunks_decoded
+    groups, n_meta, n_decoded, n_total = _aggregate(
+        spark, snap, column, elements=elements,
+        encryption_key=encryption_key)
+    rows, nonnull, total, mn, mx = groups.get(None, [0, 0, None, None,
+                                                     None])
     return {
         "rows": rows, "nonnull": nonnull,
-        "sum": _to_logical(total_sum) if nonnull else None,
+        "sum": _to_logical(total) if nonnull else None,
         "min": _to_logical(mn) if nonnull else None,
         "max": _to_logical(mx) if nonnull else None,
-        "chunks_total": n_total, "chunks_scanned": n_scanned,
-        "chunks_meta": int(m["c"] or 0), "chunks_decoded": dec_n,
-        "path": "meta+decode" if dec_n else "meta",
+        "chunks_total": n_total, "chunks_scanned": n_meta + n_decoded,
+        "chunks_meta": n_meta, "chunks_decoded": n_decoded,
+        "path": "meta+decode" if n_decoded else "meta",
     }
 
 
@@ -563,32 +352,36 @@ def aggregate_encoded_grouped(
     ONE group value (the group column's zone is a point: lo == hi,
     zero nulls) contribute from METADATA alone; cluster the table by
     the group column at write (``cluster_by=group_col``) and interior
-    chunks never decode — only group-boundary chunks do. Everything
-    else routes through the exact read restricted to that chunk set,
-    aggregated with Spark's own partial-agg groupBy. At 100 TB a
+    chunks never decode — only group-boundary chunks do. Every other
+    surviving chunk is decoded in the slice that pruned it, like
+    aggregate_encoded's (deletes, evolution fill and encrypted columns
+    included), and folded into the slice's per-group partial, O(groups)
+    per slice; the driver merges the partials into a local relation,
+    so no Spark job runs on the driver placement. At 100 TB a
     day-clustered events table answers "per-day event count + value
-    sum" with a metadata job plus a decode of ~one straddler chunk
+    sum" with a metadata pass plus a decode of ~one straddler chunk
     per day per bucket.
 
     ``group_col``: int-lane scalar (ints, DATE, TIMESTAMP — storage
     ints convert back to logical values). ``column``: plain int
     column (decimal/float: use read_encoded + groupBy). Rows whose
-    group value is NULL form SQL's NULL group (they only ever travel
-    the decode path — a chunk containing them is never single-group).
-    Pending deletes / evolution fill / encrypted involved columns
-    fall back wholesale to the exact read. ``stats_out`` (optional
-    dict) receives {chunks_total, chunks_meta, chunks_decoded, path}
-    telemetry.
+    group value is NULL form SQL's NULL group (only decoded chunks
+    hold them — a chunk containing them is never single-group).
+    ``stats_out`` (optional dict) receives {chunks_total, chunks_meta,
+    chunks_decoded, path} telemetry.
     """
+    import pyarrow as pa
+
+    from tokcodec.schema import spark_type_to_arrow
+
     as_of_epoch = _resolve_as_of(spark, path, as_of_epoch, as_of_ts,
                                  as_of_tag)
-    filts = _filter_list(range_filter, in_filter, eq_filter,
-                         contains_filter, or_filter)
     snap = plan_snapshot(path, as_of_epoch=as_of_epoch,
-                         since_epoch=since_epoch, filters=filts)
-    manifest, fcols = snap.manifest, snap.filter_columns
-    schema = manifest_schema(manifest)
-    by_name = {f.name: f for f in schema.fields}
+                         since_epoch=since_epoch,
+                         filters=_filter_list(range_filter, in_filter,
+                                              eq_filter, contains_filter,
+                                              or_filter))
+    by_name = {f.name: f for f in manifest_schema(snap.manifest).fields}
     for c in (group_col, column):
         if c not in by_name:
             raise ValueError(f"column {c!r} not in encoded table")
@@ -604,141 +397,28 @@ def aggregate_encoded_grouped(
             f"{column!r} is {adt.simpleString()} — read_encoded + "
             "groupBy instead")
 
-    filts_kw = dict(range_filter=range_filter, in_filter=in_filter,
-                    eq_filter=eq_filter,
-                    contains_filter=contains_filter,
-                    or_filter=or_filter,
-                    encryption_key=encryption_key,
-                    as_of_epoch=as_of_epoch, since_epoch=since_epoch)
-
-    def _group_agg(df):
-        return df.groupBy(group_col).agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.count(column).alias("nonnull"),
-            F.sum(F.col(column).cast("decimal(38,0)")).alias("sum"),
-            F.min(column).cast("long").alias("min"),
-            F.max(column).cast("long").alias("max"),
-        )
-
-    def _finish(df):
-        return df.select(
-            group_col, "n_rows", "nonnull",
-            F.col("sum").cast("long").alias("sum"), "min", "max")
-
-    files = snap.files
-    involved = set([group_col, column] + fcols)
-    enc_cols = set(manifest.get("encrypted_columns", []))
-    if snap.deletes or (involved & enc_cols) \
-            or _evolution_fill_columns(files, involved):
-        if stats_out is not None:
-            stats_out.update(path="decode")
-        return _finish(_group_agg(read_encoded(
-            spark, path, columns=[group_col, column], **filts_kw)))
-
-    # ---- one metadata pass (as in aggregate_encoded): each slice
-    # folds its covered single-group chunks into per-group totals; the
-    # merged groups become a LocalRelation, and only straddler chunks
-    # can cost a Spark job
-    zf = _cover_filters(schema, manifest, filts)
-    cover_cols = {group_col, column} | {f[1] for f in zf if f is not None}
-
-    def fold(blocks, kept):
-        by_col = _values_meta(kept, cover_cols)
-        gmeta = by_col.get(group_col, {})
-        groups: dict = {}  # g storage-int -> [n, nonnull, sum, mn, mx]
-        partial = []
-        n_meta = 0
-        for key, (n, lo, hi, nulls, s) in by_col.get(column, {}).items():
-            g = gmeta.get(key)
-            g_ok = (g is not None and g[1] is not None
-                    and g[1] == g[2] and g[3] == 0)
-            if _chunk_covered(by_col, key, zf) and g_ok \
-                    and nulls is not None and (s is not None or nulls == n):
-                n_meta += 1
-                _fold_group(groups.setdefault(g[1], [0, 0, None, None,
-                                                     None]),
-                            n, n - nulls, s, lo, hi)
-            else:
-                partial.append(key)
-        return {"groups": groups, "partial": partial, "n_meta": n_meta,
-                "n_total": _n_values(blocks, column),
-                "meta": _restrict(by_col, partial)}
-
-    groups: dict = {}
-    partial_keys, meta = [], {}
-    n_meta = n_total = 0
-    for p in chunk_index(spark, snap, involved, fold):
-        for g, a in p["groups"].items():
-            _fold_group(groups.setdefault(g, [0, 0, None, None, None]), *a)
-        partial_keys += p["partial"]
-        n_meta += p["n_meta"]
-        n_total += p["n_total"]
-        for c, cm in p["meta"].items():
-            meta.setdefault(c, {}).update(cm)
+    groups, n_meta, n_decoded, n_total = _aggregate(
+        spark, snap, column, group_col=group_col,
+        encryption_key=encryption_key)
     if stats_out is not None:
-        stats_out.update(
-            chunks_total=n_total, chunks_meta=n_meta,
-            chunks_decoded=len(partial_keys),
-            path="meta+decode" if partial_keys else "meta")
-    if partial_keys and _pure_ranges(zf):
-        # SMALL straddler sets (the day-boundary chunks of a
-        # clustered table) decode driver-side and fold straight into
-        # the group map — zero Spark jobs instead of a decode job
-        # plus a merge shuffle (size-capped; big straddler sets stay
-        # distributed)
-        pk = sorted(partial_keys)
-        involved2 = {group_col, column} | {f[1] for f in zf}
-        total = _driver_partial_keys_ok(meta, involved2, pk)
-        mag = max((max(abs(int(r[1])), abs(int(r[2])))
-                   for r in (meta[column][k] for k in pk)
-                   if r[1] is not None), default=0)
-        if total is not None and not (
-                mag and mag.bit_length()
-                + max(total - 1, 1).bit_length() + 1 >= 63):
-            vals = _driver_chunk_values(path, files, involved2, pk)
-            if vals is not None:
-                import numpy as np
-                for k in pk:
-                    mask = None
-                    for _kind, c, bounds, _e in zf:
-                        (flo, fhi), = bounds
-                        v = vals[c][k]
-                        mm = (v >= flo) & (v <= fhi)
-                        mask = mm if mask is None else (mask & mm)
-                    gv = vals[group_col][k]
-                    av = vals[column][k]
-                    if mask is not None:
-                        gv, av = gv[mask], av[mask]
-                    for g in np.unique(gv):
-                        sel = av[gv == g]
-                        _fold_group(
-                            groups.setdefault(int(g),
-                                              [0, 0, None, None, None]),
-                            len(sel), len(sel),
-                            int(sel.sum(dtype=np.int64)),
-                            int(sel.min()), int(sel.max()))
-                partial_keys = []
-    meta_g = spark.createDataFrame(
-        [(g, a[0], a[1],
-          None if a[2] is None else Decimal(a[2]), a[3], a[4])
-         for g, a in sorted(groups.items())],
-        "g_lo long, n_rows long, nonnull long, "
-        "sum decimal(38,0), min long, max long",
-    ).select(
-        _storage_to_logical(F.col("g_lo"), gdt).alias(group_col),
-        "n_rows", "nonnull", "sum", "min", "max")
-    if not partial_keys:
-        return _finish(meta_g)
-    dec_g = _group_agg(read_encoded(
-        spark, path, columns=[group_col, column],
-        **dict(filts_kw, _chunk_subset=sorted(partial_keys))))
-    merged = meta_g.unionByName(dec_g).groupBy(group_col).agg(
-        F.sum("n_rows").alias("n_rows"),
-        F.sum("nonnull").alias("nonnull"),
-        F.sum("sum").alias("sum"),
-        F.min("min").alias("min"), F.max("max").alias("max"),
-    )
-    return _finish(merged)
+        stats_out.update(chunks_total=n_total, chunks_meta=n_meta,
+                         chunks_decoded=n_decoded,
+                         path="meta+decode" if n_decoded else "meta")
+    # storage ints back to the group column's type (days -> date32,
+    # epoch-µs -> timestamp: zero-copy views)
+    gtype = spark_type_to_arrow(gdt)
+    keys = pa.array(list(groups), pa.int64())
+    keys = keys.cast(pa.int32()).view(gtype) if pa.types.is_date32(gtype) \
+        else keys.view(gtype) if pa.types.is_temporal(gtype) \
+        else keys.cast(gtype)
+    accs = list(zip(*groups.values())) or [()] * 5
+    out = pa.Table.from_arrays(
+        [keys] + [pa.array(a, pa.int64()) for a in accs],
+        [group_col, "n_rows", "nonnull", "sum", "min", "max"])
+    return spark.createDataFrame(out, T.StructType(
+        [T.StructField(group_col, gdt)]
+        + [T.StructField(c, T.LongType())
+           for c in ("n_rows", "nonnull", "sum", "min", "max")]))
 
 
 def quantile_encoded(
@@ -768,16 +448,29 @@ def quantile_encoded(
     each undecoded chunk lies entirely below A_k (its rows counted)
     or entirely above B_k, keeping the arithmetic exact even under
     ties: answer = (k - rows_below_A_k)-th smallest of the decoded
-    rows, found with one sort-limit job per rank. Cluster the
-    table by the column at write and the window is ~one chunk per
-    bucket; an unclustered column degrades to decoding everything —
-    the plain exact quantile the user would have computed anyway.
-    Tables with pending deletes, evolution fill, encryption on the
-    column, or pre-r5 chunks (no null counts) fall back wholesale to
-    the exact read. Returns one value (or a list, matching ``q``);
-    None when the table has no non-null rows.
+    rows. Cluster the table by the column at write and the window is
+    ~one chunk per bucket; an unclustered column degrades to decoding
+    everything — the plain exact quantile the user would have
+    computed anyway. Rows of runs that predate the column are NULL,
+    so they never rank.
+
+    The candidate chunks decode in the slice scan's own placement
+    (scan._driver_scan): when their rows, at 17 bytes a row, total at
+    most io_tables._DRIVER_MAX_BYTES, the driver decodes them and
+    sorts the storage ints once for every rank, with zero Spark jobs;
+    past the cap one Spark sort-limit job runs per rank. With pending
+    deletes, or chunks whose stats are unknown (encrypted columns,
+    pre-r5 chunks without null counts), no rank can be placed from
+    metadata, so every chunk decodes the same way, with the readers'
+    removal step, placed by the readers' own bound. Returns one value (or a list,
+    matching ``q``); None when the table has no non-null rows.
     """
+    import dataclasses
     import math
+
+    import numpy as np
+
+    from tokcodec.decode import make_decode_fn
 
     qs = [float(x) for x in (q if isinstance(q, (list, tuple)) else [q])]
     for x in qs:
@@ -787,9 +480,7 @@ def quantile_encoded(
                                  as_of_tag)
     snap = plan_snapshot(path, as_of_epoch=as_of_epoch,
                          since_epoch=since_epoch)
-    manifest = snap.manifest
-    schema = manifest_schema(manifest)
-    by_name = {f.name: f for f in schema.fields}
+    by_name = {f.name: f for f in manifest_schema(snap.manifest).fields}
     if column not in by_name:
         raise ValueError(f"column {column!r} not in encoded table")
     dt = by_name[column].dataType
@@ -799,35 +490,48 @@ def quantile_encoded(
         raise ValueError(
             f"quantile_encoded needs an int-lane column; {column!r} "
             f"is {dt.simpleString()}")
+    _check_encryption_key(snap.manifest, [column], encryption_key)
 
     def _one(x):
         return x[0] if not isinstance(q, (list, tuple)) else x
 
+    def _logical(x):
+        if isinstance(dt, T.DecimalType):
+            return Decimal(x).scaleb(-dt.scale)
+        return dt.fromInternal(x) if isinstance(
+            dt, (T.DateType, T.TimestampType)) else x
+
+    def _ranked(local, below: dict, n: int) -> list:
+        """The values at the ranks of ``qs`` among ``n`` non-null rows,
+        from the decoded tables ``local`` (sorted once) and the rows
+        ``below`` each rank's window; mirrors sort-limit-max."""
+        vals = np.sort(np.concatenate(
+            [_lane_ints(t.column(column).combine_chunks()).drop_null()
+             .to_numpy() for t in local] + [np.zeros(0, np.int64)]))
+        out = []
+        for x in qs:
+            k = max(1, math.ceil(x * n))
+            kk = k - below.get(k, 0)
+            out.append(_logical(int(vals[min(kk, len(vals)) - 1]))
+                       if len(vals) and kk >= 1 else None)
+        return out
+
     read_kw = dict(encryption_key=encryption_key,
                    as_of_epoch=as_of_epoch, since_epoch=since_epoch)
 
-    def _fallback():
-        if stats_out is not None:
-            stats_out.update(path="decode")
-        df = read_encoded(spark, path, columns=[column], **read_kw) \
-            .filter(F.col(column).isNotNull()).persist()
+    def _spark_ranks(df, below: dict, n: int) -> list:
+        """Past the cap: one sort-limit job per rank over ``df``."""
+        df = df.filter(F.col(column).isNotNull()).persist()
         try:
-            n = df.count()
-            if n == 0:
-                return _one([None] * len(qs))
-            out = []
+            n = df.count() if n is None else n
+            out = {}
             for x in qs:
                 k = max(1, math.ceil(x * n))
-                out.append(df.sort(column).limit(k)
-                           .agg(F.max(column)).collect()[0][0])
-            return _one(out)
+                out[k] = df.sort(column).limit(k - below.get(k, 0)) \
+                    .agg(F.max(column)).collect()[0][0] if n else None
+            return [out[max(1, math.ceil(x * n))] for x in qs]
         finally:
             df.unpersist()
-
-    files = snap.files
-    if snap.deletes or column in manifest.get("encrypted_columns", []) \
-            or _evolution_fill_columns(files, {column}):
-        return _fallback()
 
     # one metadata pass over the column's chunk stats (chunk_index:
     # on the driver, or one task per slice past the cap)
@@ -835,28 +539,38 @@ def quantile_encoded(
     for p in chunk_index(spark, snap, {column}, lambda blocks, _kept:
                          _values_meta(blocks, {column}).get(column, {})):
         acol.update(p)
-    by_col = {column: acol}
-    stats = [
-        {"run_id": k[0], "bucket": k[1], "chunk": k[2],
-         "lo": lo, "hi": hi, "nn": None if nulls is None else n - nulls}
-        for k, (n, lo, hi, nulls, _s) in acol.items()
-    ]
-    if any(r["nn"] is None for r in stats):
-        return _fallback()  # pre-r5 chunks: null counts unknown
-    n = sum(int(r["nn"]) for r in stats)
     if stats_out is not None:
-        stats_out.update(chunks_total=len(stats), n_nonnull=n)
+        stats_out.update(chunks_total=len(acol))
+    if snap.deletes or any(m[3] is None for m in acol.values()):
+        # no rank can be placed from metadata: decode every chunk
+        if stats_out is not None:
+            stats_out.update(chunks_decoded=len(acol), path="meta+decode")
+        removals, dkeys = removal_plan(snap, [column])
+        schema = T.StructType([by_name[column]] + dkeys)
+        fill = fill_anchor(snap.files, schema.fieldNames(), [])
+        local = _driver_scan(
+            spark, snap, make_decode_fn(schema, fill_from=fill,
+                                        encryption_key=encryption_key),
+            {*schema.fieldNames(), fill} - {None},
+            encryption_key=encryption_key, removals=removals)
+        if local is None:
+            return _one(_spark_ranks(read_encoded(
+                spark, path, columns=[column], **read_kw), {}, None))
+        n = sum(t.num_rows - t.column(column).null_count for t in local)
+        return _one(_ranked(local, {}, n) if n else [None] * len(qs))
+    n = sum(m[0] - m[3] for m in acol.values())
+    if stats_out is not None:
+        stats_out.update(n_nonnull=n)
     if n == 0:
         if stats_out is not None:
             stats_out.update(chunks_decoded=0, path="meta")
         return _one([None] * len(qs))
-    import numpy as np
 
     ks = sorted({max(1, math.ceil(x * n)) for x in qs})
-    valued = [r for r in stats if r["lo"] is not None]
-    lo = np.array([int(r["lo"]) for r in valued], dtype=np.int64)
-    hi = np.array([int(r["hi"]) for r in valued], dtype=np.int64)
-    nn = np.array([int(r["nn"]) for r in valued], dtype=np.int64)
+    valued = [(k, m) for k, m in acol.items() if m[1] is not None]
+    lo = np.array([m[1] for _k, m in valued], dtype=np.int64)
+    hi = np.array([m[2] for _k, m in valued], dtype=np.int64)
+    nn = np.array([m[0] - m[3] for _k, m in valued], dtype=np.int64)
     # rows surely below chunk c = sum nn over chunks with hi < lo_c;
     # surely above = sum nn over chunks with lo > hi_c. Sorted prefix
     # sums make this O(chunks log chunks) driver work — ~10^6 chunk
@@ -885,46 +599,25 @@ def quantile_encoded(
         decode_set |= (hi >= a_k) & (lo <= b_k)
     below_k = {k: int(nn[~decode_set & (hi < windows[k][0])].sum())
                for k in ks}
-    cand = {(valued[i]["run_id"], int(valued[i]["bucket"]),
-             int(valued[i]["chunk"]))
-            for i in np.flatnonzero(decode_set)}
-    if isinstance(dt, _INT_LANES):
-        # SMALL candidate windows of a plain int column decode
-        # driver-side (same cap and decoders as aggregate_encoded's
-        # boundary path): the whole rank search then costs zero Spark
-        # jobs — sort the decoded values once and index every rank,
-        # instead of one sort-limit job per rank. Date/timestamp/
-        # decimal stay distributed (their storage ints need the
-        # logical conversion the decode path provides).
-        ck = sorted(cand)
-        if _driver_partial_keys_ok(by_col, {column}, ck) is not None:
-            vals = _driver_chunk_values(path, files, {column}, ck)
-            if vals is not None:
-                dec_v = (np.sort(np.concatenate(
-                    [vals[column][k] for k in ck])) if ck
-                    else np.zeros(0, dtype=np.int64))
-                if stats_out is not None:
-                    stats_out.update(chunks_decoded=len(cand),
-                                     path="meta+decode")
-                out = {}
-                for k in ks:
-                    kk = k - below_k[k]
-                    # mirror of sort(column).limit(kk).agg(max)
-                    out[k] = (int(dec_v[min(kk, len(dec_v)) - 1])
-                              if len(dec_v) and kk >= 1 else None)
-                return _one([out[max(1, math.ceil(x * n))] for x in qs])
-    dec = read_encoded(spark, path, columns=[column],
-                       _chunk_subset=sorted(cand), **read_kw) \
-        .filter(F.col(column).isNotNull()).persist()
-    try:
-        if stats_out is not None:
-            stats_out.update(chunks_decoded=len(cand),
-                             path="meta+decode")
-        out = {}
-        for k in ks:
-            kk = k - below_k[k]
-            out[k] = dec.sort(column).limit(kk) \
-                .agg(F.max(column)).collect()[0][0]
-    finally:
-        dec.unpersist()
-    return _one([out[max(1, math.ceil(x * n))] for x in qs])
+    cand = sorted(valued[i][0] for i in np.flatnonzero(decode_set))
+    if stats_out is not None:
+        stats_out.update(chunks_decoded=len(cand), path="meta+decode")
+    # only the candidates' (run, bucket)s enter the plan; their chunks
+    # all hold the column, so no evolution fill is needed
+    pairs = {(r, b) for r, b, _c in cand}
+    local = _driver_scan(
+        spark, dataclasses.replace(snap, accepted={
+            b: kept for b, rs in snap.accepted.items()
+            if (kept := [r for r in rs if (r, b) in pairs])}),
+        make_decode_fn(T.StructType([by_name[column]]),
+                       encryption_key=encryption_key),
+        {column}, chunks={_chunk_key(*k) for k in cand},
+        encryption_key=encryption_key,
+        # an int lane decodes to at most 16 bytes a row (decimal128)
+        # and a validity bit, so the candidates' rows bound the decode
+        size=17 * sum(acol[k][0] for k in cand))
+    if local is None:
+        return _one(_spark_ranks(read_encoded(
+            spark, path, columns=[column], _chunk_subset=cand,
+            **read_kw), below_k, n))
+    return _one(_ranked(local, below_k, n))

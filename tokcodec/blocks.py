@@ -279,9 +279,11 @@ def encode_float_component(bucket, column, component, v: np.ndarray,
     if component.endswith("values") and len(v):
         # float zone map (parquet float column stats analogue): lets
         # range_filter prune on quality scores / probabilities — the
-        # curation pipeline's float gates. NaNs are ignored (a NaN row
-        # can never satisfy the >=/<= residual, so pruning on the
-        # finite range stays sound); any ±inf present -> no stats
+        # curation pipeline's float gates. NaNs are ignored: a NaN row
+        # fails every range and IN with finite or infinite values (in
+        # Spark, NaN sorts above +inf), and a filter naming NaN is
+        # refused (io_tables._normalize_filter), so pruning on the
+        # finite range stays sound; any ±inf present -> no stats
         # (chunk always survives) to keep JSON metas strictly finite.
         import warnings
 

@@ -26,11 +26,13 @@ side is read_encoded's pipeline, not a copy of it:
   is opened once per slice; every partition is self-contained
   (buckets, files, prune specs, removal lists), so nothing depends
   on reader pickling order;
-- WHERE predicates arrive via pushFilters and become zone-map/bloom
-  prune specs for the task; every filter is also returned to Spark
-  unhandled, so Spark re-applies the exact predicate (pruning is
-  best-effort, correctness is Spark's — chunks with no stats always
-  survive, so no false negatives are possible);
+- WHERE predicates arrive via pushFilters and become the readers'
+  normalized filters: the task prunes by them and applies their
+  exact residual in Arrow, as read_encoded does, so only matching
+  rows leave the task. A pushed filter becomes one only when it is
+  the same or a wider predicate (a strict bound becomes inclusive),
+  and every filter is also returned to Spark unhandled, so Spark
+  re-applies the exact predicate;
 - the STREAM reader turns the epoch lineage into a Structured
   Streaming source: each micro-batch covers the (start, end] epoch
   window (exactly ``read_encoded(since_epoch=...)``'s incremental
@@ -187,8 +189,9 @@ def _read_partition(part: _SlicePartition, schema: T.StructType,
 
 
 def _filter_specs(schema: T.StructType, manifest: dict, filters):
-    """Pushed Spark filters -> zone/bloom prune specs (the pruning
-    subset; every filter is ALSO re-applied by Spark).
+    """Pushed Spark filters -> normalized filters (the pruning subset:
+    each keeps every row its Spark filter keeps; every filter is ALSO
+    re-applied by Spark).
 
     One-sided bounds on the SAME column are merged first, so a
     BETWEEN — which Catalyst hands over as two one-sided filters —
@@ -218,11 +221,9 @@ def _filter_specs(schema: T.StructType, manifest: dict, filters):
 
     def _push(kind, spec):
         try:
-            nf = _normalize_filter(schema, manifest, kind, spec,
-                                   make_residual=False)
+            specs.append(_normalize_filter(schema, manifest, kind, spec))
         except (ValueError, TypeError, OverflowError):
-            return  # unprunable shape — Spark still applies it
-        specs.append({k: v for k, v in nf.items() if k != "residual"})
+            pass  # unprunable shape, or a NaN — Spark still applies it
 
     for col in sorted(set(lows) | set(highs)):
         fld = next((x.dataType for x in schema.fields
@@ -232,6 +233,9 @@ def _filter_specs(schema: T.StructType, manifest: dict, filters):
         str_lane = isinstance(fld, (T.StringType, T.BinaryType))
         if str_lane and not (col in lows and col in highs):
             continue  # no safe one-sided string sentinel
+        if isinstance(fld, (T.FloatType, T.DoubleType)) \
+                and col not in highs:
+            continue  # Spark's x >= lo keeps NaN rows, no range does
         try:
             # strict vs non-strict collapses to the inclusive
             # superset — zone pruning only ever over-keeps, and the
@@ -269,33 +273,33 @@ def _filter_specs(schema: T.StructType, manifest: dict, filters):
 
 
 def _lane_max(fld):
-    """Type-correct upper sentinel for one-sided pushdown bounds
-    (a raw huge int would overflow the date/timestamp converters)."""
+    """Type-correct upper sentinel for one-sided pushdown bounds, at or
+    above every value of the lane (the range's residual applies in the
+    task; a raw huge int would overflow the date/timestamp
+    converters)."""
     import datetime as _dt
 
-    if isinstance(fld, (T.FloatType, T.DoubleType)):
-        return float("1e308")
     if isinstance(fld, T.DateType):
         return _dt.date.max
     if isinstance(fld, (T.TimestampType, T.TimestampNTZType)):
-        return _dt.datetime(9999, 12, 31, 23, 59, 59)
+        return _dt.datetime(9999, 12, 31, 23, 59, 59, 999999)
     if isinstance(fld, T.TimeType):
         return _dt.time(23, 59, 59, 999999)
-    return (1 << 62)
+    return (1 << 63) - 1
 
 
 def _lane_min(fld):
     import datetime as _dt
 
     if isinstance(fld, (T.FloatType, T.DoubleType)):
-        return float("-1e308")
+        return float("-inf")
     if isinstance(fld, T.DateType):
         return _dt.date.min
     if isinstance(fld, (T.TimestampType, T.TimestampNTZType)):
         return _dt.datetime(1, 1, 1)
     if isinstance(fld, T.TimeType):
         return _dt.time(0)
-    return -(1 << 62)
+    return -(1 << 63)
 
 
 def _opt_int(options: dict, key: str) -> int | None:

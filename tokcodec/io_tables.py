@@ -1376,12 +1376,11 @@ def _merge_zone_bounds(bounds, adjacency=0, cap=_MAX_ZONE_TERMS):
 
     Empty input -> ([], True): no zone bound overlaps anything, so
     only no-stats chunks survive and the (empty-IN) residual drops
-    the rest — the pre-merge behavior. Non-finite float probes are
-    excluded from the BOUNDS (NaN breaks sort/max total order and
-    would scramble merged ranges): rows matching a NaN/inf probe can
-    only live in chunks with non-finite values, which write no stats
-    and always survive; the exact residual still carries every
-    probe."""
+    the rest — the pre-merge behavior. Infinite float probes are
+    excluded from the BOUNDS: rows holding ±inf live only in chunks
+    that write no stats and always survive, and the exact residual
+    still carries every probe (a NaN never gets here:
+    _normalize_filter refuses it)."""
     import math
 
     bounds = [b for b in bounds
@@ -1406,58 +1405,48 @@ def _merge_zone_bounds(bounds, adjacency=0, cap=_MAX_ZONE_TERMS):
     return [tuple(b) for b in merged], True
 
 
-def _zone_value(v, dt: T.DataType) -> tuple[int, object]:
-    """User-supplied zone-filter bound -> (int value in the column's
-    STORAGE lane for zone-map comparison, typed value for the residual
-    predicate). Dates are stored as days since epoch, timestamps as
-    epoch microseconds (UTC); ISO strings, date/datetime objects and
-    raw storage ints are all accepted."""
+def _zone_value(v, dt: T.DataType):
+    """User-supplied zone-filter bound -> its value in the column's
+    STORAGE lane, the one the zone maps and the Arrow residual compare
+    in: dates are days since epoch, timestamps epoch microseconds (UTC;
+    a naive datetime is read as UTC), times nanos since midnight,
+    decimals the unscaled value — exact, so a decimal with more places
+    than the scale comes back as a fractional Decimal. ISO strings,
+    date/datetime/time objects and raw storage ints are all
+    accepted."""
     import datetime as _dt
+    from decimal import Decimal
 
+    if isinstance(dt, T.DecimalType):
+        return Decimal(str(v)).scaleb(dt.scale)
     if isinstance(dt, T.DateType):
         if isinstance(v, str):
             v = _dt.date.fromisoformat(v)
         if isinstance(v, _dt.datetime):
             v = v.date()
         if isinstance(v, _dt.date):
-            return (v - _dt.date(1970, 1, 1)).days, v
-        return int(v), _dt.date(1970, 1, 1) + _dt.timedelta(days=int(v))
+            return (v - _dt.date(1970, 1, 1)).days
+        return int(v)
     if isinstance(dt, T.TimeType):
         # stored as time64[ns]: nanos since midnight
         if isinstance(v, str):
             v = _dt.time.fromisoformat(v)
         if isinstance(v, _dt.time):
-            nanos = ((v.hour * 3600 + v.minute * 60 + v.second)
-                     * 1_000_000 + v.microsecond) * 1_000
-            return nanos, v
-        nanos = int(v)
-        # TimeType(6) is µs-precision: nanos are multiples of 1000
-        s, us = divmod(nanos // 1_000, 1_000_000)
-        h, s = divmod(s, 3600)
-        m, s = divmod(s, 60)
-        return nanos, _dt.time(h, m, s, us)
+            return ((v.hour * 3600 + v.minute * 60 + v.second)
+                    * 1_000_000 + v.microsecond) * 1_000
+        return int(v)
     if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
         if isinstance(v, str):
             v = _dt.datetime.fromisoformat(v)
-        epoch = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
         if isinstance(v, _dt.datetime):
-            naive = v.tzinfo is None
-            aware = v.replace(tzinfo=_dt.timezone.utc) if naive else v
+            if v.tzinfo is None:
+                v = v.replace(tzinfo=_dt.timezone.utc)
             # integer micros: float64 .timestamp() has ~0.4us ulp at
-            # 2026-era epochs and int() truncates toward zero — both
-            # can shift the bound by 1us vs the exact residual
-            micros = (aware - epoch) // _dt.timedelta(microseconds=1)
-            # residual compares in the session TZ (pinned UTC by
-            # convention here); hand Spark the naive-UTC wall clock —
-            # astimezone first so a +05:00 bound doesn't keep its
-            # foreign wall clock and get reinterpreted as UTC
-            naive_utc = aware.astimezone(_dt.timezone.utc).replace(
-                tzinfo=None)
-            return micros, naive_utc
-        micros = int(v)
-        return micros, (epoch + _dt.timedelta(microseconds=micros)
-                        ).replace(tzinfo=None)
-    return int(v), int(v)
+            # 2026-era epochs and int() truncates toward zero
+            return (v - _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
+                    ) // _dt.timedelta(microseconds=1)
+        return int(v)
+    return int(v)
 
 
 def _str_bytes(v) -> bytes:
@@ -1525,9 +1514,9 @@ def read_encoded(
 
     ``_chunk_subset`` (internal): a list of (run_id, bucket, chunk)
     keys; ONLY those chunks are decoded, and the plan is pruned to the
-    touched (run, bucket)s before any file is opened. aggregate_encoded
-    and quantile_encoded use it to decode exactly the boundary chunks
-    their metadata fast path could not answer. ``_sample``
+    touched (run, bucket)s before any file is opened. quantile_encoded
+    uses it past the driver cap, to decode exactly the candidate
+    chunks its metadata pass could not rank. ``_sample``
     (internal): (fraction, seed) — see sample_encoded.
     ``_deleted_by`` (internal): delete-log entries; only the rows their
     lists match are kept (changes_encoded's delete rows).
@@ -1546,8 +1535,11 @@ def read_encoded(
     ``range_filter=(column, lo, hi)`` enables zone-map chunk skipping
     (the encoded-block analogue of parquet row-group pruning): whole
     chunks whose stored [lo, hi] range misses the predicate are never
-    decoded; the exact residual filter runs JVM-side on the
-    survivors. Filter semantics: lo <= col <= hi. A LIST of triples
+    decoded; the exact residual drops the survivors' other rows in
+    Arrow, inside the slice scan (tokcodec.scan._decode_slice), so a
+    point lookup hands Spark only its matching rows. Filter
+    semantics: lo <= col <= hi, compared in the column's storage lane
+    (Spark's answer for every lane; a NaN bound raises). A LIST of triples
     is a conjunction over several columns — the natural read for
     Z-order-clustered tables (``cluster_by=[a, b]``), where every
     clustered dimension prunes.
@@ -1562,7 +1554,7 @@ def read_encoded(
     whose bloom definitively excludes the value are skipped; chunks
     with no bloom block always survive (no false negatives). A key
     LIST is the multi-key point lookup ("which of these doc_ids
-    exist") — ANY bloom hit keeps the chunk, the residual becomes IN;
+    exist") — ANY bloom hit keeps the chunk, the residual is IN;
     per-chunk probe cost is O(keys), so for removal lists past a few
     thousand keys prefer ``delete_encoded``.
 
@@ -1573,14 +1565,15 @@ def read_encoded(
     at 100 TB). Write with ``bloom_columns=[array_column]`` to get a
     per-chunk bloom over the DISTINCT elements; chunks whose element
     bloom excludes every probe are never decoded, and the exact
-    ``array_contains`` / ``arrays_overlap`` residual runs JVM-side on
-    the survivors.
+    ``array_contains`` / ``arrays_overlap`` match runs on the
+    survivors in the slice scan.
 
     The filters COMPOSE (logical AND): each prunes independently and
     a chunk is decoded only if it survives all of them; then every
-    residual applies. range/in accept integer, float/double, date,
-    timestamp, string and binary columns (ints/dates/timestamps/floats
-    via [lo, hi] zone maps — float zones are the curation pipeline's
+    residual applies. range/in accept integer, decimal(<=18),
+    float/double, date, timestamp, string and binary columns
+    (ints/decimals/dates/timestamps/floats via [lo, hi] zone maps —
+    float zones are the curation pipeline's
     quality-score gates; strings/binary via truncated min/max
     bounds). Encrypted columns prune too, with the key (their stats
     and blooms are decrypted in the task).
@@ -1597,7 +1590,8 @@ def read_encoded(
     ``write_encoded(schema_evolution=True)``) decode transparently:
     rows from runs written before a column existed come back NULL.
     Pending equality deletes are removed inside the slice scan, right
-    after each bucket's decode (tokcodec.scan._decode_slice)."""
+    after each bucket's decode, and the residual runs right after them
+    (tokcodec.scan._decode_slice)."""
     from tokcodec.decode import make_decode_fn
     from tokcodec.scan import (
         fill_anchor,
@@ -1622,10 +1616,13 @@ def read_encoded(
         filters=_filter_list(range_filter, in_filter, eq_filter,
                              contains_filter, or_filter))
     if runs is not None:
-        # the boundary decode of an aggregate touches a few (run,
-        # bucket)s, not the table: the others' files are never opened
+        # a quantile's candidate decode touches a few (run, bucket)s,
+        # not the table: the others' files are never opened, and only
+        # the touched runs decide the evolution fill
         snap.accepted = {b: kept for b, rs in snap.accepted.items()
                          if (kept := [r for r in rs if r in runs[b]])}
+        touched = {r for rs in snap.accepted.values() for r in rs}
+        snap.files = [f for f in snap.files if f["run_id"] in touched]
     if _deleted_by:
         snap.deletes = snap.deletes + [dict(d, keep=True)
                                        for d in _deleted_by]
@@ -1645,21 +1642,14 @@ def read_encoded(
                 f"column {c!r} does not exist as of epoch {as_of_epoch}")
     removals, dkeys = removal_plan(snap, names)
     schema = T.StructType([by_name[c] for c in names] + dkeys)
-    fill_from = fill_anchor(snap.files, schema.fieldNames(), fcols)
+    fill_from = fill_anchor(snap.files, schema.fieldNames(), fcols,
+                            snap.specs)
     if fill_from == METRICS_COLUMN and (chunks is not None
                                         or _sample is not None):
         raise ValueError(
             "chunk subsets and sampling are not supported on tables "
             "with pending evolution null-fill (fill counts would "
             "desync from the chosen chunk set) — compact_encoded first")
-    if fill_from is not None and or_filter is not None:
-        # an OR branch can match rows of a run that predates the OTHER
-        # branch's column, but the fill anchor (the first filter
-        # column) would drop that run's rows — refuse rather than
-        # silently lose rows
-        raise ValueError(
-            "or_filter over a table with pending evolution null-fill "
-            "is unsupported — compact_encoded first")
     _check_encryption_key(snap.manifest, names, encryption_key)
     bcol = BUCKET_COL if with_bucket_column else None
     out_schema = T.StructType([by_name[c] for c in names])
@@ -1673,8 +1663,6 @@ def read_encoded(
         spark, snap, decode, out_schema,
         {*schema.fieldNames(), fill_from} - {None}, chunks=chunks,
         sample=_sample, encryption_key=encryption_key, removals=removals)
-    for nf in snap.filters:
-        out = out.filter(nf["residual"])
     out = _expand_uuid_cols(out, snap.manifest.get("uuid_columns", []))
     if columns is not None:
         out = out.drop(*[c for c in fcols if c not in columns])
@@ -1774,73 +1762,75 @@ def _check_encryption_key(manifest: dict, columns, key: bytes | None) -> None:
 
 
 def _normalize_filter(schema: T.StructType, manifest: dict,
-                      kind: str, spec: tuple,
-                      make_residual: bool = True) -> dict:
-    """One filter -> {kind, col, lane, bounds, value, residual}:
-    normalized storage-lane bounds for zone/bloom pruning (shared by
-    the grouped and the direct reader) plus the exact residual Column.
+                      kind: str, spec: tuple) -> dict:
+    """One (kind, spec) filter -> its normalized spec, a picklable dict
+    in the column's STORAGE lane: ``kind`` (eq | contains | zone | or),
+    ``col``, ``lane``, zone ``bounds``, bloom ``value``. The chunk and
+    file pruners test it against the zone maps and blooms, and the
+    slice scan evaluates the same dict as the exact row residual, in
+    Arrow (tokcodec.scan._residual_mask), so pruning and residual can
+    never disagree.
 
-    ``eq`` prunes via per-chunk blooms; ``range``/``in`` prune via
-    zone maps, which exist on every int-lane column (integers,
-    date = days, timestamp = epoch-µs) and on string/binary columns
-    (truncated min/max bounds). Chunks with no stats always survive —
-    never a false negative.
+    ``eq`` prunes via per-chunk blooms; its ``value`` is the stored
+    form (UUID text becomes the stored 16-byte binary). ``contains``
+    prunes via element blooms; its ``value`` is the element probe
+    bytes (bloom.element_probe_bytes). ``range``/``in`` prune via zone
+    maps, which exist on every int-lane column (integers, decimal(<=18)
+    = unscaled, date = days, timestamp = epoch-µs, time = ns), on
+    floats and on string/binary columns (truncated min/max bounds); an
+    ``in`` keeps its exact ``values`` next to its merged ``bounds``,
+    and a null in its list matches nothing, as in Spark's IN. ``or``
+    is one entry whose ``subs`` are its range branches: a chunk
+    survives when any branch's zone hits, a row when any branch
+    passes. Chunks with no stats always survive — never a false
+    negative.
 
-    ``make_residual=False`` skips building the exact-residual Column
-    (callers with no live SparkContext — the Python DataSource's
-    planner worker — use the bounds for pruning only)."""
-    if kind == "eq":
-        # one key, or a key LIST (multi-key point lookup — "which of
-        # these doc_ids exist": the removal-list membership probe). A
+    A NaN float bound or in-value raises ValueError: Spark orders NaN
+    above every value and matches NaN = NaN, but the zone maps record
+    finite values only, so such a filter would silently drop rows."""
+    import math
+
+    if kind == "or":
+        subs = [_normalize_filter(schema, manifest, "range", tuple(rf))
+                for rf in spec]
+        return {"kind": "or", "col": subs[0]["col"], "lane": "or",
+                "subs": subs}
+    fld = next((f.dataType for f in schema.fields if f.name == spec[0]),
+               None)
+    if kind in ("eq", "contains"):
+        # one key, or a key LIST (eq: "which of these doc_ids exist";
+        # contains: ANY-of, the banned-token / opt-out list shape). A
         # list probes the bloom once per key and a chunk survives on
-        # ANY hit; the residual becomes IN. For lists past a few
-        # thousand keys use delete_encoded / a broadcast semi-join
-        # instead — per-chunk probe cost is O(keys).
+        # ANY hit; per-chunk probe cost is O(keys), so for removal
+        # lists past a few thousand keys use delete_encoded instead.
         col, value = spec
-        if col not in schema.fieldNames():
+        if fld is None:
             raise ValueError(
-                f"eq_filter column {col!r} not in table schema "
-                f"{schema.fieldNames()}"
-            )
+                f"{kind}_filter column {col!r} not in table schema "
+                f"{schema.fieldNames()}")
         many = isinstance(value, (list, tuple, set, frozenset))
         vals = sorted(value) if isinstance(value, (set, frozenset)) \
             else (list(value) if many else [value])
         if not vals:
             raise ValueError(
-                "eq_filter key list must be non-empty "
+                f"{kind}_filter value list must be non-empty "
                 "(an empty IN matches nothing)")
+    if kind == "eq":
         if col in manifest.get("uuid_columns", []):
             # the column is stored as 16-byte binary: probe the bloom
             # and compare with the stored representation (the decoded
             # frame is uuid-expanded only afterwards)
             vals = [bytes.fromhex(v.replace("-", ""))
                     if isinstance(v, str) else v for v in vals]
-        residual = None
-        if make_residual:
-            residual = (F.col(col).isin(vals) if many
-                        else (F.col(col) == vals[0]))
         return {"kind": "eq", "col": col,
-                "value": vals if many else vals[0],
-                "residual": residual}
+                "value": vals if many else vals[0]}
     if kind == "contains":
-        # array-element membership: prune via the column's ELEMENT
-        # bloom (bloom_block_row_elements); residual = array_contains
-        # (one value) or arrays_overlap (a value LIST — ANY-of, the
-        # banned-token / opt-out list shape). The probe bytes must
-        # match the encode-side element encoding (element_probe_bytes:
-        # int64-LE for ints, raw for str/bytes). A chunk survives when
-        # its bloom might contain ANY probe — still zero false
-        # negatives, and the probe count is the driver-side list
-        # length (like in_filter), not data-sized.
+        # array-element membership, pruned via the column's ELEMENT
+        # bloom (bloom_block_row_elements): the probe bytes must match
+        # the encode-side element encoding (int64-LE for ints, raw for
+        # str/bytes); the residual compares in the same lane
         from tokcodec.bloom import element_probe_bytes
 
-        col, value = spec
-        fld = next((f.dataType for f in schema.fields
-                    if f.name == col), None)
-        if fld is None:
-            raise ValueError(
-                f"contains_filter column {col!r} not in table schema "
-                f"{schema.fieldNames()}")
         if not isinstance(fld, T.ArrayType) or not isinstance(
                 fld.elementType,
                 (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
@@ -1848,92 +1838,60 @@ def _normalize_filter(schema: T.StructType, manifest: dict,
             raise ValueError(
                 "contains_filter requires an array column of "
                 f"int/string/binary elements; {col!r} is {fld}")
-        many = isinstance(value, (list, tuple, set, frozenset))
-        vals = sorted(value) if isinstance(value, (set, frozenset)) \
-            else (list(value) if many else [value])
-        if not vals:
-            raise ValueError(
-                "contains_filter value list must be non-empty "
-                "(an empty ANY-of matches nothing)")
-        if isinstance(fld.elementType, (T.StringType, T.BinaryType)):
-            lits = [F.lit(v) for v in vals]
-        else:
-            lits = [F.lit(int(v)).cast(fld.elementType) for v in vals]
-        residual = None
-        if make_residual:
-            residual = (F.arrays_overlap(F.col(col), F.array(*lits))
-                        if many else F.array_contains(F.col(col),
-                                                      lits[0]))
         return {"kind": "contains", "col": col,
-                "value": [element_probe_bytes(v) for v in vals],
-                "residual": residual}
+                "value": [element_probe_bytes(v) for v in vals]}
     col = spec[0]
-    fld = next((f.dataType for f in schema.fields if f.name == col), None)
     str_lane = isinstance(fld, (T.StringType, T.BinaryType))
     float_lane = isinstance(fld, (T.FloatType, T.DoubleType))
     if not str_lane and not float_lane and not isinstance(
             fld, (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
                   T.DateType, T.TimestampType, T.TimestampNTZType,
-                  T.TimeType)):
+                  T.TimeType)) and not (isinstance(fld, T.DecimalType)
+                                        and fld.precision <= 18):
         raise ValueError(
-            f"range_filter/in_filter require an integer, float, date, "
-            f"timestamp, string or binary column with zone maps; "
-            f"{col!r} is {fld}"
+            f"range_filter/in_filter require an integer, decimal(<=18), "
+            f"float, date, timestamp, string or binary column with zone "
+            f"maps; {col!r} is {fld}"
         )
+    # range: (lo, hi); in: the list, nulls dropped
+    vals = list(spec[1:]) if kind == "range" \
+        else [v for v in spec[1] if v is not None]
     if float_lane:
-        # float zone maps (quality-score/probability gates): finite
-        # per-chunk [lo, hi]; NaN rows never satisfy the residual, so
-        # the finite-range overlap test is sound (blocks.py)
-        if kind == "range":
-            _, lo, hi = spec
-            bounds = [(float(lo), float(hi))]
-            residual = ((F.col(col) >= F.lit(float(lo)))
-                        & (F.col(col) <= F.lit(float(hi)))) \
-                if make_residual else None
-        else:
-            _, values = spec
-            vals = [float(x) for x in values]
-            bounds, _exact = _merge_zone_bounds([(x, x) for x in vals])
-            residual = F.col(col).isin(vals) if make_residual else None
-        return {"kind": "zone", "col": col, "lane": "float",
-                "bounds": bounds, "residual": residual}
-    if str_lane:
-        if kind == "range":
-            _, lo, hi = spec
-            bounds = [(_str_bytes(lo), _str_bytes(hi))]
-            residual = ((F.col(col) >= F.lit(lo))
-                        & (F.col(col) <= F.lit(hi))) \
-                if make_residual else None
-        else:
-            _, values = spec
-            bounds, _exact = _merge_zone_bounds(
-                [(_str_bytes(v), _str_bytes(v)) for v in values])
-            residual = F.col(col).isin(list(values)) \
-                if make_residual else None
-        return {"kind": "zone", "col": col, "lane": "str",
-                "bounds": bounds, "residual": residual}
-    if kind == "range":
-        _, lo, hi = spec
-        zv_lo, rv_lo = _zone_value(lo, fld)
-        zv_hi, rv_hi = _zone_value(hi, fld)
-        bounds = [(zv_lo, zv_hi)]
-        residual = ((F.col(col) >= F.lit(rv_lo))
-                    & (F.col(col) <= F.lit(rv_hi))) \
-            if make_residual else None
+        vals = [float(x) for x in vals]
+        if any(math.isnan(x) for x in vals):
+            raise ValueError(
+                f"NaN in a filter on float column {col!r}: Spark orders "
+                "NaN above every value and matches NaN = NaN, which "
+                "finite zone maps cannot prune exactly — select NaN "
+                "rows with isnan() on the read instead")
+        lane = "float"
+    elif str_lane:
+        vals = [_str_bytes(v) for v in vals]
+        lane = "str"
     else:
-        _, values = spec
-        pairs = [_zone_value(v, fld) for v in values]
-        # adjacency=1: contiguous int probes merge into GAP-FREE
-        # ranges, so containment coverage stays exact downstream
-        bounds, in_exact = _merge_zone_bounds(
-            [(int(zv), int(zv)) for zv, _ in pairs], adjacency=1)
-        residual = F.col(col).isin([rv for _, rv in pairs]) \
-            if make_residual else None
-        return {"kind": "zone", "col": col, "lane": "int",
-                "bounds": bounds, "in_exact": in_exact,
-                "residual": residual}
-    return {"kind": "zone", "col": col, "lane": "int",
-            "bounds": bounds, "residual": residual}
+        vals = [_zone_value(v, fld) for v in vals]
+        lane = "int"
+    if kind == "range":
+        lo, hi = vals
+        if lane == "int":
+            # a decimal bound between two stored values rounds inward
+            lo, hi = math.ceil(lo), math.floor(hi)
+        return {"kind": "zone", "col": col, "lane": lane,
+                "bounds": [(lo, hi)]}
+    if lane == "int":
+        # a decimal value with more places than the scale matches no
+        # stored value
+        vals = sorted({int(v) for v in vals if v == int(v)})
+    elif lane == "float":
+        # Spark's IN has -0.0 = 0.0; the residual's is_in canonicalises
+        # both sides to +0.0
+        vals = [x + 0.0 for x in vals]
+    # adjacency=1: contiguous int probes merge into GAP-FREE ranges,
+    # so containment coverage stays exact downstream
+    bounds, in_exact = _merge_zone_bounds([(v, v) for v in vals],
+                                          adjacency=1)
+    return {"kind": "zone", "col": col, "lane": lane, "bounds": bounds,
+            "in_exact": in_exact, "values": vals}
 
 
 def read_encoded_direct(*args, **kwargs) -> DataFrame:

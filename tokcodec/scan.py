@@ -26,10 +26,13 @@ every reader runs, in two placements.
                    files read only for the buckets and runs with a
                    surviving chunk -> decode one bucket at a time ->
                    the removal step, where every reader applies the
-                   pending deletes -> optional Arrow-side projection).
-    scan_frame     the Spark wrapper read_encoded, read_encoded_as,
-                   sample_encoded and the aggregate boundary decode
-                   build on. One rule places the scan: a read whose
+                   pending deletes -> the exact residual of every
+                   filter, in Arrow (_residual) -> optional Arrow-side
+                   projection).
+    scan_frame     the Spark wrapper read_encoded, read_encoded_as
+                   and sample_encoded build on. One rule places the
+                   scan (_driver_scan, which quantile_encoded also
+                   calls for its candidate chunks): a read whose
                    decoded size is bounded at or under
                    io_tables._DRIVER_MAX_BYTES (the cap writes place
                    themselves by too) runs its slices on the
@@ -43,7 +46,10 @@ every reader runs, in two placements.
                    quantiles, HLL, profile): _index_slice with a
                    caller's fold over block metadata, payloads
                    projected out but for the probed blooms' files and
-                   the sketched columns'; one small partial per slice,
+                   the sketched columns'; an optional decode fold
+                   decodes the chunks the metadata fold leaves partial
+                   in the same slice (_decode_slice: removal step and
+                   residual applied); one small partial per slice,
                    merged on the driver. Same two placements, same
                    cap: on the driver when the files it reads are
                    small, else one mapInArrow task per slice.
@@ -76,6 +82,7 @@ from tokcodec.io_tables import (
     _as_of_schema,
     _bloom_hit,
     _bloom_params,
+    _chunk_key,
     _chunk_keys,
     _committed_pandas,
     _crosses_arrow,
@@ -101,8 +108,9 @@ from tokcodec.schema import manifest_schema
 class Snapshot:
     """One planned read. ``accepted``: the winning run ids per bucket;
     ``files``: those runs' file-manifest rows; ``schema``: the read
-    schema (the snapshot schema for as-of reads); ``filters``: the
-    normalized filters, each with its exact residual Column;
+    schema (the snapshot schema for as-of reads); ``specs``: the
+    normalized filters (io_tables._normalize_filter), picklable — the
+    prune specs and the exact residuals of every placement;
     ``deletes``: removal lists in force;
     ``winners``: the winning lineage rows (pandas), of every accepted
     run, before file pruning; ``dropped``: the (run_id, bucket) pairs
@@ -116,42 +124,9 @@ class Snapshot:
     files: list[dict]
     deletes: list[dict]
     winners: object
-    filters: list[dict] = field(default_factory=list)
+    specs: list[dict] = field(default_factory=list)
     filter_columns: list[str] = field(default_factory=list)
     dropped: set = field(default_factory=set)
-
-    @property
-    def specs(self) -> list[dict]:
-        """Picklable prune specs for the scan task (no Columns)."""
-        return [_strip(nf) for nf in self.filters]
-
-
-def _strip(nf: dict) -> dict:
-    d = {k: v for k, v in nf.items() if k not in ("residual", "subs")}
-    if "subs" in nf:
-        d["subs"] = [_strip(s) for s in nf["subs"]]
-    return d
-
-
-def _normalize_filters(schema: T.StructType, manifest: dict,
-                       filts: list[tuple[str, tuple]]) -> list[dict]:
-    """(kind, spec) filters -> normalized filter dicts (see
-    io_tables._normalize_filter). An ``or`` spec becomes one entry
-    whose ``subs`` are its range branches: a chunk survives when any
-    branch's zone hits, and its residual is the OR of theirs."""
-    nfs = []
-    for kind, spec in filts:
-        if kind != "or":
-            nfs.append(_normalize_filter(schema, manifest, kind, spec))
-            continue
-        subs = [_normalize_filter(schema, manifest, "range", tuple(rf))
-                for rf in spec]
-        res = subs[0]["residual"]
-        for s in subs[1:]:
-            res = res | s["residual"]
-        nfs.append({"kind": "or", "col": subs[0]["col"], "lane": "or",
-                    "residual": res, "subs": subs})
-    return nfs
 
 
 def plan_snapshot(path: str, as_of_epoch: int | None = None,
@@ -167,12 +142,10 @@ def plan_snapshot(path: str, as_of_epoch: int | None = None,
 
     ``buckets`` restricts the plan to those storage buckets before any
     run manifest is read. ``filters`` are (kind, spec) pairs validated
-    against the current schema and normalized into prune specs plus
-    exact residual Columns (which need a live SparkContext; the
-    DataSource passes none). ``with_files=False`` skips the run
-    manifests (and
-    with them the snapshot-schema projection) for metadata-only
-    callers.
+    against the current schema and normalized into ``specs``, which
+    both prune and, in the slice scan, filter rows exactly.
+    ``with_files=False`` skips the run manifests (and with them the
+    snapshot-schema projection) for metadata-only callers.
 
     A filtered plan is then pruned by file (_prune_files): each spec
     is tested against the file summaries the run manifests carry, with
@@ -196,7 +169,8 @@ def plan_snapshot(path: str, as_of_epoch: int | None = None,
                     f"filter column {c!r} not in encoded table")
             if c not in fcols:
                 fcols.append(c)
-    nfs = _normalize_filters(full, manifest, list(filters))
+    nfs = [_normalize_filter(full, manifest, kind, spec)
+           for kind, spec in filters]
 
     lin = _lineage_local(path)
     win = lin
@@ -228,7 +202,7 @@ def plan_snapshot(path: str, as_of_epoch: int | None = None,
             dels = [d for d in dels if d["key_column"] in snap_names]
     snap = Snapshot(path=path, manifest=manifest, schema=schema,
                     accepted=accepted, files=files, deletes=dels,
-                    winners=win, filters=nfs, filter_columns=fcols)
+                    winners=win, specs=nfs, filter_columns=fcols)
     if files and nfs:
         _prune_files(snap, snap.specs, apply=prune_files)
     return snap
@@ -340,15 +314,31 @@ def _prune_files(snap: Snapshot, specs: list[dict],
         f["run_id"] not in part or _file_pairs(f, snap.accepted, buckets))]
 
 
-def fill_anchor(files: list[dict], wanted, filter_columns) -> str | None:
+def fill_anchor(files: list[dict], wanted, filter_columns,
+                specs=()) -> str | None:
     """Evolution null-fill source for a decode of ``wanted`` columns
     (see make_decode_fn): None when every run carries every wanted
-    column; a pruned read anchors on its first filter column (its
-    surviving rows give the fill counts); an unpruned one on the
-    per-(run, bucket) metrics rows, which then join the scan."""
+    column; a pruned read anchors on a filter column (its surviving
+    rows give the fill counts), the first that every run carries, else
+    the first (a run without it holds no row that passes that
+    filter); an unpruned one on the per-(run, bucket) metrics rows,
+    which then join the scan. An ``or`` among the normalized filters
+    ``specs`` can keep rows of a run without the anchor, so that case
+    raises."""
     if not _evolution_fill_columns(files, wanted):
         return None
-    return filter_columns[0] if filter_columns else METRICS_COLUMN
+    if not filter_columns:
+        return METRICS_COLUMN
+    anchor = next((c for c in filter_columns
+                   if not _evolution_fill_columns(files, [c])),
+                  filter_columns[0])
+    if _evolution_fill_columns(files, [anchor]) \
+            and any(nf["kind"] == "or" for nf in specs):
+        raise ValueError(
+            "or_filter over a table with pending evolution null-fill, "
+            "on a column some run predates, is unsupported — "
+            "compact_encoded first")
+    return anchor
 
 
 def _sample_keep(key: str, frac: float, seed: int) -> bool:
@@ -611,8 +601,118 @@ def _uuid_bytes(text):
          pa.py_buffer(raw)])
 
 
+_INT64 = (-(1 << 63), (1 << 63) - 1)
+
+
+def _lane_ints(arr):
+    """An int-lane column's STORAGE ints (the lane its zone maps and
+    its normalized filters hold) as an int64 Arrow array, nulls kept:
+    dates as days, timestamps as epoch-µs and times as ns (zero-copy
+    views), decimal(<=18) as its unscaled value (the low word of each
+    128-bit value, which holds it whole)."""
+    import numpy as np
+    import pyarrow as pa
+
+    t = arr.type
+    if pa.types.is_decimal(t):
+        low = np.frombuffer(arr.buffers()[1], np.int64, count=2 * len(arr),
+                            offset=16 * arr.offset)[::2]
+        return pa.array(low, mask=arr.is_null().to_numpy(
+            zero_copy_only=False) if arr.null_count else None)
+    if pa.types.is_date32(t):
+        return arr.view(pa.int32()).cast(pa.int64())
+    if pa.types.is_temporal(t):
+        return arr.view(pa.int64())
+    return arr.cast(pa.int64())
+
+
+def _as_binary(arr):
+    """A string or binary array viewed as binary: Spark compares
+    strings as unsigned bytes, and so do Arrow's binary kernels."""
+    import pyarrow as pa
+
+    if pa.types.is_large_string(arr.type):
+        return arr.view(pa.large_binary())
+    return arr.view(pa.binary()) if pa.types.is_string(arr.type) else arr
+
+
+def _residual_mask(tbl, nf):
+    """numpy mask of the rows of decoded ``tbl`` that pass one
+    normalized filter ``nf`` (io_tables._normalize_filter), computed
+    in the lane the spec carries: Spark's answer for that filter, a
+    null (or a null array) passing nothing."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if nf["kind"] == "or":
+        return np.logical_or.reduce([_residual_mask(tbl, s)
+                                     for s in nf["subs"]])
+    col = tbl.column(nf["col"]).combine_chunks()
+    if nf["kind"] == "contains":
+        offs = col.offsets
+        flat = col.values.slice(offs[0].as_py(),
+                                offs[-1].as_py() - offs[0].as_py())
+        if pa.types.is_integer(flat.type):  # probes are int64-LE
+            flat = flat.cast(pa.int64())
+            vals = [int.from_bytes(b, "little", signed=True)
+                    for b in nf["value"]]
+        else:
+            flat, vals = _as_binary(flat), nf["value"]
+        hit = pc.is_in(flat, value_set=pa.array(vals, flat.type)) \
+            .fill_null(False)
+        rows = np.zeros(len(col), bool)
+        # list_parent_indices spans every slot's values, a null array's
+        # too (list_flatten skips those), so validity decides last
+        rows[pc.list_parent_indices(col).to_numpy()[
+            hit.to_numpy(zero_copy_only=False)]] = True
+        return rows & col.is_valid().to_numpy(zero_copy_only=False)
+    if nf["kind"] == "eq":
+        vals = nf["value"] if isinstance(nf["value"], list) \
+            else [nf["value"]]
+        mask = pc.is_in(col, value_set=pa.array(vals).cast(col.type))
+    else:
+        lane = nf["lane"]
+        x = _lane_ints(col) if lane == "int" else (
+            col.cast(pa.float64()) if lane == "float" else _as_binary(col))
+        if "values" in nf:  # in: the exact list, not the merged bounds
+            vals = nf["values"]
+            if lane == "int":
+                vals = [v for v in vals if _INT64[0] <= v <= _INT64[1]]
+            elif lane == "float":
+                # Spark's IN has -0.0 = 0.0, pyarrow's is_in tells them
+                # apart: adding +0.0 makes every zero +0.0 (NaN stays
+                # NaN, and normalization refuses NaN values)
+                x = pc.add(x, 0.0)
+            mask = pc.is_in(x, value_set=pa.array(vals, x.type))
+        else:
+            (lo, hi), = nf["bounds"]
+            if lane == "int":
+                lo, hi = max(lo, _INT64[0]), min(hi, _INT64[1])
+                if lo > hi:
+                    return np.zeros(len(col), bool)
+            # IEEE comparisons give Spark's answer for NaN rows under
+            # non-NaN bounds: false (Spark orders NaN above +inf)
+            mask = pc.and_(pc.greater_equal(x, pa.scalar(lo, x.type)),
+                           pc.less_equal(x, pa.scalar(hi, x.type)))
+    return mask.fill_null(False).to_numpy(zero_copy_only=False)
+
+
+def _residual(tbl, specs):
+    """``tbl`` without the rows some filter's exact residual rejects
+    (_residual_mask; the filters are a conjunction)."""
+    import numpy as np
+    import pyarrow as pa
+
+    if not specs or not tbl.num_rows:
+        return tbl
+    keep = np.logical_and.reduce([_residual_mask(tbl, nf) for nf in specs])
+    return tbl if keep.all() else tbl.filter(pa.array(keep))
+
+
 def _index_slice(files, specs, fold, payload_cols=None, chunks=None,
-                 sample=None, encryption_key: bytes | None = None):
+                 sample=None, encryption_key: bytes | None = None,
+                 decode=None):
     """The one block-metadata reader, for one slice of buckets:
     ``fold(blocks, kept)`` over the slice's block rows, or None when
     the slice holds none. ``files``: the slice's planned block files
@@ -628,7 +728,14 @@ def _index_slice(files, specs, fold, payload_cols=None, chunks=None,
     the metadata callers' projection: only the files of those columns
     and of the columns an eq/contains spec probes (their blooms) are
     read with the payload column; the other files' rows come with a
-    null payload."""
+    null payload.
+
+    ``decode``: (decode, dfold, removals), chunk_index's decode fold.
+    The chunks the fold's partial names under ``"decode"`` (a list of
+    (run_id, bucket, chunk), taken out of it) are then decoded in this
+    slice (_decode_slice over the slice's files: the removal step, a
+    _Removals, and the exact residual applied), and each decoded
+    bucket is folded in with ``dfold(partial, table)``."""
     import pyarrow as pa
 
     probed = {s["col"] for s in specs if s["kind"] in ("eq", "contains")}
@@ -649,7 +756,16 @@ def _index_slice(files, specs, fold, payload_cols=None, chunks=None,
         tbl = _keep_chunks(tbl, chunks, sample)
     kept = _prune_block_table(tbl, specs, encryption_key=encryption_key) \
         if specs else tbl
-    return fold(tbl, kept)
+    part = fold(tbl, kept)
+    if decode is None:
+        return part
+    fn, dfold, removals = decode
+    keys = part.pop("decode")
+    for _b, t in _decode_slice(sorted({k[1] for k in keys}), files, specs,
+                               None, fn, removals, chunks={
+                                   _chunk_key(*k) for k in keys}):
+        dfold(part, t)
+    return part
 
 
 def _by_bucket(_blocks, kept) -> dict:
@@ -681,22 +797,33 @@ def _decode_slice(buckets, files, specs, pruned, decode, removals,
                   chunks=None, sample=None, project=None):
     """Decode phase of the slice scan, over the prune phase's result
     ``pruned`` (_prune_slice; consumed): yields (bucket, decoded
-    pa.Table) for each bucket with rows, in order. The other columns'
-    files are opened only if some chunk survives, and read only for
+    pa.Table) for each bucket with rows left, in order. The other
+    columns' files are opened only if some chunk survives, and read only for
     the surviving buckets (of a filtered slice) and chunks: a file
     (which holds one run) is read for a bucket only when a chunk of
     its run survives there, so a file whose run has no survivor in
-    the slice is never opened. Decode runs one bucket at a time (its
-    evolution fill and ``__bucket`` column are per bucket), then runs
-    the removal step (``removals``: a _Removals) and the optional
-    ``project`` (pa.Table -> pa.Table)."""
+    the slice is never opened. ``pruned=None`` reads every column's
+    files here: an unfiltered slice, or one whose chunks the caller
+    chose already (``chunks``: chunk_index's decode of the chunks its
+    metadata fold leaves partial), whose runs bound the reads the
+    same way. Decode runs one bucket at a time (its evolution fill
+    and ``__bucket`` column are per bucket), then the removal step
+    (``removals``: a _Removals), the exact residual of ``specs``
+    (_residual) and the optional ``project`` (pa.Table -> pa.Table)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    fcols = _spec_columns(specs)
-    runs = None if pruned is None else {
-        b: set(pc.unique(t.column("run_id")).to_pylist())
-        for b, t in pruned.items()}
+    if pruned is not None:
+        fcols = _spec_columns(specs)
+        runs = {b: set(pc.unique(t.column("run_id")).to_pylist())
+                for b, t in pruned.items()}
+    else:
+        fcols, runs = set(), None
+        if chunks is not None:
+            runs = {}
+            for k in chunks:
+                rid, b, _c = k.rsplit("/", 2)
+                runs.setdefault(int(b), set()).add(rid)
     rest = [_BlockFile(fp, [b for b in bs
                             if runs is None or rid in runs.get(b, ())])
             for fp, col, rid, bs in files if col not in fcols]
@@ -706,18 +833,21 @@ def _decode_slice(buckets, files, specs, pruned, decode, removals,
                 continue
             parts = [pruned.pop(b)] if pruned is not None else []
             alive = pc.unique(_chunk_keys(parts[0])) if parts else None
-            for f in rest:
-                if b not in f.has or (t := f.take(b)) is None:
-                    continue
-                if alive is not None:
-                    t = t.filter(pc.is_in(_chunk_keys(t), value_set=alive))
-                elif chunks is not None or sample is not None:
-                    t = _keep_chunks(t, chunks, sample)
-                parts.append(t)
-            tbl = pa.concat_tables(parts) if parts else None
-            if tbl is None or tbl.num_rows == 0:
+            parts += [t for f in rest
+                      if b in f.has and (t := f.take(b)) is not None]
+            if not parts:
                 continue
-            out = removals.apply(decode((b,), tbl))
+            # one chunk mask per bucket, over every file's rows
+            tbl = pa.concat_tables(parts)
+            if alive is not None:
+                tbl = tbl.filter(pc.is_in(_chunk_keys(tbl), value_set=alive))
+            elif chunks is not None or sample is not None:
+                tbl = _keep_chunks(tbl, chunks, sample)
+            if tbl.num_rows == 0:
+                continue
+            out = _residual(removals.apply(decode((b,), tbl)), specs)
+            if not out.num_rows:
+                continue
             if project is not None:
                 out = project(out)
             yield b, out
@@ -772,13 +902,10 @@ def scan_frame(spark, snap: Snapshot, decode, out_schema, scan_cols,
     set of _chunk_keys; chunks are pruned by the snapshot's filter
     specs. ``removals``: removal_plan's, whose extra key columns
     ``decode`` decodes."""
-    buckets = sorted(snap.accepted)
-    rows = _direct_file_rows(snap.files, scan_cols, _paths(snap.path)[0])
-    specs = snap.specs
-    local = _driver_scan(snap, rows, _slices(buckets, _task_slots(
-        spark, len(buckets))), specs, decode, chunks=chunks, sample=sample,
-        encryption_key=encryption_key, project=project,
-        removals=removals) if _crosses_arrow(out_schema) else None
+    local = _driver_scan(spark, snap, decode, scan_cols, chunks=chunks,
+                         sample=sample, encryption_key=encryption_key,
+                         project=project, removals=removals) \
+        if _crosses_arrow(out_schema) else None
     if local is not None:
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
@@ -791,6 +918,8 @@ def scan_frame(spark, snap: Snapshot, decode, out_schema, scan_cols,
         return spark.createDataFrame(
             pa.concat_tables(local) if local
             else to_arrow_schema(out_schema).empty_table(), out_schema)
+    buckets, specs = sorted(snap.accepted), snap.specs
+    rows = _direct_file_rows(snap.files, scan_cols, _paths(snap.path)[0])
     plan = spark.sparkContext.broadcast((buckets, snap.accepted, rows,
                                          chunks))
 
@@ -816,11 +945,12 @@ def _slices(buckets: list, n: int) -> list[list]:
     return [buckets[i * m // n:(i + 1) * m // n] for i in range(n)]
 
 
-def _driver_scan(snap: Snapshot, rows, slices, specs, decode, chunks=None,
+def _driver_scan(spark, snap: Snapshot, decode, scan_cols, chunks=None,
                  sample=None, encryption_key: bytes | None = None,
-                 project=None, removals=()):
-    """The driver placement of scan_frame: the decoded pa.Tables of
-    the read's slices, scanned on the driver in bucket order, or None
+                 project=None, removals=(), size: int | None = None):
+    """The driver placement of scan_frame (and of quantile_encoded's
+    candidate decode): the decoded pa.Tables of the read's slices of
+    ``scan_cols``, scanned on the driver in bucket order, or None
     when the read is over the cap and belongs to the tasks. The
     driver never holds more than io_tables._DRIVER_MAX_BYTES in block
     rows or in decoded rows:
@@ -833,7 +963,10 @@ def _driver_scan(snap: Snapshot, rows, slices, specs, decode, chunks=None,
       the cap (run-manifest ``bytes``; else no file is opened here);
       the prune phase (_prune_slice) then runs for every slice,
       and the read is bounded by the surviving (run, bucket) pairs'
-      ``orig_bytes``.
+      ``orig_bytes``;
+    - ``size``, when the caller knows the decoded bytes better than
+      lineage does (quantile_encoded: its candidate chunks' rows at
+      the widest int lane), bounds the read in place of ``orig_bytes``.
 
     At or under the cap the decode phase (_decode_slice) runs on the
     survivors already held — no file is read twice — and every slice
@@ -841,14 +974,16 @@ def _driver_scan(snap: Snapshot, rows, slices, specs, decode, chunks=None,
     import pyarrow.compute as pc
 
     cap = io_tables._DRIVER_MAX_BYTES
-    plans = [(bks, _slice_files(rows, snap.accepted, bks))
-             for bks in slices if bks]
+    buckets, specs = sorted(snap.accepted), snap.specs
+    rows = _direct_file_rows(snap.files, scan_cols, _paths(snap.path)[0])
+    plans = [(bks, _slice_files(rows, snap.accepted, bks)) for bks in
+             _slices(buckets, _task_slots(spark, len(buckets))) if bks]
     if specs:
         fcols = _spec_columns(specs)
         blocks_p = _paths(snap.path)[0]
-        size = {posixpath.join(blocks_p, f["path"]): f["bytes"]
-                for f in snap.files if f["column"] in fcols}
-        if sum(size[fp] for fp in {fp for _, files in plans
+        fbytes = {posixpath.join(blocks_p, f["path"]): f["bytes"]
+                  for f in snap.files if f["column"] in fcols}
+        if sum(fbytes[fp] for fp in {fp for _, files in plans
                                    for fp, col, _r, _b in files
                                    if col in fcols}) > cap:
             return None
@@ -862,7 +997,7 @@ def _driver_scan(snap: Snapshot, rows, slices, specs, decode, chunks=None,
         taken = {(r, b) for b, rs in snap.accepted.items() for r in rs}
     win = snap.winners
     held = [(r, b) in taken for r, b in zip(win.run_id, win.bucket)]
-    if int(win.orig_bytes[held].sum()) > cap:
+    if (int(win.orig_bytes[held].sum()) if size is None else size) > cap:
         return None
 
     drops = _Removals(removals)
@@ -881,7 +1016,7 @@ def _driver_scan(snap: Snapshot, rows, slices, specs, decode, chunks=None,
 
 
 def chunk_index(spark, snap: Snapshot, columns, fold, payload_cols=(),
-                encryption_key: bytes | None = None) -> list:
+                encryption_key: bytes | None = None, decode=None) -> list:
     """The block-metadata answer of ``snap`` (explain_scan, the
     aggregates, quantiles, HLL, profile): one partial per slice of the
     accepted buckets, ``fold(blocks, kept)`` over the slice's block
@@ -889,6 +1024,13 @@ def chunk_index(spark, snap: Snapshot, columns, fold, payload_cols=(),
     filter specs (_index_slice; payloads read only from the files of
     ``payload_cols`` and of the columns eq/contains pruning probes),
     slices without rows dropped. The caller merges the partials.
+
+    ``decode``: (decode, dfold, removals) — the decode fold of the
+    aggregates. The chunks each slice's partial names under
+    ``"decode"`` are decoded in that slice (from the files of
+    ``columns``, with the removal step of ``removals``, removal_plan's,
+    and the exact residual) and folded into its partial with
+    ``dfold(partial, table)``, so a slice returns its whole answer.
 
     scan_frame's two placements, by the same rule and cap: when the
     run-manifest ``bytes`` of the files the slices read total at most
@@ -906,11 +1048,17 @@ def chunk_index(spark, snap: Snapshot, columns, fold, payload_cols=(),
         buckets, _task_slots(spark, len(buckets))) if bks]
     size = {posixpath.join(blocks_p, f["path"]): f["bytes"]
             for f in snap.files}
+
+    def dec():  # the decode fold with a removal step of its own
+        return None if decode is None \
+            else (*decode[:2], _Removals(decode[2]))
+
     if sum(size[fp] for fp in {f[0] for files in plans for f in files}) \
             <= io_tables._DRIVER_MAX_BYTES:
+        shared = dec()  # the driver's slices share one, as in _driver_scan
         parts = _fan_out(lambda files: _index_slice(
-            files, specs, fold, pay, encryption_key=encryption_key),
-            plans, min_items=2)
+            files, specs, fold, pay, encryption_key=encryption_key,
+            decode=shared), plans, min_items=2)
         return [p for p in parts if p is not None]
     plan = spark.sparkContext.broadcast((buckets, snap.accepted, rows))
 
@@ -921,7 +1069,8 @@ def chunk_index(spark, snap: Snapshot, columns, fold, payload_cols=(),
         bks = sorted(all_b[i] for batch in batches
                      for i in batch.column(0).to_pylist())
         part = _index_slice(_slice_files(file_rows, accepted, bks), specs,
-                            fold, pay, encryption_key=encryption_key)
+                            fold, pay, encryption_key=encryption_key,
+                            decode=dec())
         yield pa.RecordBatch.from_arrays(
             [pa.array([pickle.dumps(part)], pa.binary())],
             names=["partial"])
